@@ -3,7 +3,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-N per query: host-load noise on a shared box moved
     // identical code ±30% round-over-round, which made a real 2×
     // regression undetectable from a single sample. 3 reps + median
@@ -11,18 +10,7 @@ object Bench {
     // warmup (rep 1 still pays any first-touch cost; the median
     // discards it when reps 2-3 agree).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // fork-free local FS: r11's driver bench died when the host
-    // refused a subprocess fork during Hadoop's per-file exec'd chmod
-    graft.SessionTuning.sparkConf(cpus.toInt)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     // warm up JVM/codegen/file-index paths so the first timed query
     // isn't charged for session initialization
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -190,7 +178,12 @@ object Bench {
           .mkString("{", ",", "}")
         s"""{"metric":"total","value":${merged.values.sum},"unit":"sec","queries":$qsM,"reps":$reps,"sf":"$sfDir","merged_partial":true}"""
       }
-    try java.nio.file.Files.write(
+    // a run with stall windows is not evidence: adopting it as the
+    // baseline would widen every later requery gate by the stall
+    if (windows.nonEmpty)
+      System.err.println(s"[bench] bench_last.json kept: " +
+        s"${windows.size} stall window(s) in this run")
+    else try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_last.json"),
       (persistLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

@@ -1,11 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dumps executed plans of representative queries to PLANS.md —
-  * evidence that filters/columns push to the scans, dims broadcast,
-  * and aggregation is partial before every exchange. */
+/** Plan dump: the executed physical plan of each named registry query,
+  * one markdown section per query — evidence that filters/columns push
+  * to the scans, dims broadcast, and aggregation is partial before
+  * every exchange. `PLANS.md` is this dump over [[names]]; before/after
+  * dumps of a few queries are the optimization rounds' plan evidence.
+  *
+  *   sbt "runMain graft.Explain <sfDir> <out.md> [q1,q2,...]"
+  *
+  * Note: building a lifecycle query's DataFrame executes its side
+  * effects (table writes, streams); the dumped plan is the plan of the
+  * frame the query RETURNS. For declarative queries that is the whole
+  * computation.
+  */
 object Explain {
   /** The representative declarative (non-streaming-lifecycle) queries
     * whose executed plans are dumped to PLANS.md and swept by
@@ -89,30 +98,27 @@ object Explain {
       "dsv2_pruned_read", "versioned_pruned_read_str")
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.SessionTuning.sparkConf(8)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val (sfDir, out) = (args(0), args(1))
+    val dump = if (args.length > 2) args(2).split(",").toSeq else names
+    val spark = SessionTuning.session()
     val sb = new StringBuilder
     sb ++= "# Physical plans (generated by graft.Explain)\n\n"
     sb ++= "Evidence per query: `PushedFilters`/`ReadSchema` at the "
     sb ++= "parquet scans, `BroadcastHashJoin` for dims, partial "
     sb ++= "HashAggregate before each Exchange, `WindowGroupLimit` "
     sb ++= "for top-k.\n"
-    for (n <- names) {
-      val plan = Queries.queries(n)(spark, d)
-        .queryExecution.executedPlan.toString
-      sb ++= s"\n## $n\n\n```\n"
-      sb ++= plan.linesIterator.take(40).mkString("\n")
-      sb ++= "\n```\n"
+    for (n <- dump) {
+      try {
+        val plan = Queries.queries(n)(spark, sfDir)
+          .queryExecution.executedPlan.toString
+        sb ++= s"\n## $n\n\n```\n$plan\n```\n"
+      } catch { case e: Throwable =>
+        System.err.println(s"[explain] $n failed: ${e.getMessage}")
+      }
+      spark.catalog.clearCache()
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${names.size} plans)")
+    Files.writeString(Paths.get(out), sb.toString)
+    println(s"wrote $out (${dump.size} plans)")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -21,22 +20,7 @@ object Profile {
     val names = args.headOption.getOrElse("stream_cdf_source")
       .split(",").toSeq
     val d = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.SessionTuning.sparkConf(cpus.toInt)
-      .foreach { case (k, v) => builder.config(k, v) }
-    // ad-hoc A/B overrides: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$d/region.parquet").count()
 
@@ -68,48 +52,11 @@ object Profile {
     }
     // warm run first (untimed) so codegen/class-load costs don't
     // pollute the profiled run — mirrors the bench's median-of-3
-    val warm = sys.env.get("SPARK_GRAFT_PROFILE_WARM").forall(_ == "1")
-    if (warm) SparkEntry.queries(name)(spark, d).count()
+    SparkEntry.queries(name)(spark, d).count()
     spark.sparkContext.addSparkListener(listener)
-
-    // poor-man's gap sampler: every 10 ms, sample every thread that is
-    // RUNNABLE and not an executor task thread, and bucket the deepest
-    // "interesting" frame — tells us what the DRIVER is doing in the
-    // inter-job gaps (Catalyst? FS I/O? codegen? stream machinery?)
-    val frameCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val sampleOn = sys.env.get("SPARK_GRAFT_PROFILE_SAMPLE").contains("1")
-    @volatile var sampling = sampleOn
-    val sampler = new Thread(() => {
-      while (sampling) {
-        val stacks = Thread.getAllStackTraces
-        stacks.forEach { (t, frames) =>
-          val tn = t.getName
-          if ((tn == "main" || tn.startsWith("stream execution")) &&
-              t.getState == Thread.State.RUNNABLE && frames.nonEmpty) {
-            // drop the sampling-noise prefix, keep a 4-frame signature
-            // of app frames so the aggregation groups call SITES
-            val app = frames.map(_.toString).filterNot(f =>
-              f.startsWith("java.lang.Thread") ||
-                f.startsWith("jdk.internal"))
-            val sig = app.filter(f => f.contains("spark") ||
-                f.contains("parquet") || f.contains("hadoop") ||
-                f.contains("graft") || f.contains("janino") ||
-                f.contains("jackson") || f.contains("json4s"))
-              .take(3).mkString(" <- ")
-            val key = if (sig.nonEmpty) sig else app.take(2).mkString(" <- ")
-            val tshort = if (tn == "main") "main" else "stream"
-            frameCounts.merge(s"$tshort :: $key", 1, (a, b) => a + b)
-          }
-        }
-        Thread.sleep(25)
-      }
-    }, "gap-sampler")
-    sampler.setDaemon(true)
-    if (sampleOn) sampler.start()
     val t0 = System.nanoTime()
     val n = SparkEntry.queries(name)(spark, d).count()
     val wallMs = (System.nanoTime() - t0) / 1e6
-    sampling = false
     spark.sparkContext.removeSparkListener(listener)
 
     val rows = jobs.values.toSeq.sortBy(_.start)
@@ -132,11 +79,6 @@ object Profile {
     println(f"job time total=${jobTotal / 1000.0}%.2f s; " +
       f"inter-job gaps total=${gapTotal / 1000.0}%.2f s; " +
       f"pre/post overhead=${(wallMs - jobTotal - gapTotal) / 1000.0}%.2f s")
-    println("\nTOP RUNNABLE driver frames (10ms samples):")
-    import scala.jdk.CollectionConverters._
-    frameCounts.asScala.toSeq.sortBy(-_._2).take(40).foreach {
-      case (k, n) => println(f"$n%5d  $k")
-    }
     spark.catalog.clearCache()
     }
     spark.stop()

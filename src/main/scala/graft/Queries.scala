@@ -21,8 +21,7 @@ object Queries {
   final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    headline: Boolean = false)
+    oracle: Option[String])
 
   /** PER-PROCESS scratch root for every registry-built table,
     * checkpoint, and index (r13 root-cause fix): two harness
@@ -188,8 +187,7 @@ object Queries {
     // ---------- C. Gold aggregates ----------
     Q("q1_pricing",
       (s, d) => Gold.q1Pricing(Tables(s, d).lineitem),
-      Some(InlineOracles.q1_pricing),
-      headline = true),
+      Some(InlineOracles.q1_pricing)),
 
     Q("gold_region_sales",
       (s, d) => {
@@ -205,8 +203,7 @@ object Queries {
           JOIN customer ON o_custkey = c_custkey
           JOIN nation ON c_nationkey = n_nationkey
           JOIN region ON n_regionkey = r_regionkey
-        GROUP BY 1, 2"""),
-      headline = true),
+        GROUP BY 1, 2""")),
 
     Q("gold_top_customers",
       (s, d) => {
@@ -219,8 +216,7 @@ object Queries {
         FROM lineitem
           JOIN orders ON l_orderkey = o_orderkey
           JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2, 3"""),
-      headline = true),
+        GROUP BY 1, 2, 3""")),
 
     Q("rank_topk",
       (s, d) => {
@@ -258,8 +254,7 @@ object Queries {
           SELECT *, row_number() OVER (PARTITION BY user_id
             ORDER BY ts DESC, event_id DESC) as rn
           FROM ($eventsNs))
-        WHERE rn = 1"""),
-      headline = true),
+        WHERE rn = 1""")),
 
     Q("row_hash",
       (s, d) => Medallion.withRowHash(Tables(s, d).nation,
@@ -278,8 +273,7 @@ object Queries {
           SELECT doc_id,
             unnest(string_split(text, ' ')) as token,
             cast(generate_subscripts(string_split(text, ' '), 1) - 1 as int) as item_number
-          FROM documents)"""),
-      headline = true),
+          FROM documents)""")),
 
     Q("merge_upsert",
       (s, d) => {
@@ -331,8 +325,7 @@ object Queries {
       // shingle hash + integer-only mixes make every bucket and every
       // verified pair reproducible (TextOracleSql)
       Some(TextOracleSql.minhashLshSql(shingleK = 3, numPerm = 64,
-        bands = 16, threshold = 0.5)),
-      headline = true),
+        bands = 16, threshold = 0.5))),
 
     Q("dedup_graph_degrees",
       // structural audit between pair generation and clustering: the
@@ -583,8 +576,7 @@ object Queries {
         val emb = Tables(s, d).embeddings
         Similarity.annBruteForce(emb, emb.filter(col("vec_id") < 8), k = 5)
       },
-      Some(InlineOracles.ann_bruteforce),
-      headline = true),
+      Some(InlineOracles.ann_bruteforce)),
 
     Q("ann_filtered",
       // FILTERED vector search — the vector-DB feature class where a
@@ -962,8 +954,7 @@ object Queries {
 
     Q("text_quality",
       (s, d) => TextAnalysis.quality(Tables(s, d).documents),
-      Some(InlineOracles.text_quality),
-      headline = true),
+      Some(InlineOracles.text_quality)),
 
     Q("gopher_rules",
       // the published Gopher heuristic filter battery as one map-only
@@ -1039,8 +1030,7 @@ object Queries {
                ELSE 'test' END as split
         FROM (SELECT doc_id,
                 ${TextOracleSql.Sha60.format("cast(doc_id as varchar)")} % 100 as b
-              FROM documents)"""),
-      headline = false),
+              FROM documents)""")),
 
     Q("corpus_sample",
       (s, d) => TextAnalysis.stratifiedSample(Tables(s, d).documents,
@@ -2608,8 +2598,7 @@ object Queries {
         SELECT epoch_us(date_trunc('hour', ts)) as window_start_us,
           event_type, count(*) as n_events,
           cast(sum(cast(value as decimal(12,2))) as double) as total_value
-        FROM events GROUP BY 1, 2"""),
-      headline = true),
+        FROM events GROUP BY 1, 2""")),
 
     Q("click_attribution",
       (s, d) => graft.streaming.Streams.attributionBatch(
@@ -3695,6 +3684,4 @@ object Queries {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o.stripMargin.trim)).toMap
-
-  def headlines: Seq[Q] = all.filter(_.headline)
 }

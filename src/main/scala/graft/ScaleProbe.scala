@@ -20,16 +20,12 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.SessionTuning.sparkConf(cpus.toInt)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated probe filter ("skew_join" names the
+    // salting probe) for single-probe iteration
+    val only: Option[Set[String]] =
+      if (args.length > 1) Some(args(1).split(",").toSet) else None
+    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val spark = SessionTuning.session()
     val t = Tables(spark, sfDir)
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
 
@@ -928,10 +924,7 @@ object ScaleProbe {
           s"${Queries.cacheRoot}/probe/vbm_10x", delta, Seq("event_id")).toLong
       }))
 
-    // optional comma-separated probe filter for single-probe iteration
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
-    probes.filter(p => only.forall(_.contains(p._1)))
+    probes.filter(p => keep(p._1))
       .foreach { case (name, rows1, run1, rows10, run10) =>
       val (_, s1) = time(run1())
       val (_, s10) = time(run10())
@@ -940,7 +933,7 @@ object ScaleProbe {
       println(f"""{"probe":"$name","rows_1x":$rows1,"sec_1x":$s1%.2f,"rows_10x":$rows10,"sec_10x":$s10%.2f,"rows_per_sec_1x":$r1%.0f,"rows_per_sec_10x":$r10%.0f,"scaling_efficiency":${r10 / r1}%.2f}""")
     }
 
-    if (only.isEmpty) skewProbe(spark, t)
+    if (keep("skew_join")) skewProbe(spark, t)
     spark.stop()
   }
 

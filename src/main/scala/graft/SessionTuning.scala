@@ -1,14 +1,41 @@
 package graft
 
-/** Session-wide engine tuning shared by every graft entry point
-  * (Bench, Verify, Explain, ScaleProbe, PlanDump, the test harness).
+import org.apache.spark.sql.SparkSession
+
+/** The one way graft builds a SparkSession, and the session-wide engine
+  * tuning it applies. Every entry point builds its session here: the
+  * driver mains (Bench, Verify), the measurement mains (Explain,
+  * Profile, ScaleProbe) and the test harness (SparkSpec).
   *
-  * Grown during the optimization rounds; every entry is measured, has
-  * a scale rationale (not a local[32] artifact), and cannot change
-  * query RESULTS — only how fast identical results are produced.
+  * Grown during the optimization rounds; every tuning entry is
+  * measured, has a scale rationale (not a local[32] artifact), and
+  * cannot change query RESULTS — only how fast identical results are
+  * produced.
   */
 object SessionTuning {
-  /** Spark conf entries folded into each session builder.
+  /** Core count of the local session: `$SPARK_GRAFT_CPUS`, default 4. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** A `local[cores]` session with graft's extensions installed (the SQL
+    * DML rule can only be injected at session build), `cores` shuffle
+    * partitions, UTC, no UI, [[sparkConf]] and WARN logging. */
+  def session(cores: Int = envCores): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    sparkConf(cores).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Spark conf entries folded into each session builder —
+    * core-count-aware: call with the session's core count (the
+    * `local[N]` N at the entry points; a cluster session would pass
+    * its executor-core total).
     *
     * - Fork-free local FS wiring: see [[graft.sources.NoForkFs]].
     * - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`:
@@ -26,43 +53,20 @@ object SessionTuning {
     *   Interleaved A/B on `stream_join_outer` (reps=1, alternating,
     *   host-calibrated): ON {10.6, 8.7, 13.6} s vs OFF {9.1, 7.6,
     *   9.1} s — OFF faster in all three pairs.
+    * - `parallelPartitionDiscovery.parallelism` defaults to 10000,
+    *   which makes every distributed file-listing job launch ONE TASK
+    *   PER PATH: the binaryFile-stream bench (`stream_image_dedup`,
+    *   5000 staged files) spent 4.5 s wall per 2048-task listing job
+    *   on ≤0.2 s of actual stat work — pure scheduling overhead, 12×
+    *   per run. Listing is latency-bound I/O, so a small multiple of
+    *   the core count keeps full overlap at any cluster size while
+    *   bounding task-scheduling cost; 10000 single-path tasks is only
+    *   right when paths ≫ 10000.
     */
-  /** Core-count-aware entries — call with the session's core count
-    * (the `local[N]` N at the entry points; a cluster session would
-    * pass its executor-core total).
-    *
-    * `parallelPartitionDiscovery.parallelism` defaults to 10000, which
-    * makes every distributed file-listing job launch ONE TASK PER
-    * PATH: the binaryFile-stream bench (`stream_image_dedup`, 5000
-    * staged files) spent 4.5 s wall per 2048-task listing job on
-    * ≤0.2 s of actual stat work — pure scheduling overhead, 12×
-    * per run. Listing is latency-bound I/O, so a small multiple of
-    * the core count keeps full overlap at any cluster size while
-    * bounding task-scheduling cost; 10000 single-path tasks is only
-    * right when paths ≫ 10000. */
   def sparkConf(cores: Int): Seq[(String, String)] =
-    base ++ Seq(
-      "spark.sql.sources.parallelPartitionDiscovery.parallelism" ->
-        math.min(10000, math.max(32, 4 * cores)).toString,
-    )
-
-  private val base: Seq[(String, String)] =
     graft.sources.NoForkFs.sparkConf ++ Seq(
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-      // Skip Hadoop's CLIENT-side checksum layer for `file:` too
-      // (LocalFileSystem = ChecksumFileSystem): every staged/committed
-      // file otherwise pays a second `.crc` sidecar create on write
-      // and a CRC verify pass on read-back. Production filesystems do
-      // integrity server-side (HDFS) or per-object (S3 etags), and
-      // parquet carries its own page-level integrity — the sidecars
-      // are pure local-mode overhead that scales with file COUNT.
-      // Interleaved A/B on the file-heavy lifecycle basket
-      // {curation_incremental, sql_catalog_merge,
-      // pipeline_cdf_incremental, stream_file_ingest}: checksummed
-      // {30.0, 27.2, 28.2} s vs raw {28.3, 26.4, 25.8} s — raw faster
-      // in all three pairs. Overrides the fs.file.impl entry from
-      // NoForkFs.sparkConf (later entry wins in builder fold order).
-      "spark.hadoop.fs.file.impl" ->
-        classOf[graft.sources.NoForkRawLocalFileSystem].getName,
+      "spark.sql.sources.parallelPartitionDiscovery.parallelism" ->
+        math.min(10000, math.max(32, 4 * cores)).toString,
     )
 }

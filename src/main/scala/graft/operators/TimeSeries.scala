@@ -177,50 +177,6 @@ object TimeSeries {
           .as("mean_after"))
   }
 
-  /** Hour-of-day seasonal profile over the dense hourly series: per
-    * (event_type, hour-of-day 0–23), how many grid hours carry that
-    * slot, the total events landing in it, and the slot's mean rate —
-    * plus a peak rank per type (rank 1 = busiest slot). The seasonal
-    * shape is what ts_anomaly's flat trailing window can NOT see: a
-    * nightly lull that trips a naive threshold is perfectly ordinary
-    * once the profile is known, and capacity planning reads the peak
-    * slots directly.
-    *
-    * Determinism: slot membership is integer arithmetic on the UTC-
-    * pinned epoch-micros grid; counts are exact integers; the mean is
-    * ONE IEEE division; ranks tie-break on the slot index.
-    *
-    * Scale shape: one map-side-combined shuffle to (type, hour)
-    * counts; the grid is span-bounded; the profile collapse and the
-    * peak rank run over at most |types| × 24 rows. */
-  def seasonalProfile(events: DataFrame): DataFrame = {
-    val hourUs = 3600000000L
-    val hourly = events.select(col("event_type"),
-        (col("ts") - pmod(col("ts"), lit(hourUs))).as("hour_us"))
-      .groupBy("event_type", "hour_us")
-      .agg(count(lit(1)).as("n_raw"))
-    val grid = events.groupBy(col("event_type"))
-      .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
-      .select(col("event_type"), explode(sequence(
-        col("lo") - pmod(col("lo"), lit(hourUs)),
-        col("hi") - pmod(col("hi"), lit(hourUs)),
-        lit(hourUs))).as("hour_us"))
-    val series = grid.join(hourly, Seq("event_type", "hour_us"), "left")
-      .select(col("event_type"), col("hour_us"),
-        coalesce(col("n_raw"), lit(0L)).as("n_events"))
-    val prof = series
-      .withColumn("hour_of_day",
-        pmod(expr(s"hour_us div $hourUs"), lit(24L)))
-      .groupBy(col("event_type"), col("hour_of_day"))
-      .agg(count(lit(1)).as("n_hours"),
-        sum(col("n_events")).as("n_events"))
-      .withColumn("mean_events",
-        col("n_events").cast("double") / col("n_hours").cast("double"))
-    val rk = Window.partitionBy("event_type")
-      .orderBy(col("mean_events").desc, col("hour_of_day"))
-    prof.withColumn("peak_rank", row_number().over(rk).cast("long"))
-  }
-
   /** Time-decayed popularity: each event contributes a weight that
     * halves per day of age relative to the newest event in the table
     * (half-life = 1 day), aggregated per event_type — the "what is

@@ -189,11 +189,10 @@ private[graft] class GraftTable(path: String, version: Int,
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
-  /** The table's filesystem path / pinned version, for the SQL DML
-    * rule (graft.plans.GraftDmlRule) that routes DELETE/UPDATE/MERGE
-    * over this relation into the format's file-granular verbs. */
+  /** The table's filesystem path, for the SQL DML rule
+    * (graft.plans.GraftDmlRule) that routes DELETE/UPDATE/MERGE over
+    * this relation into the format's file-granular verbs. */
   private[graft] def tablePath: String = path
-  private[graft] def tableVersion: Int = version
 
   /** `TRUNCATE TABLE graft.`/path`` — a metadata-only empty-manifest
     * commit (schema/properties survive; the old snapshot stays
@@ -330,13 +329,15 @@ private[sources] class GraftScan(path: String, version: Int,
     * day and scanning the table. */
   private var runtimeFilters: Array[Filter] = Array.empty
 
-  /** Every top-level column is declared filterable: pruning is
+  /** Every column the scan reads is declared filterable: pruning is
     * conservative (unknown shapes and stat-less files survive), so an
     * unprunable runtime filter costs nothing and a prunable one —
-    * partition value, zone map, bloom — skips files. */
+    * partition value, zone map, bloom — skips files. Only read-schema
+    * columns: Spark resolves these names against the scan's output,
+    * so naming a column that column pruning dropped fails planning. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    fullSchema.fieldNames.map(
+    required.fieldNames.map(
       org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(filters: Array[Filter]): Unit = {

@@ -7,7 +7,7 @@ import java.nio.file.{Files, NoSuchFileException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
 
 /** Fork-free permission handling for Hadoop's local filesystem.
   *
@@ -33,9 +33,22 @@ object NoForkFs {
     * filesystem for a SparkSession. NullGroupsMapping additionally
     * drops the `id`/`groups` subprocess Hadoop's default shell-based
     * group mapping forks on first UGI group lookup — group ACLs are
-    * meaningless on a single-user local filesystem. */
+    * meaningless on a single-user local filesystem.
+    *
+    * `fs.file.impl` is the RAW variant: it skips Hadoop's client-side
+    * checksum layer (LocalFileSystem = ChecksumFileSystem), under
+    * which every staged/committed file pays a second `.crc` sidecar
+    * create on write and a CRC verify pass on read-back. Production
+    * filesystems do integrity server-side (HDFS) or per-object (S3
+    * etags), and parquet carries its own page-level integrity — the
+    * sidecars are pure local-mode overhead that scales with file
+    * COUNT. Interleaved A/B on the file-heavy lifecycle basket
+    * {curation_incremental, sql_catalog_merge,
+    * pipeline_cdf_incremental, stream_file_ingest}: checksummed
+    * {30.0, 27.2, 28.2} s vs raw {28.3, 26.4, 25.8} s — raw faster in
+    * all three pairs. */
   val sparkConf: Seq[(String, String)] = Seq(
-    "spark.hadoop.fs.file.impl" -> classOf[NoForkLocalFileSystem].getName,
+    "spark.hadoop.fs.file.impl" -> classOf[NoForkRawLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[NoForkLocalFs].getName,
     "spark.hadoop.hadoop.security.group.mapping" ->
@@ -87,12 +100,14 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
         attrs.owner.getName, attrs.group.getName,
         new Path(localf.getPath).makeQualified(getUri, getWorkingDirectory))
     } catch {
-      case _: NoSuchFileException =>
-        throw new java.io.FileNotFoundException(s"File $f does not exist")
-      // non-POSIX store or exotic principal lookup failure: fall back
-      // to Hadoop's own (lazy, possibly forking) status
-      case _: UnsupportedOperationException | _: java.io.IOException
-          if localf.exists() => super.getFileStatus(f)
+      case _: UnsupportedOperationException | _: java.io.IOException =>
+        // non-POSIX store or exotic principal lookup failure: fall back
+        // to Hadoop's own (lazy, possibly forking) status
+        if (localf.exists()) super.getFileStatus(f)
+        // missing, vanished concurrently, or under a regular file
+        // (ENOTDIR): the FileSystem contract's not-found, which
+        // `exists` turns into false
+        else throw new java.io.FileNotFoundException(s"File $f does not exist")
     }
   }
 
@@ -113,12 +128,6 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   // single user anyway — a local test/bench filesystem has one owner
   override def setOwner(p: Path, username: String, groupname: String): Unit = ()
 }
-
-/** Drop-in `fs.file.impl`: checksummed local FS over the fork-free raw
-  * layer — exactly Hadoop's default `LocalFileSystem` minus the
-  * subprocesses. */
-class NoForkLocalFileSystem
-  extends LocalFileSystem(new NoForkRawLocalFileSystem)
 
 /** Drop-in `fs.AbstractFileSystem.file.impl` for FileContext users
   * (streaming checkpoint managers). Skips the checksum layer like

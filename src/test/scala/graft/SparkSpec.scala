@@ -11,21 +11,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the prod surface (Verify/Bench) runs with the extensions
-      // installed — tests must too (the SQL DML rule in particular
-      // can only be injected at session build)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.SessionTuning.sparkConf(4)
-      .foreach { case (k, v) => builder.config(k, v) }
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The prod surface's session (extensions, tuning) on 4 cores. */
+  lazy val session: SparkSession = SessionTuning.session(4)
 }

@@ -176,6 +176,27 @@ class GraftConnectorScaleSpec extends SparkSpec {
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("dynamic partition pruning over a column-pruned graft scan " +
+    "returns the same rows as with it off") {
+    val path = s"$fresh/fact"
+    VersionedTable.write(spark.range(8000).select(col("id").as("k"),
+      (col("id") % 8).as("p"), (col("id") * 3).as("a"), lit("x").as("b")),
+      path, partitionBy = Seq("p"))
+    val dim = spark.range(8).select(col("id").as("p"),
+      concat(lit("d"), col("id")).as("name"))
+      .filter(col("p") === 3)
+    // `a` and `b` are pruned from the fact scan's read schema
+    def rows() = spark.read.format("graft").load(path).join(dim, "p")
+      .select("k", "name").orderBy("k").collect().toSeq
+    val dpp = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    assert(spark.conf.get(dpp) == "true")
+    val on = rows()
+    spark.conf.set(dpp, "false")
+    val off = try rows() finally spark.conf.unset(dpp)
+    assert(on.size == 1000)
+    assert(on == off)
+  }
+
   // ------------------------------------------------------------ //
   // streaming rate limiting
   // ------------------------------------------------------------ //

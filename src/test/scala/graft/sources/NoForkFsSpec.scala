@@ -17,9 +17,8 @@ class NoForkFsSpec extends SparkSpec {
   private def hconf = spark.sparkContext.hadoopConfiguration
 
   test("fs.file.impl resolves to the fork-free raw local FS") {
-    // SessionTuning overrides NoForkFs's checksummed default with the
-    // raw (sidecar-free) variant — see the measurement note there.
-    // Either class is fork-free; the session must resolve the raw one.
+    // the raw (sidecar-free) variant — see the measurement note on
+    // NoForkFs.sparkConf
     val fs = FileSystem.get(new URI("file:///"), hconf)
     assert(fs.isInstanceOf[NoForkRawLocalFileSystem])
   }
@@ -43,6 +42,20 @@ class NoForkFsSpec extends SparkSpec {
     assert(!got.contains(OTHERS_READ))
     fs.setPermission(new HPath(dir.resolve("missing").toUri),
       new FsPermission("640")) // racing delete: must not throw
+    Files.delete(f); Files.delete(dir)
+  }
+
+  test("getFileStatus of a missing path throws FileNotFoundException, " +
+    "so exists is false (also under a regular file, ENOTDIR)") {
+    val dir = Files.createTempDirectory("nofork")
+    val f = dir.resolve("x.bin")
+    Files.write(f, Array[Byte](1))
+    val fs = FileSystem.get(new URI("file:///"), hconf)
+    for (p <- Seq(new HPath(dir.resolve("missing").toUri),
+                  new HPath(f.toUri.toString + "/child"))) {
+      intercept[java.io.FileNotFoundException](fs.getFileStatus(p))
+      assert(!fs.exists(p), p)
+    }
     Files.delete(f); Files.delete(dir)
   }
 

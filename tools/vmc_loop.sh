@@ -1,12 +1,10 @@
 #!/bin/bash
-# Stability loop: the FULL registry Verify, as the driver runs it
+# Touch-set stability loop: the FULL registry Verify, as the driver runs it
 # (shared session, sequential, cache cleared between queries), with
 # the touch-set oracle armed (every bloom-pruned merge touch scan
 # re-derives the exact touch set and throws on a false negative),
-# then DuckDB-compare every query. Historical note: the NO_CLEAR=1 +
-# shared-cache-dir variant of this loop plus tools/vmc_race.sh
-# root-caused the r12 versioned_merge_composite hash miss to
-# cross-process scratch collisions (see SURVEY §20).
+# then DuckDB-compare every query. Each run should end in PASS with
+# bloomFN=0.
 # Usage: tools/vmc_loop.sh [N]
 set -u
 cd "$(dirname "$0")/.."
