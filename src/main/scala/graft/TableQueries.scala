@@ -1344,9 +1344,8 @@ object TableQueries {
         VersionedTable.write(Medallion.dedupLatest(
           ev.filter(col("event_id") % 2 === 0),
           "user_id", "ts", "event_id"), path)
-        VersionedTable.upsertLatest(s, path, Medallion.dedupLatest(
-          ev.filter(col("event_id") % 2 === 1),
-          "user_id", "ts", "event_id"), "user_id", "ts", "event_id")
+        VersionedTable.upsertLatest(s, path,
+          ev.filter(col("event_id") % 2 === 1), "user_id", "ts", "event_id")
         VersionedTable.deleteVectors(s, path, "user_id % 10 = 0")
         val removed = VersionedTable.vacuum(path, keepLast = 2)
         val v0Refused = scala.util.Try(

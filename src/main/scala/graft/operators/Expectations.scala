@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality expectations — Spark-native re-expression
@@ -22,6 +22,20 @@ final case class Relation(name: String, fk: DataFrame, fkCol: String,
                           pk: DataFrame, pkCol: String)
 
 class ExpectationViolation(msg: String) extends RuntimeException(msg)
+
+/** One expectation's counters over a flow's candidate rows (DLT event
+  * log `data_quality.expectations` entry). */
+final case class ExpectationResult(name: String, passed: Long,
+                                   failed: Long)
+
+/** The expectation counters a commit carries in its log entry: the
+  * flow (pipeline stage) that produced the rows, its position in the
+  * pipeline, the micro-batch (incremental runs only) and one result
+  * per constraint — the DLT event log's `flow_progress` row, kept in
+  * the same atomic log append as the data it describes. */
+final case class FlowExpectations(flow: String, stageSeq: Int,
+                                  batchId: Option[Long],
+                                  results: Seq[ExpectationResult])
 
 object Expectations {
 
@@ -47,6 +61,54 @@ object Expectations {
     agg.select(explode(packed).as("m")).select("m.*")
   }
 
+  /** The counters of [[metrics]] attached to `df` as an observation:
+    * the action that consumes the returned frame (the stage write)
+    * computes them as a side effect — no extra job, no persist. Read
+    * them with [[observed]] once that action has run. Observe ABOVE
+    * any drop-row filter (DLT counts candidate rows, then drops) and
+    * never below a lazy pin (the pinning job would not report them). */
+  def observe(df: DataFrame,
+              exps: Seq[Expectation]): (DataFrame, Observation) = {
+    val obs = Observation()
+    val counters = exps.zipWithIndex.flatMap { case (e, i) =>
+      Seq(count(when(expr(e.predicateSql), 1)).as(s"p_$i"),
+        count(when(!coalesce(expr(e.predicateSql), lit(false)), 1))
+          .as(s"f_$i"))
+    }
+    (df.observe(obs, counters.head, counters.tail: _*), obs)
+  }
+
+  /** How long [[observed]] waits for the listener event that delivers
+    * an observation (posted asynchronously after the action ends). */
+  private val ObservedTimeoutMs = 60000L
+
+  /** The counters of an [[observe]]d frame, waiting at most
+    * [[ObservedTimeoutMs]] — an observation whose action ran on another
+    * session never completes, and that must fail loudly rather than
+    * block the stream thread forever. */
+  def observed(obs: Observation,
+               exps: Seq[Expectation]): Seq[ExpectationResult] = {
+    val row =
+      try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(ObservedTimeoutMs, "ms"))
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"expectation counters not observed within $ObservedTimeoutMs ms")
+      }
+    exps.zipWithIndex.map { case (e, i) =>
+      ExpectationResult(e.name, row.getLong(2 * i), row.getLong(2 * i + 1))
+    }
+  }
+
+  /** ON VIOLATION FAIL UPDATE over counters already in hand. */
+  def failIfViolated(results: Seq[ExpectationResult], where: String): Unit = {
+    val bad = results.filter(_.failed > 0)
+    if (bad.nonEmpty) throw new ExpectationViolation(
+      s"expectations violated$where — " +
+        bad.map(r => s"${r.name}: ${r.failed} failed").mkString("; "))
+  }
+
   /** ON VIOLATION DROP ROW: keep only rows passing every constraint. */
   def dropInvalid(df: DataFrame, exps: Seq[Expectation]): DataFrame =
     df.filter(exps.map(e => expr(e.predicateSql)).reduce(_ && _))
@@ -60,15 +122,9 @@ object Expectations {
       exps.map(e => expr(e.predicateSql)).reduce(_ && _), lit(false)))
 
   /** ON VIOLATION FAIL UPDATE: throw if any constraint has failures. */
-  def failOnViolation(df: DataFrame, exps: Seq[Expectation]): Unit = {
-    val bad = metrics(df, exps).filter(col("failed_records") > 0)
-      .collect()
-    if (bad.nonEmpty) {
-      val detail = bad.map(r => s"${r.getString(0)}: ${r.getLong(2)} failed")
-        .mkString("; ")
-      throw new ExpectationViolation(s"expectations violated — $detail")
-    }
-  }
+  def failOnViolation(df: DataFrame, exps: Seq[Expectation]): Unit =
+    failIfViolated(metrics(df, exps).collect().toSeq.map(r =>
+      ExpectationResult(r.getString(0), r.getLong(1), r.getLong(2))), "")
 
   /** The demo suite used by the `expectations*` queries (≈ the
     * reference's length/state constraints, on `events`). */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.types._
 import graft.operators.Materialize.Pinnable
 
@@ -15,9 +16,15 @@ import graft.operators.Materialize.Pinnable
   * `storageDir/<stage>` (like DLT materializing LIVE tables, with
   * history + time travel for free), and the next stage reads the
   * materialized parquet — so a K-stage pipeline scans its input once
-  * per stage, never K·(K−1)/2 times from recursive lazy plans. The
-  * event log is a tiny driver-side frame (constraints × stages rows),
-  * exactly like DLT's runtime-emitted log.
+  * per stage, never K·(K−1)/2 times from recursive lazy plans.
+  *
+  * Expectation counters are a side effect of the stage write: they
+  * are observed on the stage's candidate rows (above any DROP ROW
+  * filter) and land in the stage table's commit-log entry, in the
+  * same atomic append as the rows they describe. So a stage costs its
+  * write and nothing more, and the event log is the stage tables'
+  * commit logs ([[incrementalEventLog]]; `DESCRIBE HISTORY` shows the
+  * same counters).
   */
 object Pipeline {
 
@@ -49,7 +56,16 @@ object Pipeline {
       * result replaces the stage table (a new full-snapshot version),
       * instead of merging batch rows. The right mode for gold
       * aggregates, whose groups can't be row-merged. */
-    recompute: Boolean = false)
+    recompute: Boolean = false) {
+
+    /** The rows this stage passes on: the candidate minus DROP ROW
+      * violations. */
+    def kept(candidate: DataFrame): DataFrame = onViolation match {
+      case OnViolation.DropRows =>
+        Expectations.dropInvalid(candidate, expectations)
+      case _ => candidate
+    }
+  }
 
   final case class RunResult(
     /** stage name → its materialized table (latest version) */
@@ -65,6 +81,43 @@ object Pipeline {
     StructField("passed_records", LongType, nullable = false),
     StructField("failed_records", LongType, nullable = false)))
 
+  /** A stage's commit: the frame to write (the candidate, observed,
+    * minus DROP ROW violations) and its counters, read once the write
+    * job has run. A FAIL-mode stage throws [[ExpectationViolation]]
+    * from `counters`, which [[VersionedTable]] evaluates between
+    * writing the data files and appending the log line — so a
+    * violation commits nothing. */
+  private final class StageCommit(st: Stage, stageSeq: Int,
+                                  batchId: Option[Long],
+                                  candidate: DataFrame) {
+    private val observation =
+      if (st.expectations.isEmpty) None
+      else Some(Expectations.observe(candidate, st.expectations))
+    val out: DataFrame = st.kept(observation.fold(candidate)(_._1))
+    lazy val counters: Option[FlowExpectations] = observation.map {
+      case (_, obs) =>
+        val results = Expectations.observed(obs, st.expectations)
+        if (st.onViolation == OnViolation.Fail)
+          Expectations.failIfViolated(results, s" in stage ${st.name}" +
+            batchId.fold("")(b => s", batch $b"))
+        FlowExpectations(st.name, stageSeq, batchId, results)
+    }
+  }
+
+  /** `SparkContext.SPARK_JOB_DESCRIPTION` (private to Spark). */
+  private val JobDescription = "spark.job.description"
+
+  /** Run `body` under a Spark job description (what the UI, event log
+    * and job listeners show), restoring the caller's afterwards. */
+  private def described[T](spark: SparkSession, desc: String)
+                          (body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(desc)
+    try body
+    finally sc.setLocalProperty(JobDescription, prev)
+  }
+
   /** Run the stage chain over `input`, materializing each stage and
     * recording expectation metrics. Metrics are evaluated on the
     * stage's transform output BEFORE drop-row filtering (DLT counts
@@ -74,51 +127,23 @@ object Pipeline {
     require(stages.nonEmpty, "pipeline needs at least one stage")
     require(stages.map(_.name).distinct.size == stages.size,
       "stage names must be unique")
-    val logRows = scala.collection.mutable.ArrayBuffer[Row]()
     var cur = input
-    val outTables = stages.zipWithIndex.map { case (st, i) =>
-      // stages with expectations take two actions over the candidate
-      // (metrics scan + versioned write) — persist so the transform is
-      // computed once, not once per action
-      val candidate =
-        if (st.expectations.nonEmpty)
-          st.transform(cur).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else st.transform(cur)
-      if (st.expectations.nonEmpty) {
-        val m = Expectations.metrics(candidate, st.expectations).collect()
-        m.foreach { r =>
-          logRows += Row(i, st.name, r.getString(0), r.getLong(1),
-            r.getLong(2))
-        }
-        // Fail mode reuses the already-collected counters — no second
-        // metrics scan of the stage input
-        if (st.onViolation == OnViolation.Fail) {
-          val bad = m.filter(_.getLong(2) > 0)
-          if (bad.nonEmpty) {
-            val detail = bad
-              .map(r => s"${r.getString(0)}: ${r.getLong(2)} failed")
-              .mkString("; ")
-            throw new ExpectationViolation(
-              s"expectations violated in stage ${st.name} — $detail")
-          }
-        }
-      }
-      val out = st.onViolation match {
-        case OnViolation.DropRows =>
-          Expectations.dropInvalid(candidate, st.expectations)
-        case _ => candidate
-      }
+    val commits = stages.zipWithIndex.map { case (st, i) =>
       val path = s"$storageDir/${st.name}"
-      VersionedTable.write(out, path, operation = s"PIPELINE[${st.name}]")
-      if (st.expectations.nonEmpty) candidate.unpersist()
+      val c = new StageCommit(st, i, None, st.transform(cur))
+      described(spark, s"graft pipeline ${st.name}") {
+        VersionedTable.write(c.out, path, operation = s"PIPELINE[${st.name}]",
+          expectations = c.counters)
+      }
       cur = VersionedTable.read(spark, path)
-      st.name -> cur
-    }.toMap
+      (st.name -> cur, c)
+    }
+    val logRows = commits.flatMap(_._2.counters).flatMap(f =>
+      f.results.map(r => Row(f.stageSeq, f.flow, r.name, r.passed, r.failed)))
     val log = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(logRows.toSeq).asJava), EventLogSchema)
-    RunResult(outTables, log)
+        .SeqHasAsJava(logRows).asJava), EventLogSchema)
+    RunResult(commits.map(_._1).toMap, log)
   }
 
   // ------------------------------------------------------------------
@@ -133,7 +158,7 @@ object Pipeline {
   // ------------------------------------------------------------------
 
   /** Per-micro-batch event log row layout (the batch-grained analog of
-    * [[EventLogSchema]], persisted under `storageDir/_event_log`). */
+    * [[EventLogSchema]]). */
   val IncEventLogSchema: StructType = StructType(Seq(
     StructField("batch_id", LongType, nullable = false),
     StructField("stage_seq", IntegerType, nullable = false),
@@ -142,30 +167,55 @@ object Pipeline {
     StructField("passed_records", LongType, nullable = false),
     StructField("failed_records", LongType, nullable = false)))
 
-  private def incLogDir(storageDir: String) = s"$storageDir/_event_log"
+  /** The `expectations` field of a commit-log entry. */
+  private val CommitExpectationsSchema = StructType(Seq(
+    StructField("expectations", StructType(Seq(
+      StructField("batch_id", LongType),
+      StructField("stage_seq", IntegerType),
+      StructField("flow_name", StringType),
+      StructField("results", ArrayType(StructType(Seq(
+        StructField("constraint_name", StringType),
+        StructField("passed_records", LongType),
+        StructField("failed_records", LongType))))))))))
 
-  /** The persisted per-batch expectation metrics of an incremental
-    * pipeline run (empty frame when no stage has expectations). */
+  /** The per-batch expectation metrics of an incremental pipeline run
+    * — a lazy read of the counters in the stage tables' commit logs
+    * (one row per constraint per committed stage batch; empty when no
+    * stage has expectations). */
   def incrementalEventLog(spark: SparkSession, storageDir: String): DataFrame = {
-    val dir = new java.io.File(incLogDir(storageDir))
-    if (dir.exists())
-      spark.read.schema(IncEventLogSchema).parquet(dir.toString)
-    else spark.createDataFrame(new java.util.ArrayList[Row](),
-      IncEventLogSchema)
+    val logs = Option(new java.io.File(storageDir).listFiles())
+      .getOrElse(Array.empty).toSeq
+      .map(d => new java.io.File(d, "_graft_log"))
+      .filter(_.isDirectory).map(_.toString).sorted
+    if (logs.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[Row](), IncEventLogSchema)
+    else spark.read.schema(CommitExpectationsSchema).json(logs: _*)
+      .filter(col("expectations.batch_id").isNotNull)
+      .select(col("expectations.batch_id"), col("expectations.stage_seq"),
+        col("expectations.flow_name"),
+        explode(col("expectations.results")).as("r"))
+      .select(col("batch_id"), col("stage_seq"), col("flow_name"),
+        col("r.constraint_name"), col("r.passed_records"),
+        col("r.failed_records"))
   }
 
   /** One micro-batch through the stage chain. Exactly-once per stage
     * via a batch-id marker in the stage table's commit log (a retried
     * batch id is a no-op — `foreachBatch`'s at-least-once delivery
     * becomes exactly-once tables, the [[graft.streaming.Streams
-    * .mergeBatch]] discipline). Stage i+1 consumes stage i's BATCH
-    * output (the incremental flow), never a re-read of the whole
-    * table. Public so specs can drive retry semantics directly. */
-  def incrementalBatch(spark: SparkSession, stages: Seq[Stage],
-                       storageDir: String, key: String, orderCol: String,
-                       tieBreaker: String)
+    * .mergeBatch]] discipline); the stage's expectation counters are
+    * in that same commit, so they count once too. Stage i+1 consumes
+    * stage i's BATCH output (the incremental flow), never a re-read of
+    * the whole table. Each stage commit is one exchange plus one write
+    * (plus a touch scan once its table has several files). Public so
+    * specs can drive retry semantics directly. */
+  def incrementalBatch(stages: Seq[Stage], storageDir: String, key: String,
+                       orderCol: String, tieBreaker: String)
                       (batch: DataFrame, batchId: Long): Unit = {
-    val persisted = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    // `foreachBatch` hands over a frame of a CLONED session: every
+    // stage frame is built on it, so the commit's actions run there
+    // and complete the observation registered on it
+    val spark = batch.sparkSession
     var cur = batch
     var prevPath: Option[String] = None
     stages.zipWithIndex.foreach { case (st, i) =>
@@ -180,57 +230,25 @@ object Pipeline {
             s"recompute stage ${st.name} needs an upstream stage")
           VersionedTable.read(spark, prevPath.get)
         } else cur
-      // each stage takes up to two actions over its candidate (metrics
-      // scan + versioned merge) and feeds the next stage — persist
-      // until the whole batch chain has committed
       val candidate = st.transform(input)
-      if (st.expectations.nonEmpty) {
-        candidate.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted += candidate
-      }
-      val out = st.onViolation match {
-        case OnViolation.DropRows =>
-          Expectations.dropInvalid(candidate, st.expectations)
-        case _ => candidate
-      }
-      // the marker guards commit + metrics, not the dataflow: a
-      // retried batch still flows downstream so later stages whose
-      // commit DID fail can catch up
-      if (!VersionedTable.operations(path).contains(marker)) {
-        if (st.expectations.nonEmpty) {
-          val m = Expectations.metrics(candidate, st.expectations).collect()
-          if (st.onViolation == OnViolation.Fail) {
-            val bad = m.filter(_.getLong(2) > 0)
-            if (bad.nonEmpty) throw new ExpectationViolation(
-              s"expectations violated in stage ${st.name}, batch $batchId — " +
-                bad.map(r => s"${r.getString(0)}: ${r.getLong(2)} failed")
-                  .mkString("; "))
+      // the marker guards the commit, not the dataflow: a retried
+      // batch still flows downstream so later stages whose commit DID
+      // fail can catch up
+      if (!VersionedTable.operations(path).contains(marker))
+        described(spark, s"graft pipeline ${st.name} batch $batchId") {
+          val c = new StageCommit(st, i, Some(batchId), candidate)
+          if (st.recompute)
+            VersionedTable.write(c.out, path, operation = marker,
+              expectations = c.counters)
+          else {
+            val (k, o, t) = st.merge.getOrElse((key, orderCol, tieBreaker))
+            VersionedTable.upsertLatest(spark, path, c.out, k, o, t,
+              operation = marker, expectations = c.counters)
           }
-          val logRows = m.map(r => Row(batchId, i, st.name, r.getString(0),
-            r.getLong(1), r.getLong(2)))
-          spark.createDataFrame(
-            new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-              .SeqHasAsJava(logRows.toSeq).asJava), IncEventLogSchema)
-            .write.mode("append").parquet(incLogDir(storageDir))
         }
-        if (st.recompute)
-          VersionedTable.write(out, path, operation = marker)
-        else {
-          val (k, o, t) = st.merge.getOrElse((key, orderCol, tieBreaker))
-          val deduped = Medallion.dedupLatest(out, k, o, t)
-          if (VersionedTable.versions(path).isEmpty)
-            VersionedTable.write(deduped, path, operation = marker)
-          else
-            VersionedTable.upsertLatest(spark, path, deduped, k, o, t,
-              operation = marker)
-        }
-        ()
-      }
-      cur = out
+      cur = st.kept(candidate)
       prevPath = Some(path)
     }
-    persisted.foreach(_.unpersist())
   }
 
   /** Run the stage chain incrementally over a file-source stream
@@ -252,15 +270,13 @@ object Pipeline {
     require(stages.nonEmpty, "pipeline needs at least one stage")
     require(stages.map(_.name).distinct.size == stages.size,
       "stage names must be unique")
-    import org.apache.spark.sql.functions.col
     val q = graft.streaming.Streams
       .fileIngest(spark, srcPath, schema, maxFilesPerTrigger = maxFilesPerTrigger)
       .select(payloadCols.map(col): _*)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(
-        incrementalBatch(spark, stages, storageDir, key, orderCol,
-          tieBreaker) _)
+        incrementalBatch(stages, storageDir, key, orderCol, tieBreaker) _)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(timeoutMs)
@@ -292,7 +308,7 @@ object Pipeline {
                                 stages: Seq[Stage], storageDir: String,
                                 key: String, orderCol: String,
                                 tieBreaker: String, v: Int): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val (ins0, delKeys, nIns) =
       if (v == 0) (VersionedTable.read(spark, bronzePath, Some(0)), None,
         1L)
@@ -332,8 +348,8 @@ object Pipeline {
     val emptyHop = v > 0 && delKeys.isEmpty && nIns == 0L
     if (!emptyHop) {
       val ins = ins0.withColumn("_graft_src_version", lit(v))
-      incrementalBatch(spark, stages, storageDir, key, orderCol,
-        tieBreaker)(ins, v.toLong)
+      incrementalBatch(stages, storageDir, key, orderCol, tieBreaker)(
+        ins, v.toLong)
       delKeys.foreach { dk =>
         stages.foreach { st =>
           val path = s"$storageDir/${st.name}"

@@ -326,7 +326,8 @@ object VersionedTable {
                         full: Option[Seq[FileEntry]],
                         add: Seq[FileEntry],
                         remove: Set[String],
-                        props: TableProps = emptyProps): Unit = {
+                        props: TableProps = emptyProps,
+                        expectations: Option[FlowExpectations] = None): Unit = {
     Files.createDirectories(logDir(path))
     val removeJson = remove.toSeq.sorted
       .map(n => s""""$n"""").mkString("[", ",", "]")
@@ -360,11 +361,22 @@ object VersionedTable {
        else props.usedPhys.toSeq.sorted
          .map(n => s""""${jsonEscape(n)}"""")
          .mkString(""""used_phys":[""", ",", "],"))
+    // DLT event-log parity: the counters of the flow that produced
+    // this commit's rows ride the same atomic append as the data
+    val expectationsJson = expectations.fold("") { f =>
+      s""""expectations":{"flow_name":"${jsonEscape(f.flow)}",""" +
+        s""""stage_seq":${f.stageSeq},""" +
+        f.batchId.fold("")(b => s""""batch_id":$b,""") +
+        f.results.map(r =>
+          s"""{"constraint_name":"${jsonEscape(r.name)}",""" +
+            s""""passed_records":${r.passed},"failed_records":${r.failed}}""")
+          .mkString(""""results":[""", ",", "]},")
+    }
     val entry =
       s"""{"version":$v,"operation":"${jsonEscape(operation)}","num_rows":$rows,""" +
         s""""committed_at":"${java.time.Instant.now()}",""" +
         s""""schema":"${jsonEscape(schema.json)}",""" +
-        propsJson +
+        propsJson + expectationsJson +
         s""""remove":$removeJson,$tailJson}"""
     Files.write(logDir(path).resolve(f"$v%06d.json"),
       java.util.List.of(entry), StandardOpenOption.CREATE_NEW)
@@ -564,6 +576,12 @@ object VersionedTable {
     c
   }
 
+  /** Read options built once from [[footerHadoopConf]]:
+    * `ParquetFileReader.open(file)` would build default options, and
+    * those construct a fresh Hadoop conf (an XML re-parse) per open. */
+  private lazy val footerReadOptions: org.apache.parquet.ParquetReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(footerHadoopConf).build()
+
   private def footerInfo(p: Path)
       : (Long, Map[String, (Double, Double)], Map[String, (String, String)]) = {
     footerReads.incrementAndGet()
@@ -607,7 +625,8 @@ object VersionedTable {
     }
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(p.toUri), footerHadoopConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      footerReadOptions)
     try {
       val rows = r.getRecordCount
       val blocks = r.getFooter.getBlocks
@@ -743,9 +762,11 @@ object VersionedTable {
     * count comes from the parquet footers of the files just written —
     * no second pass over the data. Always a FULL (checkpoint) log
     * entry: a snapshot replaces everything, so the delta IS the
-    * manifest. */
+    * manifest. `expectations` is evaluated after the data files are
+    * written and before the log append (see [[validateStaged]]). */
   def write(df: DataFrame, path: String, operation: String = "WRITE",
-            partitionBy: Seq[String] = Nil): Int = {
+            partitionBy: Seq[String] = Nil,
+            expectations: => Option[FlowExpectations] = None): Int = {
     val v = latestVersion(path).map(_ + 1).getOrElse(0)
     val prevNames =
       if (v == 0) Set.empty[String]
@@ -769,11 +790,11 @@ object VersionedTable {
         df.columns.map(c => colmap.getOrElse(c, c)))
     val files = writeDataFiles(df, path, v, partitionBy = partitionBy,
       props = props)
-    enforceConstraints(df.sparkSession, path, v, files,
-      nullableSchema(df.schema), props)
+    val counters = validateStaged(df.sparkSession, path, v, files,
+      nullableSchema(df.schema), props, expectations)
     appendLog(path, v, operation, files.map(_.rows).sum,
       nullableSchema(df.schema), full = Some(files), add = Nil,
-      remove = prevNames, props = props)
+      remove = prevNames, props = props, expectations = counters)
     v
   }
 
@@ -854,7 +875,8 @@ object VersionedTable {
   private[operators] def commitActions(path: String, operation: String,
       baseV: Int, removeNames: Set[String], add: Seq[FileEntry],
       schema: StructType,
-      newProps: Option[TableProps] = None): Int = {
+      newProps: Option[TableProps] = None,
+      expectations: Option[FlowExpectations] = None): Int = {
     val baseProps = propsOf(path, baseV)
     var attempts = 0
     while (attempts < 1000) {
@@ -888,7 +910,7 @@ object VersionedTable {
       try {
         appendLog(path, nv, operation, rows, schema, full,
           if (full.isDefined) Nil else add, removeNames,
-          newProps.getOrElse(baseProps))
+          newProps.getOrElse(baseProps), expectations)
         return nv
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -901,28 +923,55 @@ object VersionedTable {
   /** Commit a file-granular rewrite planned against `baseV`:
     * untouched files are RE-LINKED into the new manifest; only
     * `newData` (the rewritten touched rows plus inserts) hits disk.
-    * New files are CHECK-constraint-validated before the log append —
-    * a violation aborts atomically (staged files removed, no commit). */
+    * New files are validated before the log append
+    * ([[validateStaged]]) — a violation aborts atomically (staged
+    * files removed, no commit). */
   private[graft] def commitRewrite(spark: SparkSession, path: String,
                             operation: String, newData: DataFrame,
                             touched: Set[String], schema: StructType,
                             baseV: Int,
                             partitionBy: Seq[String] = Nil,
-                            newProps: Option[TableProps] = None): Int = {
+                            newProps: Option[TableProps] = None,
+                            expectations: => Option[FlowExpectations] = None)
+      : Int = {
     val props = newProps.getOrElse(propsOf(path, baseV))
     val fresh = writeDataFiles(newData, path, baseV + 1,
       partitionBy = partitionBy, props = props)
-    enforceConstraints(spark, path, baseV + 1, fresh, schema, props)
-    commitActions(path, operation, baseV, touched, fresh, schema, newProps)
+    val counters = validateStaged(spark, path, baseV + 1, fresh, schema,
+      props, expectations)
+    commitActions(path, operation, baseV, touched, fresh, schema, newProps,
+      counters)
   }
+
+  /** The pre-commit step of every data-writing commit, run after its
+    * new files are staged in the pool: evaluate `expectations` (the
+    * counters the write job observed — a FAIL-mode flow throws
+    * [[ExpectationViolation]] here), then check the active CHECK
+    * constraints. Any throw removes the staged pool files and
+    * propagates, so no log line is written; otherwise returns the
+    * counters for the log entry. */
+  private def validateStaged(spark: SparkSession, path: String, v: Int,
+                             entries: Seq[FileEntry], schema: StructType,
+                             props: TableProps,
+                             expectations: => Option[FlowExpectations] = None)
+      : Option[FlowExpectations] =
+    try {
+      val counters = expectations
+      enforceConstraints(spark, path, v, entries, schema, props)
+      counters
+    } catch {
+      case t: Throwable =>
+        entries.flatMap(e => e.name +: (e.dv.toSeq ++ e.bloom.values.toSeq))
+          .foreach(n => Files.deleteIfExists(poolDir(path).resolve(n)))
+        throw t
+    }
 
   /** Validate a commit's NEW files against the active CHECK
     * constraints — enforcement cost is O(new data), column-pruned to
     * the constraint columns, never O(table) (untouched files were
     * validated by the commits that wrote them). SQL-standard CHECK
     * semantics: a row violates only when the predicate is FALSE
-    * (UNKNOWN passes). On violation the staged pool files are removed
-    * and the commit aborts with [[ConstraintViolationException]]. */
+    * (UNKNOWN passes). Throws [[ConstraintViolationException]]. */
   private def enforceConstraints(spark: SparkSession, path: String,
                                  v: Int, entries: Seq[FileEntry],
                                  schema: StructType,
@@ -941,12 +990,8 @@ object VersionedTable {
         case ((n, sql), i) if counts.getLong(i) > 0 =>
           s"$n ($sql): ${counts.getLong(i)} rows"
       }
-      if (bad.nonEmpty) {
-        entries.flatMap(e => e.name +: (e.dv.toSeq ++ e.bloom.values.toSeq))
-          .foreach(n => Files.deleteIfExists(poolDir(path).resolve(n)))
-        throw new ConstraintViolationException(
-          s"CHECK constraint violation on $path: ${bad.mkString("; ")}")
-      }
+      if (bad.nonEmpty) throw new ConstraintViolationException(
+        s"CHECK constraint violation on $path: ${bad.mkString("; ")}")
     }
   }
 
@@ -1203,7 +1248,7 @@ object VersionedTable {
     val props = propsOf(path, v)
     val fresh = writeDataFiles(aligned, path, v + 1,
       partitionBy = partitionBy, props = props)
-    enforceConstraints(spark, path, v + 1, fresh, schema, props)
+    validateStaged(spark, path, v + 1, fresh, schema, props)
     commitActions(path, operation, v, Set.empty, fresh, schema)
   }
 
@@ -1244,7 +1289,7 @@ object VersionedTable {
         usedPhys = p.usedPhys + phys)
     }
     val fresh = writeDataFiles(aligned, path, v + 1, props = p)
-    enforceConstraints(spark, path, v + 1, fresh, newSchema, p)
+    validateStaged(spark, path, v + 1, fresh, newSchema, p)
     commitActions(path, operation, v, Set.empty, fresh, newSchema,
       if (newFields.isEmpty) None else Some(p))
   }
@@ -2069,39 +2114,50 @@ object VersionedTable {
     * independent of how rows were split across update batches — the
     * convergence property a streaming merge sink needs. File-granular:
     * the latest-per-key contest only involves keys present in
-    * `updates`, so only files holding those keys are rewritten.
+    * `updates`, so only files holding those keys are rewritten. An
+    * absent table has an empty base: the first call writes version 0.
+    *
+    * `updates` is consumed as is: no pin and no pre-dedup, so an
+    * observation on it completes in the commit's own jobs (the touch
+    * scan when the table has several files, else the write).
+    * `expectations` is evaluated before the log append (see
+    * [[validateStaged]]).
     *
     * CONTRACT (advisor r10): (1) the base must already be UNIQUE per
-    * key — guaranteed for tables only ever written through a deduped
-    * snapshot plus this verb, which preserves it; keys absent from
-    * `updates` that hold duplicates in untouched files are NOT
-    * re-deduplicated (the rewrite is file-granular by design).
-    * (2) NULL keys never merge — MERGE ON semantics, where NULL
-    * matches nothing: base NULL-key rows pass through untouched and
-    * NULL-key update rows are appended as inserts. */
+    * key — guaranteed for tables only ever written through this verb,
+    * which preserves it; keys absent from `updates` that hold
+    * duplicates in untouched files are NOT re-deduplicated (the
+    * rewrite is file-granular by design). (2) NULL keys never merge
+    * with the base — MERGE ON semantics, where NULL matches nothing:
+    * base NULL-key rows pass through untouched, and the batch's
+    * NULL-key rows collapse to their latest one, which is inserted. */
   def upsertLatest(spark: SparkSession, path: String, updates: DataFrame,
                    key: String, orderCol: String, tieBreaker: String,
-                   operation: String = "MERGE"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    val props = propsOf(path, v)
-    // one materialization of the update batch (see upsert)
-    val upd = updates.pin(eager = false)
-    val nonNullUpd = upd.filter(col(key).isNotNull)
-    val keyFrame = nonNullUpd.select(col(key)).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, Seq(key), "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-        Seq(key)))
-    val base = readFiles(spark, path, touched, schema, v, props)
-    val merged = Medallion.dedupLatest(
-        base.filter(col(key).isNotNull).unionByName(nonNullUpd),
-        key, orderCol, tieBreaker)
-      .unionByName(base.filter(col(key).isNull))
-      .unionByName(upd.filter(col(key).isNull))
-    commitRewrite(spark, path, operation, merged, touched, schema, v)
-  }
+                   operation: String = "MERGE",
+                   expectations: => Option[FlowExpectations] = None): Int =
+    latestVersion(path) match {
+      case None =>
+        write(Medallion.dedupLatest(updates, key, orderCol, tieBreaker),
+          path, operation, expectations = expectations)
+      case Some(v) =>
+        val schema = schemaOf(path, v)
+        val props = propsOf(path, v)
+        val keyFrame = updates.filter(col(key).isNotNull)
+          .select(col(key)).distinct()
+        val touched = touchedFiles(spark, path, v, schema,
+          _.join(keyFrame, Seq(key), "left_semi"), props,
+          bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
+            Seq(key)))
+        val base = readFiles(spark, path, touched, schema, v, props)
+        // one window over base ∪ updates: NULL is a window partition of
+        // its own, so the batch's NULL-key rows collapse to the latest
+        val merged = Medallion.dedupLatest(
+            base.filter(col(key).isNotNull).unionByName(updates),
+            key, orderCol, tieBreaker)
+          .unionByName(base.filter(col(key).isNull))
+        commitRewrite(spark, path, operation, merged, touched, schema, v,
+          expectations = expectations)
+    }
 
   /** The `operation` strings from the commit log, ascending by
     * version (driver-side; log is tiny). */

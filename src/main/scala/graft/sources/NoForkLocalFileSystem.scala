@@ -3,11 +3,12 @@ package graft.sources
 import java.net.URI
 import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
-import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.attribute.BasicFileAttributes
+import java.nio.file.{Files, LinkOption, NoSuchFileException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSLinkResolver, FileStatus, Path, RawLocalFileSystem}
 
 /** Fork-free permission handling for Hadoop's local filesystem.
   *
@@ -108,6 +109,46 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
         // (ENOTDIR): the FileSystem contract's not-found, which
         // `exists` turns into false
         else throw new java.io.FileNotFoundException(s"File $f does not exist")
+    }
+  }
+
+  /** Fork-free getFileLinkStatus. Hadoop's local version reads the
+    * link target with `FileUtil.readLink`, which forks `readlink` —
+    * on every `FileContext.rename`, i.e. every streaming checkpoint
+    * commit. java.nio answers both of its questions without a
+    * subprocess: a NOFOLLOW_LINKS stat says whether `f` is a symlink
+    * and `readSymbolicLink` gives the target. The result is the base
+    * class's field for field: a file or directory is its
+    * [[getFileStatus]]; a symlink carries its target's status (zeroed
+    * when dangling) with the path as given and the qualified target.
+    * One difference: the base class runs `readlink` on the path
+    * STRING, so it misses a symlink behind a `file:` URI; this one
+    * does not. */
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val local = pathToFile(f).toPath
+    val isLink =
+      try Files.readAttributes(local, classOf[BasicFileAttributes],
+        LinkOption.NOFOLLOW_LINKS).isSymbolicLink
+      catch {
+        case _: java.io.IOException =>
+          throw new java.io.FileNotFoundException(s"File $f does not exist")
+      }
+    if (!isLink) getFileStatus(f)
+    else {
+      val target = new Path(Files.readSymbolicLink(local).toString)
+      val st =
+        try {
+          val s = getFileStatus(f)
+          new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
+            s.getModificationTime, s.getAccessTime, s.getPermission,
+            s.getOwner, s.getGroup, target, f)
+        } catch {
+          case _: java.io.FileNotFoundException =>
+            new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault,
+              "", "", target, f)
+        }
+      st.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, f, target))
+      st
     }
   }
 

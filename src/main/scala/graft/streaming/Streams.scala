@@ -51,15 +51,11 @@ object Streams {
   def mergeBatch(spark: SparkSession, tablePath: String, key: String,
                  orderCol: String, tieBreaker: String)
                 (batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.{Medallion, VersionedTable}
+    import graft.operators.VersionedTable
     val marker = s"STREAM_MERGE[batch=$batchId]"
     if (!VersionedTable.operations(tablePath).contains(marker)) {
-      val deduped = Medallion.dedupLatest(batch, key, orderCol, tieBreaker)
-      if (VersionedTable.versions(tablePath).isEmpty)
-        VersionedTable.write(deduped, tablePath, operation = marker)
-      else
-        VersionedTable.upsertLatest(spark, tablePath, deduped, key,
-          orderCol, tieBreaker, operation = marker)
+      VersionedTable.upsertLatest(spark, tablePath, batch, key, orderCol,
+        tieBreaker, operation = marker)
       ()
     }
   }

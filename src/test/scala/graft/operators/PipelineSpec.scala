@@ -195,15 +195,202 @@ class PipelineSpec extends SparkSpec {
       Pipeline.Stage("bronze", identity,
         Seq(Expectation("user present", "user_id is not null"))))
     val batch = tables.events.select(incCols.map(col): _*).limit(100)
-    Pipeline.incrementalBatch(spark, stages, store, "user_id", "ts",
+    Pipeline.incrementalBatch(stages, store, "user_id", "ts",
       "event_id")(batch, 7L)
     val rows1 = VersionedTable.read(spark, s"$store/bronze").count()
     val log1 = Pipeline.incrementalEventLog(spark, store).count()
     // at-least-once delivery retries the same batch id
-    Pipeline.incrementalBatch(spark, stages, store, "user_id", "ts",
+    Pipeline.incrementalBatch(stages, store, "user_id", "ts",
       "event_id")(batch, 7L)
     assert(VersionedTable.versions(s"$store/bronze").size == 1)
     assert(VersionedTable.read(spark, s"$store/bronze").count() == rows1)
     assert(Pipeline.incrementalEventLog(spark, store).count() == log1)
+  }
+
+  // ------------------------------------------------------------------
+  // expectation counters observed on the stage write
+  // ------------------------------------------------------------------
+
+  private val eventSilver = Pipeline.Stage("silver", identity,
+    Expectations.EventSuite, Pipeline.OnViolation.DropRows)
+
+  private def incEvents = tables.events.select(incCols.map(col): _*)
+
+  private def batchOf(lo: Long, hi: Long) =
+    incEvents.filter(col("event_id") >= lo && col("event_id") < hi)
+
+  /** The event-log rows of one batch, keyed by constraint name. */
+  private def loggedCounters(store: String, batchId: Long)
+      : Map[String, (Long, Long)] =
+    Pipeline.incrementalEventLog(spark, store)
+      .filter(col("batch_id") === batchId).collect()
+      .map(r => r.getString(3) -> (r.getLong(4), r.getLong(5))).toMap
+
+  private def exactCounters(df: org.apache.spark.sql.DataFrame,
+                            exps: Seq[Expectation]) =
+    Expectations.metrics(df, exps).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** Job-start descriptions seen by a listener while `body` runs; a
+    * sentinel job marks the end, so every earlier job event has been
+    * delivered when this returns. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    val prev = sc.getLocalProperty("spark.job.description")
+    try {
+      body
+      sc.setJobDescription("sentinel")
+      spark.range(1).count()
+      sc.setJobDescription(prev)
+      val deadline = System.currentTimeMillis + 30000
+      while (!seen.contains("sentinel") &&
+             System.currentTimeMillis < deadline) Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.takeWhile(_ != "sentinel")
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a steady-state micro-batch (bronze, silver DROP ROW, gold " +
+    "recompute) runs at most 6 Spark jobs, each described by stage and " +
+    "batch, and restores the caller's job description") {
+    val store = freshDir
+    val stages = Seq(
+      Pipeline.Stage("bronze", identity),
+      eventSilver,
+      Pipeline.Stage("gold",
+        df => df.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+        recompute = true))
+    // built up front: resolving the test input runs jobs of its own
+    val batches = (0 to 2).map(b => batchOf(b * 300L, b * 300L + 400))
+    def run(b: Int) = Pipeline.incrementalBatch(stages, store, "event_id",
+      "ts", "event_id")(batches(b), b.toLong)
+    run(0); run(1)
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    val descs = try jobDescriptions {
+        run(2)
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      } finally sc.setJobDescription(null)
+    assert(descs.nonEmpty && descs.size <= 6,
+      s"${descs.size} jobs per micro-batch: $descs")
+    val stageOf = """graft pipeline (\w+) batch 2""".r
+    assert(descs.forall(stageOf.matches), descs)
+    assert(descs.map { case stageOf(s) => s }.distinct ==
+      Seq("bronze", "silver", "gold"))
+  }
+
+  test("expectation counters are exact on a multi-file stage table, " +
+    "where the touch scan runs before the write") {
+    val store = freshDir
+    val path = s"$store/silver"
+    VersionedTable.write(batchOf(0, 600).repartition(3, col("event_id")), path)
+    assert(VersionedTable.manifest(path, 0).size >= 2)
+    val batch = batchOf(400, 900)
+    Pipeline.incrementalBatch(Seq(eventSilver), store, "event_id", "ts",
+      "event_id")(batch, 1L)
+    assert(loggedCounters(store, 1L) ==
+      exactCounters(batch, Expectations.EventSuite))
+    val expected = Medallion.dedupLatest(
+      batchOf(0, 600).unionByName(
+        Expectations.dropInvalid(batch, Expectations.EventSuite)),
+      "event_id", "ts", "event_id")
+    val got = VersionedTable.read(spark, path)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+    // DESCRIBE HISTORY shows the counters of the commit that made them
+    val h = VersionedTable.history(spark, path)
+      .filter(col("version") === 1)
+      .select(col("expectations.flow_name"), col("expectations.batch_id"),
+        col("expectations.results.failed_records")).head()
+    assert(h.getString(0) == "silver" && h.getLong(1) == 1L)
+    assert(h.getSeq[Long](2) == Expectations.EventSuite.map(e =>
+      exactCounters(batch, Expectations.EventSuite)(e.name)._2))
+  }
+
+  test("expectation counters are exact, with no hang, for a batch whose " +
+    "rows all fail and for an empty batch") {
+    val store = freshDir
+    def run(b: org.apache.spark.sql.DataFrame, id: Long) =
+      Pipeline.incrementalBatch(Seq(eventSilver), store, "event_id", "ts",
+        "event_id")(b, id)
+    run(batchOf(0, 200), 0L)
+    val before = VersionedTable.read(spark, s"$store/silver").count()
+    val allFail = batchOf(200, 400).withColumn("value", lit(-1.0))
+    run(allFail, 1L)
+    val n = allFail.count()
+    assert(n > 0)
+    assert(loggedCounters(store, 1L)("value is non-negative") == (0L, n))
+    assert(loggedCounters(store, 1L) ==
+      exactCounters(allFail, Expectations.EventSuite))
+    assert(VersionedTable.read(spark, s"$store/silver").count() == before)
+    run(batchOf(0, 0), 2L)
+    assert(loggedCounters(store, 2L) ==
+      Expectations.EventSuite.map(_.name -> (0L, 0L)).toMap)
+    assert(VersionedTable.versions(s"$store/silver") == Seq(0, 1, 2))
+  }
+
+  test("FAIL mode throws ExpectationViolation and leaves no new version " +
+    "and no new pool file") {
+    val store = freshDir
+    val strict = Pipeline.Stage("silver", identity,
+      Seq(Expectation("value non-negative", "value >= 0")),
+      Pipeline.OnViolation.Fail)
+    def run(b: org.apache.spark.sql.DataFrame, id: Long) =
+      Pipeline.incrementalBatch(Seq(strict), store, "event_id", "ts",
+        "event_id")(b, id)
+    val ok = batchOf(0, 300).filter(col("value") >= 0)
+    run(ok, 0L)
+    val path = s"$store/silver"
+    val pool = VersionedTable.poolFiles(path).toSet
+    intercept[ExpectationViolation] {
+      run(batchOf(300, 600).withColumn("value", -col("value") - 1), 1L)
+    }
+    assert(VersionedTable.versions(path) == Seq(0))
+    assert(VersionedTable.poolFiles(path).toSet == pool)
+    assert(loggedCounters(store, 1L).isEmpty)
+    assert(VersionedTable.read(spark, path).count() == ok.count())
+  }
+
+  test("a batch whose commit fails and is retried logs its counters once") {
+    val store = freshDir
+    val path = s"$store/silver"
+    def run(id: Long) = Pipeline.incrementalBatch(Seq(eventSilver), store,
+      "event_id", "ts", "event_id")(batchOf(id * 300, id * 300 + 300), id)
+    run(0L)
+    VersionedTable.addConstraint(spark, path, "early ids", "event_id < 300")
+    intercept[ConstraintViolationException](run(1L))
+    VersionedTable.dropConstraint(path, "early ids")
+    run(1L)
+    val rows = Pipeline.incrementalEventLog(spark, store)
+      .filter(col("batch_id") === 1L).count()
+    assert(rows == Expectations.EventSuite.size,
+      s"batch 1 logged $rows counter rows")
+  }
+
+  test("repeated keys and several NULL-key rows in one batch commit the " +
+    "latest row per key and the latest NULL-key row") {
+    import spark.implicits._
+    val store = freshDir
+    val stages = Seq(Pipeline.Stage("bronze", identity))
+    def run(rows: Seq[(Option[Long], Long, String)], id: Long) =
+      Pipeline.incrementalBatch(stages, store, "k", "ts", "p")(
+        rows.toDF("k", "ts", "p"), id)
+    run(Seq((Some(1L), 1L, "a1"), (Some(2L), 1L, "b1"), (Some(2L), 3L, "b3"),
+      (None, 1L, "n1"), (None, 2L, "n2")), 0L)
+    run(Seq((Some(1L), 5L, "a5"), (Some(1L), 4L, "a4"), (Some(2L), 2L, "b2"),
+      (Some(4L), 1L, "d1"), (Some(4L), 7L, "d7"), (Some(4L), 3L, "d3"),
+      (None, 9L, "n9"), (None, 3L, "n3"), (None, 8L, "n8")), 1L)
+    val got = VersionedTable.read(spark, s"$store/bronze").as[(Option[Long],
+      Long, String)].collect().toSet
+    assert(got == Set((Some(1L), 5L, "a5"), (Some(2L), 3L, "b3"),
+      (Some(4L), 7L, "d7"), (None, 2L, "n2"), (None, 9L, "n9")))
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.attribute.PosixFilePermission._
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{AbstractFileSystem, FileStatus, FileSystem, RawLocalFileSystem, Path => HPath}
 
 import graft.SparkSpec
 
@@ -57,6 +57,32 @@ class NoForkFsSpec extends SparkSpec {
       assert(!fs.exists(p), p)
     }
     Files.delete(f); Files.delete(dir)
+  }
+
+  test("getFileLinkStatus of a file and a symlink matches the base class; " +
+    "a missing path throws FileNotFoundException") {
+    val dir = Files.createTempDirectory("nofork")
+    val f = dir.resolve("x.bin")
+    Files.write(f, Array[Byte](1, 2, 3))
+    val link = Files.createSymbolicLink(dir.resolve("l.bin"), f)
+    val fs = new NoForkRawLocalFileSystem
+    fs.initialize(new URI("file:///"), hconf)
+    val base = new RawLocalFileSystem
+    base.initialize(new URI("file:///"), hconf)
+    def fields(s: FileStatus) = (s.getPath, s.getLen, s.isDirectory,
+      s.isSymlink, if (s.isSymlink) s.getSymlink else null,
+      s.getModificationTime, s.getReplication, s.getBlockSize,
+      s.getPermission, s.getOwner, s.getGroup)
+    // scheme-less paths: the base class runs `readlink` on the path
+    // string, so it only sees a symlink through a plain local path
+    for (p <- Seq(new HPath(f.toString), new HPath(link.toString)))
+      assert(fields(fs.getFileLinkStatus(p)) == fields(base.getFileLinkStatus(p)))
+    val ls = fs.getFileLinkStatus(new HPath(link.toUri))
+    assert(ls.isSymlink && ls.getSymlink == new HPath(f.toUri))
+    assert(!fs.getFileLinkStatus(new HPath(f.toUri)).isSymlink)
+    intercept[java.io.FileNotFoundException](
+      fs.getFileLinkStatus(new HPath(dir.resolve("missing").toUri)))
+    Files.delete(link); Files.delete(f); Files.delete(dir)
   }
 
   test("posixPerms decodes all nine bits") {
