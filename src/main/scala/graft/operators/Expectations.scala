@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality expectations — Spark-native re-expression
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * Predicates are SQL strings so suites serialize/log cleanly.
   * `metrics` computes ALL constraint counters in ONE pass over the
   * data (conditional aggregation) — at 100 TB you never want one scan
-  * per constraint.
+  * per constraint; `observe` rides the same counters on a commit's
+  * write job.
   */
 final case class Expectation(name: String, predicateSql: String)
 
@@ -39,67 +40,67 @@ final case class FlowExpectations(flow: String, stageSeq: Int,
 
 object Expectations {
 
+  /** The one counter builder behind every count a commit reports:
+    * per expectation, `p_<i>` rows where the predicate holds and
+    * `f_<i>` rows where it does not. `count`, not `sum`, so zero rows
+    * count 0, never NULL. A NULL predicate result fails an expectation
+    * (DLT) and, with `nullPasses`, passes a CHECK constraint (SQL
+    * UNKNOWN). */
+  def counters(exps: Seq[Expectation],
+               nullPasses: Boolean = false): Seq[Column] =
+    exps.zipWithIndex.flatMap { case (e, i) =>
+      val holds = coalesce(expr(e.predicateSql), lit(nullPasses))
+      Seq(count(when(holds, 1)).as(s"p_$i"), count(when(!holds, 1)).as(s"f_$i"))
+    }
+
   /** One row per constraint: (constraint_name, passed_records,
     * failed_records). Single aggregation pass, then an explode of the
-    * packed counters (driver-free). NULL predicate results count as
-    * failures, matching DLT. */
+    * packed counters (driver-free). */
   def metrics(df: DataFrame, exps: Seq[Expectation]): DataFrame = {
-    // coalesce: sum over zero rows is NULL — report 0/0 on an empty
-    // input instead (DLT metric semantics)
-    val counters = exps.zipWithIndex.flatMap { case (e, i) =>
-      Seq(coalesce(sum(when(expr(e.predicateSql), 1L).otherwise(0L)), lit(0L))
-          .as(s"p_$i"),
-        coalesce(sum(when(expr(e.predicateSql), 0L).otherwise(1L)), lit(0L))
-          .as(s"f_$i"))
-    }
-    val agg = df.agg(counters.head, counters.tail: _*)
+    val cs = counters(exps)
     val packed = array(exps.zipWithIndex.map { case (e, i) =>
       struct(lit(e.name).as("constraint_name"),
         col(s"p_$i").as("passed_records"),
         col(s"f_$i").as("failed_records"))
     }: _*)
-    agg.select(explode(packed).as("m")).select("m.*")
+    df.agg(cs.head, cs.tail: _*).select(explode(packed).as("m")).select("m.*")
   }
 
-  /** The counters of [[metrics]] attached to `df` as an observation:
-    * the action that consumes the returned frame (the stage write)
+  /** Attach `metrics` (aggregates) to `df` as an observation: the
+    * action that consumes the returned frame (a commit's write)
     * computes them as a side effect — no extra job, no persist. Read
     * them with [[observed]] once that action has run. Observe ABOVE
-    * any drop-row filter (DLT counts candidate rows, then drops) and
-    * never below a lazy pin (the pinning job would not report them). */
-  def observe(df: DataFrame,
-              exps: Seq[Expectation]): (DataFrame, Observation) = {
+    * any drop-row filter (DLT counts candidate rows, then drops),
+    * never below a lazy pin (the pinning job would not report them),
+    * and never over an IN/EXISTS subquery (Spark rejects it in a
+    * metric — project the predicate into a column first). */
+  def observe(df: DataFrame, metrics: Seq[Column]): (DataFrame, Observation) = {
     val obs = Observation()
-    val counters = exps.zipWithIndex.flatMap { case (e, i) =>
-      Seq(count(when(expr(e.predicateSql), 1)).as(s"p_$i"),
-        count(when(!coalesce(expr(e.predicateSql), lit(false)), 1))
-          .as(s"f_$i"))
-    }
-    (df.observe(obs, counters.head, counters.tail: _*), obs)
+    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
   }
 
   /** How long [[observed]] waits for the listener event that delivers
     * an observation (posted asynchronously after the action ends). */
   private val ObservedTimeoutMs = 60000L
 
-  /** The counters of an [[observe]]d frame, waiting at most
+  /** The values of an [[observe]]d frame, waiting at most
     * [[ObservedTimeoutMs]] — an observation whose action ran on another
     * session never completes, and that must fail loudly rather than
-    * block the stream thread forever. */
-  def observed(obs: Observation,
-               exps: Seq[Expectation]): Seq[ExpectationResult] = {
-    val row =
-      try scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(ObservedTimeoutMs, "ms"))
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"expectation counters not observed within $ObservedTimeoutMs ms")
-      }
+    * block the caller forever. */
+  def observed(obs: Observation): Row =
+    try scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(ObservedTimeoutMs, "ms"))
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"commit counters not observed within $ObservedTimeoutMs ms")
+    }
+
+  /** The [[counters]] of `exps` in an observed row. */
+  def results(row: Row, exps: Seq[Expectation]): Seq[ExpectationResult] =
     exps.zipWithIndex.map { case (e, i) =>
       ExpectationResult(e.name, row.getLong(2 * i), row.getLong(2 * i + 1))
     }
-  }
 
   /** ON VIOLATION FAIL UPDATE over counters already in hand. */
   def failIfViolated(results: Seq[ExpectationResult], where: String): Unit = {

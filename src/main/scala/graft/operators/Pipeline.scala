@@ -92,11 +92,13 @@ object Pipeline {
                                   candidate: DataFrame) {
     private val observation =
       if (st.expectations.isEmpty) None
-      else Some(Expectations.observe(candidate, st.expectations))
+      else Some(Expectations.observe(candidate,
+        Expectations.counters(st.expectations)))
     val out: DataFrame = st.kept(observation.fold(candidate)(_._1))
     lazy val counters: Option[FlowExpectations] = observation.map {
       case (_, obs) =>
-        val results = Expectations.observed(obs, st.expectations)
+        val results = Expectations.results(Expectations.observed(obs),
+          st.expectations)
         if (st.onViolation == OnViolation.Fail)
           Expectations.failIfViolated(results, s" in stage ${st.name}" +
             batchId.fold("")(b => s", batch $b"))

@@ -696,65 +696,102 @@ object VersionedTable {
     sb.toString
   }
 
-  /** Write `df`'s rows as new immutable pool files (staged, then moved
-    * under a commit prefix so provenance is readable and names are
-    * globally unique). With `partitionBy`, one file per partition
-    * value combo per task — the partition VALUES are recorded in the
-    * manifest entry while the data files keep every column (the
-    * partition columns are duplicated under a `_gp_` alias for the
-    * directory layout only), so reads need no value reconstruction.
-    * Returns the manifest entries, stats included. */
-  private def writeDataFiles(df: DataFrame, path: String, v: Int,
-                             tag: String = "c",
-                             partitionBy: Seq[String] = Nil,
-                             props: TableProps = emptyProps): Seq[FileEntry] = {
+  /** Stage a commit's new data files — the one pre-commit step of
+    * every data-writing commit ([[write]], [[commitRewrite]],
+    * [[append]], [[appendEvolve]]). The write job itself counts each
+    * active CHECK constraint's violations (an observation on `df`: no
+    * read-back, O(new data)). The files move into the pool (under a
+    * commit prefix, so provenance is readable and names are globally
+    * unique) and get their bloom sidecars; then `expectations` is
+    * evaluated (a pipeline flow's counters, observed by the same job —
+    * FAIL mode throws [[ExpectationViolation]] here) and the CHECK
+    * counters are checked (SQL-standard: a row violates only when the
+    * predicate is FALSE; UNKNOWN passes — throws
+    * [[ConstraintViolationException]]). Any throw removes the staged
+    * files and propagates, so no log line is written. With
+    * `partitionBy`, one file per partition value combo per task — the
+    * partition VALUES are recorded in the manifest entry while the
+    * data files keep every column (the partition columns are
+    * duplicated under a `_gp_` alias for the directory layout only),
+    * so reads need no value reconstruction. Returns the manifest
+    * entries, stats included, and the counters for the log entry. */
+  private def stageFiles(df: DataFrame, path: String, v: Int,
+                         partitionBy: Seq[String] = Nil,
+                         props: TableProps = emptyProps,
+                         expectations: => Option[FlowExpectations] = None)
+      : (Seq[FileEntry], Option[FlowExpectations]) = {
     val stage = Paths.get(path,
-      f"_graft_stage_$tag$v%06d-${java.util.UUID.randomUUID.toString.take(8)}")
+      f"_graft_stage_c$v%06d-${java.util.UUID.randomUUID.toString.take(8)}")
+    val checks = props.constraints.toSeq.sorted.map {
+      case (n, sql) => Expectation(n, sql) }
+    val observation =
+      if (checks.isEmpty) None
+      else Some(Expectations.observe(df,
+        Expectations.counters(checks, nullPasses = true)))
+    val checked = observation.fold(df)(_._1)
     // data files ALWAYS store PHYSICAL column names (stable across
     // renames), so manifest stats / partition keys never go stale
     val physDf =
-      if (props.colmap.isEmpty) df
-      else df.select(df.columns.toIndexedSeq.map(c =>
+      if (props.colmap.isEmpty) checked
+      else checked.select(df.columns.toIndexedSeq.map(c =>
         col(c).as(props.phys(c))): _*)
     val physBy = partitionBy.map(props.phys)
-    if (physBy.isEmpty)
-      physDf.write.mode("overwrite").parquet(stage.toString)
-    else {
-      val dup = physBy.foldLeft(physDf)((d, c) =>
-        d.withColumn(s"_gp_$c", col(c)))
-      dup.write.mode("overwrite")
-        .partitionBy(physBy.map("_gp_" + _): _*)
-        .parquet(stage.toString)
-    }
-    Files.createDirectories(poolDir(path))
-    def walk(dir: java.io.File,
-             part: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .sortBy(_.getName).toSeq.flatMap { f =>
-          if (f.isDirectory && f.getName.startsWith("_gp_")) {
-            val Array(k, ev) = f.getName.split("=", 2)
-            walk(f, part + (k.stripPrefix("_gp_") -> unescapePath(ev)))
-          } else if (f.getName.endsWith(".parquet")) Seq((f, part))
-          else Nil
-        }
-    val parts = walk(stage.toFile, Map.empty)
-    val out = parts.zipWithIndex.map { case ((f, pv), i) =>
-      val name = f"$tag$v%06d-$i%03d-${f.getName}"
-      val dst = poolDir(path).resolve(name)
-      Files.move(f.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-      val (rows, stats, sstats) = footerInfo(dst)
-      FileEntry(name, None, rows, rows, Files.size(dst), stats, pv,
-        sstats = sstats)
-    }
-    destroy(stage.toString)
-    // bloom index maintenance (Delta's write-path indexing): when the
-    // table declares indexed columns, the commit's own new files get
-    // their sidecars here — O(new data), regardless of table size
-    val blCols = bloomConfig(props).map(props.phys)
-      .filter(physDf.columns.contains)
-    if (blCols.isEmpty) out
-    else buildBloomSidecars(df.sparkSession, path, v, out, blCols,
-      bloomFpp(props))
+    val pooled = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      if (physBy.isEmpty)
+        physDf.write.mode("overwrite").parquet(stage.toString)
+      else {
+        val dup = physBy.foldLeft(physDf)((d, c) =>
+          d.withColumn(s"_gp_$c", col(c)))
+        dup.write.mode("overwrite")
+          .partitionBy(physBy.map("_gp_" + _): _*)
+          .parquet(stage.toString)
+      }
+      Files.createDirectories(poolDir(path))
+      def walk(dir: java.io.File,
+               part: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
+        Option(dir.listFiles()).getOrElse(Array.empty)
+          .sortBy(_.getName).toSeq.flatMap { f =>
+            if (f.isDirectory && f.getName.startsWith("_gp_")) {
+              val Array(k, ev) = f.getName.split("=", 2)
+              walk(f, part + (k.stripPrefix("_gp_") -> unescapePath(ev)))
+            } else if (f.getName.endsWith(".parquet")) Seq((f, part))
+            else Nil
+          }
+      val out = walk(stage.toFile, Map.empty).zipWithIndex.map {
+        case ((f, pv), i) =>
+          val name = f"c$v%06d-$i%03d-${f.getName}"
+          val dst = poolDir(path).resolve(name)
+          Files.move(f.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
+          pooled += name
+          val (rows, stats, sstats) = footerInfo(dst)
+          FileEntry(name, None, rows, rows, Files.size(dst), stats, pv,
+            sstats = sstats)
+      }
+      // bloom index maintenance (Delta's write-path indexing): when the
+      // table declares indexed columns, the commit's own new files get
+      // their sidecars here — O(new data), regardless of table size
+      val blCols = bloomConfig(props).map(props.phys)
+        .filter(physDf.columns.contains)
+      val entries =
+        if (blCols.isEmpty) out
+        else buildBloomSidecars(df.sparkSession, path, v, out, blCols,
+          bloomFpp(props))
+      pooled ++= entries.flatMap(_.bloom.values)
+      val counters = expectations
+      observation.foreach { case (_, obs) =>
+        val bad = checks.zip(Expectations.results(Expectations.observed(obs),
+          checks)).collect { case (e, r) if r.failed > 0 =>
+            s"${e.name} (${e.predicateSql}): ${r.failed} rows" }
+        if (bad.nonEmpty) throw new ConstraintViolationException(
+          s"CHECK constraint violation on $path: ${bad.mkString("; ")}")
+      }
+      (entries, counters)
+    } catch {
+      case t: Throwable =>
+        pooled.foreach(n => Files.deleteIfExists(poolDir(path).resolve(n)))
+        throw t
+    } finally destroy(stage.toString)
   }
 
   /** Write `df` as the next version (full snapshot — ingest/CTAS
@@ -763,7 +800,7 @@ object VersionedTable {
     * no second pass over the data. Always a FULL (checkpoint) log
     * entry: a snapshot replaces everything, so the delta IS the
     * manifest. `expectations` is evaluated after the data files are
-    * written and before the log append (see [[validateStaged]]). */
+    * written and before the log append (see [[stageFiles]]). */
   def write(df: DataFrame, path: String, operation: String = "WRITE",
             partitionBy: Seq[String] = Nil,
             expectations: => Option[FlowExpectations] = None): Int = {
@@ -788,10 +825,8 @@ object VersionedTable {
     val props = prevProps.copy(colmap = colmap,
       usedPhys = prevProps.usedPhys ++
         df.columns.map(c => colmap.getOrElse(c, c)))
-    val files = writeDataFiles(df, path, v, partitionBy = partitionBy,
-      props = props)
-    val counters = validateStaged(df.sparkSession, path, v, files,
-      nullableSchema(df.schema), props, expectations)
+    val (files, counters) = stageFiles(df, path, v, partitionBy, props,
+      expectations)
     appendLog(path, v, operation, files.map(_.rows).sum,
       nullableSchema(df.schema), full = Some(files), add = Nil,
       remove = prevNames, props = props, expectations = counters)
@@ -923,76 +958,22 @@ object VersionedTable {
   /** Commit a file-granular rewrite planned against `baseV`:
     * untouched files are RE-LINKED into the new manifest; only
     * `newData` (the rewritten touched rows plus inserts) hits disk.
-    * New files are validated before the log append
-    * ([[validateStaged]]) — a violation aborts atomically (staged
-    * files removed, no commit). */
-  private[graft] def commitRewrite(spark: SparkSession, path: String,
-                            operation: String, newData: DataFrame,
-                            touched: Set[String], schema: StructType,
-                            baseV: Int,
-                            partitionBy: Seq[String] = Nil,
-                            newProps: Option[TableProps] = None,
-                            expectations: => Option[FlowExpectations] = None)
+    * New files are validated before the log append ([[stageFiles]])
+    * — a violation aborts atomically (staged files removed, no
+    * commit). Observations on `newData` complete by the time this
+    * returns its version. */
+  private[graft] def commitRewrite(path: String, operation: String,
+                                   newData: DataFrame, touched: Set[String],
+                                   schema: StructType, baseV: Int,
+                                   partitionBy: Seq[String] = Nil,
+                                   newProps: Option[TableProps] = None,
+                                   expectations: => Option[FlowExpectations] = None)
       : Int = {
     val props = newProps.getOrElse(propsOf(path, baseV))
-    val fresh = writeDataFiles(newData, path, baseV + 1,
-      partitionBy = partitionBy, props = props)
-    val counters = validateStaged(spark, path, baseV + 1, fresh, schema,
-      props, expectations)
+    val (fresh, counters) = stageFiles(newData, path, baseV + 1,
+      partitionBy, props, expectations)
     commitActions(path, operation, baseV, touched, fresh, schema, newProps,
       counters)
-  }
-
-  /** The pre-commit step of every data-writing commit, run after its
-    * new files are staged in the pool: evaluate `expectations` (the
-    * counters the write job observed — a FAIL-mode flow throws
-    * [[ExpectationViolation]] here), then check the active CHECK
-    * constraints. Any throw removes the staged pool files and
-    * propagates, so no log line is written; otherwise returns the
-    * counters for the log entry. */
-  private def validateStaged(spark: SparkSession, path: String, v: Int,
-                             entries: Seq[FileEntry], schema: StructType,
-                             props: TableProps,
-                             expectations: => Option[FlowExpectations] = None)
-      : Option[FlowExpectations] =
-    try {
-      val counters = expectations
-      enforceConstraints(spark, path, v, entries, schema, props)
-      counters
-    } catch {
-      case t: Throwable =>
-        entries.flatMap(e => e.name +: (e.dv.toSeq ++ e.bloom.values.toSeq))
-          .foreach(n => Files.deleteIfExists(poolDir(path).resolve(n)))
-        throw t
-    }
-
-  /** Validate a commit's NEW files against the active CHECK
-    * constraints — enforcement cost is O(new data), column-pruned to
-    * the constraint columns, never O(table) (untouched files were
-    * validated by the commits that wrote them). SQL-standard CHECK
-    * semantics: a row violates only when the predicate is FALSE
-    * (UNKNOWN passes). Throws [[ConstraintViolationException]]. */
-  private def enforceConstraints(spark: SparkSession, path: String,
-                                 v: Int, entries: Seq[FileEntry],
-                                 schema: StructType,
-                                 props: TableProps): Unit = {
-    if (props.constraints.nonEmpty && entries.nonEmpty) {
-      val df = readEntries(spark, path, entries, schema, v, props = props)
-      val named = props.constraints.toSeq.sortBy(_._1)
-      val counts = df.agg(
-        sum(when(!coalesce(expr(named.head._2), lit(true)), 1L)
-          .otherwise(0L)).as("c0"),
-        named.tail.zipWithIndex.map { case ((_, sql), i) =>
-          sum(when(!coalesce(expr(sql), lit(true)), 1L)
-            .otherwise(0L)).as(s"c${i + 1}")
-        }: _*).collect()(0)
-      val bad = named.zipWithIndex.collect {
-        case ((n, sql), i) if counts.getLong(i) > 0 =>
-          s"$n ($sql): ${counts.getLong(i)} rows"
-      }
-      if (bad.nonEmpty) throw new ConstraintViolationException(
-        s"CHECK constraint violation on $path: ${bad.mkString("; ")}")
-    }
   }
 
   /** Absolute path of a pool file (own pool or clone base) — the
@@ -1246,9 +1227,7 @@ object VersionedTable {
         s"${schema.simpleString}")
     val aligned = df.select(schema.fieldNames.toIndexedSeq.map(col): _*)
     val props = propsOf(path, v)
-    val fresh = writeDataFiles(aligned, path, v + 1,
-      partitionBy = partitionBy, props = props)
-    validateStaged(spark, path, v + 1, fresh, schema, props)
+    val (fresh, _) = stageFiles(aligned, path, v + 1, partitionBy, props)
     commitActions(path, operation, v, Set.empty, fresh, schema)
   }
 
@@ -1288,8 +1267,7 @@ object VersionedTable {
         colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
         usedPhys = p.usedPhys + phys)
     }
-    val fresh = writeDataFiles(aligned, path, v + 1, props = p)
-    validateStaged(spark, path, v + 1, fresh, newSchema, p)
+    val (fresh, _) = stageFiles(aligned, path, v + 1, props = p)
     commitActions(path, operation, v, Set.empty, fresh, newSchema,
       if (newFields.isEmpty) None else Some(p))
   }
@@ -2008,8 +1986,7 @@ object VersionedTable {
       val clustered = Maintenance.clusteredFrame(
         readFiles(spark, path, cand, schema, v, propsOf(path, v)),
         sortCols, numFiles)
-      commitRewrite(spark, path, "OPTIMIZE[INCR]", clustered, cand,
-        schema, v)
+      commitRewrite(path, "OPTIMIZE[INCR]", clustered, cand, schema, v)
     }
   }
 
@@ -2033,7 +2010,7 @@ object VersionedTable {
       _.join(keyFrame, keys, "left_semi"), props,
       bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
     val touchedRows = readFiles(spark, path, touched, schema, v, props)
-    commitRewrite(spark, path, operation,
+    commitRewrite(path, operation,
       Medallion.mergeUpsert(touchedRows, upd, keys), touched, schema, v)
   }
 
@@ -2060,7 +2037,7 @@ object VersionedTable {
         keyCols))
     val kept = readFiles(spark, path, touched, schema, v, props)
       .join(keyFrame, keyCols, "left_anti")
-    commitRewrite(spark, path, operation, kept, touched, schema, v)
+    commitRewrite(path, operation, kept, touched, schema, v)
   }
 
   /** MERGE with automatic schema evolution (Delta's
@@ -2103,7 +2080,7 @@ object VersionedTable {
         colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
         usedPhys = p.usedPhys + phys)
     }
-    commitRewrite(spark, path, "MERGE[EVOLVE]", merged, touched,
+    commitRewrite(path, "MERGE[EVOLVE]", merged, touched,
       nullableSchema(merged.schema), v,
       newProps = if (p == props) None else Some(p))
   }
@@ -2121,7 +2098,7 @@ object VersionedTable {
     * observation on it completes in the commit's own jobs (the touch
     * scan when the table has several files, else the write).
     * `expectations` is evaluated before the log append (see
-    * [[validateStaged]]).
+    * [[stageFiles]]).
     *
     * CONTRACT (advisor r10): (1) the base must already be UNIQUE per
     * key — guaranteed for tables only ever written through this verb,
@@ -2155,7 +2132,7 @@ object VersionedTable {
             base.filter(col(key).isNotNull).unionByName(updates),
             key, orderCol, tieBreaker)
           .unionByName(base.filter(col(key).isNull))
-        commitRewrite(spark, path, operation, merged, touched, schema, v,
+        commitRewrite(path, operation, merged, touched, schema, v,
           expectations = expectations)
     }
 
@@ -2186,7 +2163,9 @@ object VersionedTable {
   /** Column-factory twin of [[update]] — the SQL `UPDATE` command path
     * hands in already-ANALYZED Catalyst expressions (bound per frame by
     * the callback), which survive shapes a SQL-string round-trip would
-    * mangle (qualified refs, exotic literals). Semantics identical. */
+    * mangle (qualified refs, exotic literals). Semantics identical.
+    * Returns (new version, affected-row count — observed on the
+    * rewrite's write job, no count pass of its own). */
   private[graft] def updateCore(spark: SparkSession, path: String,
                                 condFor: DataFrame => Column,
                                 assignments: Seq[(String, DataFrame => Column)])
@@ -2209,21 +2188,22 @@ object VersionedTable {
     // and condition columns that are themselves assigned both work)
     val assignMap = assignments.toMap
     val base = readFiles(spark, path, touched, schema, v, props)
-    // affected-row count (the SQL command's result row): one
-    // column-pruned count over the TOUCHED files only — bounded by
-    // the same pruning as the rewrite itself
-    val affected = base
-      .filter(coalesce(condFor(base), lit(false))).count()
-    val updated = base
+    // affected-row count (the SQL command's result row): observed on
+    // the rewrite job itself. The condition is projected once into a
+    // column — an observed metric may not hold an IN/EXISTS subquery
+    val hit = "_graft_update_hit"
+    val (flagged, obs) = Expectations.observe(
+      base.withColumn(hit, coalesce(condFor(base), lit(false))),
+      Seq(count(when(col(hit), 1))))
+    val updated = flagged
       .select(cols.map { c =>
         assignMap.get(c) match {
-          case Some(rhs) =>
-            when(condFor(base), rhs(base)).otherwise(col(c)).as(c)
+          case Some(rhs) => when(col(hit), rhs(base)).otherwise(col(c)).as(c)
           case None => col(c)
         }
       }: _*)
-    (commitRewrite(spark, path, "UPDATE", updated, touched, schema, v),
-      affected)
+    val nv = commitRewrite(path, "UPDATE", updated, touched, schema, v)
+    (nv, Expectations.observed(obs).getLong(0))
   }
 
   /** `DELETE FROM ... WHERE cond` analog: rows matching
@@ -2252,7 +2232,7 @@ object VersionedTable {
     val base = readFiles(spark, path, touched, schema, v, props)
     val kept = base.filter(!hit(base))
     val before = manifestEntries(path, v).map(_.rows).sum
-    val nv = commitRewrite(spark, path, "DELETE", kept, touched, schema, v)
+    val nv = commitRewrite(path, "DELETE", kept, touched, schema, v)
     (nv, before - manifestEntries(path, nv).map(_.rows).sum)
   }
 
@@ -2415,7 +2395,7 @@ object VersionedTable {
     else
       // computed column: every row gains a value — full rewrite is the
       // honest cost, not an implementation shortcut
-      commitRewrite(spark, path, "ADD COLUMN", withCol,
+      commitRewrite(path, "ADD COLUMN", withCol,
         manifestEntries(path, v).map(_.name).toSet,
         nullableSchema(withCol.schema), v, newProps = Some(newProps))
   }
@@ -2768,8 +2748,9 @@ object VersionedTable {
     val props = propsOf(path, v)
     require(!props.constraints.contains(name),
       s"constraint $name already exists on $path")
-    val viol = read(spark, path)
-      .filter(!coalesce(expr(sql), lit(true))).count()
+    val cs = Expectations.counters(Seq(Expectation(name, sql)),
+      nullPasses = true)
+    val viol = read(spark, path).agg(cs.head, cs.tail: _*).head.getLong(1)
     if (viol > 0) throw new ConstraintViolationException(
       s"cannot add CHECK constraint $name ($sql) on $path: " +
         s"$viol existing rows violate it")

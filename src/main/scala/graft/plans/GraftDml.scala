@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.VersionedTable
+import graft.operators.{Expectations, VersionedTable}
 import graft.sources.GraftTable
 import graft.operators.Materialize.Pinnable
 
@@ -155,7 +155,10 @@ case class GraftUpdateCommand(path: String, targetAttrs: Seq[Attribute],
   * shortlists the files holding matching keys, and only those join
   * the source (full-outer) for row assembly; every other file
   * re-links. `WHEN NOT MATCHED BY SOURCE` forces a full-table touch
-  * (any file may hold a source-less row — same as Delta).
+  * (any file may hold a source-less row — same as Delta). The metric
+  * row's updated, deleted and inserted counts are observed on the
+  * write job itself: the join runs once, with no persist and no count
+  * job of its own.
   *
   * Ambiguity contract (Delta's): when a target row is matched by MORE
   * THAN ONE source row and a matched/not-matched-by-source clause
@@ -303,14 +306,12 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       // files re-link (commitRewrite with an empty remove set)
       val joinOn = GraftDml.bind(cond, tgt, base)
       val unmatched = src.join(base, joinOn, "left_anti")
-      val inserts = assembleInserts(unmatched, nmActs, schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = inserts.count()
-        VersionedTable.commitRewrite(spark, path, "MERGE", inserts,
-          Set.empty, schema, v)
-        return Seq(Row(n, 0L, 0L, n))
-      } finally { inserts.unpersist(); () }
+      val (inserts, obs) = Expectations.observe(
+        assembleInserts(unmatched, nmActs, schema), Seq(count(lit(1))))
+      VersionedTable.commitRewrite(path, "MERGE", inserts, Set.empty,
+        schema, v)
+      val n = Expectations.observed(obs).getLong(0)
+      return Seq(Row(n, 0L, 0L, n))
     }
 
     // ambiguity guard (Delta semantics): duplicate source key tuples
@@ -353,25 +354,18 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       mActs.zipWithIndex.map { case (a, i) => (i, a) } ++
         nmActs.zipWithIndex.map { case (a, i) => (100 + i, a) } ++
         nmbsActs.zipWithIndex.map { case (a, i) => (200 + i, a) }
-    val dropIds = -2 +: allActs.collect {
-      case (i, DelAct(_)) => i }
-    // one shared evaluation of the acted join feeds BOTH the metric
-    // counts and the rewrite (persisted so the full-outer join runs
-    // once; unpersisted before returning)
-    val acted = joined.withColumn("_graft_merge_act", act)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val byAct: Map[Int, Long] = acted.groupBy("_graft_merge_act")
-      .count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val updIds = allActs.collect { case (i, UpdAct(_, _)) => i }.toSet
-    val delIds = allActs.collect { case (i, DelAct(_)) => i }.toSet
-    val insIds = allActs.collect { case (i, InsAct(_, _)) => i }.toSet
-    val nUpd = byAct.collect { case (i, n) if updIds(i) => n }.sum
-    val nDel = byAct.collect { case (i, n) if delIds(i) => n }.sum
-    val nIns = byAct.collect { case (i, n) if insIds(i) => n }.sum
-    val kept = acted
-      .filter(!col("_graft_merge_act").isin(dropIds.map(Integer.valueOf): _*))
+    val delIds = allActs.collect { case (i, DelAct(_)) => i }
+    def actIn(ids: Seq[Int]): Column =
+      col("_graft_merge_act").isin(ids.map(Integer.valueOf): _*)
+    // the metric counts are observed on the acted join ABOVE the drop
+    // filter (deleted rows still count), so the write job that runs
+    // the full-outer join once also counts it
+    val (acted, obs) = Expectations.observe(
+      joined.withColumn("_graft_merge_act", act), Seq(
+        count(when(actIn(allActs.collect { case (i, UpdAct(_, _)) => i }), 1)),
+        count(when(actIn(delIds), 1)),
+        count(when(actIn(allActs.collect { case (i, InsAct(_, _)) => i }), 1))))
+    val kept = acted.filter(!actIn(-2 +: delIds))
 
     val outCols = schema.fields.toIndexedSeq.map { f =>
       val start: Column = b2.col(f.name)
@@ -388,11 +382,11 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
           when(col("_graft_merge_act") === i, c).otherwise(els))
       }.as(f.name)
     }
-    val merged = kept.select(outCols: _*)
-    VersionedTable.commitRewrite(spark, path, "MERGE", merged, touched,
-      schema, v)
+    VersionedTable.commitRewrite(path, "MERGE", kept.select(outCols: _*),
+      touched, schema, v)
+    val n = Expectations.observed(obs)
+    val (nUpd, nDel, nIns) = (n.getLong(0), n.getLong(1), n.getLong(2))
     Seq(Row(nUpd + nDel + nIns, nUpd, nDel, nIns))
-    } finally { acted.unpersist(); () }
   }
 
   /** NOT MATCHED insert rows: first clause whose condition holds

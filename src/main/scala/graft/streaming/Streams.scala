@@ -969,14 +969,13 @@ object Streams {
     * per-constraint (passed, failed) counters land under `batch=<id>`
     * with directory overwrite — retry-idempotent, and counters are
     * associative longs, so the merged store equals the one-shot DLT
-    * metrics on ANY arrival split. */
+    * metrics on ANY arrival split. One job per batch: an empty batch
+    * writes a zero-counter shard instead of being probed first. */
   def expectationsBatch(metDir: String,
                         exps: Seq[graft.operators.Expectation])
                        (batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      graft.operators.Expectations.metrics(batch, exps)
-        .write.mode("overwrite").parquet(s"$metDir/batch=$batchId")
-    }
+    graft.operators.Expectations.metrics(batch, exps)
+      .write.mode("overwrite").parquet(s"$metDir/batch=$batchId")
 
   /** Continuous data-quality metrics — the streaming twin of
     * `expectations` (DLT's live expectation counters, reference

@@ -1,0 +1,119 @@
+package graft.operators
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** What a commit counts — MERGE and UPDATE metric rows, CHECK
+  * violations — is observed on the job that writes its data, not
+  * counted by jobs of its own. */
+class CommitJobsSpec extends SparkSpec {
+
+  private def fresh = Files.createTempDirectory("graft_commit_jobs").toString
+
+  private def withCatalog[T](body: => T): T = {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    body
+  }
+
+  /** 20k rows in 4 files with a bloom index on `k`. */
+  private def bloomTable(): String = {
+    val path = s"$fresh/t"
+    VersionedTable.write(spark.range(20000).select(col("id").as("k"),
+        (col("id") % 7).as("grp"), (col("id") * 10).cast("double").as("amt"))
+      .repartition(4), path)
+    VersionedTable.setTableProperties(path,
+      Map(VersionedTable.bloomColumnsProp -> "k"))
+    VersionedTable.buildBloomIndex(spark, path)
+    path
+  }
+
+  /** Spark jobs `body` runs, and its result. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    var out: Option[T] = None
+    val descs = jobDescriptions { out = Some(body) }
+    (descs.size, out.get)
+  }
+
+  private def view(name: String, from: Long, until: Long): Unit =
+    spark.range(from, until).select(col("id").as("k"), lit(1.5).as("amt"))
+      .createOrReplaceTempView(name)
+
+  test("MERGE, UPDATE and an append to a constrained table count rows " +
+    "on the write job: each runs fewer Spark jobs than with separate " +
+    "count jobs, and the metric rows are exact") {
+    withCatalog {
+      val path = bloomTable()
+      // jobs each commit ran when MERGE persisted its join and ran a
+      // groupBy count, UPDATE ran a second count, and a CHECK re-read
+      // the staged files
+      val separateCounts = Map("merge" -> 15, "insert-only merge" -> 15,
+        "update" -> 8, "constrained append" -> 6)
+      val jobs = Map.newBuilder[String, Int]
+      // 19990..19999 match (even keys delete, odd keys update),
+      // 20000..20009 insert
+      view("cj_src", 19990, 20010)
+      val (merge, m) = jobsOf(spark.sql(s"""
+        MERGE INTO graft.`$path` t USING cj_src s ON t.k = s.k
+        WHEN MATCHED AND t.k % 2 = 0 THEN DELETE
+        WHEN MATCHED THEN UPDATE SET amt = s.amt
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 0L, s.amt)
+        """).head)
+      assert(m == Row(20L, 5L, 5L, 10L))
+      jobs += "merge" -> merge
+      // 20005..20009 exist now, 20010..20014 insert
+      view("cj_ins", 20005, 20015)
+      val (insertOnly, i) = jobsOf(spark.sql(s"""
+        MERGE INTO graft.`$path` t USING cj_ins s ON t.k = s.k
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 1L, s.amt)
+        """).head)
+      assert(i == Row(5L, 0L, 0L, 5L))
+      jobs += "insert-only merge" -> insertOnly
+      val (update, u) = jobsOf(spark.sql(
+        s"UPDATE graft.`$path` SET amt = -1.0 WHERE k < 100").head)
+      assert(u == Row(100L))
+      jobs += "update" -> update
+      VersionedTable.addConstraint(spark, path, "k_nonneg", "k >= 0")
+      val (append, _) = jobsOf(VersionedTable.append(spark,
+        spark.range(30000, 30100).select(col("id").as("k"),
+          lit(2L).as("grp"), lit(3.0).as("amt")), path))
+      jobs += "constrained append" -> append
+      assert(VersionedTable.read(spark, path).count() == 20000 - 5 + 10 + 5 + 100)
+      val got = jobs.result()
+      info(s"jobs per commit: $got")
+      separateCounts.foreach { case (commit, before) =>
+        assert(got(commit) < before, s"$commit: $got vs $separateCounts")
+      }
+    }
+  }
+
+  test("an empty MERGE source and an UPDATE matching nothing report " +
+    "zero counts at once") {
+    withCatalog {
+      val path = bloomTable()
+      view("cj_empty", 0, 0)
+      val t0 = System.nanoTime
+      val m = spark.sql(s"""
+        MERGE INTO graft.`$path` t USING cj_empty s ON t.k = s.k
+        WHEN MATCHED AND t.k % 2 = 0 THEN DELETE
+        WHEN MATCHED THEN UPDATE SET amt = s.amt
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 0L, s.amt)
+        """).head
+      val i = spark.sql(s"""
+        MERGE INTO graft.`$path` t USING cj_empty s ON t.k = s.k
+        WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 1L, s.amt)
+        """).head
+      val u = spark.sql(
+        s"UPDATE graft.`$path` SET amt = 0.0 WHERE k < 0").head
+      val secs = (System.nanoTime - t0) / 1e9
+      assert(m == Row(0L, 0L, 0L, 0L) && i == Row(0L, 0L, 0L, 0L) &&
+        u == Row(0L))
+      assert(secs < 10, s"three empty DML commits took $secs s")
+      assert(VersionedTable.read(spark, path).count() == 20000)
+    }
+  }
+}

@@ -231,34 +231,6 @@ class PipelineSpec extends SparkSpec {
     Expectations.metrics(df, exps).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-  /** Job-start descriptions seen by a listener while `body` runs; a
-    * sentinel job marks the end, so every earlier job event has been
-    * delivered when this returns. */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    val prev = sc.getLocalProperty("spark.job.description")
-    try {
-      body
-      sc.setJobDescription("sentinel")
-      spark.range(1).count()
-      sc.setJobDescription(prev)
-      val deadline = System.currentTimeMillis + 30000
-      while (!seen.contains("sentinel") &&
-             System.currentTimeMillis < deadline) Thread.sleep(20)
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.takeWhile(_ != "sentinel")
-    } finally sc.removeSparkListener(l)
-  }
-
   test("a steady-state micro-batch (bronze, silver DROP ROW, gold " +
     "recompute) runs at most 6 Spark jobs, each described by stage and " +
     "batch, and restores the caller's job description") {

@@ -421,7 +421,7 @@ class VersionedTableManifestSpec extends SparkSpec {
     // writer A commits FIRST, touching a different file
     VersionedTable.delete(spark, path, "n_nationkey = 0") // v1, fLow
     // B commits with its stale plan: disjoint → retried re-link onto v1
-    val v2 = VersionedTable.commitRewrite(spark, path, "DELETE", keptB,
+    val v2 = VersionedTable.commitRewrite(path, "DELETE", keptB,
       Set(fHigh), schema, baseV = 0)
     assert(v2 == 2)
     val out = VersionedTable.read(spark, path)
@@ -432,7 +432,7 @@ class VersionedTableManifestSpec extends SparkSpec {
       .filter(col("n_nationkey") <= stats(fLow)._2 &&
         col("n_nationkey") =!= 1)
     intercept[ConcurrentCommitException](
-      VersionedTable.commitRewrite(spark, path, "DELETE", keptC,
+      VersionedTable.commitRewrite(path, "DELETE", keptC,
         Set(fLow), schema, baseV = 0))
     // concurrent APPENDs always compose (empty conflict surface):
     // an append planned pre-A/B still lands

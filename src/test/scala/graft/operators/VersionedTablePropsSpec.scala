@@ -200,6 +200,18 @@ class VersionedTablePropsSpec extends SparkSpec {
         Seq("n_nationkey" -> "7777"))
     }
     assert(VersionedTable.latestVersion(path).get == vBefore)
+    assert(VersionedTable.poolFiles(path) == poolBefore)
+    // ... and so is SQL MERGE
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    intercept[ConstraintViolationException] {
+      spark.sql(s"""
+        MERGE INTO graft.`$path` t USING (SELECT 3 AS k) s
+        ON t.n_nationkey = s.k
+        WHEN MATCHED THEN UPDATE SET n_nationkey = 7777""")
+    }
+    assert(VersionedTable.latestVersion(path).get == vBefore)
+    assert(VersionedTable.poolFiles(path) == poolBefore)
     // valid commits pass and the constraint rides along versions
     VersionedTable.append(spark, tables.nation
       .withColumn("n_nationkey", col("n_nationkey") + 100), path)
@@ -210,6 +222,16 @@ class VersionedTablePropsSpec extends SparkSpec {
     VersionedTable.dropConstraint(path, "key_range")
     VersionedTable.append(spark, bad, path)
     assert(VersionedTable.read(spark, path).count() == 75)
+  }
+
+  test("an empty commit to a CHECK-constrained table passes the gate") {
+    val path = freshPath
+    VersionedTable.write(rangedNation, path)
+    VersionedTable.addConstraint(spark, path, "key_nonneg",
+      "n_nationkey >= 0")
+    val v = VersionedTable.append(spark, tables.nation.limit(0), path)
+    assert(VersionedTable.latestVersion(path).contains(v))
+    assert(VersionedTable.read(spark, path).count() == 25)
   }
 
   test("RESTORE restores the constraint set of the target version") {
