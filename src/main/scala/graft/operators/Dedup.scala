@@ -17,9 +17,9 @@ import graft.operators.Materialize.Pinnable
   *    chunk keys — never a full cross join — and expands pairs inside
   *    each bucket after a groupBy, so the corpus is scanned once and
   *    no intermediate needs caching;
-  *  - verification runs only on candidate pairs (two semi-local
-  *    joins back to the corpus for token sets; SimHash verifies
-  *    inline from the carried chunk arrays).
+  *  - verification runs only on candidate pairs (one join back to
+  *    the corpus for shingle sets, [[shingleOverlap]]; SimHash
+  *    verifies inline from the carried chunk arrays).
   */
 object Dedup {
 
@@ -105,22 +105,31 @@ object Dedup {
     * DuckDB oracles. */
   val DefaultMaxBucket = 4096
 
+  /** `rows` without the rows of any bucket (rows sharing `key`) that
+    * holds more than `maxBucket` rows. The census is a window count
+    * over the bucket key, so the one exchange that gathers each
+    * bucket also feeds the grouping after it: the input is read (and
+    * signed) once, and an over-cap bucket's collected row is never
+    * built. An aggregate census anti-joined back would not share the
+    * exchange: the optimizer pushes the anti-join below an explicit
+    * repartition, so the two branches differ and the input is read
+    * and signed twice. */
+  private def capBuckets(rows: DataFrame, key: Seq[String],
+                         maxBucket: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    rows.withColumn("_bucket_n",
+        count(lit(1)).over(Window.partitionBy(key.map(col): _*)))
+      .filter(col("_bucket_n") <= maxBucket)
+      .drop("_bucket_n")
+  }
+
   /** Candidate pairs: docs sharing ≥1 LSH bucket. One shuffle on
     * (band_id, band_hash), then in-bucket pair expansion — the corpus
-    * is scanned and signed exactly ONCE. (The earlier bucket
+    * is scanned and signed exactly ONCE, and the over-cap census
+    * ([[capBuckets]]) rides the same exchange. (The earlier bucket
     * self-join either re-signed every document for its second leg or
     * needed a persisted intermediate that leaked in long-lived
-    * sessions; groupBy + expansion needs neither.)
-    *
-    * Over-cap buckets are removed BEFORE the collect: a count-only
-    * aggregation finds them, and the band rows anti-join against that
-    * tiny skip list — so the degenerate bucket's giant row is never
-    * built at all, rather than built and filtered. Both the census
-    * and the pair expansion hang off ONE explicit exchange on
-    * (band_id, band_hash): `ReuseExchange` computes it once, so the
-    * guard does NOT re-sign the corpus for a second pass (the naive
-    * two-subtree formulation doubled the signing cost — the dominant
-    * term of every MinHash query). */
+    * sessions; groupBy + expansion needs neither.) */
   def lshCandidates(bands: DataFrame, idCol: String,
                     maxBucket: Int = DefaultMaxBucket,
                     tags: Seq[String] = Nil): DataFrame = {
@@ -129,16 +138,7 @@ object Dedup {
     // ONE exchange instead of one exchange per config — buckets never
     // mix across tag values because the tag is part of the key
     val key = tags :+ "band_id" :+ "band_hash"
-    val exchanged = bands.repartition(key.map(col): _*)
-    // count(idCol), not count(1): the census must read the SAME columns
-    // as the expansion branch, or column pruning specializes its scan
-    // subtree and the exchange stops being reusable (idCol is never
-    // null here, so the count is identical)
-    val overCap = exchanged.groupBy(key.map(col): _*)
-      .agg(count(col(idCol)).as("n")).filter(col("n") > maxBucket)
-      .select(key.map(col): _*)
-    exchanged
-      .join(broadcast(overCap), key, "left_anti")
+    capBuckets(bands, key, maxBucket)
       .groupBy(key.map(col): _*)
       .agg(sort_array(collect_set(col(idCol))).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -147,21 +147,43 @@ object Dedup {
       .distinct()
   }
 
-  /** token-set Jaccard between candidate pairs: join candidates back
-    * to the corpus for distinct-token sets, then
-    * |∩| / |∪| — verification touches only candidates. */
-  def jaccardVerify(candidates: DataFrame, documents: DataFrame,
-                    shingleK: Int, keep: Seq[String] = Nil): DataFrame = {
+  /** Exact shingle-set overlap of DISTINCT pairs (id_a, id_b): returns
+    * (id_a, id_b, n_inter, n_a, n_b) plus the `keep` columns, with
+    * n_a = |A|, n_b = |B| and n_inter = |A ∩ B| over the distinct
+    * shingle strings. The one-phase record join of Vernica et al.
+    * (SIGMOD'10): each pair fans out to its two doc ids, ONE join
+    * attaches every doc's shingle set (the corpus is read once), and
+    * a regroup by pair brings the two sets together. A pair
+    * whose doc is missing from `documents` is dropped, as an inner
+    * join would. `keep` columns must be a function of the pair. */
+  def shingleOverlap(pairs: DataFrame, documents: DataFrame, shingleK: Int,
+                     keep: Seq[String] = Nil): DataFrame = {
+    val key = (Seq("id_a", "id_b") ++ keep).map(col)
     val sets = documents.select(col("doc_id"),
       array_distinct(shingles(col("text"), shingleK)).as("sset"))
-    candidates
-      .join(sets.select(col("doc_id").as("id_a"), col("sset").as("set_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("sset").as("set_b")), "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
-          size(array_union(col("set_a"), col("set_b"))))
-      .select((Seq("id_a", "id_b", "jaccard") ++ keep).map(col): _*)
+    pairs.select(key :+ explode(array(
+        struct(lit(0).as("side"), col("id_a").as("doc_id")),
+        struct(lit(1).as("side"), col("id_b").as("doc_id")))).as("e"): _*)
+      .select(key :+ col("e.side") :+ col("e.doc_id"): _*)
+      .join(sets, "doc_id")
+      .groupBy(key: _*)
+      .agg(sort_array(collect_list(struct(col("side"), col("sset")))).as("s"))
+      .filter(size(col("s")) === 2)
+      .select(key ++ Seq(
+        size(array_intersect(col("s")(0)("sset"), col("s")(1)("sset")))
+          .cast("long").as("n_inter"),
+        size(col("s")(0)("sset")).cast("long").as("n_a"),
+        size(col("s")(1)("sset")).cast("long").as("n_b")): _*)
   }
+
+  /** Shingle-set Jaccard |A∩B| / |A∪B| of candidate pairs, from
+    * [[shingleOverlap]] — verification touches only candidates. */
+  def jaccardVerify(candidates: DataFrame, documents: DataFrame,
+                    shingleK: Int, keep: Seq[String] = Nil): DataFrame =
+    shingleOverlap(candidates, documents, shingleK, keep)
+      .withColumn("jaccard", col("n_inter").cast("double") /
+        (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
+      .select((Seq("id_a", "id_b", "jaccard") ++ keep).map(col): _*)
 
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band →
     * bucket-join → Jaccard verify ≥ threshold. */
@@ -197,19 +219,11 @@ object Dedup {
     val signed = documents.select(col("doc_id"),
       minhashSignature(shingles(col("text"), shingleK), numPerm).as("sig"))
     val banded = lshBands(signed, "doc_id", "sig", bands, numPerm / bands)
-    val sets = documents.select(col("doc_id"),
-      array_distinct(shingles(col("text"), shingleK)).as("sset"))
-    lshCandidates(banded, "doc_id")
-      .join(sets.select(col("doc_id").as("id_a"),
-        col("sset").as("set_a")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"),
-        col("sset").as("set_b")), "id_b")
-      .withColumn("n_shared",
-        size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
-      .select(col("id_a"), col("id_b"), col("n_shared"),
-        (col("n_shared").cast("double") / size(col("set_a")))
+    shingleOverlap(lshCandidates(banded, "doc_id"), documents, shingleK)
+      .select(col("id_a"), col("id_b"), col("n_inter").as("n_shared"),
+        (col("n_inter").cast("double") / col("n_a").cast("double"))
           .as("containment_a"),
-        (col("n_shared").cast("double") / size(col("set_b")))
+        (col("n_inter").cast("double") / col("n_b").cast("double"))
           .as("containment_b"))
   }
 
@@ -247,21 +261,9 @@ object Dedup {
     val sh = simhash(documents)
     val chunks = sh.select(col("doc_id"), col("chunks"),
       posexplode(col("chunks")).as(Seq("chunk_idx", "chunk_val")))
-      // one explicit exchange feeds BOTH the over-cap census and the
-      // pair expansion (ReuseExchange) — the simhash kernel runs once
-      .repartition(col("chunk_idx"), col("chunk_val"))
-    // same hot-bucket guard as lshCandidates: a degenerate chunk
-    // bucket is skipped via a count-only pre-aggregation before the
-    // collect ever builds its row (identical-doc mass belongs to
-    // dedup_exact, not the near-dup path)
-    // count(struct(...)) keeps the census subtree's columns identical
-    // to the expansion's (see lshCandidates) so the exchange is reused
-    val overCap = chunks.groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(count(struct(col("doc_id"), col("chunks"))).as("n"))
-      .filter(col("n") > maxBucket)
-      .select("chunk_idx", "chunk_val")
-    chunks.join(broadcast(overCap), Seq("chunk_idx", "chunk_val"),
-        "left_anti")
+    // same hot-bucket guard as lshCandidates: identical-doc mass
+    // belongs to dedup_exact, not the near-dup path
+    capBuckets(chunks, Seq("chunk_idx", "chunk_val"), maxBucket)
       .groupBy(col("chunk_idx"), col("chunk_val"))
       .agg(sort_array(collect_set(struct(col("doc_id"), col("chunks"))))
         .as("ds"))
@@ -369,22 +371,39 @@ object Dedup {
     * pruned fraction.
     *
     * Scale shape: the pair comparison is the quantizer-blocked
-    * intra-cell join from [[embeddingNearDupQuantized]] (work
-    * ∝ Σ cell², never n²); the dropped-id set is a minority of the
-    * corpus by construction, joined back on vec_id. */
+    * intra-cell join of [[embeddingNearDupQuantized]] (work ∝ Σ cell²,
+    * never n²), here a LEFT OUTER sort-merge self-join that keeps every
+    * vector. Both sides are the same tagged frame under one exchange
+    * on the cell, so the embeddings are read once, and the grouping
+    * per vector that derives `kept` runs on the join's own cell
+    * partitioning, with no second shuffle. */
   def semdedupKeep(embeddings: DataFrame, threshold: Double = 0.35,
                    nlist: Int = 16, iters: Int = 3, sampleBudget: Int = 128,
                    cacheKey: Option[String] = None): DataFrame = {
     val cents = Similarity.trainCentroids(embeddings, nlist, iters,
       sampleBudget, cacheKey)
-    val tagged = embeddings.select(col("vec_id"),
-      Similarity.clusterOf(col("embedding"), cents).as("cluster"))
-    val dropped = embeddingNearDupQuantized(embeddings, threshold, nlist,
-      iters, sampleBudget, cacheKey)
-      .select(col("id_b").as("vec_id")).distinct()
-      .withColumn("is_dropped", lit(true))
-    tagged.join(dropped, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"), col("is_dropped").isNull.as("kept"))
+    // `cell` is the cluster with -1 (no centroid index) standing in
+    // for the null cluster of a null embedding, and the non-key
+    // condition sits in a coalesce: the optimizer then infers no null
+    // filter for the inner side alone, both sides stay one plan, and
+    // the shuffle is reused. A null embedding matches nothing (its dot
+    // product is null).
+    val tagged = embeddings.select(col("vec_id"), col("embedding"),
+      VectorFunctions.l2Norm(col("embedding")).as("norm"),
+      coalesce(Similarity.clusterOf(col("embedding"), cents), lit(-1))
+        .as("cell"))
+    val (a, b) = (tagged.as("a"), tagged.as("b").hint("merge"))
+    // the lower id (b) is the left operand, as in the pair frame of
+    // embeddingNearDupQuantized, so the cosine is bit-identical
+    a.join(b, col("b.cell") === col("a.cell") &&
+        coalesce(col("b.vec_id") < col("a.vec_id") &&
+          VectorFunctions.dot(col("b.embedding"), col("a.embedding")) /
+            (col("b.norm") * col("a.norm")) >= threshold, lit(false)),
+        "left_outer")
+      .groupBy(col("a.cell"), col("a.vec_id"))
+      .agg(count(col("b.vec_id")).as("n_lower"))
+      .select(col("vec_id"), when(col("cell") =!= -1, col("cell")).as("cluster"),
+        (col("n_lower") === 0).as("kept"))
   }
 
   /** Per-cell audit of [[semdedupKeep]]: vectors / kept / pruned and

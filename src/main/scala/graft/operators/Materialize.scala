@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftBridge
 
 /** Lineage-cutting materialization for iterative loops and DML
   * source pinning — the one switch between the LOCAL and CLUSTER
@@ -23,6 +25,18 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
 
   val ReliableConf = "spark.graft.materialize.reliable"
+
+  /** Runs `body` over a lazy pin of `df` and frees the pinned blocks
+    * when `body` returns or throws: a DML source pin lives as long as
+    * its commit, not until the ContextCleaner happens to collect it. */
+  def withPin[T](df: DataFrame)(body: DataFrame => T): T = {
+    val pinned = df.pin(eager = false)
+    try body(pinned)
+    finally pinned.queryExecution.logical match {
+      case r: LogicalRDD => GraftBridge.releasePin(r.rdd)
+      case _ =>
+    }
+  }
 
   implicit class Pinnable(private val df: DataFrame) extends AnyVal {
     def pin(eager: Boolean = true): DataFrame =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact set-similarity self-join — ALL document pairs with shingle
@@ -16,22 +16,31 @@ import org.apache.spark.sql.functions._
   * frequency (rarest first, ties on the portable hash); a pair with
   * Jaccard ≥ t must overlap in ≥ ⌈t·|x|⌉ elements, so the globally
   * smallest common element always lands inside both docs' first
-  * |x| − ⌈t·|x|⌉ + 1 elements — equi-joining only those PREFIX
+  * |x| − ⌈t·|x|⌉ + 1 elements — bucketing docs on only those PREFIX
   * elements is a complete blocking. Rare-first ordering makes prefix
   * buckets the SMALLEST ones (a boilerplate shingle shared by every
   * doc sorts last and never enters a prefix), the opposite skew
   * profile of naive token blocking.
   *
-  * Scale: one corpus scan shingles and one df-count shuffle (8-byte
-  * hashes, map-side combined) order the tokens; the join itself
-  * shuffles only (prefix-hash, id, size) rows — prefix size is
-  * (1−t)·|x|+1, so higher thresholds shuffle LESS. Hash collisions in
-  * the join key only ADD candidates (verify kills them): completeness
-  * never depends on the hash. Candidate pairs distinct as bare id
-  * pairs; full shingle sets travel only through the two id-keyed
-  * verify joins. Verification is exact integer set arithmetic; the
-  * one double division happens after the integer threshold test, so
-  * the output hash-matches the naive all-pairs oracle bit-for-bit.
+  * Scale: the corpus is read twice, once for candidates and once to
+  * verify them. The candidate read shingles and hashes every doc's
+  * set; one shuffle on the token hash gives each token its document
+  * frequency (8-byte hash + doc id rows), one on the doc id sorts each
+  * set rare-first, and one on the prefix token gathers each prefix
+  * bucket. Prefix tokens held by one doc (df = 1) never enter a
+  * bucket: no other doc can share them. Candidate pairs come from
+  * in-bucket pair expansion (the [[Dedup.lshCandidates]] pattern, no
+  * self-join, no bucket cap: a cap would break completeness), and
+  * PPJoin's positional filter (Xiao et al. WWW'08) runs inside the
+  * expansion. Prefix size is (1−t)·|x|+1, so higher thresholds
+  * shuffle LESS. Hash collisions in the bucket key only ADD candidates
+  * (verify kills them): completeness never depends on the hash.
+  * Candidate pairs distinct as bare id pairs; full shingle sets
+  * travel only through the one verify join of [[Dedup.shingleOverlap]].
+  * Verification is exact integer set arithmetic on the shingle
+  * strings; the one double division happens after the integer
+  * threshold test, so the output hash-matches the naive all-pairs
+  * oracle bit-for-bit.
   */
 object SetJoin {
 
@@ -40,45 +49,52 @@ object SetJoin {
   def similarityJoinExact(documents: DataFrame, shingleK: Int = 3,
                           tNum: Int = 1, tDen: Int = 2): DataFrame = {
     require(tNum > 0 && tDen >= tNum, "threshold must be in (0, 1]")
-    val sets = documents.select(col("doc_id"),
-      array_distinct(Dedup.shingles(col("text"), shingleK)).as("sset"))
-    // global rare-first order: (df, hash) per shingle hash
-    val toks = sets.select(col("doc_id"),
-      explode(col("sset")).as("tok"))
-      .withColumn("th", xxhash64(col("tok"))).drop("tok")
-    val dfreq = toks.groupBy("th").agg(count(lit(1)).as("df"))
-    // per doc: shingle hashes sorted by (df, th); prefix of length
-    // |x| - ceil(t*|x|) + 1 (ceil via integer arithmetic)
-    val ordered = toks.join(dfreq, "th")
+    val toks = documents.select(col("doc_id"),
+        explode(array_distinct(Dedup.shingles(col("text"), shingleK)))
+          .as("tok"))
+      .select(col("doc_id"), xxhash64(col("tok")).as("th"))
+    // global rare-first order: each doc's token hashes sorted by
+    // (df, th), df from one grouping on the hash
+    val ordered = toks.groupBy("th")
+      .agg(collect_list(col("doc_id")).as("docs"))
+      .select(col("th"), size(col("docs")).as("df"),
+        explode(col("docs")).as("doc_id"))
       .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("th"))))
-        .as("ord"), count(lit(1)).as("sz"))
-      .select(col("doc_id"), col("sz"),
-        expr(s"transform(ord, o -> o.th)").as("ohs"))
-    // prefix length |x| - ceil(t|x|) + 1, ceil as an integral div
+      .agg(sort_array(collect_list(struct(col("df"), col("th")))).as("ord"))
+      .select(col("doc_id"), size(col("ord")).cast("long").as("sz"),
+        col("ord"))
+    // prefix of length |x| - ceil(t|x|) + 1 (ceil as an integral
+    // div); `pos` is the token's 0-based rank in the doc's order
     val prefix = ordered.select(col("doc_id"), col("sz"),
-      explode(slice(col("ohs"), lit(1),
-        expr(s"cast(sz - ((sz * $tNum + ${tDen - 1}) div $tDen) + 1" +
-          " as int)"))).as("th"))
-    val cand = prefix.as("a")
-      .join(prefix.as("b"), col("a.th") === col("b.th") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        // length filter: t*|x| <= |y| and t*|y| <= |x|
-        col("a.sz") * tNum <= col("b.sz") * tDen &&
-        col("b.sz") * tNum <= col("a.sz") * tDen)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+        posexplode(slice(col("ord"), lit(1),
+          expr(s"cast(sz - ((sz * $tNum + ${tDen - 1}) div $tDen) + 1" +
+            " as int)"))).as(Seq("pos", "o")))
+      .filter(col("o.df") > 1)
+      .select(col("o.th").as("th"),
+        struct(col("doc_id"), col("sz"), col("pos")).as("d"))
+    // PPJoin positional filter: the pair's first common token (in the
+    // global order) sits at ranks i, j, and nothing before it is
+    // shared, so |x∩y| ≤ min(|x|−i, |y|−j); a pair needs
+    // |x∩y|·(1+t) ≥ t·(|x|+|y|). The bound holds at the first common
+    // token, which lies in both prefixes, so completeness stands. It
+    // implies the length filter t·|x| ≤ |y| ≤ |x|/t (take i = j = 0).
+    def similarEnough(x: Column, y: Column): Column =
+      x("doc_id") < y("doc_id") &&
+        least(x("sz") - x("pos"), y("sz") - y("pos")) * (tNum + tDen) >=
+          (x("sz") + y("sz")) * tNum
+    val cand = prefix.groupBy("th")
+      .agg(sort_array(collect_list(col("d"))).as("ds"))
+      .filter(size(col("ds")) > 1)
+      .select(explode(flatten(transform(col("ds"), (x, i) =>
+        transform(filter(slice(col("ds"), i + lit(2), size(col("ds"))),
+          y => similarEnough(x, y)),
+          y => struct(x("doc_id").as("id_a"), y("doc_id").as("id_b"))))))
+        .as("p"))
+      .select(col("p.id_a"), col("p.id_b"))
       .distinct()
-    cand
-      .join(sets.select(col("doc_id").as("a_id"), col("sset").as("sa")),
-        "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("sset").as("sb")),
-        "b_id")
-      .select(col("a_id"), col("b_id"),
-        size(array_intersect(col("sa"), col("sb"))).cast("long")
-          .as("n_inter"),
-        (size(col("sa")) + size(col("sb"))).cast("long").as("n_both"))
-      .select(col("a_id"), col("b_id"), col("n_inter"),
-        (col("n_both") - col("n_inter")).as("n_union"))
+    Dedup.shingleOverlap(cand, documents, shingleK)
+      .select(col("id_a").as("a_id"), col("id_b").as("b_id"), col("n_inter"),
+        (col("n_a") + col("n_b") - col("n_inter")).as("n_union"))
       .filter(col("n_inter") * tDen >= col("n_union") * tNum)
       .withColumn("jaccard",
         col("n_inter").cast("double") / col("n_union").cast("double"))

@@ -2004,14 +2004,15 @@ object VersionedTable {
     // materialize the update source once (lazy localCheckpoint,
     // computed by the bloom-probe collect): it otherwise re-evaluates
     // for the key collect, the touch semi-join, and the rewrite
-    val upd = updates.pin(eager = false)
-    val keyFrame = upd.select(keys.map(col): _*).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keys, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
-    val touchedRows = readFiles(spark, path, touched, schema, v, props)
-    commitRewrite(path, operation,
-      Medallion.mergeUpsert(touchedRows, upd, keys), touched, schema, v)
+    Materialize.withPin(updates) { upd =>
+      val keyFrame = upd.select(keys.map(col): _*).distinct()
+      val touched = touchedFiles(spark, path, v, schema,
+        _.join(keyFrame, keys, "left_semi"), props,
+        bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
+      val touchedRows = readFiles(spark, path, touched, schema, v, props)
+      commitRewrite(path, operation,
+        Medallion.mergeUpsert(touchedRows, upd, keys), touched, schema, v)
+    }
   }
 
   /** `DELETE ... WHERE key IN (<frame>)` — file-granular delete of
@@ -2029,15 +2030,16 @@ object VersionedTable {
     val props = propsOf(path, v)
     // one materialization of the (possibly expensive) key frame — it
     // feeds the bloom collect, the touch semi-join, and the anti-join
-    val keyFrame = keys.select(keyCols.map(col): _*).distinct()
-      .pin(eager = false)
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keyCols, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-        keyCols))
-    val kept = readFiles(spark, path, touched, schema, v, props)
-      .join(keyFrame, keyCols, "left_anti")
-    commitRewrite(path, operation, kept, touched, schema, v)
+    Materialize.withPin(keys.select(keyCols.map(col): _*).distinct()) {
+      keyFrame =>
+        val touched = touchedFiles(spark, path, v, schema,
+          _.join(keyFrame, keyCols, "left_semi"), props,
+          bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
+            keyCols))
+        val kept = readFiles(spark, path, touched, schema, v, props)
+          .join(keyFrame, keyCols, "left_anti")
+        commitRewrite(path, operation, kept, touched, schema, v)
+    }
   }
 
   /** MERGE with automatic schema evolution (Delta's
@@ -2062,27 +2064,28 @@ object VersionedTable {
       s"schema evolution cannot change column types — $conflicts")
     val props = propsOf(path, v)
     // one materialization of the update source (see upsert)
-    val upd = updates.pin(eager = false)
-    val keyFrame = upd.select(keys.map(col): _*).distinct()
-    val touched = touchedFiles(spark, path, v, schema,
-      _.join(keyFrame, keys, "left_semi"), props,
-      bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
-    val merged = readFiles(spark, path, touched, schema, v, props)
-      .join(upd, keys, "left_anti")
-      .unionByName(upd, allowMissingColumns = true)
-    // evolved columns get a physical name; a name that collides with
-    // a previously-dropped column's bytes gets a FRESH physical name
-    // (the usedPhys tombstone) instead of resurrecting them
-    var p = props
-    merged.columns.filterNot(schema.fieldNames.contains).foreach { c =>
-      val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
-      p = p.copy(
-        colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
-        usedPhys = p.usedPhys + phys)
+    Materialize.withPin(updates) { upd =>
+      val keyFrame = upd.select(keys.map(col): _*).distinct()
+      val touched = touchedFiles(spark, path, v, schema,
+        _.join(keyFrame, keys, "left_semi"), props,
+        bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
+      val merged = readFiles(spark, path, touched, schema, v, props)
+        .join(upd, keys, "left_anti")
+        .unionByName(upd, allowMissingColumns = true)
+      // evolved columns get a physical name; a name that collides with
+      // a previously-dropped column's bytes gets a FRESH physical name
+      // (the usedPhys tombstone) instead of resurrecting them
+      var p = props
+      merged.columns.filterNot(schema.fieldNames.contains).foreach { c =>
+        val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
+        p = p.copy(
+          colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
+          usedPhys = p.usedPhys + phys)
+      }
+      commitRewrite(path, "MERGE[EVOLVE]", merged, touched,
+        nullableSchema(merged.schema), v,
+        newProps = if (p == props) None else Some(p))
     }
-    commitRewrite(path, "MERGE[EVOLVE]", merged, touched,
-      nullableSchema(merged.schema), v,
-      newProps = if (p == props) None else Some(p))
   }
 
   /** Recency-aware MERGE: keep the latest row per `key` by

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Expectations, VersionedTable}
+import graft.operators.{Expectations, Materialize, VersionedTable}
 import graft.sources.GraftTable
-import graft.operators.Materialize.Pinnable
 
 /** SQL DML over the versioned format — `DELETE FROM` / `UPDATE` /
   * `MERGE INTO` on `graft.`/path`` catalog tables (judge r12 item 2:
@@ -206,7 +205,17 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     case InsAct(c, _) => c
   }
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  // materialize the MERGE source ONCE (lazy — the first action of
+  // `merge` computes it, and the pin is freed when the commit is
+  // written): the source frame otherwise re-evaluates for the
+  // touch-key collect, the ambiguity guard, and the full-outer
+  // assembly (Delta materializes its merge source for the same
+  // reason, plus determinism). LogicalRDD keeps the plan's output
+  // attribute ids, so the ON/action expression bindings still hold.
+  override def run(spark: SparkSession): Seq[Row] =
+    Materialize.withPin(GraftBridge.dataset(spark, sourcePlan))(merge(spark, _))
+
+  private def merge(spark: SparkSession, src: DataFrame): Seq[Row] = {
     val v = VersionedTable.latestVersion(path).getOrElse(
       throw new IllegalArgumentException(
         s"no committed versions at $path"))
@@ -215,14 +224,6 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     val tgt = GraftDml.idMap(targetAttrs)
     val tgtIds = targetAttrs.map(_.exprId).toSet
     val srcIds = sourcePlan.output.map(_.exprId).toSet
-    // materialize the MERGE source ONCE (lazy — the first action
-    // below computes it): the source frame otherwise re-evaluates for
-    // the touch-key collect, the ambiguity guard, and the full-outer
-    // assembly (Delta materializes its merge source for the same
-    // reason, plus determinism). LogicalRDD keeps the plan's output
-    // attribute ids, so the ON/action expression bindings still hold.
-    val src = GraftBridge.dataset(spark, sourcePlan)
-      .pin(eager = false)
 
     def srcAttr(name: String): Expression =
       sourcePlan.output.find(_.name == name)

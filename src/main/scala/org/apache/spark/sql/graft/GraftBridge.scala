@@ -120,6 +120,13 @@ object GraftBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.filesOpenCostInBytes
 
+  /** Drops a pinned RDD's blocks without `RDD.unpersist`'s warning
+    * that a locally checkpointed RDD cannot be recomputed: the caller
+    * frees a pin only after its last use (`SparkContext.unpersistRDD`
+    * is private[spark]). */
+  def releasePin(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Re-anchor a STREAMING micro-batch frame as a standalone batch
     * DataFrame (a V1 `Sink.addBatch` frame is backed by an
     * IncrementalExecution that must not be re-planned — the same

@@ -64,17 +64,16 @@ class PlanShapeSpec extends SparkSpec {
     // in-bucket expansion, not a bucket self-join of two scans
     assert(!pm.contains("InMemoryTableScan"),
       s"minhashLsh still caches:\n$pm")
+    // one scan signs, one verifies: the over-cap census rides the
+    // banding exchange instead of signing the corpus again
+    assert("FileScan".r.findAllMatchIn(pm).size == 2,
+      s"minhashLsh scans its corpus more than twice:\n$pm")
     val ps = plan(Dedup.simhashPairs(tables.documents))
     assert(!ps.contains("InMemoryTableScan"), s"simhash caches:\n$ps")
-    // verification stays inline (no data-sized join); the ONLY join
-    // allowed is the broadcast LeftAnti against the tiny over-cap
-    // bucket skip list
-    assert(!ps.contains("SortMergeJoin"),
-      s"simhash verification shuffled a join:\n$ps")
-    val joins = ps.linesIterator
-      .filter(_.contains("BroadcastHashJoin")).toSeq
-    assert(joins.forall(_.contains("LeftAnti")),
-      s"simhash should verify inline (only the skip-list anti-join):\n$ps")
+    // verification stays inline: no join at all, one corpus scan
+    assert(!ps.contains("Join"), s"simhash verification joined:\n$ps")
+    assert("FileScan".r.findAllMatchIn(ps).size == 1,
+      s"simhash signs its corpus more than once:\n$ps")
   }
 
   test("contamination check broadcasts the benchmark side only") {
@@ -293,13 +292,17 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("levenshtein"), s"verify missing from plan:\n$p")
   }
 
-  test("exact similarity join: all joins hash-keyed, df count pre-aggregated") {
+  test("exact similarity join: prefix buckets, no self-join, one verify join") {
     val p = plan(SetJoin.similarityJoinExact(tables.documents))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"prefix join degenerated to all-pairs:\n$p")
-    assert(p.contains("partial_count"),
-      s"document-frequency count not map-side combined:\n$p")
+    // candidates come from in-bucket expansion; the one join is the
+    // verifier's doc-id join, and the corpus is scanned twice
+    val joins = p.linesIterator.count(_.matches(".*(HashJoin|MergeJoin) .*"))
+    assert(joins == 1, s"expected only the verify join, found $joins:\n$p")
+    assert("FileScan".r.findAllMatchIn(p).size == 2,
+      s"corpus not scanned exactly twice:\n$p")
   }
 
   test("market basket: pair expansion is a basket equi-join after distinct") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,36 +10,51 @@ trait SparkSpec extends AnyFunSuite {
   lazy val sfDir: String = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sfDir)
 
-  /** Job-start descriptions seen by a listener while `body` runs; a
-    * sentinel job marks the end, so every earlier job event has been
-    * delivered when this returns. */
-  def jobDescriptions(body: => Unit): Seq[String] = {
+  /** Runs `body` with `l` attached. A sentinel job marks the end, so
+    * every event of the jobs `body` ran has reached `l` when this
+    * returns; `l` sees the sentinel job too (it reads no input). */
+  def withListener(l: SparkListener)(body: => Unit): Unit = {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val watch = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (SparkSpec.description(e) == SparkSpec.Sentinel) done.countDown()
     }
     sc.addSparkListener(l)
+    sc.addSparkListener(watch)
     val prev = sc.getLocalProperty("spark.job.description")
     try {
       body
-      sc.setJobDescription("sentinel")
-      spark.range(1).count()
+      sc.setJobDescription(SparkSpec.Sentinel)
+      sc.parallelize(Seq(0), 1).count()
       sc.setJobDescription(prev)
-      val deadline = System.currentTimeMillis + 30000
-      while (!seen.contains("sentinel") &&
-             System.currentTimeMillis < deadline) Thread.sleep(20)
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.takeWhile(_ != "sentinel")
-    } finally sc.removeSparkListener(l)
+      done.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    } finally {
+      sc.removeSparkListener(watch)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** Job-start descriptions seen while `body` runs. */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(SparkSpec.description(e))
+    })(body)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.takeWhile(_ != SparkSpec.Sentinel)
   }
 }
 
 object SparkSpec {
   /** The prod surface's session (extensions, tuning) on 4 cores. */
   lazy val session: SparkSession = SessionTuning.session(4)
+
+  private val Sentinel = "sentinel"
+
+  private def description(e: SparkListenerJobStart): String =
+    Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .getOrElse("")
 }

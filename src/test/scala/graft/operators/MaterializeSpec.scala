@@ -87,6 +87,35 @@ class MaterializeSpec extends SparkSpec {
     assert(local == Map(1L -> 1.0, 2L -> 20.0, 3L -> 3.0, 4L -> 40.0))
   }
 
+  test("SQL MERGE, upsert and deleteMatching release their source pins " +
+       "once the commit is written") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_mat_release")
+      .toString + "/t"
+    VersionedTable.write(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "v"),
+      path)
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    Seq((2L, 20.0), (5L, 50.0)).toDF("k", "v")
+      .createOrReplaceTempView("mat_release_src")
+    // pins this test adds (the ContextCleaner may free older ones)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+    spark.sql(s"""MERGE INTO graft.`$path` t USING mat_release_src s
+      ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert(pinned.isEmpty, "SQL MERGE left its source pinned")
+    VersionedTable.upsert(spark, path,
+      Seq((3L, 30.0), (6L, 60.0)).toDF("k", "v"), Seq("k"))
+    assert(pinned.isEmpty, "upsert left its source pinned")
+    VersionedTable.deleteMatching(spark, path, Seq(1L, 6L).toDF("k"),
+      Seq("k"))
+    assert(pinned.isEmpty, "deleteMatching left its key frame pinned")
+    assert(VersionedTable.read(spark, path).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(2L -> 20.0, 3L -> 30.0, 5L -> 50.0))
+  }
+
   test("subtreeRollup level-sweep fallback (depth guard) is " +
        "hash-identical to the doubling path") {
     import org.apache.spark.sql.functions._
