@@ -178,11 +178,19 @@ object Bench {
           .mkString("{", ",", "}")
         s"""{"metric":"total","value":${merged.values.sum},"unit":"sec","queries":$qsM,"reps":$reps,"sf":"$sfDir","merged_partial":true}"""
       }
-    // a run with stall windows is not evidence: adopting it as the
-    // baseline would widen every later requery gate by the stall
+    // a run with stall windows, or with a calibration anchor over
+    // 1.0 s (2x the 0.3-0.5 s norm: the host was loaded), is not
+    // evidence: adopting it as the baseline would widen every later
+    // requery gate by the stall
+    val slowAnchors = Seq("start" -> calStart, "mid" -> calMid,
+      "end" -> calEnd).filter(_._2 > 1.0)
     if (windows.nonEmpty)
       System.err.println(s"[bench] bench_last.json kept: " +
         s"${windows.size} stall window(s) in this run")
+    else if (slowAnchors.nonEmpty)
+      System.err.println(s"[bench] bench_last.json kept: calibration " +
+        slowAnchors.map { case (k, s) => f"$k $s%.2f s" }.mkString(", ") +
+        " over 1.0 s in this run")
     else try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_last.json"),
       (persistLine + "\n").getBytes("UTF-8"))

@@ -725,9 +725,8 @@ object ScaleProbe {
         val batch = t.events.limit(500).repartition(1)
         (1 to 5).foreach(i => graft.operators.VersionedTable.append(
           spark, batch, p, operation = s"B$i"))
-        (1 to 50).map(_ => graft.operators.VersionedTable.manifestEntries(
-          p, graft.operators.VersionedTable.latestVersion(p).get).size)
-          .sum.toLong
+        (1 to 50).map(_ =>
+          graft.operators.VersionedTable.snapshot(p).entries.size).sum.toLong
       }, {
         val p = s"${Queries.cacheRoot}/probe/vlog_10x"
         graft.operators.VersionedTable.destroy(p)
@@ -743,9 +742,8 @@ object ScaleProbe {
         val batch = t.events.limit(500).repartition(1)
         (1 to 5).foreach(i => graft.operators.VersionedTable.append(
           spark, batch, p, operation = s"B$i"))
-        (1 to 50).map(_ => graft.operators.VersionedTable.manifestEntries(
-          p, graft.operators.VersionedTable.latestVersion(p).get).size)
-          .sum.toLong
+        (1 to 50).map(_ =>
+          graft.operators.VersionedTable.snapshot(p).entries.size).sum.toLong
       }),
       // round-11: the METADATA-ONLY aggregate claim — statsAggMeta
       // answers count/min/max from the manifest with zero data I/O,

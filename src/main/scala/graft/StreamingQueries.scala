@@ -462,8 +462,7 @@ private[graft] object StreamingQueries {
           payloadCols = Seq("event_id", "ts", "user_id", "event_type",
             "value"),
           maxFilesPerTrigger = 3).awaitTermination(120000)
-        val sizes = VersionedTable.manifestSizes(table,
-          VersionedTable.latestVersion(table).get).map(_._2)
+        val sizes = VersionedTable.snapshot(table).entries.map(_.bytes)
         VersionedTable.optimizeIncremental(s, table, Seq("event_id"),
           minFileBytes = sizes.max + 1, numFiles = 4)
         VersionedTable.read(s, table)

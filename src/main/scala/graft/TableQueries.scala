@@ -1611,8 +1611,7 @@ object TableQueries {
         (1L to 3L).foreach(i => VersionedTable.append(s,
           ev.filter(col("event_id") % 4 === i).repartition(4), path,
           operation = s"APPEND[$i]"))
-        val sizes = VersionedTable.manifestSizes(path,
-          VersionedTable.latestVersion(path).get).map(_._2)
+        val sizes = VersionedTable.snapshot(path).entries.map(_.bytes)
         VersionedTable.optimizeIncremental(s, path, Seq("event_id"),
           minFileBytes = sizes.max / 2, numFiles = 2)
         VersionedTable.read(s, path)

@@ -135,19 +135,16 @@ object GraftTableFunctions {
   private def detailPlan(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 1, "graft_detail(path) takes one argument")
     val path = strArg(args, 0, "graft_detail")
-    val vt = graft.operators.VersionedTable
-    val v = vt.latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions at $path"))
-    val entries = vt.manifestEntries(path, v)
+    val snap = graft.operators.VersionedTable.snapshot(path)
+    val entries = snap.entries
     val partCols = entries.flatMap(_.part.keys).distinct.sorted
-    val props = vt.tableProperties(path, v)
+    val props = snap.props.tbl
     resultRow(
       "path" -> StringType, "version" -> IntegerType,
       "num_files" -> LongType, "size_bytes" -> LongType,
       "num_rows" -> LongType, "num_dv_files" -> LongType,
       "partition_columns" -> StringType, "properties" -> StringType)(
-      UTF8String.fromString(path), v,
+      UTF8String.fromString(path), snap.version,
       entries.size.toLong, entries.map(_.bytes).sum,
       entries.map(_.rows).sum,
       entries.count(_.dv.isDefined).toLong,

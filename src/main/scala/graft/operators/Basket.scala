@@ -32,16 +32,12 @@ object Basket {
     val items = lineitem.select(col("l_orderkey").as("okey"),
       col("l_partkey").as("pk")).distinct()
     // one explicit exchange on okey shared by the size census and the
-    // basket collect (the lshCandidates idiom): over-cap baskets are
-    // dropped BEFORE their arrays are built, and the in-basket pair
-    // expansion replaces the old okey self-join + size window — the
-    // basket frame shuffles once instead of three times
-    val exchanged = items.repartition(col("okey"))
-    val overCap = exchanged.groupBy(col("okey"))
-      .agg(count(col("pk")).as("n")).filter(col("n") > maxBasket)
-      .select("okey")
-    val baskets = exchanged
-      .join(broadcast(overCap), Seq("okey"), "left_anti")
+    // basket collect (the lshCandidates idiom, [[Dedup.capBuckets]]):
+    // over-cap baskets are dropped BEFORE their arrays are built,
+    // lineitem is read once, and the in-basket pair expansion replaces
+    // the old okey self-join — the basket frame shuffles once
+    val baskets = Dedup.capBuckets(items.repartition(col("okey")),
+        Seq("okey"), maxBasket)
       .groupBy(col("okey"))
       .agg(sort_array(collect_list(col("pk"))).as("ids"))
       .pin(true)

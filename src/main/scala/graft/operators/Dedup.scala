@@ -114,7 +114,7 @@ object Dedup {
     * exchange: the optimizer pushes the anti-join below an explicit
     * repartition, so the two branches differ and the input is read
     * and signed twice. */
-  private def capBuckets(rows: DataFrame, key: Seq[String],
+  private[operators] def capBuckets(rows: DataFrame, key: Seq[String],
                          maxBucket: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     rows.withColumn("_bucket_n",

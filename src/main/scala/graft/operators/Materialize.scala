@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage-cutting materialization for iterative loops and DML
   * source pinning — the one switch between the LOCAL and CLUSTER
@@ -36,6 +37,15 @@ object Materialize {
       case r: LogicalRDD => GraftBridge.releasePin(r.rdd)
       case _ =>
     }
+  }
+
+  /** Runs `body` over `df` persisted MEMORY_AND_DISK and unpersists it
+    * when `body` returns or throws — for a frame a loop re-reads whose
+    * lineage is worth keeping (a training sample, a graph's edges). */
+  def withPersist[T](df: DataFrame)(body: DataFrame => T): T = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(cached)
+    finally cached.unpersist(blocking = true)
   }
 
   implicit class Pinnable(private val df: DataFrame) extends AnyVal {

@@ -384,9 +384,8 @@ object Pipeline {
     val done = s"PIPELINE_CDF_DONE[v=$v]"
     if (VersionedTable.versions(head).nonEmpty &&
         !VersionedTable.operations(head).contains(done)) {
-      val hv = VersionedTable.latestVersion(head).get
-      VersionedTable.commitActions(head, done, hv, Set.empty, Nil,
-        VersionedTable.schemaOf(head, hv)); ()
+      val hs = VersionedTable.snapshot(head)
+      VersionedTable.commitActions(hs, done, Set.empty, Nil, hs.schema); ()
     }
   }
 

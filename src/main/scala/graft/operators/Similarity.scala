@@ -339,45 +339,45 @@ object Similarity {
       graft.functions.expressions.Sha60(
         org.apache.spark.sql.graft.GraftBridge.expression(
           concat(lit("ivf:"), col("vec_id").cast("string")))))
-    val sample = corpus.filter(pmod(keyHash, lit(m)) === 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents = sample.orderBy("vec_id").limit(nlist)
-      .select("embedding").collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    for (_ <- 0 until iters) {
-      val assigned = sample.select(col("vec_id"),
-        element_at(nearestCentroids(col("embedding"), cents, 1), 1)
-          .as("cluster"),
-        VectorFunctions.toDoubleArray(col("embedding")).as("emb"))
-      // per-cluster means as ORDER-FIXED sequential double folds
-      // (sorted by vec_id): deterministic across partition orders
-      // (naive double sums would drift bit-level) AND free of the
-      // decimal-cast rounding tie — float components are binary
-      // fractions ending in "5", so a decimal(p,s) cast can land on a
-      // HALF_UP-vs-HALF_EVEN tie between engines (one flipped a PQ
-      // cell at 1e-11; same hazard applied here). The fold has no
-      // rounding step; cluster sample subsets are budget-bounded so
-      // the collected lists stay tiny at any corpus size.
-      val dims = assigned
-        .select(col("vec_id"), col("cluster"),
-          posexplode(col("emb")).as(Seq("dim", "v")))
-        .groupBy("cluster", "dim")
-        .agg(sort_array(collect_list(struct(col("vec_id"), col("v"))))
-          .as("vs"), count(lit(1)).as("n"))
-        .select(col("cluster"), col("dim"),
-          (aggregate(col("vs"), lit(0.0),
-            (acc, x) => acc + x.getField("v")) / col("n")).as("mean"))
-        .collect()
-      // clusters that captured no sample rows keep their centroid
-      val next = cents.map(_.clone())
-      dims.foreach { r =>
-        next(r.getAs[Int]("cluster"))(r.getAs[Int]("dim")) =
-          r.getAs[Double]("mean")
+    val sampled = corpus.filter(pmod(keyHash, lit(m)) === 0)
+    Materialize.withPersist(sampled) { sample =>
+      var cents = sample.orderBy("vec_id").limit(nlist)
+        .select("embedding").collect()
+        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      for (_ <- 0 until iters) {
+        val assigned = sample.select(col("vec_id"),
+          element_at(nearestCentroids(col("embedding"), cents, 1), 1)
+            .as("cluster"),
+          VectorFunctions.toDoubleArray(col("embedding")).as("emb"))
+        // per-cluster means as ORDER-FIXED sequential double folds
+        // (sorted by vec_id): deterministic across partition orders
+        // (naive double sums would drift bit-level) AND free of the
+        // decimal-cast rounding tie — float components are binary
+        // fractions ending in "5", so a decimal(p,s) cast can land on a
+        // HALF_UP-vs-HALF_EVEN tie between engines (one flipped a PQ
+        // cell at 1e-11; same hazard applied here). The fold has no
+        // rounding step; cluster sample subsets are budget-bounded so
+        // the collected lists stay tiny at any corpus size.
+        val dims = assigned
+          .select(col("vec_id"), col("cluster"),
+            posexplode(col("emb")).as(Seq("dim", "v")))
+          .groupBy("cluster", "dim")
+          .agg(sort_array(collect_list(struct(col("vec_id"), col("v"))))
+            .as("vs"), count(lit(1)).as("n"))
+          .select(col("cluster"), col("dim"),
+            (aggregate(col("vs"), lit(0.0),
+              (acc, x) => acc + x.getField("v")) / col("n")).as("mean"))
+          .collect()
+        // clusters that captured no sample rows keep their centroid
+        val next = cents.map(_.clone())
+        dims.foreach { r =>
+          next(r.getAs[Int]("cluster"))(r.getAs[Int]("dim")) =
+            r.getAs[Double]("mean")
+        }
+        cents = next
       }
-      cents = next
+      cents
     }
-    sample.unpersist(blocking = true)
-    cents
   }
 
   // ---------- PQ (product quantization) ----------
@@ -423,54 +423,54 @@ object Similarity {
       graft.functions.expressions.Sha60(
         org.apache.spark.sql.graft.GraftBridge.expression(
           concat(lit("pq:"), col("vec_id").cast("string")))))
-    val sample = corpus.filter(pmod(keyHash, lit(mod)) === 0)
+    val sampled = corpus.filter(pmod(keyHash, lit(mod)) === 0)
       .select("vec_id", "embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init: subvectors of the ksub lowest-vec_id sample rows (code =
-    // rank in vec_id order — mirrored by the oracle's row_number)
-    var books: Array[Array[Array[Double]]] = {
-      val rows = sample.orderBy("vec_id").limit(ksub)
-        .select("embedding").collect()
-        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      Array.tabulate(m)(j =>
-        rows.map(_.slice(j * dsub, (j + 1) * dsub)))
-    }
-    for (_ <- 0 until iters) {
-      // one kernel pass assigns every subspace at once
-      val assigned = sample.select(col("vec_id"), col("embedding"),
-        posexplode(pqCodesCol(col("embedding"), books))
-          .as(Seq("sub", "code")))
-      // per-cell means as ORDER-FIXED sequential double folds (sorted
-      // by vec_id), not decimal-cast sums: float components are binary
-      // fractions whose decimal expansions terminate in "5", so a
-      // decimal(p,s) cast can land exactly on a rounding tie where
-      // Spark (HALF_UP) and the oracle engine (HALF_EVEN) disagree —
-      // at PQ's sample×subspace volume one such tie DID flip a
-      // codebook cell. The sorted fold has no rounding step at all;
-      // the cell's sample subset is budget-bounded, so the
-      // collect_list stays tiny at any corpus size.
-      val dims = assigned
-        .select(col("vec_id"), col("sub"), col("code"),
-          posexplode(VectorFunctions.toDoubleArray(
-            slice(col("embedding"), col("sub") * dsub + 1, lit(dsub))))
-            .as(Seq("dim", "v")))
-        .groupBy("sub", "code", "dim")
-        .agg(sort_array(collect_list(struct(col("vec_id"), col("v"))))
-          .as("vs"), count(lit(1)).as("n"))
-        .select(col("sub"), col("code"), col("dim"),
-          (aggregate(col("vs"), lit(0.0),
-            (acc, x) => acc + x.getField("v")) / col("n")).as("mean"))
-        .collect()
-      // codes that captured no sample rows keep their centroid
-      val next = books.map(_.map(_.clone()))
-      dims.foreach { r =>
-        next(r.getAs[Int]("sub"))(r.getAs[Int]("code"))(r.getAs[Int]("dim")) =
-          r.getAs[Double]("mean")
+    Materialize.withPersist(sampled) { sample =>
+      // init: subvectors of the ksub lowest-vec_id sample rows (code =
+      // rank in vec_id order — mirrored by the oracle's row_number)
+      var books: Array[Array[Array[Double]]] = {
+        val rows = sample.orderBy("vec_id").limit(ksub)
+          .select("embedding").collect()
+          .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+        Array.tabulate(m)(j =>
+          rows.map(_.slice(j * dsub, (j + 1) * dsub)))
       }
-      books = next
+      for (_ <- 0 until iters) {
+        // one kernel pass assigns every subspace at once
+        val assigned = sample.select(col("vec_id"), col("embedding"),
+          posexplode(pqCodesCol(col("embedding"), books))
+            .as(Seq("sub", "code")))
+        // per-cell means as ORDER-FIXED sequential double folds (sorted
+        // by vec_id), not decimal-cast sums: float components are binary
+        // fractions whose decimal expansions terminate in "5", so a
+        // decimal(p,s) cast can land exactly on a rounding tie where
+        // Spark (HALF_UP) and the oracle engine (HALF_EVEN) disagree —
+        // at PQ's sample×subspace volume one such tie DID flip a
+        // codebook cell. The sorted fold has no rounding step at all;
+        // the cell's sample subset is budget-bounded, so the
+        // collect_list stays tiny at any corpus size.
+        val dims = assigned
+          .select(col("vec_id"), col("sub"), col("code"),
+            posexplode(VectorFunctions.toDoubleArray(
+              slice(col("embedding"), col("sub") * dsub + 1, lit(dsub))))
+              .as(Seq("dim", "v")))
+          .groupBy("sub", "code", "dim")
+          .agg(sort_array(collect_list(struct(col("vec_id"), col("v"))))
+            .as("vs"), count(lit(1)).as("n"))
+          .select(col("sub"), col("code"), col("dim"),
+            (aggregate(col("vs"), lit(0.0),
+              (acc, x) => acc + x.getField("v")) / col("n")).as("mean"))
+          .collect()
+        // codes that captured no sample rows keep their centroid
+        val next = books.map(_.map(_.clone()))
+        dims.foreach { r =>
+          next(r.getAs[Int]("sub"))(r.getAs[Int]("code"))(r.getAs[Int]("dim")) =
+            r.getAs[Double]("mean")
+        }
+        books = next
+      }
+      books
     }
-    sample.unpersist(blocking = true)
-    books
   }
 
   /** PQ-ADC ANN: the corpus compresses to m small-int codes per

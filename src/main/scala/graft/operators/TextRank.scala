@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.operators.Materialize.Pinnable
 
 /** TextRank keyword scoring — PageRank over the word co-occurrence
@@ -45,58 +44,57 @@ object TextRank {
           "i -> struct(w[i] as a, w[i+1] as b))")).as("p"))
       .select(col("p.a"), col("p.b"))
       .filter(col("a") =!= col("b"))
-    val edges = prs.select(col("a").as("src"), col("b").as("dst"))
+    val edgeFrame = prs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(prs.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy(col("src").as("word"))
-      .agg(count(lit(1)).as("deg"))
-    val verts = toks.select(explode(col("w")).as("word")).distinct()
-      .join(deg, Seq("word"), "left")
-      .select(col("word"), coalesce(col("deg"), lit(0L)).as("deg"))
-    // |vocab| is the one driver scalar (same bounded-scalar budget as
-    // the cluster-convergence checks): the integer base rank needs N
-    val n = verts.count()
-    if (n == 0) {
-      edges.unpersist()
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("word",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("deg",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rank_ppb",
-            org.apache.spark.sql.types.LongType))))
+    Materialize.withPersist(edgeFrame) { edges =>
+      val deg = edges.groupBy(col("src").as("word"))
+        .agg(count(lit(1)).as("deg"))
+      val verts = toks.select(explode(col("w")).as("word")).distinct()
+        .join(deg, Seq("word"), "left")
+        .select(col("word"), coalesce(col("deg"), lit(0L)).as("deg"))
+      // |vocab| is the one driver scalar (same bounded-scalar budget as
+      // the cluster-convergence checks): the integer base rank needs N
+      val n = verts.count()
+      if (n == 0) spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("word",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("deg",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("rank_ppb",
+              org.apache.spark.sql.types.LongType))))
+      else {
+        val rank0 = 1000000000L / n
+        val base = 150000000L / n
+        // each round materializes once via an eager pin (the CC-loop
+        // discipline, optimization r14): the old persist + count() pair
+        // cost the same one job but left the round's full logical plan in
+        // place (ranks appears twice per round — plan size doubled each
+        // round) and a CacheManager entry to clean up; the pin truncates
+        // to a LogicalRDD and frees through the ContextCleaner
+        var ranks = verts
+          .withColumn("rank_ppb", lit(rank0))
+          .pin(eager = true)
+        for (_ <- 1 to iters) {
+          // rank_ppb ≤ 1e9 and deg ≥ 1 on every edge row, so the damped
+          // sum is ≤ 85e9 — far inside long range
+          val contrib = edges
+            .join(ranks.select(col("word").as("src"), col("deg").as("sdeg"),
+              col("rank_ppb")), "src")
+            .select(col("dst"), expr("rank_ppb div sdeg").as("c"))
+            .groupBy(col("dst").as("word")).agg(sum(col("c")).as("s"))
+          ranks = ranks.select("word", "deg")
+            .join(contrib, Seq("word"), "left")
+            .select(col("word"), col("deg"),
+              (lit(base) + expr("(85 * coalesce(s, 0L)) div 100"))
+                .as("rank_ppb"))
+            .pin(eager = true)
+        }
+        ranks
+      }
     }
-    val rank0 = 1000000000L / n
-    val base = 150000000L / n
-    // each round materializes once via an eager pin (the CC-loop
-    // discipline, optimization r14): the old persist + count() pair
-    // cost the same one job but left the round's full logical plan in
-    // place (ranks appears twice per round — plan size doubled each
-    // round) and a CacheManager entry to clean up; the pin truncates
-    // to a LogicalRDD and frees through the ContextCleaner
-    var ranks = verts
-      .withColumn("rank_ppb", lit(rank0))
-      .pin(eager = true)
-    for (_ <- 1 to iters) {
-      // rank_ppb ≤ 1e9 and deg ≥ 1 on every edge row, so the damped
-      // sum is ≤ 85e9 — far inside long range
-      val contrib = edges
-        .join(ranks.select(col("word").as("src"), col("deg").as("sdeg"),
-          col("rank_ppb")), "src")
-        .select(col("dst"), expr("rank_ppb div sdeg").as("c"))
-        .groupBy(col("dst").as("word")).agg(sum(col("c")).as("s"))
-      ranks = ranks.select("word", "deg")
-        .join(contrib, Seq("word"), "left")
-        .select(col("word"), col("deg"),
-          (lit(base) + expr("(85 * coalesce(s, 0L)) div 100"))
-            .as("rank_ppb"))
-        .pin(eager = true)
-    }
-    edges.unpersist()
-    ranks
   }
 
   /** The DuckDB oracle: the same three integer-ppb iterations

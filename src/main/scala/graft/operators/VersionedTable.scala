@@ -83,6 +83,14 @@ object VersionedTable {
   private[operators] val footerReads =
     new java.util.concurrent.atomic.AtomicLong()
 
+  /** `_graft_log` listings — specs assert an operation lists once to
+    * resolve its snapshot and once more per commit. */
+  private[graft] val logLists = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Log-line and checkpoint-sidecar reads — specs assert a snapshot
+    * reads checkpoint + tail once per operation. */
+  private[graft] val logReads = new java.util.concurrent.atomic.AtomicLong()
+
   private lazy val mapper = new ObjectMapper()
 
   private def logDir(path: String) = Paths.get(path, "_graft_log")
@@ -113,6 +121,7 @@ object VersionedTable {
     val d = logDir(path)
     if (!Files.exists(d)) Seq.empty
     else {
+      logLists.incrementAndGet()
       val stream = Files.list(d)
       try {
         val it = stream.iterator()
@@ -137,8 +146,10 @@ object VersionedTable {
       .map(_.toInt).toSet
   }
 
-  private def logLine(path: String, v: Int): String =
+  private def logLine(path: String, v: Int): String = {
+    logReads.incrementAndGet()
     Files.readString(logDir(path).resolve(f"$v%06d.json"))
+  }
 
   // ---------------------------------------------------------------- //
   // log-entry model + JSON (write: hand-built, read: Jackson — the
@@ -191,11 +202,18 @@ object VersionedTable {
   private[operators] val emptyProps =
     TableProps(Map.empty, Map.empty, Set.empty)
 
+  /** One parsed log line. A full entry names its checkpoint sidecar
+    * (or, in older logs, inlines `files`); the sidecar is read only
+    * when the manifest is replayed ([[fullManifest]]), so history,
+    * schema and props never pay for it. */
   private final case class LogEntry(
-      version: Int, operation: String, numRows: Long,
+      operation: String, numRows: Long,
       committedAt: String, schemaJson: String,
-      full: Option[Seq[FileEntry]], add: Seq[FileEntry],
-      remove: Set[String], props: TableProps)
+      files: Option[Seq[FileEntry]], checkpoint: Option[String],
+      add: Seq[FileEntry], remove: Set[String], props: TableProps) {
+    def schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
 
   /** JSON string escaping for commit-log fields (quotes, backslashes,
     * control chars) — an operation string like `PIPELINE["x"]` or the
@@ -303,23 +321,31 @@ object VersionedTable {
       Option(root.get("used_phys")).map(a =>
         (0 until a.size).map(a.get(_).asText).toSet).getOrElse(Set.empty),
       strMap("tblprops"))
-    // full manifests resolve through the checkpoint pointer (inline
-    // `files` still accepted for older logs)
-    val full = entryArr("files").orElse(
-      Option(root.get("checkpoint")).map { n =>
-        val ckpt = mapper.readTree(Files.readString(
-          checkpointDir(path).resolve(n.asText)))
-        val arr = ckpt.get("files")
-        (0 until arr.size).map(i => parseFileEntry(arr.get(i)))
-      })
-    LogEntry(root.get("version").asInt, root.get("operation").asText,
+    LogEntry(root.get("operation").asText,
       root.get("num_rows").asLong, root.get("committed_at").asText,
       root.get("schema").asText,
-      full, entryArr("add").getOrElse(Seq.empty),
+      entryArr("files"), Option(root.get("checkpoint")).map(_.asText),
+      entryArr("add").getOrElse(Seq.empty),
       Option(root.get("remove")).map(a =>
         (0 until a.size).map(a.get(_).asText).toSet).getOrElse(Set.empty),
       props)
   }
+
+  /** The full manifest a checkpoint entry carries, None for a delta
+    * entry. */
+  private def fullManifest(path: String, e: LogEntry): Option[Seq[FileEntry]] =
+    e.files.orElse(e.checkpoint.map { name =>
+      logReads.incrementAndGet()
+      val arr = mapper.readTree(Files.readString(
+        checkpointDir(path).resolve(name))).get("files")
+      (0 until arr.size).map(i => parseFileEntry(arr.get(i)))
+    })
+
+  /** `m` with delta entry `e` applied (checkpoint entries replace it). */
+  private def applyEntry(path: String, m: Seq[FileEntry],
+                         e: LogEntry): Seq[FileEntry] =
+    fullManifest(path, e).getOrElse(
+      m.filterNot(f => e.remove.contains(f.name)) ++ e.add)
 
   private def appendLog(path: String, v: Int, operation: String,
                         rows: Long, schema: StructType,
@@ -386,46 +412,80 @@ object VersionedTable {
   // manifest / schema plumbing
   // ---------------------------------------------------------------- //
 
-  /** The version's full manifest entries, reconstructed from the
-    * nearest checkpoint plus the delta tail (≤ [[checkpointInterval]]
-    * log entries read, never the whole log). */
-  def manifestEntries(path: String, v: Int): Seq[FileEntry] = {
-    require(versions(path).contains(v),
-      s"version $v not committed at $path")
-    val e = parseEntry(path, v)
-    e.full match {
-      case Some(files) => files
-      case None =>
-        val prev = manifestEntries(path, v - 1)
-        prev.filterNot(p => e.remove.contains(p.name)) ++ e.add
-    }
+  /** One committed version of a table, resolved once and passed down
+    * (Delta's `Snapshot`): `schema` (nullable form — what a parquet
+    * read reports; recording it in the log makes empty versions
+    * readable and schema evolution metadata-cheap) and `props` come
+    * from the version's own log line; `entries` is the full manifest,
+    * replayed from the nearest checkpoint plus the delta tail on first
+    * use (≤ [[checkpointInterval]] log lines read, never the whole
+    * log). Immutable, and never cached across operations: each
+    * operation resolves its own. */
+  final class Snapshot private[VersionedTable] (
+      val path: String, val version: Int, val schema: StructType,
+      val props: TableProps, replay: () => Seq[FileEntry]) {
+    lazy val entries: Seq[FileEntry] = replay()
+    def names: Set[String] = entries.map(_.name).toSet
   }
 
-  /** The version's file manifest: (pool file name, live row count). */
-  def manifest(path: String, v: Int): Seq[(String, Long)] =
-    manifestEntries(path, v).map(e => e.name -> e.rows)
-
-  /** Names whose entries version `v`'s commit removed or replaced —
-    * the conflict surface for optimistic concurrency. Delta entries
-    * record it directly; full entries diff against the predecessor. */
-  private def changedNames(path: String, v: Int): Set[String] =
-    parseEntry(path, v).remove
-
-  /** The schema committed with version `v` (nullable form — what a
-    * parquet read reports). Recording it in the log makes empty
-    * versions readable and schema evolution metadata-cheap: files
-    * lacking an evolved column read it as null. */
-  def schemaOf(path: String, v: Int): StructType =
-    DataType.fromJson(parseEntry(path, v).schemaJson)
-      .asInstanceOf[StructType]
-
-  /** The table properties committed with version `v` (constraints,
-    * column mapping, physical-name tombstones). */
-  def propsOf(path: String, v: Int): TableProps = {
-    require(versions(path).contains(v),
-      s"version $v not committed at $path")
-    parseEntry(path, v).props
+  /** Resolve version `v` of `path` from one log listing `listed`: the
+    * tail is walked back to the nearest checkpoint and replayed
+    * forward, without another listing. */
+  private def resolve(path: String, listed: Seq[Int], v: Int): Snapshot = {
+    require(listed.contains(v), s"version $v not committed at $path")
+    val head = parseEntry(path, v)
+    new Snapshot(path, v, head.schema, head.props, () => {
+      var tail = List(head)
+      var w = v
+      while (tail.head.files.isEmpty && tail.head.checkpoint.isEmpty) {
+        w -= 1
+        require(listed.contains(w), s"version $w not committed at $path")
+        tail = parseEntry(path, w) :: tail
+      }
+      tail.foldLeft(Seq.empty[FileEntry])(applyEntry(path, _, _))
+    })
   }
+
+  /** The table at `asOf` (VERSION AS OF), or at its latest version:
+    * one listing, one log line; the manifest replays on first use. */
+  def snapshot(path: String, asOf: Option[Int] = None): Snapshot = {
+    val listed = versions(path)
+    resolve(path, listed, asOf.orElse(listed.lastOption).getOrElse(
+      throw new IllegalArgumentException(s"no committed versions at $path")))
+  }
+
+  /** The latest snapshot, or None when nothing is committed at `path`. */
+  def latestSnapshot(path: String): Option[Snapshot] = {
+    val listed = versions(path)
+    listed.lastOption.map(resolve(path, listed, _))
+  }
+
+  /** [[snapshot]] for a read: vacuumed versions refuse cleanly even
+    * when their files survive through sharing — Delta's post-VACUUM
+    * retention contract. */
+  private def readSnapshot(path: String, asOf: Option[Int]): Snapshot = {
+    val s = snapshot(path, asOf)
+    require(!vacuumedVersions(path).contains(s.version),
+      s"version ${s.version} was vacuumed at $path")
+    s
+  }
+
+  /** Manifests of versions `from` to `to`, replayed forward from one
+    * snapshot of `from`: each later version reads only its own log
+    * line, when first asked for. */
+  private[graft] def manifests(path: String, from: Int,
+                               to: Int): LazyList[Seq[FileEntry]] =
+    (from + 1 to to).to(LazyList).scanLeft(
+      snapshot(path, Some(from)).entries)(
+      (m, w) => applyEntry(path, m, parseEntry(path, w)))
+
+  // one-field views of a version's snapshot
+  def manifestEntries(path: String, v: Int): Seq[FileEntry] =
+    snapshot(path, Some(v)).entries
+
+  def schemaOf(path: String, v: Int): StructType = snapshot(path, Some(v)).schema
+
+  def propsOf(path: String, v: Int): TableProps = snapshot(path, Some(v)).props
 
   /** Active CHECK constraints of version `v`: name → SQL predicate. */
   def constraintsOf(path: String, v: Int): Map[String, String] =
@@ -804,16 +864,15 @@ object VersionedTable {
   def write(df: DataFrame, path: String, operation: String = "WRITE",
             partitionBy: Seq[String] = Nil,
             expectations: => Option[FlowExpectations] = None): Int = {
-    val v = latestVersion(path).map(_ + 1).getOrElse(0)
-    val prevNames =
-      if (v == 0) Set.empty[String]
-      else manifestEntries(path, v - 1).map(_.name).toSet
+    val prev = latestSnapshot(path)
+    val v = prev.fold(0)(_.version + 1)
+    val prevNames = prev.fold(Set.empty[String])(_.names)
     // table properties survive a snapshot overwrite (Delta: constraints
     // and column mapping are table-level): the colmap keeps entries for
     // columns still present; usedPhys only ever grows. A NEW column
     // whose name is claimed as another column's PHYSICAL name gets a
     // fresh physical — two logicals must never share a physical
-    val prevProps = if (v == 0) emptyProps else propsOf(path, v - 1)
+    val prevProps = prev.fold(emptyProps)(_.props)
     val kept = prevProps.colmap.filter {
       case (l, _) => df.columns.contains(l)
     }
@@ -854,10 +913,8 @@ object VersionedTable {
     * survive, and the pre-truncate snapshot stays time-travelable
     * until vacuumed. Zero data I/O at any table size. */
   def truncate(path: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    commitActions(path, "TRUNCATE", v,
-      manifestEntries(path, v).map(_.name).toSet, Nil, schemaOf(path, v))
+    val s = snapshot(path)
+    commitActions(s, "TRUNCATE", s.names, Nil, s.schema)
   }
 
   /** `CONVERT TO DELTA` analog: adopt an existing flat parquet
@@ -900,52 +957,56 @@ object VersionedTable {
   }
 
   /** Optimistic delta commit: re-link the latest manifest minus
-    * `removeNames`, plus `add`. Planned against `baseV`; if other
-    * commits landed since, their changed-file sets are checked
-    * against `removeNames` — disjoint commits RETRY the re-link onto
-    * the new latest (concurrent appends and file-disjoint DML always
-    * compose), overlapping commits throw
+    * `removeNames`, plus `add`. Planned against snapshot `base`; the
+    * log is re-listed at commit time, and when no commit landed since,
+    * `base`'s manifest is re-linked as is. If other commits landed,
+    * their changed-file sets (the names each removed or replaced) are
+    * checked against `removeNames` — disjoint commits RETRY the
+    * re-link onto the new latest (concurrent appends and
+    * file-disjoint DML always compose), overlapping commits throw
     * [[ConcurrentCommitException]]. The atomic `CREATE_NEW` log
     * append is the backstop for the race between check and write. */
-  private[operators] def commitActions(path: String, operation: String,
-      baseV: Int, removeNames: Set[String], add: Seq[FileEntry],
+  private[graft] def commitActions(base: Snapshot, operation: String,
+      removeNames: Set[String], add: Seq[FileEntry],
       schema: StructType,
       newProps: Option[TableProps] = None,
       expectations: Option[FlowExpectations] = None): Int = {
-    val baseProps = propsOf(path, baseV)
+    val path = base.path
     var attempts = 0
     while (attempts < 1000) {
-      val latest = latestVersion(path).getOrElse(
+      val listed = versions(path)
+      val latest = listed.lastOption.getOrElse(
         throw new IllegalArgumentException(
           s"no committed versions at $path"))
-      if (latest != baseV) {
+      val cur = if (latest == base.version) base else {
+        val s = resolve(path, listed, latest)
         // a METADATA change (rename/drop/constraint/schema) cannot be
         // rebased onto concurrent commits, and a data commit planned
         // under one metadata world cannot land in another — Delta's
         // MetadataChangedException shape
-        if (newProps.isDefined ||
-            propsOf(path, latest) != baseProps ||
-            schemaOf(path, latest) != schemaOf(path, baseV))
+        if (newProps.isDefined || s.props != base.props ||
+            s.schema != base.schema)
           throw new ConcurrentCommitException(
-            s"$operation planned at version $baseV of $path: table " +
-              s"metadata changed by concurrent commits up to v$latest")
-        val conflicts = (baseV + 1 to latest).iterator
-          .flatMap(w => changedNames(path, w)).toSet
+            s"$operation planned at version ${base.version} of $path: " +
+              s"table metadata changed by concurrent commits up to v$latest")
+        val conflicts = (base.version + 1 to latest).iterator
+          .flatMap(w => parseEntry(path, w).remove).toSet
           .intersect(removeNames)
         if (conflicts.nonEmpty) throw new ConcurrentCommitException(
-          s"$operation planned at version $baseV of $path conflicts " +
-            s"with concurrent commits up to v$latest on files $conflicts")
+          s"$operation planned at version ${base.version} of $path " +
+            s"conflicts with concurrent commits up to v$latest on files " +
+            s"$conflicts")
+        s
       }
       val nv = latest + 1
-      val keep = manifestEntries(path, latest)
-        .filterNot(e => removeNames.contains(e.name))
+      val keep = cur.entries.filterNot(e => removeNames.contains(e.name))
       val rows = keep.map(_.rows).sum + add.map(_.rows).sum
       val full =
         if (nv % checkpointInterval == 0) Some(keep ++ add) else None
       try {
         appendLog(path, nv, operation, rows, schema, full,
           if (full.isDefined) Nil else add, removeNames,
-          newProps.getOrElse(baseProps), expectations)
+          newProps.getOrElse(base.props), expectations)
         return nv
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -955,24 +1016,23 @@ object VersionedTable {
     throw new IllegalStateException(s"commit retry livelock at $path")
   }
 
-  /** Commit a file-granular rewrite planned against `baseV`:
+  /** Commit a file-granular rewrite planned against snapshot `base`:
     * untouched files are RE-LINKED into the new manifest; only
     * `newData` (the rewritten touched rows plus inserts) hits disk.
     * New files are validated before the log append ([[stageFiles]])
     * — a violation aborts atomically (staged files removed, no
     * commit). Observations on `newData` complete by the time this
     * returns its version. */
-  private[graft] def commitRewrite(path: String, operation: String,
+  private[graft] def commitRewrite(base: Snapshot, operation: String,
                                    newData: DataFrame, touched: Set[String],
-                                   schema: StructType, baseV: Int,
+                                   schema: StructType,
                                    partitionBy: Seq[String] = Nil,
                                    newProps: Option[TableProps] = None,
                                    expectations: => Option[FlowExpectations] = None)
       : Int = {
-    val props = newProps.getOrElse(propsOf(path, baseV))
-    val (fresh, counters) = stageFiles(newData, path, baseV + 1,
-      partitionBy, props, expectations)
-    commitActions(path, operation, baseV, touched, fresh, schema, newProps,
+    val (fresh, counters) = stageFiles(newData, base.path, base.version + 1,
+      partitionBy, newProps.getOrElse(base.props), expectations)
+    commitActions(base, operation, touched, fresh, schema, newProps,
       counters)
   }
 
@@ -1002,10 +1062,10 @@ object VersionedTable {
     * columns ride along for touched-file discovery and DV
     * construction: `_graft_file` (pool file name) and `_graft_pos`
     * (row position in the physical file). */
-  private def readEntries(spark: SparkSession, path: String,
-                          entries: Seq[FileEntry], schema: StructType,
-                          v: Int, lineage: Boolean = false,
-                          props: TableProps = emptyProps): DataFrame = {
+  private def readEntries(spark: SparkSession, s: Snapshot,
+                          entries: Seq[FileEntry],
+                          lineage: Boolean = false): DataFrame = {
+    val (path, v, schema, props) = (s.path, s.version, s.schema, s.props)
     // files store PHYSICAL names; the scan reads them and the select
     // restores the LOGICAL names (identity when no column was renamed)
     val physSchema =
@@ -1064,37 +1124,29 @@ object VersionedTable {
   }
 
   /** Name-subset convenience over [[readEntries]]. */
-  private[graft] def readFiles(spark: SparkSession, path: String,
-                        names: Iterable[String], schema: StructType,
-                        v: Int,
-                        props: TableProps = emptyProps): DataFrame = {
-    val want = names.toSet
-    readEntries(spark, path,
-      manifestEntries(path, v).filter(e => want.contains(e.name)),
-      schema, v, props = props)
-  }
+  private[graft] def readFiles(spark: SparkSession, s: Snapshot,
+                               names: Set[String]): DataFrame =
+    readEntries(spark, s, s.entries.filter(e => names.contains(e.name)))
 
   /** Read the table at `asOf` (VERSION AS OF) or latest. Vacuumed
-    * versions refuse cleanly even when their files survive through
-    * sharing — Delta's post-VACUUM retention contract. */
+    * versions refuse ([[readSnapshot]]). */
   def read(spark: SparkSession, path: String,
            asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    readFiles(spark, path, manifest(path, v).map(_._1), schemaOf(path, v),
-      v, propsOf(path, v))
+    val s = readSnapshot(path, asOf)
+    readEntries(spark, s, s.entries)
   }
 
-  /** True when `v` is committed, not vacuumed, and every manifest file
-    * still resolves (own pool or clone base). */
-  def isReadable(path: String, v: Int): Boolean =
-    versions(path).contains(v) && !vacuumedVersions(path).contains(v) &&
-      manifestEntries(path, v).forall(e =>
-        resolvePoolFile(path, e.name).isDefined &&
-          e.dv.forall(d => resolvePoolFile(path, d).isDefined))
+  /** Version `v`'s snapshot when `v` is committed, not vacuumed, and
+    * every manifest file still resolves (own pool or clone base). */
+  private def readableAt(path: String, v: Int): Option[Snapshot] = {
+    val listed = versions(path)
+    if (!listed.contains(v) || vacuumedVersions(path).contains(v)) None
+    else Some(resolve(path, listed, v)).filter(_.entries.forall(e =>
+      resolvePoolFile(path, e.name).isDefined &&
+        e.dv.forall(d => resolvePoolFile(path, d).isDefined)))
+  }
+
+  def isReadable(path: String, v: Int): Boolean = readableAt(path, v).isDefined
 
   /** Files of the current version that contain at least one row
     * satisfying `hit` — an EXACT shortlist: the scan reads only the
@@ -1102,13 +1154,14 @@ object VersionedTable {
     * metadata column, and pushed-down predicates skip row groups via
     * parquet min-max stats on clustered tables. Driver traffic is one
     * row per touched FILE, never per row. */
-  private[graft] def touchedFiles(spark: SparkSession, path: String, v: Int,
-                           schema: StructType,
-                           hit: DataFrame => DataFrame,
-                           props: TableProps = emptyProps,
-                           candidates: Option[Set[String]] = None)
+  private[graft] def touchedFiles(spark: SparkSession, s: Snapshot,
+                                  hit: DataFrame => DataFrame,
+                                  candidates: Option[Set[String]] = None)
       : Set[String] = {
-    val all = manifestEntries(path, v)
+    val all = s.entries
+    def scan(es: Seq[FileEntry]): Set[String] =
+      hit(readEntries(spark, s, es, lineage = true)).select("_graft_file")
+        .distinct().collect().map(_.getString(0)).toSet
     // bloom pre-prune (when available): the exact semi-join scan runs
     // only over files whose index ADMITS some key — false positives
     // die in this scan, so pruning never causes a spurious rewrite
@@ -1121,17 +1174,12 @@ object VersionedTable {
     if (candidates.isDefined && all.size > 1 &&
         spark.conf.getOption("spark.graft.debug.verifyTouchSet")
           .contains("true")) {
-      val exact = {
-        val cur = readEntries(spark, path, all, schema, v,
-          lineage = true, props = props)
-        hit(cur).select("_graft_file").distinct().collect()
-          .map(_.getString(0)).toSet
-      }
+      val exact = scan(all)
       val admitted = files.map(_.name).toSet
       val missed = exact -- admitted
       if (missed.nonEmpty) throw new IllegalStateException(
-        s"BLOOM FALSE NEGATIVE at $path v$v: pruning dropped truly-" +
-          s"touched files ${missed.mkString(", ")} (admitted " +
+        s"BLOOM FALSE NEGATIVE at ${s.path} v${s.version}: pruning " +
+          s"dropped truly-touched files ${missed.mkString(", ")} (admitted " +
           s"${admitted.size}/${all.size})")
     }
     if (files.isEmpty) Set.empty
@@ -1140,12 +1188,7 @@ object VersionedTable {
     // is identical; only a no-match commit loses a re-link, and THAT
     // table is one file big)
     else if (all.size == 1) Set(all.head.name)
-    else {
-      val cur = readEntries(spark, path, files, schema, v,
-        lineage = true, props = props)
-      hit(cur).select("_graft_file").distinct().collect()
-        .map(_.getString(0)).toSet
-    }
+    else scan(files)
   }
 
   /** Keys-per-merge ceiling for the bloom-assisted touched-file
@@ -1172,10 +1215,9 @@ object VersionedTable {
     * way, and files without an index for a column conservatively
     * survive that column. */
   private[graft] def bloomTouchCandidates(
-      spark: SparkSession, path: String, v: Int, props: TableProps,
-      schema: StructType, keyFrame: DataFrame, keys: Seq[String])
-      : Option[Set[String]] = {
-    val entries = manifestEntries(path, v)
+      spark: SparkSession, s: Snapshot, keyFrame: DataFrame,
+      keys: Seq[String]): Option[Set[String]] = {
+    val (entries, props) = (s.entries, s.props)
     val cap = bloomMergeProbeCapKeys
     // the build side hashed each column under the TABLE's type — a
     // differently-typed key frame hashes differently and would prune
@@ -1183,7 +1225,7 @@ object VersionedTable {
     val usable = keys.filter { k =>
       val pc = props.phys(k)
       entries.exists(_.bloom.contains(pc)) &&
-        keyFrame.schema(k).dataType == schema(k).dataType
+        keyFrame.schema(k).dataType == s.schema(k).dataType
     }
     if (usable.isEmpty) return None
     var surviving = entries.map(_.name).toSet
@@ -1198,7 +1240,7 @@ object VersionedTable {
           .limit(cap + 1).collect().map(_.getLong(0))
         if (hs.length <= cap) {
           val cand = indexed.map(e =>
-            (e.name, resolveOrFail(path, e.bloom(pc), v)))
+            (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
           val admitted = probeSidecars(spark, cand, hs)
           surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
           pruned = true
@@ -1218,17 +1260,15 @@ object VersionedTable {
   def append(spark: SparkSession, df: DataFrame, path: String,
              operation: String = "APPEND",
              partitionBy: Seq[String] = Nil): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    require(df.schema.length == schema.length &&
-        schemaKey(df.schema) == schemaKey(schema),
+    val s = snapshot(path)
+    require(df.schema.length == s.schema.length &&
+        schemaKey(df.schema) == schemaKey(s.schema),
       s"append schema ${df.schema.simpleString} does not match table " +
-        s"${schema.simpleString}")
-    val aligned = df.select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    val props = propsOf(path, v)
-    val (fresh, _) = stageFiles(aligned, path, v + 1, partitionBy, props)
-    commitActions(path, operation, v, Set.empty, fresh, schema)
+        s"${s.schema.simpleString}")
+    val aligned = df.select(s.schema.fieldNames.toIndexedSeq.map(col): _*)
+    val (fresh, _) = stageFiles(aligned, path, s.version + 1, partitionBy,
+      s.props)
+    commitActions(s, operation, Set.empty, fresh, s.schema)
   }
 
   /** APPEND with automatic schema evolution (the autoloader
@@ -1240,9 +1280,8 @@ object VersionedTable {
     * evolution path. */
   def appendEvolve(spark: SparkSession, df: DataFrame, path: String,
                    operation: String = "APPEND[EVOLVE]"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
+    val (v, schema) = (s.version, s.schema)
     val conflicts = schema.flatMap { f =>
       df.schema.find(_.name == f.name).collect {
         case u if normType(u.dataType) != normType(f.dataType) =>
@@ -1259,8 +1298,7 @@ object VersionedTable {
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    val props = propsOf(path, v)
-    var p = props
+    var p = s.props
     newFields.map(_.name).foreach { c =>
       val phys = if (p.usedPhys.contains(c)) s"${c}_v${v + 1}" else c
       p = p.copy(
@@ -1268,7 +1306,7 @@ object VersionedTable {
         usedPhys = p.usedPhys + phys)
     }
     val (fresh, _) = stageFiles(aligned, path, v + 1, props = p)
-    commitActions(path, operation, v, Set.empty, fresh, newSchema,
+    commitActions(s, operation, Set.empty, fresh, newSchema,
       if (newFields.isEmpty) None else Some(p))
   }
 
@@ -1280,8 +1318,9 @@ object VersionedTable {
   def fileStats(path: String, v: Int,
                 column: String): Seq[(String, Option[(Double, Double)])] = {
     // stats are keyed by the stable PHYSICAL column name
-    val pc = propsOf(path, v).phys(column)
-    manifestEntries(path, v).map(e => e.name -> e.stats.get(pc))
+    val s = snapshot(path, Some(v))
+    val pc = s.props.phys(column)
+    s.entries.map(e => e.name -> e.stats.get(pc))
   }
 
   /** Stats-pruned read: shortlist version `v`'s files to those whose
@@ -1294,19 +1333,8 @@ object VersionedTable {
     * query-time footer I/O (what Delta/Iceberg get from log stats). */
   def readWhere(spark: SparkSession, path: String, column: String,
                 lo: Double, hi: Double,
-                asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val keep = fileStats(path, v, column).collect {
-      case (n, None) => n
-      case (n, Some((mn, mx))) if mx >= lo && mn <= hi => n
-    }
-    readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
-      .filter(col(column) >= lo && col(column) <= hi)
-  }
+                asOf: Option[Int] = None): DataFrame =
+    readWhereMulti(spark, path, Seq((column, lo, hi)), asOf)
 
   /** Multi-column stats-pruned read: shortlist files whose manifest
     * [min, max] overlaps EVERY range (conjunctive pruning — the 2-D+
@@ -1318,41 +1346,30 @@ object VersionedTable {
                      ranges: Seq[(String, Double, Double)],
                      asOf: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readWhereMulti needs at least one range")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val keep = manifestEntries(path, v).filter { e =>
+    val s = readSnapshot(path, asOf)
+    val filter = ranges.map { case (c, lo, hi) =>
+      col(c) >= lo && col(c) <= hi
+    }.reduce(_ && _)
+    readEntries(spark, s, inRanges(s, ranges)).filter(filter)
+  }
+
+  /** Entries whose manifest [min, max] overlaps every range. */
+  private def inRanges(s: Snapshot,
+                       ranges: Seq[(String, Double, Double)]): Seq[FileEntry] =
+    s.entries.filter { e =>
       ranges.forall { case (c, lo, hi) =>
-        e.stats.get(props.phys(c)) match {
+        e.stats.get(s.props.phys(c)) match {
           case Some((mn, mx)) => mx >= lo && mn <= hi
           case None => true // stat-less: unprunable, never wrong
         }
       }
-    }.map(_.name)
-    val filter = ranges.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    readFiles(spark, path, keep, schemaOf(path, v), v, props)
-      .filter(filter)
-  }
+    }
 
   /** Entry names [[readWhereMulti]] would scan (exposed for pruning
     * assertions). */
   def prunedStatsEntries(path: String, v: Int,
-                         ranges: Seq[(String, Double, Double)]): Seq[String] = {
-    val props = propsOf(path, v)
-    manifestEntries(path, v).filter { e =>
-      ranges.forall { case (c, lo, hi) =>
-        e.stats.get(props.phys(c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }.map(_.name)
-  }
+                         ranges: Seq[(String, Double, Double)]): Seq[String] =
+    inRanges(snapshot(path, Some(v)), ranges).map(_.name)
 
   /** STRING-key stats-pruned read (the `event_type`/`country`-shaped
     * predicate a lakehouse prunes on constantly): shortlist version
@@ -1366,28 +1383,27 @@ object VersionedTable {
   def readWhereStr(spark: SparkSession, path: String, column: String,
                    lo: String, hi: String,
                    asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val keep = prunedStringEntries(path, v, column, lo, hi).map(_.name)
-    readFiles(spark, path, keep, schemaOf(path, v), v, propsOf(path, v))
+    val s = readSnapshot(path, asOf)
+    readEntries(spark, s, inStrRange(s, column, lo, hi))
       .filter(col(column) >= lo && col(column) <= hi)
   }
 
-  /** Entries [[readWhereStr]] would scan (exposed for pruning
-    * assertions). */
-  def prunedStringEntries(path: String, v: Int, column: String,
-                          lo: String, hi: String): Seq[FileEntry] = {
-    val pc = propsOf(path, v).phys(column)
-    manifestEntries(path, v).filter { e =>
+  private def inStrRange(s: Snapshot, column: String, lo: String,
+                         hi: String): Seq[FileEntry] = {
+    val pc = s.props.phys(column)
+    s.entries.filter { e =>
       e.sstats.get(pc) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // stat-less: unprunable, never wrong
       }
     }
   }
+
+  /** Entries [[readWhereStr]] would scan (exposed for pruning
+    * assertions). */
+  def prunedStringEntries(path: String, v: Int, column: String,
+                          lo: String, hi: String): Seq[FileEntry] =
+    inStrRange(snapshot(path, Some(v)), column, lo, hi)
 
   /** Partition-pruned read: keep only manifest entries whose recorded
     * partition values match `values` (entries without a recorded
@@ -1398,32 +1414,23 @@ object VersionedTable {
   def readPartition(spark: SparkSession, path: String,
                     values: Map[String, String],
                     asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val keep = manifestEntries(path, v).filter(e =>
-      values.forall { case (k, want) =>
-        e.part.get(props.phys(k)).forall(_ == want) })
-    val pruned = readEntries(spark, path, keep, schemaOf(path, v), v,
-      props = props)
-    values.foldLeft(pruned) { case (df, (k, want)) =>
-      df.filter(col(k).cast("string") === lit(want))
+    val s = readSnapshot(path, asOf)
+    values.foldLeft(readEntries(spark, s, inPartition(s, values))) {
+      case (df, (k, want)) => df.filter(col(k).cast("string") === lit(want))
     }
   }
+
+  private def inPartition(s: Snapshot,
+                          values: Map[String, String]): Seq[FileEntry] =
+    s.entries.filter(e => values.forall { case (k, want) =>
+      e.part.get(s.props.phys(k)).forall(_ == want) })
 
   /** Entries of version `v` whose partition values survive pruning by
     * `values` — the shortlist [[readPartition]] scans (exposed for
     * pruning assertions). */
   def prunedPartitionEntries(path: String, v: Int,
-                             values: Map[String, String]): Seq[FileEntry] = {
-    val props = propsOf(path, v)
-    manifestEntries(path, v).filter(e =>
-      values.forall { case (k, want) =>
-        e.part.get(props.phys(k)).forall(_ == want) })
-  }
+                             values: Map[String, String]): Seq[FileEntry] =
+    inPartition(snapshot(path, Some(v)), values)
 
   // ---------------------------------------------------------------- //
   // bloom filter indexes (Delta's bloom filter index shape: one index
@@ -1549,23 +1556,20 @@ object VersionedTable {
     * [[bloomColumnsProp]] to be set. Returns the new version (or the
     * current one when nothing was missing). */
   def buildBloomIndex(spark: SparkSession, path: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val props = propsOf(path, v)
+    val s = snapshot(path)
+    val (props, schema) = (s.props, s.schema)
     val logical = bloomConfig(props)
     require(logical.nonEmpty,
       s"set table property $bloomColumnsProp before buildBloomIndex")
-    val schema = schemaOf(path, v)
     val phys = logical.filter(schema.fieldNames.contains).map(props.phys)
     val physSchema = StructType(schema.fields.map(f =>
       f.copy(name = props.phys(f.name))))
-    val missing = manifestEntries(path, v)
-      .filter(e => !phys.forall(e.bloom.contains))
-    if (missing.isEmpty) return v
-    val updated = buildBloomSidecars(spark, path, v + 1, missing, phys,
-      bloomFpp(props), readSchema = Some(physSchema))
-    commitActions(path, "BLOOM INDEX", v, missing.map(_.name).toSet,
-      updated, schema)
+    val missing = s.entries.filter(e => !phys.forall(e.bloom.contains))
+    if (missing.isEmpty) return s.version
+    val updated = buildBloomSidecars(spark, path, s.version + 1, missing,
+      phys, bloomFpp(props), readSchema = Some(physSchema))
+    commitActions(s, "BLOOM INDEX", missing.map(_.name).toSet, updated,
+      schema)
   }
 
   /** Entries of version `v` that might contain any of `values` in
@@ -1578,10 +1582,13 @@ object VersionedTable {
     * column always survive — pruning can drop rows never. */
   def prunedBloomEntries(spark: SparkSession, path: String, v: Int,
                          column: String, values: Seq[Any])
-      : Seq[FileEntry] = {
-    val props = propsOf(path, v)
-    val pc = props.phys(column)
-    val dt = schemaOf(path, v)(column).dataType
+      : Seq[FileEntry] =
+    bloomPruned(spark, snapshot(path, Some(v)), column, values)
+
+  private def bloomPruned(spark: SparkSession, s: Snapshot, column: String,
+                          values: Seq[Any]): Seq[FileEntry] = {
+    val pc = s.props.phys(column)
+    val dt = s.schema(column).dataType
     // partition values were recorded as the column rendered to string
     // by the partitioned write; compare through the SAME typed cast
     // the bloom hash uses — an untyped String.valueOf(x) == pv would
@@ -1593,7 +1600,7 @@ object VersionedTable {
       if (rendered.contains(None)) None
       else Some(rendered.flatten.toSet)
     }
-    val statted = manifestEntries(path, v).filter { e =>
+    val statted = s.entries.filter { e =>
       val statOk = e.stats.get(pc).forall { case (mn, mx) =>
         values.exists(x => looseNum(x).forall(d => d >= mn && d <= mx))
       }
@@ -1609,7 +1616,7 @@ object VersionedTable {
         partStrs.forall(_.contains(pv)))
       statOk && sstatOk && partOk
     }
-    bloomSurvivors(spark, path, v, statted, pc, dt, values)
+    bloomSurvivors(spark, s, statted, pc, dt, values)
   }
 
   /** Driver-side Catalyst eval of a literal expression — the
@@ -1675,7 +1682,7 @@ object VersionedTable {
     * EXACTLY as the build side hashed the column); entries without a
     * sidecar for the column conservatively survive. A value the type
     * cannot hash disables the probe (never prunes wrongly). */
-  private def bloomSurvivors(spark: SparkSession, path: String, v: Int,
+  private def bloomSurvivors(spark: SparkSession, s: Snapshot,
                              entries: Seq[FileEntry], pc: String,
                              dt: DataType, values: Seq[Any])
       : Seq[FileEntry] = {
@@ -1684,7 +1691,8 @@ object VersionedTable {
     val rendered = values.map(x => typedHash(x, dt))
     if (rendered.contains(None)) return entries
     val hashes = rendered.flatten.toArray
-    val cand = withB.map(e => (e.name, resolveOrFail(path, e.bloom(pc), v)))
+    val cand = withB.map(e =>
+      (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
     val survivors = probeSidecars(spark, cand, hashes)
     entries.filter(e => !e.bloom.contains(pc) || survivors(e.name))
   }
@@ -1699,12 +1707,11 @@ object VersionedTable {
     * remainder). Unrecognized filters and stat-less files prune
     * nothing — the scan re-applies every filter row-level, so pruning
     * can drop rows never. Pure metadata except the bloom probes. */
-  def pruneEntriesForFilters(spark: SparkSession, path: String, v: Int,
+  def pruneEntriesForFilters(spark: SparkSession, s: Snapshot,
                              filters: Seq[org.apache.spark.sql.sources.Filter])
       : Seq[FileEntry] = {
     import org.apache.spark.sql.sources._
-    val props = propsOf(path, v)
-    val schema = schemaOf(path, v)
+    val (props, schema) = (s.props, s.schema)
     def flat(f: Filter): Seq[Filter] = f match {
       case And(l, r) => flat(l) ++ flat(r)
       case x => Seq(x)
@@ -1768,8 +1775,7 @@ object VersionedTable {
       })
       n && s
     }
-    var entries = manifestEntries(path, v)
-      .filter(e => conj.forall(f => keep(e, f)))
+    var entries = s.entries.filter(e => conj.forall(f => keep(e, f)))
     // bloom pass last, over the metadata-pruned remainder: equality
     // and IN keys probe the per-file sidecars
     val eqCols: Seq[(String, Seq[Any])] = conj.collect {
@@ -1779,12 +1785,17 @@ object VersionedTable {
     }
     eqCols.foreach { case (c, vs) =>
       dtOf(c).foreach { dt =>
-        entries = bloomSurvivors(spark, path, v, entries,
-          props.phys(c), dt, vs)
+        entries = bloomSurvivors(spark, s, entries, props.phys(c), dt, vs)
       }
     }
     entries
   }
+
+  /** [[pruneEntriesForFilters]] over version `v` of `path`. */
+  def pruneEntriesForFilters(spark: SparkSession, path: String, v: Int,
+                             filters: Seq[org.apache.spark.sql.sources.Filter])
+      : Seq[FileEntry] =
+    pruneEntriesForFilters(spark, snapshot(path, Some(v)), filters)
 
   /** Sidecar-count threshold under which a bloom probe reads the few
     * index files on the driver instead of launching a Spark job —
@@ -1826,14 +1837,8 @@ object VersionedTable {
   def readIn(spark: SparkSession, path: String, column: String,
              values: Seq[Any], asOf: Option[Int] = None): DataFrame = {
     require(values.nonEmpty, "readIn needs at least one value")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val keep = prunedBloomEntries(spark, path, v, column, values)
-    readEntries(spark, path, keep, schemaOf(path, v), v,
-      props = propsOf(path, v))
+    val s = readSnapshot(path, asOf)
+    readEntries(spark, s, bloomPruned(spark, s, column, values))
       .filter(col(column).isin(values: _*))
   }
 
@@ -1855,20 +1860,11 @@ object VersionedTable {
                keys: DataFrame, asOf: Option[Int] = None): DataFrame = {
     require(keys.columns.contains(column),
       s"keys frame must carry a '$column' column")
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val schema = schemaOf(path, v)
+    val s = readSnapshot(path, asOf)
     val keyFrame = keys.select(col(column)).distinct()
-    val entries = manifestEntries(path, v)
-    val keep = bloomTouchCandidates(spark, path, v, props, schema,
-      keyFrame, Seq(column))
-      .fold(entries)(c => entries.filter(e => c(e.name)))
-    readEntries(spark, path, keep, schema, v, props = props)
-      .join(keyFrame, Seq(column), "left_semi")
+    val keep = bloomTouchCandidates(spark, s, keyFrame, Seq(column))
+      .fold(s.entries)(c => s.entries.filter(e => c(e.name)))
+    readEntries(spark, s, keep).join(keyFrame, Seq(column), "left_semi")
   }
 
   /** Export version `v` as a SYMLINK-style manifest any plain-parquet
@@ -1892,47 +1888,34 @@ object VersionedTable {
     * links (re-export after vacuum). Returns the listed paths. */
   def exportManifest(spark: SparkSession, path: String, outDir: String,
                      asOf: Option[Int] = None): Seq[String] = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val entries = manifestEntries(path, v)
-    val schema = schemaOf(path, v)
-    val props = propsOf(path, v)
-    val renamedWorld = schema.fields.exists(f => props.phys(f.name) != f.name)
-    def physKey(w: Int): Set[(String, DataType)] = {
-      val s = schemaOf(path, w); val p = propsOf(path, w)
-      s.fields.map(f => p.phys(f.name) -> normType(f.dataType)).toSet
-    }
-    val curKey = physKey(v)
-    lazy val added = addedVersions(path, v)
-    val keyCache = scala.collection.mutable.HashMap[Int, Set[(String, DataType)]]()
+    val s = readSnapshot(path, asOf)
+    val renamedWorld =
+      s.schema.fields.exists(f => s.props.phys(f.name) != f.name)
+    val curKey = physKey(s.schema, s.props)
+    lazy val committed = committedKeys(path, s.version)
     // a file links in place only when a plain-parquet reader of just
     // that file sees version v's exact physical world: no DV, and the
     // physical schema of its OWN committing version equals v's (an
     // unknown committing version — impossible by construction — falls
     // to the safe side: materialize)
-    def linkable(e: FileEntry): Boolean = e.dv.isEmpty &&
-      added.get(e.name).exists(w =>
-        keyCache.getOrElseUpdate(w, physKey(w)) == curKey)
+    def linkable(e: FileEntry): Boolean =
+      e.dv.isEmpty && committed.get(e.name).contains(curKey)
     val (link, mat) =
-      if (renamedWorld) (Seq.empty[FileEntry], entries)
-      else entries.partition(linkable)
+      if (renamedWorld) (Seq.empty[FileEntry], s.entries)
+      else s.entries.partition(linkable)
     Files.createDirectories(Paths.get(outDir))
     val matPaths =
       if (mat.isEmpty) Seq.empty[String]
       else {
         val matDir = Paths.get(outDir, "materialized")
         destroy(matDir.toString)
-        readEntries(spark, path, mat, schema, v, props = props)
-          .write.parquet(matDir.toString)
+        readEntries(spark, s, mat).write.parquet(matDir.toString)
         Option(matDir.toFile.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.endsWith(".parquet"))
           .map(_.getAbsolutePath).toSeq
       }
     val linked = link.map(e =>
-      Paths.get(resolveOrFail(path, e.name, v))
+      Paths.get(resolveOrFail(path, e.name, s.version))
         .toAbsolutePath.normalize.toString)
     val all = (linked ++ matPaths).sorted
     Files.writeString(Paths.get(outDir, "manifest.txt"),
@@ -1940,15 +1923,22 @@ object VersionedTable {
     all
   }
 
-  /** The version that WROTE each of the files reachable at version
-    * `v` — the first version (≤ `v`) whose log entry carries the
-    * name. Pure log metadata: one parse per version, no file I/O. */
-  private def addedVersions(path: String, v: Int): Map[String, Int] = {
-    val seen = scala.collection.mutable.HashMap[String, Int]()
-    versions(path).filter(_ <= v).foreach { w =>
+  private def physKey(schema: StructType,
+                      p: TableProps): Set[(String, DataType)] =
+    schema.fields.map(f => p.phys(f.name) -> normType(f.dataType)).toSet
+
+  /** The physical schema of the version that WROTE each file reachable
+    * at version `v` — the first version (≤ `v`) whose log entry
+    * carries the name. Pure log metadata: one parse per version, no
+    * file I/O. */
+  private def committedKeys(path: String,
+                            v: Int): Map[String, Set[(String, DataType)]] = {
+    val seen = scala.collection.mutable.HashMap[String, Set[(String, DataType)]]()
+    (0 to v).foreach { w =>
       val e = parseEntry(path, w)
-      e.full.getOrElse(e.add).foreach(f =>
-        if (!seen.contains(f.name)) seen(f.name) = w)
+      lazy val key = physKey(e.schema, e.props)
+      fullManifest(path, e).getOrElse(e.add).foreach(f =>
+        if (!seen.contains(f.name)) seen(f.name) = key)
     }
     seen.toMap
   }
@@ -1956,7 +1946,7 @@ object VersionedTable {
   /** (name, bytes) for each data file of version `v` — pure manifest
     * metadata (sizes captured at write time). */
   def manifestSizes(path: String, v: Int): Seq[(String, Long)] =
-    manifestEntries(path, v).map(e => e.name -> e.bytes)
+    snapshot(path, Some(v)).entries.map(e => e.name -> e.bytes)
 
   /** Incremental OPTIMIZE (Delta's file-selection semantics): compact
     * ONLY files smaller than `minFileBytes` — plus files whose
@@ -1972,22 +1962,16 @@ object VersionedTable {
                           sortCols: Seq[String], minFileBytes: Long,
                           numFiles: Int,
                           dvMaterializeRatio: Double = 0.3): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val entries = manifestEntries(path, v)
+    val s = snapshot(path)
+    val entries = s.entries
     val small = entries.filter(_.bytes < minFileBytes).map(_.name).toSet
     val dvHeavy = entries.filter(e => e.dv.isDefined && e.phys > 0 &&
       (e.phys - e.rows).toDouble / e.phys >= dvMaterializeRatio)
       .map(_.name).toSet
     val cand = small ++ dvHeavy
-    if (cand.size < 2 && dvHeavy.isEmpty) v
-    else {
-      val schema = schemaOf(path, v)
-      val clustered = Maintenance.clusteredFrame(
-        readFiles(spark, path, cand, schema, v, propsOf(path, v)),
-        sortCols, numFiles)
-      commitRewrite(path, "OPTIMIZE[INCR]", clustered, cand, schema, v)
-    }
+    if (cand.size < 2 && dvHeavy.isEmpty) s.version
+    else commitRewrite(s, "OPTIMIZE[INCR]", Maintenance.clusteredFrame(
+      readFiles(spark, s, cand), sortCols, numFiles), cand, s.schema)
   }
 
   /** MERGE INTO analog: upsert `updates` into the latest version on
@@ -1997,23 +1981,26 @@ object VersionedTable {
     * table commits in O(delta). */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
              keys: Seq[String], operation: String = "MERGE"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    val props = propsOf(path, v)
+    val s = snapshot(path)
     // materialize the update source once (lazy localCheckpoint,
     // computed by the bloom-probe collect): it otherwise re-evaluates
     // for the key collect, the touch semi-join, and the rewrite
     Materialize.withPin(updates) { upd =>
-      val keyFrame = upd.select(keys.map(col): _*).distinct()
-      val touched = touchedFiles(spark, path, v, schema,
-        _.join(keyFrame, keys, "left_semi"), props,
-        bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
-      val touchedRows = readFiles(spark, path, touched, schema, v, props)
-      commitRewrite(path, operation,
-        Medallion.mergeUpsert(touchedRows, upd, keys), touched, schema, v)
+      val touched = touchedByKeys(spark, s,
+        upd.select(keys.map(col): _*).distinct(), keys)
+      commitRewrite(s, operation, Medallion.mergeUpsert(
+        readFiles(spark, s, touched), upd, keys), touched, s.schema)
     }
   }
+
+  /** Files of `s` holding a key of `keyFrame` (named by the table's
+    * `keys` columns): the bloom pre-prune, then the exact semi-join
+    * touch scan. */
+  private def touchedByKeys(spark: SparkSession, s: Snapshot,
+                            keyFrame: DataFrame,
+                            keys: Seq[String]): Set[String] =
+    touchedFiles(spark, s, _.join(keyFrame, keys, "left_semi"),
+      bloomTouchCandidates(spark, s, keyFrame, keys))
 
   /** `DELETE ... WHERE key IN (<frame>)` — file-granular delete of
     * every row whose key appears in `keys` (a DataFrame, never a
@@ -2024,21 +2011,15 @@ object VersionedTable {
   def deleteMatching(spark: SparkSession, path: String, keys: DataFrame,
                      keyCols: Seq[String],
                      operation: String = "DELETE[KEYS]"): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    val props = propsOf(path, v)
+    val s = snapshot(path)
     // one materialization of the (possibly expensive) key frame — it
     // feeds the bloom collect, the touch semi-join, and the anti-join
     Materialize.withPin(keys.select(keyCols.map(col): _*).distinct()) {
       keyFrame =>
-        val touched = touchedFiles(spark, path, v, schema,
-          _.join(keyFrame, keyCols, "left_semi"), props,
-          bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-            keyCols))
-        val kept = readFiles(spark, path, touched, schema, v, props)
+        val touched = touchedByKeys(spark, s, keyFrame, keyCols)
+        val kept = readFiles(spark, s, touched)
           .join(keyFrame, keyCols, "left_anti")
-        commitRewrite(path, operation, kept, touched, schema, v)
+        commitRewrite(s, operation, kept, touched, s.schema)
     }
   }
 
@@ -2051,9 +2032,8 @@ object VersionedTable {
     * different type fails loudly rather than silently coercing. */
   def upsertEvolve(spark: SparkSession, path: String, updates: DataFrame,
                    keys: Seq[String]): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
+    val (v, schema, props) = (s.version, s.schema, s.props)
     val conflicts = schema.flatMap { f =>
       updates.schema.find(_.name == f.name).collect {
         case u if u.dataType != f.dataType =>
@@ -2062,14 +2042,11 @@ object VersionedTable {
     }
     require(conflicts.isEmpty,
       s"schema evolution cannot change column types — $conflicts")
-    val props = propsOf(path, v)
     // one materialization of the update source (see upsert)
     Materialize.withPin(updates) { upd =>
-      val keyFrame = upd.select(keys.map(col): _*).distinct()
-      val touched = touchedFiles(spark, path, v, schema,
-        _.join(keyFrame, keys, "left_semi"), props,
-        bloomTouchCandidates(spark, path, v, props, schema, keyFrame, keys))
-      val merged = readFiles(spark, path, touched, schema, v, props)
+      val touched = touchedByKeys(spark, s,
+        upd.select(keys.map(col): _*).distinct(), keys)
+      val merged = readFiles(spark, s, touched)
         .join(upd, keys, "left_anti")
         .unionByName(upd, allowMissingColumns = true)
       // evolved columns get a physical name; a name that collides with
@@ -2082,8 +2059,8 @@ object VersionedTable {
           colmap = if (phys == c) p.colmap else p.colmap + (c -> phys),
           usedPhys = p.usedPhys + phys)
       }
-      commitRewrite(path, "MERGE[EVOLVE]", merged, touched,
-        nullableSchema(merged.schema), v,
+      commitRewrite(s, "MERGE[EVOLVE]", merged, touched,
+        nullableSchema(merged.schema),
         newProps = if (p == props) None else Some(p))
     }
   }
@@ -2115,27 +2092,21 @@ object VersionedTable {
                    key: String, orderCol: String, tieBreaker: String,
                    operation: String = "MERGE",
                    expectations: => Option[FlowExpectations] = None): Int =
-    latestVersion(path) match {
+    latestSnapshot(path) match {
       case None =>
         write(Medallion.dedupLatest(updates, key, orderCol, tieBreaker),
           path, operation, expectations = expectations)
-      case Some(v) =>
-        val schema = schemaOf(path, v)
-        val props = propsOf(path, v)
-        val keyFrame = updates.filter(col(key).isNotNull)
-          .select(col(key)).distinct()
-        val touched = touchedFiles(spark, path, v, schema,
-          _.join(keyFrame, Seq(key), "left_semi"), props,
-          bloomTouchCandidates(spark, path, v, props, schema, keyFrame,
-            Seq(key)))
-        val base = readFiles(spark, path, touched, schema, v, props)
+      case Some(s) =>
+        val touched = touchedByKeys(spark, s, updates
+          .filter(col(key).isNotNull).select(col(key)).distinct(), Seq(key))
+        val base = readFiles(spark, s, touched)
         // one window over base ∪ updates: NULL is a window partition of
         // its own, so the batch's NULL-key rows collapse to the latest
         val merged = Medallion.dedupLatest(
             base.filter(col(key).isNotNull).unionByName(updates),
             key, orderCol, tieBreaker)
           .unionByName(base.filter(col(key).isNull))
-        commitRewrite(path, operation, merged, touched, schema, v,
+        commitRewrite(s, operation, merged, touched, s.schema,
           expectations = expectations)
     }
 
@@ -2173,24 +2144,20 @@ object VersionedTable {
                                 condFor: DataFrame => Column,
                                 assignments: Seq[(String, DataFrame => Column)])
       : (Int, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    val cols = schema.fieldNames.toSeq
+    val s = snapshot(path)
+    val cols = s.schema.fieldNames.toSeq
     assignments.foreach { case (c, _) =>
       require(cols.contains(c), s"UPDATE target column $c not in $cols")
     }
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"duplicate UPDATE target in ${assignments.map(_._1)}")
-    val props = propsOf(path, v)
-    val touched = touchedFiles(spark, path, v, schema,
-      df => df.filter(condFor(df)), props)
+    val touched = touchedFiles(spark, s, df => df.filter(condFor(df)))
     // SQL UPDATE semantics: the condition and EVERY assignment RHS are
     // evaluated against the pre-update row — one select, so no
     // assignment can observe another's result (swap-style SET a=b, b=a
     // and condition columns that are themselves assigned both work)
     val assignMap = assignments.toMap
-    val base = readFiles(spark, path, touched, schema, v, props)
+    val base = readFiles(spark, s, touched)
     // affected-row count (the SQL command's result row): observed on
     // the rewrite job itself. The condition is projected once into a
     // column — an observed metric may not hold an IN/EXISTS subquery
@@ -2205,7 +2172,7 @@ object VersionedTable {
           case None => col(c)
         }
       }: _*)
-    val nv = commitRewrite(path, "UPDATE", updated, touched, schema, v)
+    val nv = commitRewrite(s, "UPDATE", updated, touched, s.schema)
     (nv, Expectations.observed(obs).getLong(0))
   }
 
@@ -2218,25 +2185,23 @@ object VersionedTable {
 
   /** Column-factory twin of [[delete]] (the SQL `DELETE FROM` command
     * path — see [[updateCore]] for why a callback, not a SQL string).
-    * Returns (new version, deleted-row count — exact, from manifest
-    * row totals, zero extra I/O). */
+    * Returns (new version, deleted-row count — the touched files' live
+    * rows, a manifest total, minus the kept rows the rewrite's write
+    * job counts: no count pass of its own). */
   private[graft] def deleteCore(spark: SparkSession, path: String,
                                 condFor: DataFrame => Column): (Int, Long) = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
     // SQL DELETE semantics: only rows where the condition is TRUE are
     // removed — a NULL condition keeps the row (plain !cond would
     // silently drop it)
     def hit(df: DataFrame) = coalesce(condFor(df), lit(false))
-    val props = propsOf(path, v)
-    val touched = touchedFiles(spark, path, v, schema,
-      df => df.filter(hit(df)), props)
-    val base = readFiles(spark, path, touched, schema, v, props)
-    val kept = base.filter(!hit(base))
-    val before = manifestEntries(path, v).map(_.rows).sum
-    val nv = commitRewrite(path, "DELETE", kept, touched, schema, v)
-    (nv, before - manifestEntries(path, nv).map(_.rows).sum)
+    val touched = touchedFiles(spark, s, df => df.filter(hit(df)))
+    val base = readFiles(spark, s, touched)
+    val (kept, obs) = Expectations.observe(base.filter(!hit(base)),
+      Seq(count(lit(1))))
+    val nv = commitRewrite(s, "DELETE", kept, touched, s.schema)
+    (nv, s.entries.filter(e => touched(e.name)).map(_.rows).sum -
+      Expectations.observed(obs).getLong(0))
   }
 
   /** Write ONE deletion-vector sidecar PER touched data file (Delta's
@@ -2288,16 +2253,13 @@ object VersionedTable {
     * Live row counts in the log stay exact. */
   def deleteVectors(spark: SparkSession, path: String,
                     conditionSql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
-    val entries = manifestEntries(path, v)
+    val s = snapshot(path)
+    val (v, entries) = (s.version, s.entries)
     val hit = coalesce(expr(conditionSql), lit(false))
     // delete-sized; materialized once (it feeds both the per-file
     // counts and the sidecar write — without this the condition scan
     // would run twice)
-    val newDel = readEntries(spark, path, entries, schema, v,
-        lineage = true, props = propsOf(path, v))
+    val newDel = readEntries(spark, s, entries, lineage = true)
       .filter(hit)
       .select(col("_graft_file").as("file"), col("_graft_pos").as("pos"))
       .pin(true)
@@ -2305,7 +2267,7 @@ object VersionedTable {
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (touchedCounts.isEmpty)
-      return commitActions(path, "DELETE[MOR]", v, Set.empty, Nil, schema)
+      return commitActions(s, "DELETE[MOR]", Set.empty, Nil, s.schema)
     val byName = entries.map(e => e.name -> e).toMap
     val fullyDeleted = touchedCounts.collect {
       case (n, c) if byName(n).rows - c <= 0 => n
@@ -2344,8 +2306,7 @@ object VersionedTable {
           Some(e.copy(dv = Some(newEntriesDv(e.name)), rows = e.rows - n))
       }
     }
-    commitActions(path, "DELETE[MOR]", v, touchedCounts.keySet, updated,
-      schema)
+    commitActions(s, "DELETE[MOR]", touchedCounts.keySet, updated, s.schema)
   }
 
   /** `ALTER TABLE ADD COLUMN` analog (reference `1 Data
@@ -2358,13 +2319,12 @@ object VersionedTable {
     * A computed column necessarily rewrites every row. */
   def addColumn(spark: SparkSession, path: String, name: String,
                 exprSql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
+    val (v, schema, props) = (s.version, s.schema, s.props)
     require(!schema.fieldNames.contains(name),
       s"column $name already exists")
-    val cur = read(spark, path)
-    val withCol = cur.withColumn(name, expr(exprSql))
+    val withCol = readEntries(spark, s, s.entries)
+      .withColumn(name, expr(exprSql))
     val newType = withCol.schema(name).dataType
     // detect a plain-NULL column on the ANALYZED plan (the parsed
     // Column alone is an unresolved node in Spark 4 and can't fold)
@@ -2383,7 +2343,6 @@ object VersionedTable {
     // a new column whose name collides with a previously-dropped
     // column's PHYSICAL bytes gets a fresh physical name — re-linked
     // files must read it as null, never as the dropped column's data
-    val props = propsOf(path, v)
     val phys = if (props.usedPhys.contains(name)) s"${name}_v${v + 1}"
                else name
     val newProps = props.copy(
@@ -2391,16 +2350,15 @@ object VersionedTable {
                else props.colmap + (name -> phys),
       usedPhys = props.usedPhys + phys)
     if (foldsToNull)
-      commitActions(path, "ADD COLUMN", v, Set.empty, Nil,
+      commitActions(s, "ADD COLUMN", Set.empty, Nil,
         StructType(schema.fields :+
           StructField(name, newType, nullable = true)),
         Some(newProps))
     else
       // computed column: every row gains a value — full rewrite is the
       // honest cost, not an implementation shortcut
-      commitRewrite(path, "ADD COLUMN", withCol,
-        manifestEntries(path, v).map(_.name).toSet,
-        nullableSchema(withCol.schema), v, newProps = Some(newProps))
+      commitRewrite(s, "ADD COLUMN", withCol, s.names,
+        nullableSchema(withCol.schema), newProps = Some(newProps))
   }
 
   /** Change-data-feed analog (`table_changes`): row-level diff
@@ -2414,32 +2372,26 @@ object VersionedTable {
     * the CHANGE, not the table. */
   def changes(spark: SparkSession, path: String, fromVersion: Int,
               toVersion: Int): DataFrame = {
-    require(versions(path).contains(fromVersion),
-      s"version $fromVersion not committed at $path")
-    require(versions(path).contains(toVersion),
-      s"version $toVersion not committed at $path")
-    require(!vacuumedVersions(path).contains(fromVersion) &&
-      !vacuumedVersions(path).contains(toVersion),
+    val listed = versions(path)
+    val from = resolve(path, listed, fromVersion)
+    val to = resolve(path, listed, toVersion)
+    val vacuumed = vacuumedVersions(path)
+    require(!vacuumed.contains(fromVersion) && !vacuumed.contains(toVersion),
       s"cannot diff vacuumed versions at $path")
-    val sa = schemaOf(path, fromVersion)
-    val sb = schemaOf(path, toVersion)
-    val pa = propsOf(path, fromVersion)
-    val pb = propsOf(path, toVersion)
+    val (sa, sb) = (from.schema, to.schema)
     // bloom references never change row content — normalize them out
     // so an index backfill commit diffs EMPTY instead of re-reading
     // (and cancelling) every re-linked file
-    val ea = manifestEntries(path, fromVersion).map(_.copy(bloom = Map.empty))
-    val eb = manifestEntries(path, toVersion).map(_.copy(bloom = Map.empty))
-    def physOf(s: StructType, p: TableProps) =
-      StructType(s.fields.map(f => f.copy(name = p.phys(f.name))))
+    val ea = from.entries.map(_.copy(bloom = Map.empty))
+    val eb = to.entries.map(_.copy(bloom = Map.empty))
+    def physOf(s: Snapshot) =
+      StructType(s.schema.fields.map(f => f.copy(name = s.props.phys(f.name))))
     // a RENAME between the versions changes the logical schema but
     // not the physical one — diff both sides under the TO version's
     // logical view (physical names are stable, so vA's files read
     // fine) and shared entries still cancel; a rename-only commit
     // diffs EMPTY, matching Delta CDF under column mapping
-    val renameOnly = sa != sb && physOf(sa, pa) == physOf(sb, pb)
-    val (va, vb) = if (renameOnly) ((sb, pb), (sb, pb))
-                   else ((sa, pa), (sb, pb))
+    val renameOnly = sa != sb && physOf(from) == physOf(to)
     val (onlyA, onlyB) =
       if (sa == sb || renameOnly)
         (ea.filterNot(eb.toSet), eb.filterNot(ea.toSet))
@@ -2448,10 +2400,8 @@ object VersionedTable {
         // differs in shape, diff the full frames (exceptAll requires
         // same schema and will refuse — same contract as before)
         (ea, eb)
-    val a = readEntries(spark, path, onlyA, va._1, fromVersion,
-      props = va._2)
-    val b = readEntries(spark, path, onlyB, vb._1, toVersion,
-      props = vb._2)
+    val a = readEntries(spark, if (renameOnly) to else from, onlyA)
+    val b = readEntries(spark, to, onlyB)
     b.exceptAll(a).withColumn("_change_type", lit("insert"))
       .unionByName(a.exceptAll(b).withColumn("_change_type", lit("delete")))
   }
@@ -2529,22 +2479,21 @@ object VersionedTable {
     * whose remove set names every latest-manifest file — a restore
     * deliberately supersedes concurrent work. */
   def restore(spark: SparkSession, path: String, toVersion: Int): Int = {
-    require(isReadable(path, toVersion),
+    val target = readableAt(path, toVersion)
+    require(target.isDefined,
       s"cannot restore to unreadable version $toVersion at $path")
-    val latest = latestVersion(path).get
-    val v = latest + 1
-    val files = manifestEntries(path, toVersion)
+    val to = target.get
+    val latest = snapshot(path)
+    val v = latest.version + 1
     // RESTORE restores the whole table state: data, schema AND
     // properties (constraints, column mapping) as of the target —
     // except usedPhys, which is a monotone tombstone set and must
     // keep every physical name later versions consumed
-    val restored = propsOf(path, toVersion).copy(
-      usedPhys = propsOf(path, latest).usedPhys ++
-        propsOf(path, toVersion).usedPhys)
-    appendLog(path, v, s"RESTORE[v=$toVersion]", files.map(_.rows).sum,
-      schemaOf(path, toVersion), full = Some(files), add = Nil,
-      remove = manifestEntries(path, latest).map(_.name).toSet,
-      props = restored)
+    val restored = to.props.copy(
+      usedPhys = latest.props.usedPhys ++ to.props.usedPhys)
+    appendLog(path, v, s"RESTORE[v=$toVersion]", to.entries.map(_.rows).sum,
+      to.schema, full = Some(to.entries), add = Nil,
+      remove = latest.names, props = restored)
     v
   }
 
@@ -2562,12 +2511,13 @@ object VersionedTable {
     * documented shallow-clone hazard — surfaced here as the same
     * read-time error). */
   def shallowClone(src: String, dst: String): Unit = {
-    require(versions(src).nonEmpty, s"no committed versions at $src")
+    val listed = versions(src)
+    require(listed.nonEmpty, s"no committed versions at $src")
     require(Paths.get(src).toAbsolutePath.normalize !=
       Paths.get(dst).toAbsolutePath.normalize, "clone onto itself")
     destroy(dst)
     Files.createDirectories(logDir(dst))
-    versions(src).foreach { v =>
+    listed.foreach { v =>
       Files.copy(logDir(src).resolve(f"$v%06d.json"),
         logDir(dst).resolve(f"$v%06d.json"))
     }
@@ -2589,7 +2539,7 @@ object VersionedTable {
       Files.copy(vacuumedFile(src), vacuumedFile(dst))
     Files.writeString(basePtrFile(dst),
       Paths.get(src).toAbsolutePath.normalize.toString + "\n" +
-        versions(src).last)
+        listed.last)
   }
 
   /** VACUUM analog: versions older than the newest `keepLast` are
@@ -2611,7 +2561,9 @@ object VersionedTable {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val all = versions(path)
     val already = vacuumedVersions(path)
-    def refs(v: Int): Seq[String] = manifestEntries(path, v)
+    // every version's manifest, replayed forward once
+    lazy val manifestOf = manifests(path, all.head, all.last)
+    def refs(v: Int): Seq[String] = manifestOf(v - all.head)
       .flatMap(e => e.name +: (e.dv.toSeq ++ e.bloom.values.toSeq))
     val removed = all.dropRight(keepLast).filterNot(already.contains)
     if (removed.nonEmpty) {
@@ -2689,13 +2641,11 @@ object VersionedTable {
     * column of a 100 TB table costs one log line. */
   def renameColumn(spark: SparkSession, path: String, from: String,
                    to: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
+    val (schema, props) = (s.schema, s.props)
     require(schema.fieldNames.contains(from),
       s"column $from not in ${schema.fieldNames.toSeq}")
     require(!schema.fieldNames.contains(to), s"column $to already exists")
-    val props = propsOf(path, v)
     constraintMentions(props, from).foreach(n =>
       throw new IllegalArgumentException(
         s"cannot rename $from: CHECK constraint $n references it — " +
@@ -2710,7 +2660,7 @@ object VersionedTable {
       // or the write-path index silently stops maintaining the column
       // (and a future column reusing the freed name would bind to it)
       tbl = renameInBloomProp(props.tbl, from, Some(to)))
-    commitActions(path, s"RENAME COLUMN[$from->$to]", v, Set.empty, Nil,
+    commitActions(s, s"RENAME COLUMN[$from->$to]", Set.empty, Nil,
       newSchema, Some(newProps))
   }
 
@@ -2720,13 +2670,11 @@ object VersionedTable {
     * column's PHYSICAL name goes into the usedPhys tombstone set so a
     * later ADD COLUMN of the same name can never resurrect its data. */
   def dropColumn(spark: SparkSession, path: String, name: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val schema = schemaOf(path, v)
+    val s = snapshot(path)
+    val (schema, props) = (s.schema, s.props)
     require(schema.fieldNames.contains(name),
       s"column $name not in ${schema.fieldNames.toSeq}")
     require(schema.length > 1, s"cannot drop the only column of $path")
-    val props = propsOf(path, v)
     constraintMentions(props, name).foreach(n =>
       throw new IllegalArgumentException(
         s"cannot drop $name: CHECK constraint $n references it — " +
@@ -2735,7 +2683,7 @@ object VersionedTable {
     val newProps = props.copy(colmap = props.colmap - name,
       usedPhys = props.usedPhys + props.phys(name),
       tbl = renameInBloomProp(props.tbl, name, None))
-    commitActions(path, s"DROP COLUMN[$name]", v, Set.empty, Nil,
+    commitActions(s, s"DROP COLUMN[$name]", Set.empty, Nil,
       newSchema, Some(newProps))
   }
 
@@ -2746,19 +2694,18 @@ object VersionedTable {
     * NEW files are validated against it at O(new data) cost. */
   def addConstraint(spark: SparkSession, path: String, name: String,
                     sql: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val props = propsOf(path, v)
+    val s = snapshot(path)
+    val props = s.props
     require(!props.constraints.contains(name),
       s"constraint $name already exists on $path")
     val cs = Expectations.counters(Seq(Expectation(name, sql)),
       nullPasses = true)
-    val viol = read(spark, path).agg(cs.head, cs.tail: _*).head.getLong(1)
+    val viol = readEntries(spark, s, s.entries).agg(cs.head, cs.tail: _*)
+      .head.getLong(1)
     if (viol > 0) throw new ConstraintViolationException(
       s"cannot add CHECK constraint $name ($sql) on $path: " +
         s"$viol existing rows violate it")
-    commitActions(path, s"ADD CONSTRAINT[$name]", v, Set.empty, Nil,
-      schemaOf(path, v),
+    commitActions(s, s"ADD CONSTRAINT[$name]", Set.empty, Nil, s.schema,
       Some(props.copy(constraints = props.constraints + (name -> sql))))
   }
 
@@ -2769,24 +2716,19 @@ object VersionedTable {
   def setTableProperties(path: String,
                          kv: Map[String, String]): Int = {
     require(kv.nonEmpty, "no properties given")
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val props = propsOf(path, v)
-    commitActions(path,
+    val s = snapshot(path)
+    commitActions(s,
       s"SET TBLPROPERTIES[${kv.keys.toSeq.sorted.mkString(",")}]",
-      v, Set.empty, Nil, schemaOf(path, v),
-      Some(props.copy(tbl = props.tbl ++ kv)))
+      Set.empty, Nil, s.schema, Some(s.props.copy(tbl = s.props.tbl ++ kv)))
   }
 
   /** `ALTER TABLE UNSET TBLPROPERTIES` — metadata-only. */
   def unsetTableProperty(path: String, key: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val props = propsOf(path, v)
-    require(props.tbl.contains(key),
+    val s = snapshot(path)
+    require(s.props.tbl.contains(key),
       s"table property $key not set on $path")
-    commitActions(path, s"UNSET TBLPROPERTIES[$key]", v, Set.empty, Nil,
-      schemaOf(path, v), Some(props.copy(tbl = props.tbl - key)))
+    commitActions(s, s"UNSET TBLPROPERTIES[$key]", Set.empty, Nil,
+      s.schema, Some(s.props.copy(tbl = s.props.tbl - key)))
   }
 
   /** The user table properties of version `v`. */
@@ -2795,14 +2737,12 @@ object VersionedTable {
 
   /** `ALTER TABLE DROP CONSTRAINT` — metadata-only. */
   def dropConstraint(path: String, name: String): Int = {
-    val v = latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    val props = propsOf(path, v)
+    val s = snapshot(path)
+    val props = s.props
     require(props.constraints.contains(name),
       s"constraint $name not found on $path " +
         s"(have ${props.constraints.keys.toSeq.sorted})")
-    commitActions(path, s"DROP CONSTRAINT[$name]", v, Set.empty, Nil,
-      schemaOf(path, v),
+    commitActions(s, s"DROP CONSTRAINT[$name]", Set.empty, Nil, s.schema,
       Some(props.copy(constraints = props.constraints - name)))
   }
 
@@ -2819,13 +2759,9 @@ object VersionedTable {
     * therefore force the scan path. */
   def statsAggMeta(path: String, column: String,
                    asOf: Option[Int] = None): Option[(Long, Double, Double)] = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val pc = propsOf(path, v).phys(column)
-    val es = manifestEntries(path, v)
+    val s = readSnapshot(path, asOf)
+    val pc = s.props.phys(column)
+    val es = s.entries
     if (es.nonEmpty && es.forall(e =>
         e.dv.isEmpty && e.rows == e.phys && e.stats.contains(pc)))
       Some((es.map(_.rows).sum,
@@ -2842,14 +2778,9 @@ object VersionedTable {
     * (`SELECT count(*)/min/max` without touching data). */
   def statsAgg(spark: SparkSession, path: String, column: String,
                asOf: Option[Int] = None): (Long, Double, Double) = {
-    val v = asOf.orElse(latestVersion(path)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions at $path"))
-    require(versions(path).contains(v), s"version $v not committed at $path")
-    require(!vacuumedVersions(path).contains(v),
-      s"version $v was vacuumed at $path")
-    val props = propsOf(path, v)
-    val pc = props.phys(column)
-    val es = manifestEntries(path, v)
+    val s = readSnapshot(path, asOf)
+    val pc = s.props.phys(column)
+    val es = s.entries
     val count = es.map(_.rows).sum
     val (clean, dirty) = es.partition(e =>
       e.dv.isEmpty && e.rows == e.phys && e.stats.contains(pc))
@@ -2858,15 +2789,14 @@ object VersionedTable {
     val scanned =
       if (dirty.isEmpty) None
       else {
-        val r = readEntries(spark, path, dirty, schemaOf(path, v), v,
-            props = props)
+        val r = readEntries(spark, s, dirty)
           .agg(min(col(column)).cast("double").as("mn"),
             max(col(column)).cast("double").as("mx")).collect()(0)
         if (r.isNullAt(0)) None else Some((r.getDouble(0), r.getDouble(1)))
       }
     val lo = metaMin.toSeq ++ scanned.map(_._1)
     require(lo.nonEmpty,
-      s"statsAgg($column) on $path v$v: no live rows to aggregate")
+      s"statsAgg($column) on $path v${s.version}: no live rows to aggregate")
     (count, lo.min, (metaMax.toSeq ++ scanned.map(_._2)).max)
   }
 

@@ -216,11 +216,8 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     Materialize.withPin(GraftBridge.dataset(spark, sourcePlan))(merge(spark, _))
 
   private def merge(spark: SparkSession, src: DataFrame): Seq[Row] = {
-    val v = VersionedTable.latestVersion(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions at $path"))
-    val schema = VersionedTable.schemaOf(path, v)
-    val props = VersionedTable.propsOf(path, v)
+    val snap = VersionedTable.snapshot(path)
+    val schema = snap.schema
     val tgt = GraftDml.idMap(targetAttrs)
     val tgtIds = targetAttrs.map(_.exprId).toSet
     val srcIds = sourcePlan.output.map(_.exprId).toSet
@@ -292,14 +289,11 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
 
     val touchAll = nmbsActs.nonEmpty || keyPairs.isEmpty
     val touched: Set[String] =
-      if (touchAll)
-        VersionedTable.manifestEntries(path, v).map(_.name).toSet
-      else VersionedTable.touchedFiles(spark, path, v, schema,
-        _.join(keyFrame, keys, "left_semi"), props,
-        VersionedTable.bloomTouchCandidates(spark, path, v, props,
-          schema, keyFrame, keys))
-    val base = VersionedTable.readFiles(spark, path, touched, schema,
-      v, props)
+      if (touchAll) snap.names
+      else VersionedTable.touchedFiles(spark, snap,
+        _.join(keyFrame, keys, "left_semi"),
+        VersionedTable.bloomTouchCandidates(spark, snap, keyFrame, keys))
+    val base = VersionedTable.readFiles(spark, snap, touched)
 
     if (insertOnly) {
       // NOT MATCHED–only merge: an anti-join append — no join blowup
@@ -309,8 +303,7 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       val unmatched = src.join(base, joinOn, "left_anti")
       val (inserts, obs) = Expectations.observe(
         assembleInserts(unmatched, nmActs, schema), Seq(count(lit(1))))
-      VersionedTable.commitRewrite(path, "MERGE", inserts, Set.empty,
-        schema, v)
+      VersionedTable.commitRewrite(snap, "MERGE", inserts, Set.empty, schema)
       val n = Expectations.observed(obs).getLong(0)
       return Seq(Row(n, 0L, 0L, n))
     }
@@ -383,8 +376,8 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
           when(col("_graft_merge_act") === i, c).otherwise(els))
       }.as(f.name)
     }
-    VersionedTable.commitRewrite(path, "MERGE", kept.select(outCols: _*),
-      touched, schema, v)
+    VersionedTable.commitRewrite(snap, "MERGE", kept.select(outCols: _*),
+      touched, schema)
     val n = Expectations.observed(obs)
     val (nUpd, nDel, nIns) = (n.getLong(0), n.getLong(1), n.getLong(2))
     Seq(Row(nUpd + nDel + nIns, nUpd, nDel, nIns))

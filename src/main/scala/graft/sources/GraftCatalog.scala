@@ -58,17 +58,16 @@ class GraftCatalog extends TableCatalog {
     VersionedTable.versions(pathOf(ident)).nonEmpty
 
   override def loadTable(ident: Identifier): Table = {
-    val p = require_exists(ident)
-    new GraftTable(p, VersionedTable.latestVersion(p).get)
+    val p = pathOf(ident)
+    new GraftTable(p, Some(VersionedTable.latestSnapshot(p)
+      .getOrElse(throw new NoSuchTableException(ident))))
   }
 
   /** `VERSION AS OF` — the version string is the commit number. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val p = require_exists(ident)
-    val v = version.trim.toInt
-    require(VersionedTable.versions(p).contains(v),
-      s"version $v not committed at $p")
-    new GraftTable(p, v)
+    new GraftTable(p, Some(VersionedTable.snapshot(p,
+      Some(version.trim.toInt))))
   }
 
   /** `TIMESTAMP AS OF` — micros since epoch (Spark's contract). */
@@ -78,7 +77,7 @@ class GraftCatalog extends TableCatalog {
     val v = VersionedTable.versionAt(p, ts).getOrElse(
       throw new IllegalArgumentException(
         s"no version committed at or before $ts at $p"))
-    new GraftTable(p, v)
+    new GraftTable(p, Some(VersionedTable.snapshot(p, Some(v))))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -122,7 +121,8 @@ class GraftCatalog extends TableCatalog {
     // lays the first data commit out under the declared partitioning.
     val p = pathOf(ident)
     VersionedTable.create(p, schema, user)
-    new GraftTable(p, 0, Some(schema), ctasPartitionBy = partitionBy)
+    new GraftTable(p, Some(VersionedTable.snapshot(p, Some(0))),
+      ctasPartitionBy = partitionBy)
   }
 
   /** `ALTER TABLE` through SQL (r13): property, rename, add and drop

@@ -61,29 +61,30 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       .getOrElse(throw new IllegalArgumentException(
         "graft: a table 'path' is required (load(path) or option(\"path\", …))"))
 
-  private def resolveVersion(path: String,
-                             options: JMap[String, String]): Int =
-    (Option(options.get("versionAsOf")),
-      Option(options.get("timestampAsOf"))) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "graft: specify either versionAsOf or timestampAsOf, not both")
-      case (Some(v), None) => v.trim.toInt
-      case (None, Some(s)) =>
-        VersionedTable.versionAt(path, java.time.Instant.parse(s.trim))
-          .getOrElse(throw new IllegalArgumentException(
-            s"graft: no version committed at or before $s at $path"))
-      case (None, None) => VersionedTable.latestVersion(path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"graft: no committed versions at $path"))
+  /** The snapshot the time-travel options pin (the latest by default),
+    * or None for a not-yet-created table. */
+  private def pinned(path: String, options: JMap[String, String])
+      : Option[VersionedTable.Snapshot] =
+    VersionedTable.latestSnapshot(path).map { latest =>
+      (Option(options.get("versionAsOf")),
+        Option(options.get("timestampAsOf"))) match {
+        case (Some(_), Some(_)) => throw new IllegalArgumentException(
+          "graft: specify either versionAsOf or timestampAsOf, not both")
+        case (Some(v), None) =>
+          VersionedTable.snapshot(path, Some(v.trim.toInt))
+        case (None, Some(s)) =>
+          VersionedTable.snapshot(path, Some(
+            VersionedTable.versionAt(path, java.time.Instant.parse(s.trim))
+              .getOrElse(throw new IllegalArgumentException(
+                s"graft: no version committed at or before $s at $path"))))
+        case (None, None) => latest
+      }
     }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = pathOf(options)
-    // a not-yet-created table is legal here: DataFrameWriter probes
-    // the provider BEFORE falling back to the V1 write path
-    if (VersionedTable.versions(path).isEmpty) new StructType()
-    else VersionedTable.schemaOf(path, resolveVersion(path, options))
-  }
+  // a not-yet-created table is legal here: DataFrameWriter probes the
+  // provider BEFORE falling back to the V1 write path
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    pinned(pathOf(options), options).fold(new StructType())(_.schema)
 
   /** The externally-supplied schema is honored only for
     * NOT-YET-CREATED tables (the write-path probe and CTAS targets).
@@ -100,9 +101,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // the LATEST data (advisor r12)
     val opts = new CaseInsensitiveStringMap(properties)
     val path = pathOf(opts)
-    if (VersionedTable.versions(path).isEmpty)
-      new GraftTable(path, -1, Option(schema))
-    else new GraftTable(path, resolveVersion(path, opts), None)
+    val snap = pinned(path, opts)
+    new GraftTable(path, snap, if (snap.isEmpty) Option(schema) else None)
   }
 
   // ---------------------------------------------------------------- //
@@ -134,8 +134,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       case SaveMode.Ignore =>
         if (!exists) VersionedTable.write(data, path, "WRITE", partitionBy)
     }
-    val snap = VersionedTable.schemaOf(path,
-      VersionedTable.latestVersion(path).get)
+    val snap = VersionedTable.snapshot(path).schema
     val ctx = sqlContext
     new BaseRelation {
       override def sqlContext: SQLContext = ctx
@@ -178,13 +177,14 @@ object GraftDataSource {
   * (`V1_BATCH_WRITE` + [[org.apache.spark.sql.connector.write.V1Write]])
   * so INSERT/CTAS through the session catalog and
   * `df.write.format("graft")` all run the format's own driver-side
-  * optimistic commit protocol. `version = -1` marks a not-yet-created
+  * optimistic commit protocol. `snap` is the snapshot resolved at load,
+  * which every scan of this table reads; None marks a not-yet-created
   * table (capability probe / CTAS target): its schema is whatever the
   * caller supplied and any scan attempt fails cleanly. */
-private[graft] class GraftTable(path: String, version: Int,
+private[graft] class GraftTable(path: String,
+                                  snap: Option[VersionedTable.Snapshot],
                                   external: Option[StructType] = None,
-                                  ctasPartitionBy: Seq[String] = Nil,
-                                  ctasProperties: Map[String, String] = Map.empty)
+                                  ctasPartitionBy: Seq[String] = Nil)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
@@ -202,11 +202,11 @@ private[graft] class GraftTable(path: String, version: Int,
     true
   }
 
-  override def name(): String = s"graft.`$path`@v$version"
+  override def name(): String =
+    s"graft.`$path`@v${snap.fold(-1)(_.version)}"
 
   override def schema(): StructType =
-    if (version < 0) external.getOrElse(new StructType())
-    else VersionedTable.schemaOf(path, version)
+    snap.fold(external.getOrElse(new StructType()))(_.schema)
 
   /** V1_BATCH_WRITE *without* BATCH_WRITE — the deliberate capability
     * split a V1-commit-protocol format wants: DataFrameWriter's
@@ -224,13 +224,13 @@ private[graft] class GraftTable(path: String, version: Int,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    require(version >= 0, s"graft: no committed versions at $path")
+    require(snap.isDefined, s"graft: no committed versions at $path")
     def intOpt(key: String): Option[Int] =
       Option(options.get(key)).map { s =>
         val n = s.trim.toInt
         require(n >= 1, s"graft: $key must be >= 1, got $n"); n
       }
-    new GraftScanBuilder(path, version, schema(),
+    new GraftScanBuilder(snap.get,
       skipChangeCommits =
         Option(options.get("skipChangeCommits")).exists(_.toBoolean),
       maxVersionsPerTrigger = intOpt("maxVersionsPerTrigger"),
@@ -248,23 +248,20 @@ private[graft] class GraftTable(path: String, version: Int,
         override def toInsertableRelation
             : org.apache.spark.sql.sources.InsertableRelation =
           (data: DataFrame, _: Boolean) => {
-            val exists = VersionedTable.versions(path).nonEmpty
+            val latest = VersionedTable.latestSnapshot(path)
+            val exists = latest.isDefined
             // the first DATA commit into a DDL-created empty table
             // (catalog CREATE TABLE / CTAS commit an empty metadata
             // v0) counts as creation: it lays the files out under the
             // catalog-declared PARTITIONED BY
-            val emptyDdl = exists &&
-              VersionedTable.latestVersion(path).contains(0) &&
-              VersionedTable.manifestEntries(path, 0).isEmpty
-            if (overwrite || !exists || emptyDdl) {
+            val emptyDdl =
+              latest.exists(s => s.version == 0 && s.entries.isEmpty)
+            if (overwrite || !exists || emptyDdl)
               VersionedTable.write(data, path,
                 if (overwrite && exists && !emptyDdl) "WRITE[OVERWRITE]"
                 else "WRITE",
                 partitionBy =
                   if (!exists || emptyDdl) ctasPartitionBy else Nil)
-              if (!exists && ctasProperties.nonEmpty)
-                VersionedTable.setTableProperties(path, ctasProperties)
-            }
             else VersionedTable.append(data.sparkSession, data, path)
           }
       }
@@ -277,14 +274,14 @@ private[graft] class GraftTable(path: String, version: Int,
   * returned as residual so Spark re-applies it row-level — file-level
   * pruning is approximate by design (blooms, truncated bounds), the
   * result never is. */
-private[sources] class GraftScanBuilder(path: String, version: Int,
-                                        fullSchema: StructType,
+private[sources] class GraftScanBuilder(snap: VersionedTable.Snapshot,
                                         skipChangeCommits: Boolean = false,
                                         maxVersionsPerTrigger: Option[Int] = None,
                                         maxFilesPerTrigger: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
+  private val fullSchema = snap.schema
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
 
@@ -302,12 +299,11 @@ private[sources] class GraftScanBuilder(path: String, version: Int,
   }
 
   override def build(): Scan =
-    new GraftScan(path, version, fullSchema, required, pushed,
+    new GraftScan(snap, required, pushed,
       skipChangeCommits, maxVersionsPerTrigger, maxFilesPerTrigger)
 }
 
-private[sources] class GraftScan(path: String, version: Int,
-                                 fullSchema: StructType,
+private[sources] class GraftScan(snap: VersionedTable.Snapshot,
                                  required: StructType,
                                  filters: Array[Filter],
                                  skipChangeCommits: Boolean = false,
@@ -352,9 +348,8 @@ private[sources] class GraftScan(path: String, version: Int,
   private var prunedCache: Option[Seq[VersionedTable.FileEntry]] = None
   private def prunedEntries: Seq[VersionedTable.FileEntry] =
     prunedCache.getOrElse {
-      val e = VersionedTable.pruneEntriesForFilters(
-        SparkSession.active, path, version,
-        (filters ++ runtimeFilters).toIndexedSeq)
+      val e = VersionedTable.pruneEntriesForFilters(SparkSession.active,
+        snap, (filters ++ runtimeFilters).toIndexedSeq)
       prunedCache = Some(e)
       e
     }
@@ -389,11 +384,12 @@ private[sources] class GraftScan(path: String, version: Int,
     * silently re-reading rewritten files would duplicate rows. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(path, version, fullSchema, required,
+    new GraftMicroBatchStream(snap, required,
       skipChangeCommits, maxVersionsPerTrigger, maxFilesPerTrigger)
 
   override def description(): String =
-    s"graft $path @v$version [${required.fieldNames.mkString(",")}]"
+    s"graft ${snap.path} @v${snap.version} " +
+      s"[${required.fieldNames.mkString(",")}]"
 
   /** Logical→physical leaf-column rename of a pushed filter, for the
     * parquet row-group predicate (files store physical names). Filters
@@ -427,17 +423,13 @@ private[sources] class GraftScan(path: String, version: Int,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    GraftReaderFactory.partitions(path, prunedEntries,
+    GraftReaderFactory.partitions(snap.path, prunedEntries,
       splitAndPack = true, spark = spark)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val props = VersionedTable.propsOf(path, version)
-    val physFilters = filters.toIndexedSeq
-      .flatMap(f => physFilter(f, props.phys))
-    GraftReaderFactory.build(path, version, fullSchema, required,
-      physFilters)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftReaderFactory.build(snap, required,
+      filters.toIndexedSeq.flatMap(f => physFilter(f, snap.props.phys)))
 }
 
 /** One byte-range of one data file. `start == 0 && length == fileSize`
@@ -472,14 +464,12 @@ private[sources] object GraftReaderFactory {
     * order so `running count == row position` holds for the
     * deletion-vector skip. Schemas translate logical→physical under
     * the version's column mapping. */
-  def build(path: String, version: Int, fullSchema: StructType,
-            required: StructType,
+  def build(snap: VersionedTable.Snapshot, required: StructType,
             physFilters: Seq[Filter]): GraftReaderFactory = {
     val spark = SparkSession.active
-    val props = VersionedTable.propsOf(path, version)
     def physS(s: StructType) =
-      StructType(s.fields.map(f => f.copy(name = props.phys(f.name))))
-    val physFull = physS(fullSchema)
+      StructType(s.fields.map(f => f.copy(name = snap.props.phys(f.name))))
+    val physFull = physS(snap.schema)
     val physReq = physS(required)
     val cleanReader = GraftBridge.parquetReadFunc(
       spark, physFull, physReq, physFilters)
@@ -611,8 +601,7 @@ private[sources] case class GraftOffset(version: Int)
   * duplicate. The read schema is pinned at stream start: physical
   * names are stable under renames, later-evolved columns read as
   * null-absent, exactly the batch connector's contract. */
-private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
-                                             fullSchema: StructType,
+private[sources] class GraftMicroBatchStream(snap: VersionedTable.Snapshot,
                                              required: StructType,
                                              skipChangeCommits: Boolean,
                                              maxVersionsPerTrigger: Option[Int] = None,
@@ -620,6 +609,8 @@ private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+
+  private val path = snap.path
 
   override def initialOffset(): Offset = GraftOffset(-1)
 
@@ -639,13 +630,6 @@ private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  /** Files a forward step from `from` to version `v` would emit. */
-  private def addedCount(v: Int): Int = {
-    val prev = VersionedTable.manifestEntries(path, v - 1)
-      .map(_.name).toSet
-    VersionedTable.manifestEntries(path, v)
-      .count(e => !prev.contains(e.name))
-  }
 
   /** Rate limiting (judge r12 item 8): without a cap one trigger
     * swallows ALL pending versions — a 100 TB backlog must drain in
@@ -665,12 +649,17 @@ private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
     maxFilesPerTrigger.foreach { mf =>
       // the first version always ships (progress); later versions
       // join the batch only while the file budget holds
+      val from = s.max(0)
+      val ms = VersionedTable.manifests(path, from, e)
+      // files version v adds over its predecessor
+      def added(v: Int): Int = {
+        val prev = ms(v - 1 - from).map(_.name).toSet
+        ms(v - from).count(x => !prev.contains(x.name))
+      }
       var cur = s + 1
-      var files =
-        if (s < 0) VersionedTable.manifestEntries(path, cur).size
-        else addedCount(cur)
+      var files = if (s < 0) ms(0).size else added(cur)
       while (cur < e && {
-        val next = addedCount(cur + 1)
+        val next = added(cur + 1)
         if (files + next <= mf) { files += next; true } else false
       }) cur += 1
       e = cur
@@ -686,11 +675,10 @@ private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
     val e = end.asInstanceOf[GraftOffset].version
     if (e <= s) return Array.empty
     val entries =
-      if (s < 0) VersionedTable.manifestEntries(path, e) // initial snapshot
-      else (s + 1 to e).flatMap { v =>
-        val prev = VersionedTable.manifestEntries(path, v - 1)
+      if (s < 0) VersionedTable.snapshot(path, Some(e)).entries // initial
+      else VersionedTable.manifests(path, s, e).sliding(2)
+        .zip(s + 1 to e).flatMap { case (Seq(prev, cur), v) =>
         val prevDv = prev.map(x => x.name -> x.dv).toMap
-        val cur = VersionedTable.manifestEntries(path, v)
         val removed = prevDv.keySet -- cur.map(_.name).toSet
         val added = cur.filterNot(x => prevDv.contains(x.name))
         // a change commit is ANY commit that touches already-emitted
@@ -710,12 +698,12 @@ private[sources] class GraftMicroBatchStream(path: String, pinned: Int,
               "Set option skipChangeCommits=true to skip such commits.")
           Nil
         } else added
-      }
+      }.toSeq
     GraftReaderFactory.partitions(path, entries)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory.build(path, pinned, fullSchema, required, Nil)
+    GraftReaderFactory.build(snap, required, Nil)
 
   override def commit(end: Offset): Unit = ()
 

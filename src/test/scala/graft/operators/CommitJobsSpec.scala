@@ -116,4 +116,44 @@ class CommitJobsSpec extends SparkSpec {
       assert(VersionedTable.read(spark, path).count() == 20000)
     }
   }
+
+  /** (`_graft_log` listings, log-line and checkpoint reads) of `body`. */
+  private def logIo(body: => Unit): (Long, Long) = {
+    val (lists, reads) =
+      (VersionedTable.logLists.get, VersionedTable.logReads.get)
+    body
+    (VersionedTable.logLists.get - lists, VersionedTable.logReads.get - reads)
+  }
+
+  test("SQL MERGE, UPDATE and a filtered count each resolve one " +
+    "snapshot: a MERGE lists the log as often at base v9 as at v2, and " +
+    "the tail is read once") {
+    withCatalog {
+      val path = bloomTable() // v2
+      def merge(lo: Long): (Long, Long) = {
+        view("lio_src", lo, lo + 20)
+        logIo(spark.sql(s"""
+          MERGE INTO graft.`$path` t USING lio_src s ON t.k = s.k
+          WHEN MATCHED THEN UPDATE SET amt = s.amt
+          WHEN NOT MATCHED THEN INSERT (k, grp, amt) VALUES (s.k, 0L, s.amt)
+          """).collect())
+      }
+      val atV2 = merge(19990)
+      (3 until 9).foreach(v => merge(19990 + 10L * v))
+      assert(VersionedTable.latestVersion(path).contains(9))
+      val atV9 = merge(20100) // commits v10, a checkpoint
+      val count = logIo(spark.sql(
+        s"SELECT count(*) FROM graft.`$path` WHERE k < 100").collect())
+      val update = logIo(spark.sql(
+        s"UPDATE graft.`$path` SET amt = -1.0 WHERE k < 100").collect())
+      info(s"(LIST, GET): merge@v2 $atV2, merge@v9 $atV9, " +
+        s"count $count, update $update")
+      assert(atV2._1 <= 4 && atV9._1 == atV2._1, s"$atV2 vs $atV9")
+      assert(atV9._2 <= 22, s"merge@v9 $atV9")
+      assert(count._1 <= 2 && count._2 <= 4, s"count $count")
+      assert(update._1 <= 4 && update._2 <= 6, s"update $update")
+      assert(VersionedTable.read(spark, path).filter(col("amt") === -1.0)
+        .count() == 100)
+    }
+  }
 }

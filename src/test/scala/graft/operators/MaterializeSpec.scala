@@ -138,4 +138,20 @@ class MaterializeSpec extends SparkSpec {
         .unset("spark.graft.subtreeRollup.maxDoublingDepth")
     assert(sweep == doubling)
   }
+
+  test("withPersist unpersists its frame when the body throws") {
+    val sc = spark.sparkContext
+    // other specs' pins share this JVM: compare against what was
+    // persisted before the body ran
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      Materialize.withPersist(spark.range(100).toDF("id")) { df =>
+        assert(df.count() == 100) // materializes the cached blocks
+        assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }

@@ -265,7 +265,7 @@ class PipelineSpec extends SparkSpec {
     val store = freshDir
     val path = s"$store/silver"
     VersionedTable.write(batchOf(0, 600).repartition(3, col("event_id")), path)
-    assert(VersionedTable.manifest(path, 0).size >= 2)
+    assert(VersionedTable.manifestEntries(path, 0).size >= 2)
     val batch = batchOf(400, 900)
     Pipeline.incrementalBatch(Seq(eventSilver), store, "event_id", "ts",
       "event_id")(batch, 1L)

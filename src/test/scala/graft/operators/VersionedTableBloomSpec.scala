@@ -185,8 +185,8 @@ class VersionedTableBloomSpec extends SparkSpec {
     val v = VersionedTable.latestVersion(path).get
     val updates = spark.range(3).select((col("id") * 1000 + 17).as("k"),
       lit(-1L).as("v"))
-    val cands = VersionedTable.bloomTouchCandidates(spark, path, v,
-      VersionedTable.propsOf(path, v), VersionedTable.schemaOf(path, v),
+    val cands = VersionedTable.bloomTouchCandidates(spark,
+      VersionedTable.snapshot(path, Some(v)),
       updates.select("k").distinct(), Seq("k"))
     assert(cands.isDefined && cands.get.size <= 5,
       s"expected <=5 of 8 admitted, got ${cands.map(_.size)}")
@@ -196,16 +196,15 @@ class VersionedTableBloomSpec extends SparkSpec {
     assert(out.filter(col("v") === -1L).count() == 3)
     assert(out.filter(col("k") === 17L).head.getLong(1) == -1L)
     // untouched files re-linked byte-identically
-    val shared = VersionedTable.manifest(path, v).map(_._1).toSet
-      .intersect(VersionedTable.manifest(path, v + 1).map(_._1).toSet)
+    val shared = VersionedTable.manifestEntries(path, v).map(_.name).toSet
+      .intersect(VersionedTable.manifestEntries(path, v + 1).map(_.name).toSet)
     assert(shared.size >= 8 - cands.get.size)
     // over the key cap: the pre-prune declines, the merge stays exact
     val oldCap = VersionedTable.bloomMergeProbeCapKeys
     VersionedTable.bloomMergeProbeCapKeys = 2
     try {
-      assert(VersionedTable.bloomTouchCandidates(spark, path, v + 1,
-        VersionedTable.propsOf(path, v + 1),
-        VersionedTable.schemaOf(path, v + 1),
+      assert(VersionedTable.bloomTouchCandidates(spark,
+        VersionedTable.snapshot(path, Some(v + 1)),
         updates.select("k").distinct(), Seq("k")).isEmpty)
       VersionedTable.upsert(spark, path,
         spark.range(3).select((col("id") * 1000 + 18).as("k"),

@@ -22,12 +22,12 @@ class VersionedTableManifestSpec extends SparkSpec {
     "files are the SAME pool paths across versions (zero bytes moved)") {
     val path = freshPath
     VersionedTable.write(rangedNation, path)
-    val m0 = VersionedTable.manifest(path, 0)
+    val m0 = VersionedTable.manifestEntries(path, 0).map(e => e.name -> e.rows)
     assert(m0.size == 5)
     val updates = tables.nation.filter(col("n_nationkey") === 0)
       .withColumn("n_name", lit("PATCHED"))
     VersionedTable.upsert(spark, path, updates, Seq("n_nationkey"))
-    val m1 = VersionedTable.manifest(path, 1)
+    val m1 = VersionedTable.manifestEntries(path, 1).map(e => e.name -> e.rows)
     val shared = m0.map(_._1).toSet.intersect(m1.map(_._1).toSet)
     // one key lives in exactly one ranged file → 4 of 5 re-linked
     assert(shared.size == 4,
@@ -49,13 +49,13 @@ class VersionedTableManifestSpec extends SparkSpec {
   test("update/delete rewrite only condition-matching files") {
     val path = freshPath
     VersionedTable.write(rangedNation, path)
-    val m0 = VersionedTable.manifest(path, 0).map(_._1).toSet
+    val m0 = VersionedTable.manifestEntries(path, 0).map(_.name).toSet
     VersionedTable.update(spark, path, "n_nationkey = 24",
       Seq("n_name" -> "lower(n_name)"))
-    val m1 = VersionedTable.manifest(path, 1).map(_._1).toSet
+    val m1 = VersionedTable.manifestEntries(path, 1).map(_.name).toSet
     assert(m0.intersect(m1).size == 4)
     VersionedTable.delete(spark, path, "n_nationkey = 0")
-    val m2 = VersionedTable.manifest(path, 2).map(_._1).toSet
+    val m2 = VersionedTable.manifestEntries(path, 2).map(_.name).toSet
     // the delete touches a different ranged file than the update did
     assert(m1.intersect(m2).size == 4)
     assert(VersionedTable.read(spark, path).count() == 24)
@@ -70,8 +70,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     VersionedTable.restore(spark, path, 0)
     // no new data files — v2 IS v0's manifest
     assert(VersionedTable.poolFiles(path) == poolBefore)
-    assert(VersionedTable.manifest(path, 2) ==
-      VersionedTable.manifest(path, 0))
+    assert(VersionedTable.manifestEntries(path, 2).map(e => e.name -> e.rows)
+      == VersionedTable.manifestEntries(path, 0).map(e => e.name -> e.rows))
     assert(VersionedTable.read(spark, path).count() == 25)
   }
 
@@ -81,8 +81,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     VersionedTable.write(rangedNation, path)                    // v0: A1..A5
     VersionedTable.delete(spark, path, "n_nationkey < 5")       // v1: A2..A5+B
     VersionedTable.restore(spark, path, 0)                      // v2: A1..A5
-    val b = (VersionedTable.manifest(path, 1).map(_._1).toSet --
-      VersionedTable.manifest(path, 0).map(_._1).toSet)
+    val b = (VersionedTable.manifestEntries(path, 1).map(_.name).toSet --
+      VersionedTable.manifestEntries(path, 0).map(_.name).toSet)
     assert(b.nonEmpty)
     val removed = VersionedTable.vacuum(path, keepLast = 1)
     assert(removed == Seq(0, 1))
@@ -90,7 +90,7 @@ class VersionedTableManifestSpec extends SparkSpec {
     // v0's files are shared with the retained v2 → still on disk
     val pool = VersionedTable.poolFiles(path).toSet
     assert(b.forall(!pool.contains(_)), "dead file must be deleted")
-    assert(VersionedTable.manifest(path, 2).map(_._1)
+    assert(VersionedTable.manifestEntries(path, 2).map(_.name)
       .forall(pool.contains), "files shared with v2 must survive")
     // retention contract: v0 refuses EVEN THOUGH its files survive
     intercept[IllegalArgumentException](
@@ -153,8 +153,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     VersionedTable.addColumn(spark, path, "tier", "cast(null as string)")
     assert(VersionedTable.poolFiles(path) == pool0,
       "null ADD COLUMN must not write data")
-    assert(VersionedTable.manifest(path, 1) ==
-      VersionedTable.manifest(path, 0))
+    assert(VersionedTable.manifestEntries(path, 1).map(e => e.name -> e.rows)
+      == VersionedTable.manifestEntries(path, 0).map(e => e.name -> e.rows))
     val v1 = VersionedTable.read(spark, path)
     assert(v1.columns.contains("tier"))
     assert(v1.filter(col("tier").isNull).count() == 25)
@@ -162,8 +162,8 @@ class VersionedTableManifestSpec extends SparkSpec {
       .columns.contains("tier"))
     // computed column: honest full rewrite
     VersionedTable.addColumn(spark, path, "key2", "n_nationkey * 2")
-    assert(VersionedTable.manifest(path, 2).map(_._1).toSet
-      .intersect(VersionedTable.manifest(path, 1).map(_._1).toSet).isEmpty)
+    assert(VersionedTable.manifestEntries(path, 2).map(_.name).toSet
+      .intersect(VersionedTable.manifestEntries(path, 1).map(_.name).toSet).isEmpty)
     assert(VersionedTable.read(spark, path)
       .filter(col("key2") === col("n_nationkey") * 2).count() == 25)
   }
@@ -177,8 +177,8 @@ class VersionedTableManifestSpec extends SparkSpec {
       .select(col("n_nationkey"), col("n_name"),
         lit("evolved").as("note"))
     VersionedTable.upsertEvolve(spark, path, updates, Seq("n_nationkey"))
-    val shared = VersionedTable.manifest(path, 0).map(_._1).toSet
-      .intersect(VersionedTable.manifest(path, 1).map(_._1).toSet)
+    val shared = VersionedTable.manifestEntries(path, 0).map(_.name).toSet
+      .intersect(VersionedTable.manifestEntries(path, 1).map(_.name).toSet)
     assert(shared.size == 4, s"evolution must still re-link, got $shared")
     val out = VersionedTable.read(spark, path)
     assert(out.count() == 25)
@@ -195,12 +195,12 @@ class VersionedTableManifestSpec extends SparkSpec {
     // one big file (~90% of rows) + two appends of 3 small files each
     VersionedTable.write(cust.filter(col("c_custkey") % 10 =!= 0)
       .repartition(1), path)
-    val big = VersionedTable.manifest(path, 0).map(_._1).toSet
+    val big = VersionedTable.manifestEntries(path, 0).map(_.name).toSet
     VersionedTable.append(spark,
       cust.filter(col("c_custkey") % 20 === 0).repartition(3), path)
     VersionedTable.append(spark,
       cust.filter(col("c_custkey") % 20 === 10).repartition(3), path)
-    val m2 = VersionedTable.manifest(path, 2)
+    val m2 = VersionedTable.manifestEntries(path, 2).map(e => e.name -> e.rows)
     // appends never rewrote anything: every prior file re-linked
     assert(big.subsetOf(m2.map(_._1).toSet))
     assert(m2.size == 7)
@@ -210,7 +210,7 @@ class VersionedTableManifestSpec extends SparkSpec {
     val v3 = VersionedTable.optimizeIncremental(spark, path,
       Seq("c_custkey"), threshold, numFiles = 1)
     assert(v3 == 3)
-    val m3 = VersionedTable.manifest(path, 3).map(_._1).toSet
+    val m3 = VersionedTable.manifestEntries(path, 3).map(_.name).toSet
     assert(big.subsetOf(m3), "compact files must re-link")
     assert(m3.intersect(m2.map(_._1).toSet) == big,
       "small files must be compacted away")
@@ -421,8 +421,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     // writer A commits FIRST, touching a different file
     VersionedTable.delete(spark, path, "n_nationkey = 0") // v1, fLow
     // B commits with its stale plan: disjoint → retried re-link onto v1
-    val v2 = VersionedTable.commitRewrite(path, "DELETE", keptB,
-      Set(fHigh), schema, baseV = 0)
+    val v2 = VersionedTable.commitRewrite(VersionedTable.snapshot(path,
+      Some(0)), "DELETE", keptB, Set(fHigh), schema)
     assert(v2 == 2)
     val out = VersionedTable.read(spark, path)
     assert(out.count() == 23) // BOTH deletes landed
@@ -432,8 +432,8 @@ class VersionedTableManifestSpec extends SparkSpec {
       .filter(col("n_nationkey") <= stats(fLow)._2 &&
         col("n_nationkey") =!= 1)
     intercept[ConcurrentCommitException](
-      VersionedTable.commitRewrite(path, "DELETE", keptC,
-        Set(fLow), schema, baseV = 0))
+      VersionedTable.commitRewrite(VersionedTable.snapshot(path, Some(0)),
+        "DELETE", keptC, Set(fLow), schema))
     // concurrent APPENDs always compose (empty conflict surface):
     // an append planned pre-A/B still lands
     VersionedTable.append(spark, tables.nation
@@ -598,5 +598,99 @@ class VersionedTableManifestSpec extends SparkSpec {
     val prunedP = VersionedTable.prunedPartitionEntries(path, v,
       Map("parity" -> "even"))
     assert(prunedP.size < entries.size)
+  }
+
+  // ------------------------------------------------------------ //
+  // snapshots: one resolution per operation
+  // ------------------------------------------------------------ //
+
+  test("time travel across a checkpoint: v9, v10 and v11 each replay " +
+    "their own manifest, reading checkpoint + tail once") {
+    val path = freshPath
+    def ids(lo: Long) = spark.range(lo, lo + 10).toDF("id")
+    VersionedTable.write(ids(0), path) // v0: checkpoint
+    (1 to 8).foreach(i => VersionedTable.append(spark, ids(i * 10L), path))
+    VersionedTable.delete(spark, path, "id < 5") // v9: a delta removal
+    VersionedTable.append(spark, ids(90), path) // v10: checkpoint
+    VersionedTable.delete(spark, path, "id >= 90 AND id < 93") // v11
+    val ckpts = Files.list(java.nio.file.Paths.get(path, "_graft_log",
+      "_checkpoints")).toArray.map(_.toString.split('/').last)
+    assert(ckpts.exists(_.startsWith("000010-")), ckpts.mkString(","))
+    def idsAt(v: Int) = VersionedTable.read(spark, path, Some(v))
+      .collect().map(_.getLong(0)).toSet
+    assert(idsAt(9) == (5L until 90L).toSet)
+    assert(idsAt(10) == (5L until 100L).toSet)
+    assert(idsAt(11) == (5L until 90L).toSet ++ (93L until 100L).toSet)
+    Seq(9, 10, 11).foreach { v =>
+      val s = VersionedTable.snapshot(path, Some(v))
+      assert(s.version == v)
+      assert(s.entries.map(_.rows).sum == idsAt(v).size)
+    }
+    // the checkpoint's manifest equals v9's replay plus v10's append
+    val v9 = VersionedTable.snapshot(path, Some(9)).names
+    val v10 = VersionedTable.snapshot(path, Some(10)).names
+    assert(v9.subsetOf(v10) && (v10 -- v9).nonEmpty &&
+      (v10 -- v9).forall(_.startsWith("c000010-")))
+    // v11 reads its own line, v10's line and the checkpoint: nothing
+    // before the checkpoint, and each once
+    val reads0 = VersionedTable.logReads.get
+    VersionedTable.snapshot(path, Some(11)).entries
+    assert(VersionedTable.logReads.get - reads0 == 3)
+  }
+
+  test("a vacuumed version is still refused by snapshot reads, even " +
+    "when its files survive through sharing") {
+    val path = freshPath
+    VersionedTable.write(spark.range(0, 10).toDF("id"), path) // v0
+    VersionedTable.append(spark, spark.range(10, 20).toDF("id"), path)
+    VersionedTable.append(spark, spark.range(20, 30).toDF("id"), path)
+    assert(VersionedTable.vacuum(path, keepLast = 1) == Seq(0, 1))
+    // v2 re-links every file v0 and v1 wrote: all of them survive
+    assert(VersionedTable.read(spark, path).count() == 30)
+    val refusals = Seq[() => Any](
+      () => VersionedTable.read(spark, path, Some(0)),
+      () => VersionedTable.readWhere(spark, path, "id", 0, 5, Some(1)),
+      () => VersionedTable.readIn(spark, path, "id", Seq(3L), Some(1)),
+      () => VersionedTable.statsAgg(spark, path, "id", Some(0)),
+      () => VersionedTable.changes(spark, path, 1, 2))
+    refusals.foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    }
+    assert(!VersionedTable.isReadable(path, 1))
+    assert(VersionedTable.isReadable(path, 2))
+  }
+
+  test("a commit landing between snapshot resolution and commitRewrite: " +
+    "a file-disjoint append rebases, an overlapping rewrite throws") {
+    val path = freshPath
+    VersionedTable.write(rangedNation, path) // v0: 5 key-ranged files
+    val stats = VersionedTable.fileStats(path, 0, "n_nationkey")
+      .collect { case (n, Some(s)) => n -> s }.toMap
+    val fHigh = stats.find(_._2._2 == 24).get._1 // file holding key 24
+    val fLow = stats.find(_._2._1 == 0).get._1   // file holding keys 0..
+    val s0 = VersionedTable.snapshot(path)
+    val keptHigh = VersionedTable.readFiles(spark, s0, Set(fHigh))
+      .filter(col("n_nationkey") =!= 24)
+    // another writer appends after s0 was resolved
+    VersionedTable.append(spark,
+      tables.nation.filter(col("n_nationkey") === 0), path) // v1
+    assert(VersionedTable.commitRewrite(s0, "DELETE", keptHigh, Set(fHigh),
+      s0.schema) == 2)
+    val out = VersionedTable.read(spark, path)
+    assert(out.count() == 25) // 25 + 1 appended - 1 deleted
+    assert(out.filter(col("n_nationkey") === 24).count() == 0)
+    assert(out.filter(col("n_nationkey") === 0).count() == 2)
+    // a rewrite of fLow planned at v2 loses to a DELETE that rewrote
+    // fLow after the plan's snapshot was resolved
+    val s2 = VersionedTable.snapshot(path)
+    val keptLow = VersionedTable.readFiles(spark, s2, Set(fLow))
+      .filter(col("n_nationkey") =!= 1)
+    VersionedTable.delete(spark, path, "n_nationkey = 2") // v3: fLow
+    intercept[ConcurrentCommitException](VersionedTable.commitRewrite(s2,
+      "DELETE", keptLow, Set(fLow), s2.schema))
+    assert(VersionedTable.latestVersion(path).contains(3))
+    assert(VersionedTable.read(spark, path)
+      .filter(col("n_nationkey") === 1).count() == 1)
   }
 }

@@ -27,7 +27,8 @@ class VersionedTablePropsSpec extends SparkSpec {
     VersionedTable.renameColumn(spark, path, "n_name", "nation_name")
     // metadata-only: no new pool files, manifest identical
     assert(VersionedTable.poolFiles(path) == pool0)
-    assert(VersionedTable.manifest(path, 1) == VersionedTable.manifest(path, 0))
+    assert(VersionedTable.manifestEntries(path, 1) ==
+      VersionedTable.manifestEntries(path, 0))
     // new version reads the new name, same data; old version the old
     val v1 = VersionedTable.read(spark, path)
     assert(v1.columns.contains("nation_name") && !v1.columns.contains("n_name"))
@@ -38,8 +39,8 @@ class VersionedTablePropsSpec extends SparkSpec {
     // only the touched ranged file
     VersionedTable.update(spark, path, "n_nationkey = 24",
       Seq("nation_name" -> "lower(nation_name)"))
-    val shared = VersionedTable.manifest(path, 1).map(_._1).toSet
-      .intersect(VersionedTable.manifest(path, 2).map(_._1).toSet)
+    val shared = VersionedTable.manifestEntries(path, 1).map(_.name).toSet
+      .intersect(VersionedTable.manifestEntries(path, 2).map(_.name).toSet)
     assert(shared.size == 4, s"expected 4 re-linked files, got $shared")
     assert(VersionedTable.read(spark, path)
       .filter(col("nation_name") === "nation_24").count() == 1)
@@ -254,13 +255,13 @@ class VersionedTablePropsSpec extends SparkSpec {
     val path = freshPath
     VersionedTable.write(rangedNation, path)                    // v0
     VersionedTable.dropColumn(spark, path, "n_regionkey")       // v1
-    val m1 = VersionedTable.manifest(path, 1).map(_._1).toSet
+    val m1 = VersionedTable.manifestEntries(path, 1).map(_.name).toSet
     // batch re-introduces the DROPPED name with different content
     val batch = tables.nation.select(
       (col("n_nationkey") + 100).as("n_nationkey"), col("n_name"),
       lit(7L).as("n_regionkey"))
     VersionedTable.appendEvolve(spark, batch, path)             // v2
-    val m2 = VersionedTable.manifest(path, 2).map(_._1).toSet
+    val m2 = VersionedTable.manifestEntries(path, 2).map(_.name).toSet
     assert(m1.subsetOf(m2), "append must re-link the whole manifest")
     val out = VersionedTable.read(spark, path)
     assert(out.count() == 50)
@@ -368,7 +369,7 @@ class VersionedTablePropsSpec extends SparkSpec {
     VersionedTable.optimizeZOrder(spark, path, "user_id", "value",
       numFiles = 16)
     val v = VersionedTable.latestVersion(path).get
-    val nFiles = VersionedTable.manifest(path, v).size
+    val nFiles = VersionedTable.manifestEntries(path, v).size
     // sf0.001 user_id spans 0..14 — the box covers ~1/3 of each axis
     val ranges = Seq(("user_id", 3.0, 8.0), ("value", 50.0, 120.0))
     val before = VersionedTable.footerReads.get()
@@ -397,8 +398,8 @@ class VersionedTablePropsSpec extends SparkSpec {
     val v0 = VersionedTable.latestVersion(path).get
     VersionedTable.renameColumn(spark, path, "n_name", "nm")
     intercept[ConcurrentCommitException] {
-      VersionedTable.commitActions(path, "APPEND", v0, Set.empty, Nil,
-        VersionedTable.schemaOf(path, v0))
+      VersionedTable.commitActions(VersionedTable.snapshot(path, Some(v0)),
+        "APPEND", Set.empty, Nil, VersionedTable.schemaOf(path, v0))
     }
   }
 }

@@ -118,8 +118,8 @@ class VersionedTableR12Spec extends SparkSpec {
       .forall(e => e.bloom.contains("k1") && e.bloom.contains("k2")))
     val updates = spark.range(2).select((col("id") * 2000 + 11).as("k1"),
       ((col("id") * 2000 + 11) * 31 % 4096).as("k2"), lit(-5L).as("v"))
-    val cands = VersionedTable.bloomTouchCandidates(spark, path, v,
-      VersionedTable.propsOf(path, v), VersionedTable.schemaOf(path, v),
+    val cands = VersionedTable.bloomTouchCandidates(spark,
+      VersionedTable.snapshot(path, Some(v)),
       updates.select("k1", "k2").distinct(), Seq("k1", "k2"))
     assert(cands.isDefined, "a 2-key batch must still prune")
     assert(cands.get.size <= 4,
@@ -129,8 +129,8 @@ class VersionedTableR12Spec extends SparkSpec {
     assert(out.count() == 4096)
     assert(out.filter(col("v") === -5L).count() == 2)
     // untouched files re-link
-    val shared = VersionedTable.manifest(path, v).map(_._1).toSet
-      .intersect(VersionedTable.manifest(path, v + 1).map(_._1).toSet)
+    val shared = VersionedTable.manifestEntries(path, v).map(_.name).toSet
+      .intersect(VersionedTable.manifestEntries(path, v + 1).map(_.name).toSet)
     assert(shared.size >= 8 - cands.get.size)
   }
 

@@ -298,7 +298,7 @@ class VersionedTableSpec extends SparkSpec {
       "l_partkey", "l_suppkey", numFiles = 4)
     assert(v == 1)
     assert(VersionedTable.operations(path).last == "OPTIMIZE[ZORDER]")
-    assert(VersionedTable.manifest(path, 1).size == 4)
+    assert(VersionedTable.manifestEntries(path, 1).size == 4)
     // layout-only change: content round-trips exactly
     val a = VersionedTable.read(spark, path, Some(0))
     val b = VersionedTable.read(spark, path, Some(1))
@@ -317,7 +317,7 @@ class VersionedTableSpec extends SparkSpec {
       Seq("WRITE", "MERGE", "OPTIMIZE"))
     assert(h.map(_.getAs[Long]("num_rows")).toSeq == Seq(25L, 25L, 25L))
     // optimize produced the requested file count in the new version
-    assert(VersionedTable.manifest(path, 2).size == 2)
+    assert(VersionedTable.manifestEntries(path, 2).size == 2)
   }
 
   test("cross-table pin: one instant resolves each table's own log, " +

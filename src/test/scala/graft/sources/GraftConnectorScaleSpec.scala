@@ -36,13 +36,13 @@ class GraftConnectorScaleSpec extends SparkSpec {
       graft.operators.Maintenance.clusteredFrame(df, Seq("k"), 4), path)
     val entries = VersionedTable.manifestEntries(path, 0)
     assert(entries.size == 4)
-    val full = new GraftScanBuilder(path, 0,
-      VersionedTable.schemaOf(path, 0)).build()
+    val full = new GraftScanBuilder(VersionedTable.snapshot(path, Some(0)))
+      .build()
       .asInstanceOf[GraftScan].estimateStatistics()
     assert(full.sizeInBytes.getAsLong == entries.map(_.bytes).sum)
     assert(full.numRows.getAsLong == 1000)
     // a pushed range filter shrinks the estimate to the pruned files
-    val b = new GraftScanBuilder(path, 0, VersionedTable.schemaOf(path, 0))
+    val b = new GraftScanBuilder(VersionedTable.snapshot(path, Some(0)))
     b.pushFilters(Array(
       org.apache.spark.sql.sources.LessThan("k", 100L)))
     val pruned = b.build().asInstanceOf[GraftScan].estimateStatistics()

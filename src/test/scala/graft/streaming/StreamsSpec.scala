@@ -311,11 +311,11 @@ class StreamsSpec extends SparkSpec {
     // every commit RE-LINKS all prior files: the final manifest holds
     // every earlier version's files plus its own batch
     val last = graft.operators.VersionedTable.latestVersion(table).get
-    val mLast = graft.operators.VersionedTable.manifest(table, last)
-      .map(_._1).toSet
+    val mLast = graft.operators.VersionedTable.manifestEntries(table, last)
+      .map(_.name).toSet
     (0 until last).foreach { v =>
-      assert(graft.operators.VersionedTable.manifest(table, v).map(_._1)
-        .toSet.subsetOf(mLast), s"version $v files not re-linked")
+      assert(graft.operators.VersionedTable.manifestEntries(table, v)
+        .map(_.name).toSet.subsetOf(mLast), s"version $v files not re-linked")
     }
     // content = one copy of everything staged
     val got = graft.operators.VersionedTable.read(spark, table)
