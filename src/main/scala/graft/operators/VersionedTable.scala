@@ -760,9 +760,11 @@ object VersionedTable {
     * every data-writing commit ([[write]], [[commitRewrite]],
     * [[append]], [[appendEvolve]]). The write job itself counts each
     * active CHECK constraint's violations (an observation on `df`: no
-    * read-back, O(new data)). The files move into the pool (under a
-    * commit prefix, so provenance is readable and names are globally
-    * unique) and get their bloom sidecars; then `expectations` is
+    * read-back, O(new data)), and its tasks write each new file's
+    * bloom sidecars ([[BloomIndexedParquet]]). The files and their
+    * sidecars move into the pool (under a commit prefix, so
+    * provenance is readable and names are globally unique); then
+    * `expectations` is
     * evaluated (a pipeline flow's counters, observed by the same job —
     * FAIL mode throws [[ExpectationViolation]] here) and the CHECK
     * counters are checked (SQL-standard: a row violates only when the
@@ -796,17 +798,20 @@ object VersionedTable {
       else checked.select(df.columns.toIndexedSeq.map(c =>
         col(c).as(props.phys(c))): _*)
     val physBy = partitionBy.map(props.phys)
+    // bloom index maintenance (Delta's write-path indexing): when the
+    // table declares indexed columns, the write tasks build each new
+    // file's sidecars (see [[BloomIndexedParquet]]) — no read-back
+    val blCols = bloomConfig(props).map(props.phys)
+      .filter(physDf.columns.contains)
     val pooled = scala.collection.mutable.ArrayBuffer.empty[String]
     try {
-      if (physBy.isEmpty)
-        physDf.write.mode("overwrite").parquet(stage.toString)
-      else {
-        val dup = physBy.foldLeft(physDf)((d, c) =>
-          d.withColumn(s"_gp_$c", col(c)))
-        dup.write.mode("overwrite")
-          .partitionBy(physBy.map("_gp_" + _): _*)
-          .parquet(stage.toString)
-      }
+      val dup = physBy.foldLeft(physDf)((d, c) =>
+        d.withColumn(s"_gp_$c", col(c)))
+      dup.write.format(classOf[BloomIndexedParquet].getName)
+        .options(BloomIndexedParquet.writeOptions(blCols, bloomFpp(props)))
+        .mode("overwrite")
+        .partitionBy(physBy.map("_gp_" + _): _*)
+        .save(stage.toString)
       Files.createDirectories(poolDir(path))
       def walk(dir: java.io.File,
                part: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
@@ -818,26 +823,31 @@ object VersionedTable {
             } else if (f.getName.endsWith(".parquet")) Seq((f, part))
             else Nil
           }
-      val out = walk(stage.toFile, Map.empty).zipWithIndex.map {
+      val uid = java.util.UUID.randomUUID.toString.take(8)
+      def pool(src: java.nio.file.Path, name: String): java.nio.file.Path = {
+        val dst = poolDir(path).resolve(name)
+        Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
+        pooled += name
+        dst
+      }
+      val entries = walk(stage.toFile, Map.empty).zipWithIndex.map {
         case ((f, pv), i) =>
           val name = f"c$v%06d-$i%03d-${f.getName}"
-          val dst = poolDir(path).resolve(name)
-          Files.move(f.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-          pooled += name
+          val dst = pool(f.toPath, name)
           val (rows, stats, sstats) = footerInfo(dst)
+          // a zero-row file has no sidecar and stays unindexed
+          val bloom = blCols.zipWithIndex.flatMap { case (c, j) =>
+            val side = f.toPath.resolveSibling(
+              BloomIndexedParquet.sidecarName(f.getName, j))
+            Option.when(Files.exists(side)) {
+              val sidecar = f"bl$v%06d-$i%03d-$uid-$j.bloom"
+              pool(side, sidecar)
+              c -> sidecar
+            }
+          }.toMap
           FileEntry(name, None, rows, rows, Files.size(dst), stats, pv,
-            sstats = sstats)
+            bloom = bloom, sstats = sstats)
       }
-      // bloom index maintenance (Delta's write-path indexing): when the
-      // table declares indexed columns, the commit's own new files get
-      // their sidecars here — O(new data), regardless of table size
-      val blCols = bloomConfig(props).map(props.phys)
-        .filter(physDf.columns.contains)
-      val entries =
-        if (blCols.isEmpty) out
-        else buildBloomSidecars(df.sparkSession, path, v, out, blCols,
-          bloomFpp(props))
-      pooled ++= entries.flatMap(_.bloom.values)
       val counters = expectations
       observation.foreach { case (_, obs) =>
         val bad = checks.zip(Expectations.results(Expectations.observed(obs),
@@ -1152,16 +1162,19 @@ object VersionedTable {
     * satisfying `hit` — an EXACT shortlist: the scan reads only the
     * columns `hit` needs (Catalyst prunes the rest) plus the file-path
     * metadata column, and pushed-down predicates skip row groups via
-    * parquet min-max stats on clustered tables. Driver traffic is one
-    * row per touched FILE, never per row. */
+    * parquet min-max stats on clustered tables. Each task ships its
+    * distinct touched file names — one job, no exchange; driver
+    * traffic is one row per (task, touched file), never per row. */
   private[graft] def touchedFiles(spark: SparkSession, s: Snapshot,
                                   hit: DataFrame => DataFrame,
                                   candidates: Option[Set[String]] = None)
       : Set[String] = {
     val all = s.entries
-    def scan(es: Seq[FileEntry]): Set[String] =
+    def scan(es: Seq[FileEntry]): Set[String] = {
+      import spark.implicits._
       hit(readEntries(spark, s, es, lineage = true)).select("_graft_file")
-        .distinct().collect().map(_.getString(0)).toSet
+        .as[String].mapPartitions(_.toSet.iterator).collect().toSet
+    }
     // bloom pre-prune (when available): the exact semi-join scan runs
     // only over files whose index ADMITS some key — false positives
     // die in this scan, so pruning never causes a spurious rewrite
@@ -1213,7 +1226,8 @@ object VersionedTable {
     * distinct batch values contribute no pruning; returns None when
     * no column contributes — the caller's scan stays exact either
     * way, and files without an index for a column conservatively
-    * survive that column. */
+    * survive that column. `keyFrame` may repeat key tuples; the
+    * driver receives at most cap + 1 hashes per column per task. */
   private[graft] def bloomTouchCandidates(
       spark: SparkSession, s: Snapshot, keyFrame: DataFrame,
       keys: Seq[String]): Option[Set[String]] = {
@@ -1228,23 +1242,41 @@ object VersionedTable {
         keyFrame.schema(k).dataType == s.schema(k).dataType
     }
     if (usable.isEmpty) return None
+    // every usable column's hashes in ONE job and no exchange: each
+    // task ships its distinct hashes per column, or None once the
+    // column passes the cap within the task; the driver unions them
+    val n = usable.size
+    import spark.implicits._
+    val perTask = keyFrame.select(usable.map(k => xxhash64(col(k))): _*)
+      .mapPartitions { rows =>
+        val seen = Array.fill(n)(
+          Option(scala.collection.mutable.HashSet.empty[Long]))
+        rows.foreach { r =>
+          for (j <- 0 until n; hs <- seen(j)) {
+            hs += r.getLong(j)
+            if (hs.size > cap) seen(j) = None
+          }
+        }
+        Iterator.tabulate(n)(j => (j, seen(j).map(_.toArray)))
+      }.collect()
+    val hashes = (0 until n).map { j =>
+      val sets = perTask.collect { case (`j`, hs) => hs }
+      if (sets.contains(None)) None
+      else Some(sets.flatten.flatten.distinct).filter(_.length <= cap)
+    }
     var surviving = entries.map(_.name).toSet
     var pruned = false
-    usable.foreach { k =>
+    usable.zip(hashes).foreach { case (k, colHashes) =>
       val pc = props.phys(k)
       // probe only files still in play — each column tightens the set
       val indexed = entries.filter(e =>
         surviving(e.name) && e.bloom.contains(pc))
-      if (indexed.nonEmpty) {
-        val hs = keyFrame.select(xxhash64(col(k)).as("h")).distinct()
-          .limit(cap + 1).collect().map(_.getLong(0))
-        if (hs.length <= cap) {
-          val cand = indexed.map(e =>
-            (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
-          val admitted = probeSidecars(spark, cand, hs)
-          surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
-          pruned = true
-        }
+      if (indexed.nonEmpty) colHashes.foreach { hs =>
+        val cand = indexed.map(e =>
+          (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
+        val admitted = probeSidecars(spark, cand, hs)
+        surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
+        pruned = true
       }
     }
     if (pruned) Some(surviving) else None
@@ -1471,19 +1503,20 @@ object VersionedTable {
   private def bloomFpp(props: TableProps): Double =
     props.tbl.get(bloomFppProp).map(_.toDouble).getOrElse(0.03)
 
-  /** Build bloom sidecars for `physCols` over `entries`' pool files
-    * and return the entries with their `bloom` references attached.
-    * ONE distributed aggregation job does the data-sized work
-    * (map-side partial blooms per file split, `mergeInPlace` combine
-    * — bloom bits are an OR, so split order never changes the
-    * result); what reaches the driver is one filter per (file,
-    * column) — the same O(new files) metadata the footer loop already
-    * pays per commit. Values are indexed as `xxhash64(col)` longs;
+  /** Backfill bloom sidecars for `physCols` over `entries`' pool
+    * files (read with `readSchema`) and return the entries with their
+    * `bloom` references attached — [[buildBloomIndex]]'s pass; a
+    * commit's own new files get theirs from the write tasks
+    * ([[BloomIndexedParquet]], same hash and sizing). ONE distributed
+    * aggregation job per size class does the data-sized work (map-side
+    * partial blooms per file split, `mergeInPlace` combine — bloom
+    * bits are an OR, so split order never changes the result); what
+    * reaches the driver is one filter per (file, column). Values are indexed as `xxhash64(col)` longs;
     * [[readIn]] probes with the identically-hashed literal. */
   private def buildBloomSidecars(spark: SparkSession, path: String,
                                  v: Int, entries: Seq[FileEntry],
                                  physCols: Seq[String], fpp: Double,
-                                 readSchema: Option[StructType] = None)
+                                 readSchema: StructType)
       : Seq[FileEntry] = {
     if (entries.isEmpty || physCols.isEmpty) return entries
     // size the filter per FILE, not per commit: a serialized bloom is
@@ -1494,8 +1527,8 @@ object VersionedTable {
     // only under identical sizing), so each file's index is within 2×
     // of its optimal size and a mixed commit costs ≤ log2(maxRows)
     // passes — each pass scanning ONLY its own files.
-    val byClass = entries.groupBy(e => 64 - java.lang.Long
-      .numberOfLeadingZeros(math.max(1L, math.min(e.phys, 4000000L))))
+    val byClass = entries.groupBy(e => 64 - java.lang.Long.numberOfLeadingZeros(
+      math.max(1L, math.min(e.phys, BloomIndexedParquet.MaxItems))))
     val done = byClass.toSeq.sortBy(_._1).flatMap { case (_, es) =>
       bloomSidecarPass(spark, path, v, es, physCols, fpp, readSchema)
     }.map(e => e.name -> e).toMap
@@ -1506,16 +1539,13 @@ object VersionedTable {
   private def bloomSidecarPass(spark: SparkSession, path: String,
                                v: Int, entries: Seq[FileEntry],
                                physCols: Seq[String], fpp: Double,
-                               readSchema: Option[StructType])
+                               readSchema: StructType)
       : Seq[FileEntry] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.util.sketch.BloomFilter
-    val estItems = math.max(1L, math.min(entries.map(_.phys).max, 4000000L))
-    val numBits = math.min(BloomFilter.optimalNumOfBits(estItems, fpp),
-      1L << 26)
+    val (estItems, numBits) =
+      BloomIndexedParquet.sizing(entries.map(_.phys).max, fpp)
     val files = entries.map(e => resolveOrFail(path, e.name, v))
-    val reader = readSchema.fold(spark.read)(s => spark.read.schema(s))
     val aggs = physCols.map { c =>
       org.apache.spark.sql.graft.GraftBridge.column(
         new BloomFilterAggregate(
@@ -1524,7 +1554,7 @@ object VersionedTable {
           Literal(estItems), Literal(numBits)).toAggregateExpression())
         .as(s"_bl_$c")
     }
-    val byFile = reader.parquet(files: _*)
+    val byFile = spark.read.schema(readSchema).parquet(files: _*)
       .select(physCols.map(col) :+
         substring_index(col("_metadata.file_path"), "/", -1)
           .as("_bl_file"): _*)
@@ -1567,7 +1597,7 @@ object VersionedTable {
     val missing = s.entries.filter(e => !phys.forall(e.bloom.contains))
     if (missing.isEmpty) return s.version
     val updated = buildBloomSidecars(spark, path, s.version + 1, missing,
-      phys, bloomFpp(props), readSchema = Some(physSchema))
+      phys, bloomFpp(props), physSchema)
     commitActions(s, "BLOOM INDEX", missing.map(_.name).toSet, updated,
       schema)
   }
@@ -2130,7 +2160,7 @@ object VersionedTable {
     * readable (time travel). */
   def update(spark: SparkSession, path: String, conditionSql: String,
              assignments: Seq[(String, String)]): Int =
-    updateCore(spark, path, _ => expr(conditionSql),
+    updateCore(spark, snapshot(path), _ => expr(conditionSql),
       assignments.map { case (c, rhs) =>
         c -> ((_: DataFrame) => expr(rhs)) })._1
 
@@ -2140,11 +2170,10 @@ object VersionedTable {
     * mangle (qualified refs, exotic literals). Semantics identical.
     * Returns (new version, affected-row count — observed on the
     * rewrite's write job, no count pass of its own). */
-  private[graft] def updateCore(spark: SparkSession, path: String,
+  private[graft] def updateCore(spark: SparkSession, s: Snapshot,
                                 condFor: DataFrame => Column,
                                 assignments: Seq[(String, DataFrame => Column)])
       : (Int, Long) = {
-    val s = snapshot(path)
     val cols = s.schema.fieldNames.toSeq
     assignments.foreach { case (c, _) =>
       require(cols.contains(c), s"UPDATE target column $c not in $cols")
@@ -2181,16 +2210,15 @@ object VersionedTable {
     * pre-delete snapshot stays readable. */
   def delete(spark: SparkSession, path: String,
              conditionSql: String): Int =
-    deleteCore(spark, path, _ => expr(conditionSql))._1
+    deleteCore(spark, snapshot(path), _ => expr(conditionSql))._1
 
   /** Column-factory twin of [[delete]] (the SQL `DELETE FROM` command
     * path — see [[updateCore]] for why a callback, not a SQL string).
     * Returns (new version, deleted-row count — the touched files' live
     * rows, a manifest total, minus the kept rows the rewrite's write
     * job counts: no count pass of its own). */
-  private[graft] def deleteCore(spark: SparkSession, path: String,
+  private[graft] def deleteCore(spark: SparkSession, s: Snapshot,
                                 condFor: DataFrame => Column): (Int, Long) = {
-    val s = snapshot(path)
     // SQL DELETE semantics: only rows where the condition is TRUE are
     // removed — a NULL condition keeps the row (plain !cond would
     // silently drop it)

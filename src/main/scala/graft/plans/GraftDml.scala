@@ -6,11 +6,12 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Expectations, Materialize, VersionedTable}
+import graft.operators.{Expectations, FlowExpectations, Materialize, VersionedTable}
 import graft.sources.GraftTable
 
 /** SQL DML over the versioned format — `DELETE FROM` / `UPDATE` /
@@ -54,13 +55,16 @@ object GraftDml {
   object Sealed { def apply[T](v: T): Sealed[T] = new Sealed(v) }
 
   /** The analyzed target relation under optional aliases, when it is
-    * a graft table: (path, relation output). */
+    * a graft table: (the snapshot the catalog resolved for this
+    * statement, relation output). The command plans against that one
+    * snapshot; the commit re-lists the log and checks for conflicts. */
   private[plans] object GraftTarget {
-    def unapply(plan: LogicalPlan): Option[(String, Seq[Attribute])] =
+    def unapply(plan: LogicalPlan)
+        : Option[(VersionedTable.Snapshot, Seq[Attribute])] =
       plan match {
         case SubqueryAlias(_, child) => unapply(child)
         case r: DataSourceV2Relation => r.table match {
-          case g: GraftTable => Some((g.tablePath, r.output))
+          case g: GraftTable => Some((g.committed, r.output))
           case _ => None
         }
         case _ => None
@@ -109,13 +113,14 @@ object GraftDml {
 /** `DELETE FROM graft.`/path`` WHERE cond` → file-granular
   * [[VersionedTable.delete]] semantics (NULL condition keeps the row;
   * only files containing a TRUE row are rewritten). */
-case class GraftDeleteCommand(path: String, targetAttrs: Seq[Attribute],
+case class GraftDeleteCommand(snap: VersionedTable.Snapshot,
+                              targetAttrs: Seq[Attribute],
                               cond: GraftDml.Sealed[Expression])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftDml.affectedRowsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val tgt = GraftDml.idMap(targetAttrs)
-    val (_, n) = VersionedTable.deleteCore(spark, path,
+    val (_, n) = VersionedTable.deleteCore(spark, snap,
       df => GraftDml.bind(cond.value, tgt, df))
     Seq(Row(n))
   }
@@ -125,14 +130,15 @@ case class GraftDeleteCommand(path: String, targetAttrs: Seq[Attribute],
   * [[VersionedTable.update]] semantics (every RHS evaluates against
   * the pre-update row; only files containing a matching row are
   * rewritten). */
-case class GraftUpdateCommand(path: String, targetAttrs: Seq[Attribute],
+case class GraftUpdateCommand(snap: VersionedTable.Snapshot,
+                              targetAttrs: Seq[Attribute],
                               assignments: GraftDml.Sealed[Seq[Assignment]],
                               cond: GraftDml.Sealed[Option[Expression]])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftDml.affectedRowsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val tgt = GraftDml.idMap(targetAttrs)
-    val (_, n) = VersionedTable.updateCore(spark, path,
+    val (_, n) = VersionedTable.updateCore(spark, snap,
       df => cond.value.map(c => GraftDml.bind(c, tgt, df))
         .getOrElse(lit(true)),
       assignments.value.map { a =>
@@ -162,15 +168,18 @@ case class GraftUpdateCommand(path: String, targetAttrs: Seq[Attribute],
   * Ambiguity contract (Delta's): when a target row is matched by MORE
   * THAN ONE source row and a matched/not-matched-by-source clause
   * exists, the merge fails rather than emitting duplicated target
-  * rows. Detected as duplicate source key tuples that semi-join the
-  * touched files — exact under a pure-equality `cond`, conservative
-  * (may reject a merge whose residual predicates disambiguate) when
-  * `cond` carries extra conjuncts. Matched clauses additionally
+  * rows. Detected by the write job itself: it counts matched rows
+  * whose source key tuple occurs more than once in the source, and
+  * the commit aborts before its log append — exact under a
+  * pure-equality `cond`, conservative (may reject a merge whose
+  * residual predicates disambiguate) when `cond` carries extra
+  * conjuncts. Matched clauses additionally
   * REQUIRE at least one equality key (a pure-theta matched merge
   * cannot be made unambiguous file-granularly). Insert-only merges
   * skip all of this — they run as an anti-join append with no
   * uniqueness requirement. */
-case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
+case class GraftMergeCommand(snap: VersionedTable.Snapshot,
+                             targetAttrs: Seq[Attribute],
                              source: GraftDml.Sealed[LogicalPlan],
                              condS: GraftDml.Sealed[Expression],
                              matchedS: GraftDml.Sealed[Seq[MergeAction]],
@@ -208,7 +217,7 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
   // materialize the MERGE source ONCE (lazy — the first action of
   // `merge` computes it, and the pin is freed when the commit is
   // written): the source frame otherwise re-evaluates for the
-  // touch-key collect, the ambiguity guard, and the full-outer
+  // touch-key collect, the touch semi-join, and the full-outer
   // assembly (Delta materializes its merge source for the same
   // reason, plus determinism). LogicalRDD keeps the plan's output
   // attribute ids, so the ON/action expression bindings still hold.
@@ -216,7 +225,6 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
     Materialize.withPin(GraftBridge.dataset(spark, sourcePlan))(merge(spark, _))
 
   private def merge(spark: SparkSession, src: DataFrame): Seq[Row] = {
-    val snap = VersionedTable.snapshot(path)
     val schema = snap.schema
     val tgt = GraftDml.idMap(targetAttrs)
     val tgtIds = targetAttrs.map(_.exprId).toSet
@@ -281,11 +289,12 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       "MERGE: matched / not-matched-by-source clauses need at least " +
         "one target-column = source-expression equality in ON")
 
-    // key frame named by TARGET columns (used for the touch semi-join)
+    // key frame named by TARGET columns (the bloom probe's hashes and
+    // the touch semi-join; neither needs it distinct)
     val keyFrame =
       if (keyPairs.isEmpty) null
       else src.select(keyPairs.map { case (t, se) =>
-        GraftBridge.column(se).as(t) }: _*).distinct()
+        GraftBridge.column(se).as(t) }: _*)
 
     val touchAll = nmbsActs.nonEmpty || keyPairs.isEmpty
     val touched: Set[String] =
@@ -308,24 +317,16 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       return Seq(Row(n, 0L, 0L, n))
     }
 
-    // ambiguity guard (Delta semantics): duplicate source key tuples
-    // that hit a touched file would duplicate target rows in the
-    // full-outer assembly below — fail loudly instead
-    val srcKeys = src.select(keyPairs.map { case (t, se) =>
-      GraftBridge.column(se).as(t) }: _*)
-    val dupKeys = srcKeys.groupBy(keys.map(col): _*)
-      .count().filter(col("count") > 1).drop("count")
-    if (!dupKeys.isEmpty) {
-      val ambiguous = !dupKeys.join(base, keys, "left_semi").isEmpty
-      if (ambiguous) throw new IllegalStateException(
-        "MERGE: multiple source rows match the same target row " +
-          (if (pureEqui) "" else "(conservative: ON has non-equality " +
-            "conjuncts, uniqueness is required on the equality keys) ") +
-          s"— deduplicate the source on (${keys.mkString(", ")})")
-    }
-
+    // ambiguity guard (Delta semantics): each source row carries the
+    // multiplicity of its key tuple — a window on the hash
+    // partitioning the full-outer join needs anyway, so no exchange of
+    // its own — and the write job counts matched rows whose key tuple
+    // is not unique (see `unambiguous` below)
+    val mult = "_graft_merge_mult"
     val b2 = base.withColumn(tMark, lit(true))
-    val s2 = src.withColumn(sMark, lit(true))
+    val s2 = src.withColumn(sMark, lit(true)).withColumn(mult,
+      count(lit(1)).over(Window.partitionBy(keyPairs.map { case (_, se) =>
+        GraftBridge.column(se) }: _*)))
     val b2tgt = tgt // target ids bind to b2 columns by name
     val joined = b2.join(s2, GraftDml.bind(cond, b2tgt, b2), "full_outer")
 
@@ -358,7 +359,8 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
       joined.withColumn("_graft_merge_act", act), Seq(
         count(when(actIn(allActs.collect { case (i, UpdAct(_, _)) => i }), 1)),
         count(when(actIn(delIds), 1)),
-        count(when(actIn(allActs.collect { case (i, InsAct(_, _)) => i }), 1))))
+        count(when(actIn(allActs.collect { case (i, InsAct(_, _)) => i }), 1)),
+        count(when(isMatched && col(mult) > 1, 1))))
     val kept = acted.filter(!actIn(-2 +: delIds))
 
     val outCols = schema.fields.toIndexedSeq.map { f =>
@@ -376,8 +378,19 @@ case class GraftMergeCommand(path: String, targetAttrs: Seq[Attribute],
           when(col("_graft_merge_act") === i, c).otherwise(els))
       }.as(f.name)
     }
+    // checked after the write and before the log append, like a CHECK
+    // constraint: a throw removes the staged files and commits nothing
+    def unambiguous: Option[FlowExpectations] = {
+      if (Expectations.observed(obs).getLong(3) > 0)
+        throw new IllegalStateException(
+          "MERGE: multiple source rows match the same target row " +
+            (if (pureEqui) "" else "(conservative: ON has non-equality " +
+              "conjuncts, uniqueness is required on the equality keys) ") +
+            s"— deduplicate the source on (${keys.mkString(", ")})")
+      None
+    }
     VersionedTable.commitRewrite(snap, "MERGE", kept.select(outCols: _*),
-      touched, schema)
+      touched, schema, expectations = unambiguous)
     val n = Expectations.observed(obs)
     val (nUpd, nDel, nIns) = (n.getLong(0), n.getLong(1), n.getLong(2))
     Seq(Row(nUpd + nDel + nIns, nUpd, nDel, nIns))
@@ -419,20 +432,20 @@ case class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import GraftDml.GraftTarget
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    case d @ DeleteFromTable(GraftTarget(path, out), cond)
+    case d @ DeleteFromTable(GraftTarget(snap, out), cond)
         if d.resolved =>
-      GraftDeleteCommand(path, out, GraftDml.Sealed(cond))
-    case u @ UpdateTable(GraftTarget(path, out), assignments, cond)
+      GraftDeleteCommand(snap, out, GraftDml.Sealed(cond))
+    case u @ UpdateTable(GraftTarget(snap, out), assignments, cond)
         if u.resolved =>
-      GraftUpdateCommand(path, out, GraftDml.Sealed(assignments),
+      GraftUpdateCommand(snap, out, GraftDml.Sealed(assignments),
         GraftDml.Sealed(cond))
-    case m @ MergeIntoTable(GraftTarget(path, out), src, cond,
+    case m @ MergeIntoTable(GraftTarget(snap, out), src, cond,
         matchedA, notMatchedA, notMatchedBySourceA, withSchemaEvolution)
         if m.resolved =>
       if (withSchemaEvolution) throw new UnsupportedOperationException(
         "graft MERGE: WITH SCHEMA EVOLUTION is not supported — evolve " +
           "through VersionedTable.upsertEvolve")
-      GraftMergeCommand(path, out, GraftDml.Sealed(src),
+      GraftMergeCommand(snap, out, GraftDml.Sealed(src),
         GraftDml.Sealed(cond), GraftDml.Sealed(matchedA),
         GraftDml.Sealed(notMatchedA), GraftDml.Sealed(notMatchedBySourceA))
     case _ => plan

@@ -189,10 +189,12 @@ private[graft] class GraftTable(path: String,
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
-  /** The table's filesystem path, for the SQL DML rule
+  /** The snapshot resolved at load, for the SQL DML rule
     * (graft.plans.GraftDmlRule) that routes DELETE/UPDATE/MERGE over
-    * this relation into the format's file-granular verbs. */
-  private[graft] def tablePath: String = path
+    * this relation into the format's file-granular verbs: the
+    * statement plans against it. */
+  private[graft] def committed: VersionedTable.Snapshot = snap.getOrElse(
+    throw new IllegalArgumentException(s"no committed versions at $path"))
 
   /** `TRUNCATE TABLE graft.`/path`` — a metadata-only empty-manifest
     * commit (schema/properties survive; the old snapshot stays

@@ -234,4 +234,101 @@ class VersionedTableBloomSpec extends SparkSpec {
       .select("k").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(4100L))
   }
+
+  /** Each of `entries`' files: every row's key hash, per physical
+    * column, is admitted by that file's own sidecar. */
+  private def admitsOwnKeys(path: String, entries: Seq[VersionedTable.FileEntry],
+                            physCols: Seq[String]): Unit =
+    entries.foreach { e =>
+      val hashes = spark.read.parquet(VersionedTable.poolFilePath(path, e.name))
+        .select(physCols.map(c => xxhash64(col(c))): _*).collect()
+      assert(hashes.length == e.phys)
+      physCols.zipWithIndex.foreach { case (c, j) =>
+        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          Files.readAllBytes(java.nio.file.Paths.get(
+            VersionedTable.poolFilePath(path, e.bloom(c)))))
+        assert(hashes.forall(r => bf.mightContainLong(r.getLong(j))),
+          s"${e.name}: sidecar for $c misses a key of its own file")
+      }
+    }
+
+  private def newEntries(path: String, v0: Int, v1: Int) = {
+    val old = VersionedTable.manifestEntries(path, v0).map(_.name).toSet
+    VersionedTable.manifestEntries(path, v1).filterNot(e => old(e.name))
+  }
+
+  test("in-write sidecars admit every key of their own file: long and " +
+    "string keys, null keys, a renamed column, a partitioned write") {
+    val path = freshPath
+    def batch(lo: Long, hi: Long) = spark.range(lo, hi, 1, 3).select(
+      when(col("id") % 50 === 7, lit(null)).otherwise(col("id")).as("k"),
+      when(col("id") % 40 === 3, lit(null))
+        .otherwise(concat(lit("doc-"), col("id").cast("string"))).as("s"),
+      (col("id") % 3).as("p"))
+    VersionedTable.write(batch(0, 10), path)
+    VersionedTable.setTableProperties(path,
+      Map(VersionedTable.bloomColumnsProp -> "k,s"))
+    val v0 = VersionedTable.latestVersion(path).get
+    val v1 = VersionedTable.append(spark, batch(1000, 4000), path,
+      partitionBy = Seq("p"))
+    val parted = newEntries(path, v0, v1)
+    // one sidecar per (partition file, column)
+    assert(parted.size >= 3 && parted.forall(_.part.contains("p")))
+    assert(parted.flatMap(_.bloom.values).distinct.size == 2 * parted.size)
+    admitsOwnKeys(path, parted, Seq("k", "s"))
+    // renamed: the index follows the PHYSICAL name `s`
+    VersionedTable.renameColumn(spark, path, "s", "doc")
+    val v2 = VersionedTable.latestVersion(path).get
+    val v3 = VersionedTable.append(spark,
+      batch(5000, 6000).withColumnRenamed("s", "doc"), path)
+    val renamed = newEntries(path, v2, v3)
+    assert(renamed.nonEmpty && renamed.forall(_.bloom.keySet == Set("k", "s")))
+    admitsOwnKeys(path, renamed, Seq("k", "s"))
+    assert(VersionedTable.readEqual(spark, path, "doc", "doc-5432")
+      .count() == 1)
+    assert(VersionedTable.prunedBloomEntries(spark, path, v3, "doc",
+      Seq("doc-5432")).size < VersionedTable.manifestEntries(path, v3).size)
+  }
+
+  test("a file alone in its size class gets the sidecar bytes the " +
+    "backfill's BloomFilterAggregate builds over it") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graft.GraftBridge
+    val path = freshPath
+    indexed(path)
+    val v0 = VersionedTable.latestVersion(path).get
+    val v1 = VersionedTable.append(spark, spark.range(5000, 5777, 1, 1)
+      .select(col("id").as("k"), (col("id") % 97).as("v")), path)
+    val Seq(e) = newEntries(path, v0, v1)
+    val items = math.max(1L, math.min(e.phys, 4000000L))
+    val bits = math.min(org.apache.spark.util.sketch.BloomFilter
+      .optimalNumOfBits(items, 0.03), 1L << 26)
+    val agg = GraftBridge.column(new BloomFilterAggregate(
+      GraftBridge.expression(xxhash64(col("k"))), Literal(items),
+      Literal(bits)).toAggregateExpression())
+    val want = spark.read.parquet(VersionedTable.poolFilePath(path, e.name))
+      .agg(agg).head.getAs[Array[Byte]](0)
+    val got = Files.readAllBytes(java.nio.file.Paths.get(
+      VersionedTable.poolFilePath(path, e.bloom("k"))))
+    assert(got.sameElements(want))
+  }
+
+  test("a CHECK-violating append to a bloom-indexed table leaves no " +
+    "sidecar in the pool and commits nothing") {
+    val path = freshPath
+    VersionedTable.write(scattered, path)
+    VersionedTable.setTableProperties(path,
+      Map(VersionedTable.bloomColumnsProp -> "k"))
+    VersionedTable.addConstraint(spark, path, "small_k", "k < 100000")
+    val v = VersionedTable.latestVersion(path).get
+    intercept[ConstraintViolationException] {
+      VersionedTable.append(spark, spark.range(99990, 100010, 1, 2)
+        .select(col("id").as("k"), (col("id") % 97).as("v")), path)
+    }
+    assert(VersionedTable.latestVersion(path).contains(v))
+    val pool = new java.io.File(path, "_graft_pool").listFiles().map(_.getName)
+    assert(!pool.exists(_.endsWith(".bloom")), pool.mkString(", "))
+    assert(pool.toSet == VersionedTable.manifestEntries(path, v).map(_.name).toSet)
+  }
 }

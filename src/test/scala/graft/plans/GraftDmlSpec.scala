@@ -154,6 +154,9 @@ class GraftDmlSpec extends SparkSpec {
     withCatalog {
       val path = s"$fresh/t"
       mk(path, n = 10)
+      val pool = java.nio.file.Paths.get(path, "_graft_pool").toFile
+      val v = VersionedTable.latestVersion(path)
+      val files = pool.list().toSet
       spark.sql("""
         SELECT * FROM VALUES (1L, 1.0), (1L, 2.0) AS s(k, delta)""")
         .createOrReplaceTempView("dml_dup")
@@ -163,6 +166,20 @@ class GraftDmlSpec extends SparkSpec {
           WHEN MATCHED THEN UPDATE SET amt = s.delta""")
       }
       assert(e.getMessage.contains("multiple source rows"))
+      // the guard runs on the write job and aborts before the log
+      // append: no commit, and the staged files are gone from the pool
+      assert(VersionedTable.latestVersion(path) == v)
+      assert(pool.list().toSet == files)
+      // unique source keys under a non-equi ON still merge
+      spark.sql("""
+        SELECT * FROM VALUES (1L, 1.0), (2L, -2.0) AS s(k, delta)""")
+        .createOrReplaceTempView("dml_uniq")
+      spark.sql(s"""
+        MERGE INTO graft.`$path` t USING dml_uniq s
+        ON t.k = s.k AND s.delta > 0
+        WHEN MATCHED THEN UPDATE SET amt = s.delta""")
+      assert(rows(path).filter(r => r._1 <= 2).map(_._3) ==
+        Seq(0.0, 1.0, 20.0))
     }
   }
 
