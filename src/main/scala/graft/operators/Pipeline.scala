@@ -1,7 +1,13 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.operators.Materialize.Pinnable
 
@@ -201,7 +207,113 @@ object Pipeline {
         col("r.failed_records"))
   }
 
-  /** One micro-batch through the stage chain. Exactly-once per stage
+  /** What each stage's commit waits for in one micro-batch of
+    * [[incrementalBatch]]: the indices of the earlier stages whose
+    * commits must have landed before it starts. A commit starts as
+    * soon as what it reads exists:
+    *  - an incremental stage reads only the batch flow, so it waits
+    *    for nothing;
+    *  - a recompute stage reads its upstream's committed table, so it
+    *    waits for that commit, and so does every incremental stage
+    *    whose flow passes through it;
+    *  - every stage after a FAIL-mode stage waits for that stage's
+    *    commit, which is where its counters pass.
+    * Waiting is transitive, so only the nearest of each is listed. */
+  private[operators] def commitWaits(stages: Seq[Stage]): Seq[Set[Int]] = {
+    stages.headOption.foreach(h => require(!h.recompute,
+      s"recompute stage ${h.name} needs an upstream stage"))
+    stages.indices.map { i =>
+      val reads = stages.lastIndexWhere(_.recompute, i) - 1
+      val fail = stages.lastIndexWhere(_.onViolation == OnViolation.Fail,
+        i - 1)
+      Set(reads, fail).filter(_ >= 0)
+    }
+  }
+
+  /** Runs `commit(i)` for every index in `todo`, each on a thread of
+    * its own that carries `spark` as its active session and runs under
+    * the Spark job description `desc(i)` (also the thread's name). A
+    * commit starts once every commit in `waits(i)` has succeeded
+    * (indices outside `todo` count as committed); one whose waits
+    * failed never starts. The calling thread starts every thread, so
+    * each inherits the caller's Spark local properties (job group,
+    * scheduler pool, any tag a tracer set). Commits that run together
+    * begin in index order: commit i starts once commit i−1, if it
+    * runs, has started its first Spark job or ended, so a batch's jobs
+    * start stage by stage in the UI and the event log.
+    *
+    * Returns once every started commit has ended, then rethrows the
+    * failure of the lowest failing index (later ones suppressed). An
+    * interrupt starts no further commit and is rethrown once the
+    * running ones have ended: a commit is never cut off between its
+    * data files and its log append. */
+  private def commitGraph(spark: SparkSession, waits: Seq[Set[Int]],
+                          todo: Seq[Int], desc: Int => String)
+                         (commit: Int => Unit): Unit = {
+    val firstJob = waits.indices.map(i =>
+      new CountDownLatch(if (todo.contains(i)) 1 else 0))
+    val byDesc = todo.map(i => desc(i) -> i).toMap
+    val jobStarts = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(JobDescription)))
+          .flatMap(byDesc.get).foreach(firstJob(_).countDown())
+    }
+    val ended = new LinkedBlockingQueue[(Int, Option[Throwable])]()
+    var done = waits.indices.toSet -- todo
+    var waiting = todo
+    var running = 0
+    val threads = mutable.ArrayBuffer.empty[Thread]
+    val failures = mutable.TreeMap.empty[Int, Throwable]
+    var interrupt: Option[InterruptedException] = None
+    def startReady(): Unit = if (interrupt.isEmpty) {
+      val (ready, rest) = waiting.partition(i => waits(i).subsetOf(done))
+      waiting = rest
+      ready.foreach { i =>
+        val t = new Thread(() => {
+          val failure =
+            try {
+              if (i > 0) firstJob(i - 1).await()
+              SparkSession.setActiveSession(spark)
+              described(spark, desc(i))(commit(i))
+              None
+            } catch { case e: Throwable => Some(e) }
+            finally firstJob(i).countDown()
+          ended.put(i -> failure)
+        }, desc(i))
+        t.setDaemon(true)
+        try { t.start(); threads += t; running += 1 }
+        catch { case e: Throwable => failures(i) = e; firstJob(i).countDown() }
+      }
+    }
+    spark.sparkContext.addSparkListener(jobStarts)
+    try {
+      startReady()
+      while (running > 0)
+        try {
+          val (i, failure) = ended.take()
+          running -= 1
+          failure.fold(done += i)(e => failures(i) = e)
+          startReady()
+        } catch {
+          case e: InterruptedException => interrupt = interrupt.orElse(Some(e))
+        }
+      threads.foreach { t =>
+        while (t.isAlive)
+          try t.join()
+          catch {
+            case e: InterruptedException =>
+              interrupt = interrupt.orElse(Some(e))
+          }
+      }
+    } finally spark.sparkContext.removeSparkListener(jobStarts)
+    interrupt.foreach(throw _)
+    failures.headOption.foreach { case (_, first) =>
+      failures.values.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  /** One micro-batch through the stage graph. Exactly-once per stage
     * via a batch-id marker in the stage table's commit log (a retried
     * batch id is a no-op — `foreachBatch`'s at-least-once delivery
     * becomes exactly-once tables, the [[graft.streaming.Streams
@@ -209,8 +321,25 @@ object Pipeline {
     * in that same commit, so they count once too. Stage i+1 consumes
     * stage i's BATCH output (the incremental flow), never a re-read of
     * the whole table. Each stage commit is one exchange plus one write
-    * (plus a touch scan once its table has several files). Public so
-    * specs can drive retry semantics directly. */
+    * (plus a touch scan once its table has several files).
+    *
+    * Commit order: each stage's commit runs on a thread of its own
+    * (carrying the caller's session and Spark local properties) and
+    * starts as soon as what it reads exists ([[commitWaits]]):
+    * incremental stages at once, a recompute stage after its upstream
+    * committed, anything after a FAIL-mode stage once that stage's
+    * counters passed. Commits to different tables are independent:
+    * each table has its own log. So bronze and silver of a bronze →
+    * silver → gold (recompute) graph commit together, and gold after
+    * silver.
+    *
+    * Failure: the call returns after every commit it started has
+    * ended, and rethrows the failure of the earliest failing stage. A
+    * commit that waits for a failed one never starts, but a sibling
+    * that waits for nothing may land before or after the failing one.
+    * A retry of the batch id converges through the per-stage markers:
+    * it commits only the stages without one. Public so specs can
+    * drive retry semantics directly. */
   def incrementalBatch(stages: Seq[Stage], storageDir: String, key: String,
                        orderCol: String, tieBreaker: String)
                       (batch: DataFrame, batchId: Long): Unit = {
@@ -218,45 +347,72 @@ object Pipeline {
     // stage frame is built on it, so the commit's actions run there
     // and complete the observation registered on it
     val spark = batch.sparkSession
-    var cur = batch
-    var prevPath: Option[String] = None
-    stages.zipWithIndex.foreach { case (st, i) =>
-      val path = s"$storageDir/${st.name}"
-      val marker = s"PIPELINE_INC[${st.name},batch=$batchId]"
-      // COMPLETE-mode stages read the upstream MERGED table (which
-      // already contains this batch — it committed earlier in this
-      // loop); incremental stages consume the batch flow
-      val input =
-        if (st.recompute) {
-          require(prevPath.nonEmpty,
-            s"recompute stage ${st.name} needs an upstream stage")
-          VersionedTable.read(spark, prevPath.get)
-        } else cur
-      val candidate = st.transform(input)
-      // the marker guards the commit, not the dataflow: a retried
-      // batch still flows downstream so later stages whose commit DID
-      // fail can catch up
-      if (!VersionedTable.operations(path).contains(marker))
-        described(spark, s"graft pipeline ${st.name} batch $batchId") {
-          val c = new StageCommit(st, i, Some(batchId), candidate)
-          if (st.recompute)
-            VersionedTable.write(c.out, path, operation = marker,
-              expectations = c.counters)
-          else {
-            val (k, o, t) = st.merge.getOrElse((key, orderCol, tieBreaker))
-            VersionedTable.upsertLatest(spark, path, c.out, k, o, t,
-              operation = marker, expectations = c.counters)
-          }
-        }
-      cur = st.kept(candidate)
-      prevPath = Some(path)
+    val waits = commitWaits(stages)
+    val paths = stages.map(st => s"$storageDir/${st.name}")
+    def marker(i: Int) = s"PIPELINE_INC[${stages(i).name},batch=$batchId]"
+    // the batch flow, built by the first commit that needs it: a
+    // recompute stage reads its upstream's MERGED table, which holds
+    // this batch by then (every reader waits for that commit)
+    val flows = new Array[BatchFlow](stages.size)
+    stages.indices.foreach { i =>
+      flows(i) = new BatchFlow(stages(i),
+        if (stages(i).recompute) VersionedTable.read(spark, paths(i - 1))
+        else if (i == 0) batch
+        else flows(i - 1).out)
+    }
+    // the marker guards the commit, not the dataflow: a retried batch
+    // still flows downstream so later stages whose commit DID fail can
+    // catch up
+    val todo = stages.indices.filterNot(i =>
+      VersionedTable.operations(paths(i)).contains(marker(i)))
+    commitGraph(spark, waits, todo,
+        i => s"graft pipeline ${stages(i).name} batch $batchId") { i =>
+      val st = stages(i)
+      val c = new StageCommit(st, i, Some(batchId), flows(i).candidate)
+      if (st.recompute)
+        VersionedTable.write(c.out, paths(i), operation = marker(i),
+          expectations = c.counters)
+      else {
+        val (k, o, t) = st.merge.getOrElse((key, orderCol, tieBreaker))
+        VersionedTable.upsertLatest(spark, paths(i), c.out, k, o, t,
+          operation = marker(i), expectations = c.counters)
+      }
     }
   }
+
+  /** A stage's candidate rows in one micro-batch and the rows it passes
+    * on, built once, by whichever commit first needs them. */
+  private final class BatchFlow(st: Stage, input: => DataFrame) {
+    lazy val candidate: DataFrame = st.transform(input)
+    lazy val out: DataFrame = st.kept(candidate)
+  }
+
+  /** Waits up to `timeoutMs` for a pipeline query to drain. On timeout
+    * it stops the query and throws, so the caller never vacuums or
+    * reads stage tables the query is still committing to. */
+  private def awaitDrained(q: StreamingQuery, timeoutMs: Long,
+                           checkpoint: String): Unit =
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"pipeline refresh on checkpoint $checkpoint did not finish " +
+          s"within $timeoutMs ms; its query was stopped")
+    }
 
   /** Run the stage chain incrementally over a file-source stream
     * rooted at `srcPath` (AvailableNow: drain everything new, then
     * stop). Re-running with the same checkpoint processes only files
-    * added since the last run — the INCREMENTAL refresh. */
+    * added since the last run — the INCREMENTAL refresh.
+    *
+    * Each micro-batch goes through [[incrementalBatch]]: a stage's
+    * commit starts as soon as what it reads exists (incremental stages
+    * at once, a recompute stage after its upstream, anything after a
+    * FAIL-mode stage once that stage passed), and the batch ends when
+    * every commit it started has. A failing commit fails the query
+    * after its running siblings end; a sibling may have landed, and
+    * the re-run of that batch commits only the stages without a
+    * marker. A refresh that has not drained within `timeoutMs` is
+    * stopped and throws a `TimeoutException` naming `checkpoint`. */
   def runIncremental(spark: SparkSession, srcPath: String,
                      schema: StructType, payloadCols: Seq[String],
                      stages: Seq[Stage], storageDir: String,
@@ -281,7 +437,7 @@ object Pipeline {
         incrementalBatch(stages, storageDir, key, orderCol, tieBreaker) _)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination(timeoutMs)
+    awaitDrained(q, timeoutMs, checkpoint)
     if (retainVersions > 0)
       stages.foreach(st =>
         VersionedTable.vacuum(s"$storageDir/${st.name}", retainVersions))
@@ -419,7 +575,9 @@ object Pipeline {
     * the DONE cursor — commits landed while the pipeline was down flow
     * on restart, and a redelivered notification re-applies nothing.
     * Bronze is consumed as DELTAS, never re-snapshotted: at 100 TB the
-    * silver refresh costs what changed. */
+    * silver refresh costs what changed. A run that has not drained
+    * within `timeoutMs` is stopped and throws a `TimeoutException`
+    * naming `checkpoint`. */
   def runIncrementalCdf(spark: SparkSession, bronzePath: String,
                         stages: Seq[Stage], storageDir: String,
                         checkpoint: String, key: String, orderCol: String,
@@ -438,7 +596,7 @@ object Pipeline {
           orderCol, tieBreaker) _)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination(timeoutMs)
+    awaitDrained(q, timeoutMs, checkpoint)
     val tables = stages.map(st =>
       st.name -> VersionedTable.read(spark, s"$storageDir/${st.name}")).toMap
     RunResult(tables, incrementalEventLog(spark, storageDir))

@@ -347,6 +347,169 @@ class PipelineSpec extends SparkSpec {
       s"batch 1 logged $rows counter rows")
   }
 
+  // ------------------------------------------------------------------
+  // concurrent stage commits
+  // ------------------------------------------------------------------
+
+  test("commit graph: bronze and silver start at once, gold (recompute) " +
+    "after silver") {
+    assert(Pipeline.commitWaits(Seq(
+      Pipeline.Stage("bronze", identity),
+      eventSilver,
+      Pipeline.Stage("gold", identity, recompute = true))) ==
+      Seq(Set(), Set(), Set(1)))
+  }
+
+  test("commit graph: a stage after a FAIL-mode stage waits for it") {
+    val strict = Pipeline.Stage("bronze", identity,
+      Seq(Expectation("value non-negative", "value >= 0")),
+      Pipeline.OnViolation.Fail)
+    assert(Pipeline.commitWaits(Seq(strict,
+      Pipeline.Stage("silver", identity))) == Seq(Set(), Set(0)))
+    // transitively through a later stage: only the nearest is listed
+    assert(Pipeline.commitWaits(Seq(strict, strict.copy(name = "silver"),
+      Pipeline.Stage("gold", identity))) == Seq(Set(), Set(0), Set(1)))
+  }
+
+  test("commit graph: an incremental stage after a recompute stage waits " +
+    "for the table the recompute stage reads") {
+    assert(Pipeline.commitWaits(Seq(
+      Pipeline.Stage("bronze", identity),
+      Pipeline.Stage("gold", identity, recompute = true),
+      Pipeline.Stage("report", identity))) == Seq(Set(), Set(0), Set(0)))
+  }
+
+  test("commit graph: a single stage waits for nothing; a leading " +
+    "recompute stage is refused") {
+    assert(Pipeline.commitWaits(Seq(Pipeline.Stage("bronze", identity))) ==
+      Seq(Set()))
+    intercept[IllegalArgumentException] {
+      Pipeline.commitWaits(Seq(Pipeline.Stage("gold", identity,
+        recompute = true)))
+    }
+  }
+
+  /** Live threads running a commit of batch `batchId`. */
+  private def commitThreads(batchId: Long): Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq.filter(t =>
+      t.isAlive && t.getName.matches(s"graft pipeline \\w+ batch $batchId"))
+  }
+
+  test("a FAIL violation upstream leaves the stage after it without a " +
+    "new version") {
+    val store = freshDir
+    val stages = Seq(
+      Pipeline.Stage("bronze", identity,
+        Seq(Expectation("value non-negative", "value >= 0")),
+        Pipeline.OnViolation.Fail),
+      Pipeline.Stage("silver", identity))
+    def run(b: org.apache.spark.sql.DataFrame, id: Long) =
+      Pipeline.incrementalBatch(stages, store, "event_id", "ts",
+        "event_id")(b, id)
+    run(batchOf(0, 300).filter(col("value") >= 0), 0L)
+    intercept[ExpectationViolation] {
+      run(batchOf(300, 600).withColumn("value", -col("value") - 1), 1L)
+    }
+    assert(VersionedTable.versions(s"$store/bronze") == Seq(0))
+    assert(VersionedTable.versions(s"$store/silver") == Seq(0))
+    assert(commitThreads(1L).isEmpty)
+  }
+
+  test("a CHECK violation on silver throws after bronze has committed, " +
+    "and a retry commits silver and gold only, logging counters once") {
+    val store = freshDir
+    // bronze's expectation sleeps per row, so bronze's commit outlasts
+    // silver's failing one and the throw has to wait for it
+    spark.udf.register("graft_spec_slow_true",
+      (_: Long) => { Thread.sleep(3); true })
+    val slow = "bronze is slow"
+    val stages = Seq(
+      Pipeline.Stage("bronze", identity,
+        Seq(Expectation(slow, "graft_spec_slow_true(event_id)"))),
+      eventSilver,
+      Pipeline.Stage("gold",
+        df => df.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+        recompute = true))
+    def run(id: Long) = Pipeline.incrementalBatch(stages, store, "event_id",
+      "ts", "event_id")(batchOf(id * 300, id * 300 + 300), id)
+    run(0L)
+    VersionedTable.addConstraint(spark, s"$store/silver", "early ids",
+      "event_id < 300")
+    val silverBefore = VersionedTable.versions(s"$store/silver")
+    intercept[ConstraintViolationException](run(1L))
+    // the call waited for bronze's commit: it has landed, and no
+    // commit thread of the batch outlives the call
+    assert(VersionedTable.operations(s"$store/bronze")
+      .contains("PIPELINE_INC[bronze,batch=1]"))
+    assert(commitThreads(1L).isEmpty)
+    assert(VersionedTable.versions(s"$store/silver") == silverBefore)
+    assert(VersionedTable.versions(s"$store/gold") == Seq(0))
+    VersionedTable.dropConstraint(s"$store/silver", "early ids")
+    val bronzeBefore = VersionedTable.versions(s"$store/bronze")
+    val silverMid = VersionedTable.versions(s"$store/silver")
+    run(1L)
+    assert(VersionedTable.versions(s"$store/bronze") == bronzeBefore)
+    assert(VersionedTable.versions(s"$store/silver").size ==
+      silverMid.size + 1)
+    assert(VersionedTable.versions(s"$store/gold") == Seq(0, 1))
+    assert(loggedCounters(store, 1L) - slow ==
+      exactCounters(batchOf(300, 600), Expectations.EventSuite))
+    val rows = Pipeline.incrementalEventLog(spark, store)
+      .filter(col("batch_id") === 1L && col("flow_name") === "silver").count()
+    assert(rows == Expectations.EventSuite.size)
+    // gold reflects silver after the retry
+    assert(VersionedTable.read(spark, s"$store/gold").agg(sum("n"))
+      .head().getLong(0) == VersionedTable.read(spark, s"$store/silver")
+      .count())
+  }
+
+  test("every job of a micro-batch carries the caller's local properties") {
+    val store = freshDir
+    val stages = Seq(
+      Pipeline.Stage("bronze", identity),
+      eventSilver,
+      Pipeline.Stage("gold",
+        df => df.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+        recompute = true))
+    val batches = (0 to 1).map(b => batchOf(b * 300L, b * 300L + 400))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.tag", "caller")
+    try withListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          seen.add((e.properties.getProperty("spark.job.description", ""),
+            e.properties.getProperty("graft.spec.tag", "")))
+      }) {
+        batches.zipWithIndex.foreach { case (b, i) =>
+          Pipeline.incrementalBatch(stages, store, "event_id", "ts",
+            "event_id")(b, i.toLong)
+        }
+      }
+    finally sc.setLocalProperty("graft.spec.tag", null)
+    import scala.jdk.CollectionConverters._
+    val jobs = seen.asScala.toSeq
+    assert(jobs.collect { case (d, _) if d.startsWith("graft pipeline") =>
+      d.split(" ")(2) }.distinct.sorted == Seq("bronze", "gold", "silver"))
+    assert(jobs.forall(_._2 == "caller"), jobs)
+  }
+
+  test("a refresh that times out stops its query and names the checkpoint") {
+    val src = freshDir
+    val store = freshDir
+    val ckpt = freshDir
+    incEvents.repartition(3).write.mode("append").json(src)
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      Pipeline.runIncremental(spark, src, incSchema, incCols,
+        Seq(Pipeline.Stage("bronze", identity), eventSilver), store, ckpt,
+        key = "event_id", orderCol = "ts", tieBreaker = "event_id",
+        timeoutMs = 1)
+    }
+    assert(e.getMessage.contains(ckpt))
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("repeated keys and several NULL-key rows in one batch commit the " +
     "latest row per key and the latest NULL-key row") {
     import spark.implicits._
