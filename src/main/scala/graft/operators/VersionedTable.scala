@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, StructField, StructType}
+import org.apache.spark.sql.graft.GraftBridge
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.operators.Materialize.Pinnable
@@ -1086,8 +1087,11 @@ object VersionedTable {
       col(props.phys(f.name)).as(f.name))
     val outCols = renameCols ++
       (if (lineage) Seq(col("_graft_file"), col("_graft_pos")) else Nil)
-    def scan(es: Seq[FileEntry]) = spark.read.schema(physSchema)
-      .parquet(es.map(e => resolveOrFail(path, e.name, v)): _*)
+    // each file is resolved from the manifest (a vacuumed one fails
+    // here), so Spark's own existence check is skipped
+    def files(es: Seq[FileEntry]) = GraftBridge.parquetFiles(spark,
+      physSchema, es.map(e => resolveOrFail(path, e.name, v)))
+    def scan(es: Seq[FileEntry]) = files(es)
       .withColumn("_graft_file",
         substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("_graft_pos", col("_metadata.row_index"))
@@ -1103,8 +1107,7 @@ object VersionedTable {
         if (plain.isEmpty) None
         else if (lineage) Some(scan(plain).select(outCols: _*))
         else {
-          val raw = spark.read.schema(physSchema)
-            .parquet(plain.map(e => resolveOrFail(path, e.name, v)): _*)
+          val raw = files(plain)
           Some(if (props.colmap.isEmpty) raw
                else raw.select(renameCols: _*))
         }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graft.GraftBridge
@@ -305,6 +306,13 @@ private[sources] class GraftScanBuilder(snap: VersionedTable.Snapshot,
       skipChangeCommits, maxVersionsPerTrigger, maxFilesPerTrigger)
 }
 
+/** One pushed-down read of a pinned snapshot. Spark keeps this object
+  * across every physical copy of the scan and every adaptive re-plan,
+  * so the scan owns what those copies would otherwise rebuild: the
+  * pruned manifest entries, the packed scan tasks (both dropped when
+  * runtime filters arrive) and one reader factory for its lifetime
+  * (runtime filters never change how a file is read, only which files
+  * are planned). */
 private[sources] class GraftScan(snap: VersionedTable.Snapshot,
                                  required: StructType,
                                  filters: Array[Filter],
@@ -340,7 +348,9 @@ private[sources] class GraftScan(snap: VersionedTable.Snapshot,
 
   override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters
-    prunedCache = None // re-prune with the runtime predicates folded in
+    // re-prune and re-pack with the runtime predicates folded in
+    prunedCache = None
+    partitionsCache = None
   }
 
   /** Manifest entries surviving pushed-filter pruning — shared by
@@ -423,15 +433,33 @@ private[sources] class GraftScan(snap: VersionedTable.Snapshot,
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    GraftReaderFactory.partitions(snap.path, prunedEntries,
-      splitAndPack = true, spark = spark)
-  }
+  /** Packed scan tasks over [[prunedEntries]], kept and dropped with
+    * it: every physical copy of this scan plans the same tasks. */
+  private var partitionsCache: Option[Array[InputPartition]] = None
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def planInputPartitions(): Array[InputPartition] =
+    partitionsCache.getOrElse {
+      val p = GraftReaderFactory.partitions(snap.path, prunedEntries,
+        splitAndPack = true, spark = SparkSession.active)
+      partitionsCache = Some(p)
+      p
+    }
+
+  /** Spark asks for a factory on every physical copy of the scan
+    * (initial planning, the columnar check, each adaptive re-plan).
+    * The factory depends only on the snapshot, the read schema and the
+    * static pushed filters, so every copy shares this one. The
+    * deletion-vector readers are built only when a snapshot entry
+    * carries a DV. */
+  private lazy val readerFactory: GraftReaderFactory =
     GraftReaderFactory.build(snap, required,
-      filters.toIndexedSeq.flatMap(f => physFilter(f, snap.props.phys)))
+      filters.toIndexedSeq.flatMap(f => physFilter(f, snap.props.phys)),
+      dvReaders = snap.entries.exists(_.dv.isDefined))
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new GraftSlicesOpened)
 }
 
 /** One byte-range of one data file. `start == 0 && length == fileSize`
@@ -446,13 +474,27 @@ private[sources] case class GraftFileSlice(
 private[sources] case class GraftInputPartition(
     slices: Seq[GraftFileSlice]) extends InputPartition
 
-private[sources] object GraftReaderFactory {
-  /** Data-file slices actually OPENED by readers in this JVM — a
-    * local-mode observability hook the runtime-filtering spec uses to
-    * prove dynamic pruning skipped files (driver and executors share
-    * the JVM under local[*]). */
-  val slicesOpened = new java.util.concurrent.atomic.AtomicLong()
+/** `slices_opened` on a graft scan node: the data-file slices its
+  * readers opened, summed over tasks — what runtime filtering and file
+  * skipping left to read. Spark instantiates it by class name on the
+  * driver to aggregate task values. */
+private[sources] class GraftSlicesOpened extends CustomSumMetric {
+  override def name(): String = GraftSlicesOpened.Name
+  override def description(): String = "data file slices opened"
+}
 
+private[sources] object GraftSlicesOpened {
+  val Name = "slices_opened"
+
+  /** One reader's running count, reported as its task value. */
+  final class Count extends CustomTaskMetric {
+    var n = 0L
+    override def name(): String = Name
+    override def value(): Long = n
+  }
+}
+
+private[sources] object GraftReaderFactory {
   val dvSchema: StructType = StructType(Seq(
     org.apache.spark.sql.types.StructField("file",
       org.apache.spark.sql.types.StringType),
@@ -461,13 +503,19 @@ private[sources] object GraftReaderFactory {
 
   /** Build the per-file reader functions on the DRIVER (Spark's own
     * vectorized parquet reader; see [[GraftBridge.parquetReadFunc]]).
+    * Each reader function copies and broadcasts the Hadoop conf, so a
+    * scan builds its factory once and shares it across its physical
+    * copies and micro-batches ([[GraftScan]], [[GraftMicroBatchStream]]).
     * Clean files take the pushed parquet predicate (free row-group
     * skipping); DV files take NO predicate — rows must arrive in file
     * order so `running count == row position` holds for the
-    * deletion-vector skip. Schemas translate logical→physical under
-    * the version's column mapping. */
+    * deletion-vector skip. The two DV readers are built only with
+    * `dvReaders`; a factory without them fails on a DV-carrying file.
+    * Schemas translate logical→physical under the version's column
+    * mapping. */
   def build(snap: VersionedTable.Snapshot, required: StructType,
-            physFilters: Seq[Filter]): GraftReaderFactory = {
+            physFilters: Seq[Filter],
+            dvReaders: Boolean): GraftReaderFactory = {
     val spark = SparkSession.active
     def physS(s: StructType) =
       StructType(s.fields.map(f => f.copy(name = snap.props.phys(f.name))))
@@ -475,11 +523,10 @@ private[sources] object GraftReaderFactory {
     val physReq = physS(required)
     val cleanReader = GraftBridge.parquetReadFunc(
       spark, physFull, physReq, physFilters)
-    val dvDataReader = GraftBridge.parquetReadFunc(
-      spark, physFull, physReq, Nil)
-    val dvSidecarReader = GraftBridge.parquetReadFunc(
-      spark, dvSchema, dvSchema, Nil)
-    new GraftReaderFactory(cleanReader, dvDataReader, dvSidecarReader)
+    val dv = Option.when(dvReaders)((
+      GraftBridge.parquetReadFunc(spark, physFull, physReq, Nil),
+      GraftBridge.parquetReadFunc(spark, dvSchema, dvSchema, Nil)))
+    new GraftReaderFactory(cleanReader, dv)
   }
 
   /** Plan scan tasks from manifest entries with FileSourceScanExec's
@@ -540,17 +587,21 @@ private[sources] object GraftReaderFactory {
   }
 }
 
+/** `dvReaders` holds the (data, sidecar) readers for DV-carrying
+  * files; None when the scan cannot meet one. */
 private[sources] class GraftReaderFactory(
     cleanReader: PartitionedFile => Iterator[InternalRow],
-    dvDataReader: PartitionedFile => Iterator[InternalRow],
-    dvSidecarReader: PartitionedFile => Iterator[InternalRow])
+    dvReaders: Option[(PartitionedFile => Iterator[InternalRow],
+      PartitionedFile => Iterator[InternalRow])])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
+    val opened = new GraftSlicesOpened.Count
+    val metrics = Array[CustomTaskMetric](opened)
     def sliceRows(sl: GraftFileSlice): Iterator[InternalRow] = {
-      GraftReaderFactory.slicesOpened.incrementAndGet()
+      opened.n += 1
       sliceRows0(sl)
     }
     def sliceRows0(sl: GraftFileSlice): Iterator[InternalRow] = sl.dv match {
@@ -559,6 +610,10 @@ private[sources] class GraftReaderFactory(
           GraftBridge.rangeFile(sl.absPath, sl.start, sl.length,
             sl.fileSize))
       case Some((dvPath, dvLen)) =>
+        val (dvDataReader, dvSidecarReader) = dvReaders.getOrElse(
+          throw new IllegalStateException(
+            s"graft: DV-carrying file ${sl.fileName} reached a reader " +
+              "factory built without deletion-vector readers"))
         // the sidecar holds THIS file's deleted positions (plus,
         // after folds, possibly other files' — filter by name).
         // DV slices are always whole files: position = running count
@@ -581,6 +636,7 @@ private[sources] class GraftReaderFactory(
         if (rows.hasNext) { cur = rows.next(); true } else false
       }
       override def get(): InternalRow = cur
+      override def currentMetricsValues(): Array[CustomTaskMetric] = metrics
       override def close(): Unit = () // reader closes on task completion
     }
   }
@@ -602,7 +658,8 @@ private[sources] case class GraftOffset(version: Int)
   * stream already emitted, and silently re-reading them would
   * duplicate. The read schema is pinned at stream start: physical
   * names are stable under renames, later-evolved columns read as
-  * null-absent, exactly the batch connector's contract. */
+  * null-absent, exactly the batch connector's contract. The stream
+  * builds its reader factory once and every micro-batch shares it. */
 private[sources] class GraftMicroBatchStream(snap: VersionedTable.Snapshot,
                                              required: StructType,
                                              skipChangeCommits: Boolean,
@@ -704,8 +761,14 @@ private[sources] class GraftMicroBatchStream(snap: VersionedTable.Snapshot,
     GraftReaderFactory.partitions(path, entries)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory.build(snap, required, Nil)
+  /** One reader factory per stream, not per micro-batch. It keeps the
+    * deletion-vector readers whatever the load-time snapshot holds:
+    * the first batch reads the snapshot at the first trigger's version,
+    * which a merge-on-read DELETE may have reached in between. */
+  private lazy val readerFactory: GraftReaderFactory =
+    GraftReaderFactory.build(snap, required, Nil, dvReaders = true)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def commit(end: Offset): Unit = ()
 

@@ -90,6 +90,20 @@ object GraftBridge {
         cs.sessionState.newHadoopConf())
   }
 
+  /** `spark.read.schema(schema).parquet(paths: _*)` without Spark's
+    * path-existence check (a fresh thread pool per read), for files the
+    * caller has already resolved. */
+  def parquetFiles(spark: SparkSession,
+                   schema: org.apache.spark.sql.types.StructType,
+                   paths: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    cs.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.DataSource(cs,
+        className = "parquet", paths = paths,
+        userSpecifiedSchema = Some(schema))
+        .resolveRelation(checkFilesExist = false))
+  }
+
   /** A [[org.apache.spark.sql.execution.datasources.PartitionedFile]]
     * covering one whole local file (no split, no partition values). */
   def wholeFile(absPath: String, length: Long)

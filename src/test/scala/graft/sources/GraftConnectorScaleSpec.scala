@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,7 +15,8 @@ import graft.operators.VersionedTable
   * (split large files, bin-pack small ones), streaming rate limiting,
   * catalog CTAS with PARTITIONED BY + TBLPROPERTIES, and the
   * mid-stream DV-delete change detection. */
-class GraftConnectorScaleSpec extends SparkSpec {
+class GraftConnectorScaleSpec extends SparkSpec
+    with AdaptiveSparkPlanHelper {
 
   private def fresh = Files.createTempDirectory("graft_scale").toString
 
@@ -166,12 +169,16 @@ class GraftConnectorScaleSpec extends SparkSpec {
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val fact = spark.read.format("graft").load(path)
-      val before = GraftReaderFactory.slicesOpened.get()
-      val got = fact.join(dim, "p").agg(count(lit(1)), sum("k")).head
-      val opened = GraftReaderFactory.slicesOpened.get() - before
+      val q = fact.join(dim, "p").agg(count(lit(1)), sum("k"))
+      val got = q.collect().head
+      val scans = collect(q.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }
+      assert(scans.size == 1, s"one graft scan node, got $scans")
+      val opened = scans.head.metrics(GraftSlicesOpened.Name).value
       assert(got.getLong(0) == 1000)
       assert(got.getLong(1) == (0L until 8000L).filter(_ % 8 == 3).sum)
-      assert(opened < total,
+      assert(opened > 0 && opened < total,
         s"runtime filter should prune: opened $opened of $total files")
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
