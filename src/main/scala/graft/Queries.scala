@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.operators.Materialize.Pinnable
 
 /** Central registry wiring every SURVEY §2 operator to a named query
   * plus (where SQL-expressible) a DuckDB oracle on the same parquet
@@ -153,7 +154,7 @@ object Queries {
       val opt = df.queryExecution.optimizedPlan.toString
       require(opt.contains("__graft_bucket"),
         s"auto range-join rewrite did not fire:\n$opt")
-      df.localCheckpoint(true)
+      df.pin(true)
     } finally {
       prev.fold(s.conf.unset(RangeJoinRewrite.WidthConf))(v =>
         s.conf.set(RangeJoinRewrite.WidthConf, v))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Clusters, CorpusClean, Dedup, Gold, Importance, Ivm, Similarity, Skew, TextAnalysis, TimeSeries}
+import graft.operators.Materialize.Pinnable
 
 /** Scaling probe: runs representative queries at 1× and 10× the input
   * (10× = ten disjoint copies, ids shifted where identity matters) and
@@ -53,7 +54,7 @@ object ScaleProbe {
     // incremental cluster fold over a 75/25 old/delta split — the
     // dedup_clusters_fold registry pipeline, returned as a row count
     def foldClusters(docs: DataFrame): Long = {
-      val pairs = Dedup.minhashLsh(docs).localCheckpoint(true)
+      val pairs = Dedup.minhashLsh(docs).pin(true)
       val isOld = (c: org.apache.spark.sql.Column) => c % 4 =!= 0
       val oldLabels = Clusters.duplicateClusters(
           docs.filter(isOld(col("doc_id"))),
@@ -716,7 +717,7 @@ object ScaleProbe {
         graft.operators.VersionedTable.write(
           t.events.repartition(200), p)
         val batch = t.events.limit(500).repartition(1)
-          .localCheckpoint(true)
+          .pin(true)
         (1 to 10).foreach(i => graft.operators.VersionedTable.append(
           spark, batch, p, operation = s"A$i"))
         500L * 5
@@ -733,7 +734,7 @@ object ScaleProbe {
         graft.operators.VersionedTable.write(
           t.events.repartition(200), p)
         val batch = t.events.limit(500).repartition(1)
-          .localCheckpoint(true)
+          .pin(true)
         (1 to 100).foreach(i => graft.operators.VersionedTable.append(
           spark, batch, p, operation = s"A$i"))
         500L * 5

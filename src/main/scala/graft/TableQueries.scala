@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.operators.Materialize.Pinnable
 import graft.Queries.Q
 
 /** Table-lifecycle registry rows (SURVEY §F plus the co-located
@@ -319,7 +320,7 @@ object TableQueries {
       (s, d) => {
         val docs = Tables(s, d).documents
         val allPairs = Dedup.minhashLsh(docs)
-          .localCheckpoint(true)
+          .pin(true)
         val isOld = (c: org.apache.spark.sql.Column) => c % 4 =!= 0
         val oldDocs = docs.filter(isOld(col("doc_id")))
         val oldLabels = Clusters.duplicateClusters(oldDocs,

@@ -36,88 +36,89 @@ object Clusters {
     * components). Returns (id, label) where label = min reachable id. */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame,
                           maxIters: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // round 0 fused into initialization: starting from identity labels,
-    // the first propagation round is exactly min(id, min direct
-    // neighbor) — one groupBy+join instead of a full loop iteration
-    val nbr0 = edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("m"))
-    var labels = nodes.join(nbr0, Seq("id"), "left")
-      .select(col("id"),
-        least(col("id"), coalesce(col("m"), col("id"))).as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // labels only decrease → the exact decimal sum strictly decreases
-    // until the fixpoint; equal sums ⟺ converged
-    // sum over an EMPTY frame is NULL — coalesce to zero so a corpus
-    // with no near-dup pairs (empty delta, singleton stratum)
-    // converges on the first check instead of NPE-ing the compare
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).collect()(0)
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"),
-          col("label").as("dst_label")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dst_label")).as("nbr_label"))
-      val stepped = labels
-        .join(nbrMin, Seq("id"), "left")
+    Materialize.withPersist(
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .unionByName(pairs.select(col("id_b").as("src"),
+            col("id_a").as("dst")))) { edges =>
+      // round 0 fused into initialization: starting from identity labels,
+      // the first propagation round is exactly min(id, min direct
+      // neighbor) — one groupBy+join instead of a full loop iteration
+      val nbr0 = edges.groupBy(col("src").as("id"))
+        .agg(min(col("dst")).as("m"))
+      var labels = nodes.join(nbr0, Seq("id"), "left")
         .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label"))
-      // pointer-jumping shortcut from round 3 on: additionally relabel
-      // through the PREVIOUS round's map — l(x) ← min(l(x),
-      // l_prev(l(x))) — so label reach grows geometrically instead of
-      // 1 hop/round. Measured on embedding_communities' mutual-kNN
-      // graph, plain propagation needed 17 rounds (O(diameter)); with
-      // the shortcut it converges in 7. The first two rounds skip the
-      // extra join: shallow near-dup graphs (the common case) converge
-      // before a jump could save a round, so they shouldn't pay for
-      // one. Correctness is unchanged either way: l(x) is always the
-      // id of a node in x's component (l_prev(y) is in y's component),
-      // labels only ever decrease, and the fixpoint — where neither
-      // the neighbor step nor the shortcut lowers any label — is
-      // exactly label = component minimum, as before.
-      val jumped =
-        if (iter < 2) stepped
-        else stepped
-          .join(labels.select(col("id").as("label"),
-            col("label").as("jump")), Seq("label"), "left")
+          least(col("id"), coalesce(col("m"), col("id"))).as("label"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // labels only decrease → the exact decimal sum strictly decreases
+      // until the fixpoint; equal sums ⟺ converged
+      // sum over an EMPTY frame is NULL — coalesce to zero so a corpus
+      // with no near-dup pairs (empty delta, singleton stratum)
+      // converges on the first check instead of NPE-ing the compare
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO))).collect()(0)
+          .getDecimal(0)
+      var prevSum = labelSum(labels)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIters) {
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"),
+            col("label").as("dst_label")), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("dst_label")).as("nbr_label"))
+        val stepped = labels
+          .join(nbrMin, Seq("id"), "left")
           .select(col("id"),
-            least(col("label"), coalesce(col("jump"), col("label")))
+            least(col("label"), coalesce(col("nbr_label"), col("label")))
               .as("label"))
-      // LAZY local checkpoint every round: persist caches execution
-      // but leaves the full LOGICAL plan in place, and each
-      // un-truncated round multiplies plan size (labels appears up to
-      // 3× per round), so Catalyst analysis cost grew geometrically
-      // between the old every-4th-round truncations — a driver thread
-      // dump showed the bench pinned in analysis tree-walks, not in
-      // jobs. The lazy checkpoint is materialized by the labelSum
-      // action below (no extra job) and replaces the plan with a
-      // LogicalRDD for all later rounds.
-      val next = jumped.pin(eager = false)
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
+        // pointer-jumping shortcut from round 3 on: additionally relabel
+        // through the PREVIOUS round's map — l(x) ← min(l(x),
+        // l_prev(l(x))) — so label reach grows geometrically instead of
+        // 1 hop/round. Measured on embedding_communities' mutual-kNN
+        // graph, plain propagation needed 17 rounds (O(diameter)); with
+        // the shortcut it converges in 7. The first two rounds skip the
+        // extra join: shallow near-dup graphs (the common case) converge
+        // before a jump could save a round, so they shouldn't pay for
+        // one. Correctness is unchanged either way: l(x) is always the
+        // id of a node in x's component (l_prev(y) is in y's component),
+        // labels only ever decrease, and the fixpoint — where neither
+        // the neighbor step nor the shortcut lowers any label — is
+        // exactly label = component minimum, as before.
+        val jumped =
+          if (iter < 2) stepped
+          else stepped
+            .join(labels.select(col("id").as("label"),
+              col("label").as("jump")), Seq("label"), "left")
+            .select(col("id"),
+              least(col("label"), coalesce(col("jump"), col("label")))
+                .as("label"))
+        // LAZY local checkpoint every round: persist caches execution
+        // but leaves the full LOGICAL plan in place, and each
+        // un-truncated round multiplies plan size (labels appears up to
+        // 3× per round), so Catalyst analysis cost grew geometrically
+        // between the old every-4th-round truncations — a driver thread
+        // dump showed the bench pinned in analysis tree-walks, not in
+        // jobs. The lazy checkpoint is materialized by the labelSum
+        // action below (no extra job) and replaces the plan with a
+        // LogicalRDD for all later rounds.
+        val next = jumped.pin(eager = false)
+        val nextSum = labelSum(next)
+        converged = nextSum.compareTo(prevSum) == 0
+        prevSum = nextSum
+        labels.unpersist()
+        labels = next
+        iter += 1
+      }
+      // hand back a self-contained frame: the converged labels are
+      // re-materialized as local-checkpoint blocks (freed by the
+      // ContextCleaner once unreferenced, unlike CacheManager entries),
+      // so every frame persisted inside the loop can be released here —
+      // a long-lived session accumulates nothing
+      val out = labels.pin(eager = true)
       labels.unpersist()
-      labels = next
-      iter += 1
+      out
     }
-    // hand back a self-contained frame: the converged labels are
-    // re-materialized as local-checkpoint blocks (freed by the
-    // ContextCleaner once unreferenced, unlike CacheManager entries),
-    // so every frame persisted inside the loop can be released here —
-    // a long-lived session accumulates nothing
-    val out = labels.pin(eager = true)
-    labels.unpersist()
-    edges.unpersist()
-    out
   }
 
   /** Alternating large-star/small-star connected components — the

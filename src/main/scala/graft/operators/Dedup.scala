@@ -25,6 +25,12 @@ object Dedup {
 
   def tokens(text: Column): Column = split(text, " ")
 
+  /** Portable 60-bit content hash (`graft_sha60`). */
+  private def sha60(g: Column): Column =
+    org.apache.spark.sql.graft.GraftBridge.column(
+      graft.functions.expressions.Sha60(
+        org.apache.spark.sql.graft.GraftBridge.expression(g)))
+
   // ---------- exact ----------
 
   /** Exact dedup via content hash: one shuffle on sha2(text).
@@ -556,26 +562,24 @@ object Dedup {
                             nlist: Int = 16, iters: Int = 3,
                             sampleBudget: Int = 128,
                             cacheKey: Option[String] = None): DataFrame = {
-    val pairs = embeddingNearDupQuantized(embeddings, threshold,
-      nlist, iters, sampleBudget, cacheKey)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = pairs.select(col("id_a").as("id"))
-      .unionByName(pairs.select(col("id_b").as("id"))).distinct()
-    val comps = Clusters.connectedComponents(pairs, nodes)
-    val compAgg = comps.agg(count(lit(1)).as("n_in_pairs"),
-      countDistinct(col("label")).as("n_components"))
-    val pw = pairs.agg(
-      coalesce(countDistinct(col("id_b")), lit(0L)).as("n_dropped_pairwise"))
-    val tot = embeddings.agg(count(lit(1)).as("n_vectors"))
-    val out = compAgg.crossJoin(broadcast(pw)).crossJoin(broadcast(tot))
-      .select(col("n_vectors"), col("n_in_pairs"), col("n_components"),
-        (col("n_in_pairs") - col("n_components")).as("n_dropped_component"),
-        col("n_dropped_pairwise"),
-        (col("n_vectors") - (col("n_in_pairs") - col("n_components")))
-          .as("n_survivors_component"))
-      .pin(true)
-    pairs.unpersist()
-    out
+    Materialize.withPersist(embeddingNearDupQuantized(embeddings, threshold,
+        nlist, iters, sampleBudget, cacheKey)) { pairs =>
+      val nodes = pairs.select(col("id_a").as("id"))
+        .unionByName(pairs.select(col("id_b").as("id"))).distinct()
+      val comps = Clusters.connectedComponents(pairs, nodes)
+      val compAgg = comps.agg(count(lit(1)).as("n_in_pairs"),
+        countDistinct(col("label")).as("n_components"))
+      val pw = pairs.agg(coalesce(countDistinct(col("id_b")), lit(0L))
+        .as("n_dropped_pairwise"))
+      val tot = embeddings.agg(count(lit(1)).as("n_vectors"))
+      compAgg.crossJoin(broadcast(pw)).crossJoin(broadcast(tot))
+        .select(col("n_vectors"), col("n_in_pairs"), col("n_components"),
+          (col("n_in_pairs") - col("n_components")).as("n_dropped_component"),
+          col("n_dropped_pairwise"),
+          (col("n_vectors") - (col("n_in_pairs") - col("n_components")))
+            .as("n_survivors_component"))
+        .pin(true)
+    }
   }
 
   // ---------- incremental MinHash index ----------
@@ -627,13 +631,12 @@ object Dedup {
     val spark = documents.sparkSession
     val signedAll = documents.select(col("doc_id"),
       minhashSignature(shingles(col("text"), shingleK), numPerm).as("sig"))
-    val signed =
-      (if (appending)
+    val delta =
+      if (appending)
         signedAll.join(spark.read.parquet(s"$dir/sigs").select("doc_id"),
           Seq("doc_id"), "left_anti")
-      else signedAll)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      else signedAll
+    Materialize.withPersist(delta) { signed =>
       lshBands(signed, "doc_id", "sig", bands, numPerm / bands)
         .withColumn("bucket", bandBucket.cast("int"))
         .repartition(col("bucket"))
@@ -641,7 +644,7 @@ object Dedup {
       signed.withColumn("sbucket", sigBucket(col("doc_id")))
         .repartition(col("sbucket"))
         .write.mode(mode).partitionBy("sbucket").parquet(s"$dir/sigs")
-    } finally { signed.unpersist(blocking = true); () }
+    }
   }
 
   /** Dedup a delta batch against a persisted index WITHOUT touching
@@ -806,12 +809,9 @@ object Dedup {
     * length). Corpus text is scanned exactly once. */
   def duplicateSpans(documents: DataFrame, k: Int = 6): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sha60 = (g: Column) => org.apache.spark.sql.graft.GraftBridge.column(
-      graft.functions.expressions.Sha60(
-        org.apache.spark.sql.graft.GraftBridge.expression(g)))
     val grams = documents.select(col("doc_id"),
       size(tokens(col("text"))).cast("long").as("doc_len"),
-      posexplode(transform(shingles(col("text"), k), sha60))
+      posexplode(transform(shingles(col("text"), k), sha60(_)))
         .as(Seq("pos", "h")))
     val dupTypes = grams.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -936,9 +936,6 @@ object Dedup {
   def bloomIngestDedup(base: DataFrame, incoming: DataFrame,
                        expectedItems: Long = -1L,
                        fpp: Double = 0.03): DataFrame = {
-    val sha60 = (g: Column) => org.apache.spark.sql.graft.GraftBridge.column(
-      graft.functions.expressions.Sha60(
-        org.apache.spark.sql.graft.GraftBridge.expression(g)))
     val baseHashes = base.select(sha60(col("text")).as("content_hash"))
     // auto-size by default: a fixed capacity silently degrades fpp —
     // and with it the whole routing benefit — once the base outgrows
@@ -951,11 +948,8 @@ object Dedup {
       capacity, fpp)
     val inc = incoming.select(col("doc_id"),
       sha60(col("text")).as("content_hash"))
-    val bloomBc = base.sparkSession.sparkContext.broadcast(bloomBytes)
-    val probe = org.apache.spark.sql.graft.GraftBridge.column(
-      graft.functions.expressions.LongBloomMightContain(
-        org.apache.spark.sql.graft.GraftBridge.expression(
-          col("content_hash")), bloomBc))
+    val probe = RuntimeFilter.mightContain(base.sparkSession,
+      col("content_hash"), bloomBytes)
     // miss ⇒ provably new (no bloom false negatives): map-only pass
     val definitelyNew = inc.filter(!probe)
     // possible hit ⇒ exact verification via anti-join on the hash
@@ -979,9 +973,6 @@ object Dedup {
     * guards the ~2⁻⁶⁰-probability hash-collision case so "false"
     * positives are counted against true membership, not hash luck. */
   def bloomFppAudit(documents: DataFrame, fpp: Double = 0.03): DataFrame = {
-    val sha60 = (g: Column) => org.apache.spark.sql.graft.GraftBridge.column(
-      graft.functions.expressions.Sha60(
-        org.apache.spark.sql.graft.GraftBridge.expression(g)))
     val keyed = documents.select(col("doc_id"),
       sha60(concat(lit("fpp:"), col("doc_id").cast("string")))
         .as("content_hash"))
@@ -992,11 +983,8 @@ object Dedup {
     val nBase = members.count()
     val bloomBytes = RuntimeFilter.keyBloom(members, "content_hash",
       math.max(nBase, 1024L), fpp)
-    val bloomBc = documents.sparkSession.sparkContext.broadcast(bloomBytes)
-    val mightContain = org.apache.spark.sql.graft.GraftBridge.column(
-      graft.functions.expressions.LongBloomMightContain(
-        org.apache.spark.sql.graft.GraftBridge.expression(
-          col("content_hash")), bloomBc))
+    val mightContain = RuntimeFilter.mightContain(documents.sparkSession,
+      col("content_hash"), bloomBytes)
     val hits = probes.filter(mightContain)
       .join(members, Seq("content_hash"), "left_anti")
     val fppPpm = math.round(fpp * 1000000).toInt

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -38,17 +38,23 @@ object RuntimeFilter {
     out.toByteArray
   }
 
-  /** `fact` rows whose `key` might be in the serialized filter —
-    * map-only, codegen, upstream of any exchange. The bytes are
+  /** Whether `key` (a long) might be in the serialized filter — the
+    * one place graft broadcasts a bloom filter. The bytes are
     * torrent-broadcast once per query; the plan carries only the
     * handle (an inlined filter re-ships inside every stage's task
     * binary — megabytes serialized+compressed per stage per job). */
-  def bloomProbe(fact: DataFrame, key: String,
-                 bloomBytes: Array[Byte]): DataFrame = {
-    val bc = fact.sparkSession.sparkContext.broadcast(bloomBytes)
-    fact.filter(GraftBridge.column(
-      LongBloomMightContain(GraftBridge.expression(fact(key)), bc)))
+  def mightContain(spark: SparkSession, key: Column,
+                   bloomBytes: Array[Byte]): Column = {
+    val bc = spark.sparkContext.broadcast(bloomBytes)
+    GraftBridge.column(
+      LongBloomMightContain(GraftBridge.expression(key), bc))
   }
+
+  /** `fact` rows whose `key` might be in the serialized filter —
+    * map-only, codegen, upstream of any exchange. */
+  def bloomProbe(fact: DataFrame, key: String,
+                 bloomBytes: Array[Byte]): DataFrame =
+    fact.filter(mightContain(fact.sparkSession, fact(key), bloomBytes))
 
   /** Equi-join `fact(factKey) = dim(dimKey)` with the fact side
     * pre-pruned by a bloom filter built from the dim side's keys.

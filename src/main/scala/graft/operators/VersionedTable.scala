@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, StructField, StructType}
 import org.apache.spark.sql.graft.GraftBridge
@@ -1231,7 +1231,7 @@ object VersionedTable {
     * way, and files without an index for a column conservatively
     * survive that column. `keyFrame` may repeat key tuples; the
     * driver receives at most cap + 1 hashes per column per task. */
-  private[graft] def bloomTouchCandidates(
+  private[operators] def bloomTouchCandidates(
       spark: SparkSession, s: Snapshot, keyFrame: DataFrame,
       keys: Seq[String]): Option[Set[String]] = {
     val (entries, props) = (s.entries, s.props)
@@ -1267,22 +1267,17 @@ object VersionedTable {
       if (sets.contains(None)) None
       else Some(sets.flatten.flatten.distinct).filter(_.length <= cap)
     }
-    var surviving = entries.map(_.name).toSet
+    var surviving = entries
     var pruned = false
     usable.zip(hashes).foreach { case (k, colHashes) =>
       val pc = props.phys(k)
       // probe only files still in play — each column tightens the set
-      val indexed = entries.filter(e =>
-        surviving(e.name) && e.bloom.contains(pc))
-      if (indexed.nonEmpty) colHashes.foreach { hs =>
-        val cand = indexed.map(e =>
-          (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
-        val admitted = probeSidecars(spark, cand, hs)
-        surviving = surviving -- (indexed.map(_.name).toSet -- admitted)
+      if (surviving.exists(_.bloom.contains(pc))) colHashes.foreach { hs =>
+        surviving = probeColumn(spark, s, surviving, pc, hs)
         pruned = true
       }
     }
-    if (pruned) Some(surviving) else None
+    if (pruned) Some(surviving.map(_.name).toSet) else None
   }
 
   /** APPEND: commit `df` as NEW pool files RE-LINKING the whole
@@ -1358,6 +1353,17 @@ object VersionedTable {
     s.entries.map(e => e.name -> e.stats.get(pc))
   }
 
+  /** Version `asOf`'s (or the latest) entries that can satisfy the
+    * `filters` conjunction ([[pruneEntriesForFilters]]), read; the
+    * caller applies the row filter, so the result equals the
+    * full-scan filter. */
+  private def readPruned(spark: SparkSession, path: String,
+                         asOf: Option[Int],
+                         filters: Seq[sources.Filter]): DataFrame = {
+    val s = readSnapshot(path, asOf)
+    readEntries(spark, s, pruneEntriesForFilters(spark, s, filters))
+  }
+
   /** Stats-pruned read: shortlist version `v`'s files to those whose
     * manifest [min, max] for `column` OVERLAPS [lo, hi] (stat-less
     * files always survive — no false negatives), scan only the
@@ -1381,30 +1387,12 @@ object VersionedTable {
                      ranges: Seq[(String, Double, Double)],
                      asOf: Option[Int] = None): DataFrame = {
     require(ranges.nonEmpty, "readWhereMulti needs at least one range")
-    val s = readSnapshot(path, asOf)
-    val filter = ranges.map { case (c, lo, hi) =>
+    readPruned(spark, path, asOf, ranges.flatMap { case (c, lo, hi) =>
+      Seq(sources.GreaterThanOrEqual(c, lo), sources.LessThanOrEqual(c, hi))
+    }).filter(ranges.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    readEntries(spark, s, inRanges(s, ranges)).filter(filter)
+    }.reduce(_ && _))
   }
-
-  /** Entries whose manifest [min, max] overlaps every range. */
-  private def inRanges(s: Snapshot,
-                       ranges: Seq[(String, Double, Double)]): Seq[FileEntry] =
-    s.entries.filter { e =>
-      ranges.forall { case (c, lo, hi) =>
-        e.stats.get(s.props.phys(c)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // stat-less: unprunable, never wrong
-        }
-      }
-    }
-
-  /** Entry names [[readWhereMulti]] would scan (exposed for pruning
-    * assertions). */
-  def prunedStatsEntries(path: String, v: Int,
-                         ranges: Seq[(String, Double, Double)]): Seq[String] =
-    inRanges(snapshot(path, Some(v)), ranges).map(_.name)
 
   /** STRING-key stats-pruned read (the `event_type`/`country`-shaped
     * predicate a lakehouse prunes on constantly): shortlist version
@@ -1417,55 +1405,27 @@ object VersionedTable {
     * footer I/O. */
   def readWhereStr(spark: SparkSession, path: String, column: String,
                    lo: String, hi: String,
-                   asOf: Option[Int] = None): DataFrame = {
-    val s = readSnapshot(path, asOf)
-    readEntries(spark, s, inStrRange(s, column, lo, hi))
+                   asOf: Option[Int] = None): DataFrame =
+    readPruned(spark, path, asOf, Seq(sources.GreaterThanOrEqual(column, lo),
+      sources.LessThanOrEqual(column, hi)))
       .filter(col(column) >= lo && col(column) <= hi)
-  }
-
-  private def inStrRange(s: Snapshot, column: String, lo: String,
-                         hi: String): Seq[FileEntry] = {
-    val pc = s.props.phys(column)
-    s.entries.filter { e =>
-      e.sstats.get(pc) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true // stat-less: unprunable, never wrong
-      }
-    }
-  }
-
-  /** Entries [[readWhereStr]] would scan (exposed for pruning
-    * assertions). */
-  def prunedStringEntries(path: String, v: Int, column: String,
-                          lo: String, hi: String): Seq[FileEntry] =
-    inStrRange(snapshot(path, Some(v)), column, lo, hi)
 
   /** Partition-pruned read: keep only manifest entries whose recorded
-    * partition values match `values` (entries without a recorded
-    * value for a filter column are conservatively kept), then apply
-    * the row-level equality filter — result ≡ the full-scan filter
-    * while a partitioned layout reads only the matching partition's
-    * files, shortlisted from pure metadata. */
+    * partition values match `values` (compared through the column's
+    * typed cast; entries without a recorded value for a filter column
+    * are conservatively kept), then apply the row-level equality
+    * filter — result ≡ the full-scan filter while a partitioned layout
+    * reads only the matching partition's files, shortlisted from pure
+    * metadata. */
   def readPartition(spark: SparkSession, path: String,
                     values: Map[String, String],
                     asOf: Option[Int] = None): DataFrame = {
-    val s = readSnapshot(path, asOf)
-    values.foldLeft(readEntries(spark, s, inPartition(s, values))) {
+    val pruned = readPruned(spark, path, asOf,
+      values.toSeq.map { case (k, want) => sources.EqualTo(k, want) })
+    values.foldLeft(pruned) {
       case (df, (k, want)) => df.filter(col(k).cast("string") === lit(want))
     }
   }
-
-  private def inPartition(s: Snapshot,
-                          values: Map[String, String]): Seq[FileEntry] =
-    s.entries.filter(e => values.forall { case (k, want) =>
-      e.part.get(s.props.phys(k)).forall(_ == want) })
-
-  /** Entries of version `v` whose partition values survive pruning by
-    * `values` — the shortlist [[readPartition]] scans (exposed for
-    * pruning assertions). */
-  def prunedPartitionEntries(path: String, v: Int,
-                             values: Map[String, String]): Seq[FileEntry] =
-    inPartition(snapshot(path, Some(v)), values)
 
   // ---------------------------------------------------------------- //
   // bloom filter indexes (Delta's bloom filter index shape: one index
@@ -1605,53 +1565,6 @@ object VersionedTable {
       schema)
   }
 
-  /** Entries of version `v` that might contain any of `values` in
-    * `column`: [min, max] stats and partition values prune first
-    * (pure manifest metadata), then the survivors' bloom sidecars are
-    * probed IN PARALLEL (one tiny task per batch of sidecar files —
-    * the probe ships only the 8-byte hashes, each executor reads just
-    * its sidecars, and what returns is a shortlist of names, so the
-    * driver never loads index bytes). Files without an index for the
-    * column always survive — pruning can drop rows never. */
-  def prunedBloomEntries(spark: SparkSession, path: String, v: Int,
-                         column: String, values: Seq[Any])
-      : Seq[FileEntry] =
-    bloomPruned(spark, snapshot(path, Some(v)), column, values)
-
-  private def bloomPruned(spark: SparkSession, s: Snapshot, column: String,
-                          values: Seq[Any]): Seq[FileEntry] = {
-    val pc = s.props.phys(column)
-    val dt = s.schema(column).dataType
-    // partition values were recorded as the column rendered to string
-    // by the partitioned write; compare through the SAME typed cast
-    // the bloom hash uses — an untyped String.valueOf(x) == pv would
-    // wrongly prune a type-lax literal (Int 7 vs a double partition's
-    // "7.0"). A literal the column type cannot represent disables
-    // partition pruning for the whole lookup (never prunes wrongly).
-    val partStrs: Option[Set[String]] = {
-      val rendered = values.map(x => typedString(x, dt))
-      if (rendered.contains(None)) None
-      else Some(rendered.flatten.toSet)
-    }
-    val statted = s.entries.filter { e =>
-      val statOk = e.stats.get(pc).forall { case (mn, mx) =>
-        values.exists(x => looseNum(x).forall(d => d >= mn && d <= mx))
-      }
-      // string zone maps prune point lookups too (bounds are
-      // truncation-safe, so containment is conservative-correct)
-      val sstatOk = e.sstats.get(pc).forall { case (mn, mx) =>
-        values.exists {
-          case s: String => s >= mn && s <= mx
-          case _ => true
-        }
-      }
-      val partOk = e.part.get(pc).forall(pv =>
-        partStrs.forall(_.contains(pv)))
-      statOk && sstatOk && partOk
-    }
-    bloomSurvivors(spark, s, statted, pc, dt, values)
-  }
-
   /** Driver-side Catalyst eval of a literal expression — the
     * planner-path renderers below must not pay a Spark JOB per
     * literal (a pruning pass over a 10⁴-file partitioned manifest
@@ -1712,25 +1625,21 @@ object VersionedTable {
 
   /** Survivors of `entries` after probing `pc`'s bloom sidecars with
     * `values` hashed under the column's own type (the literal hashes
-    * EXACTLY as the build side hashed the column); entries without a
-    * sidecar for the column conservatively survive. A value the type
+    * EXACTLY as the build side hashed the column). A value the type
     * cannot hash disables the probe (never prunes wrongly). */
   private def bloomSurvivors(spark: SparkSession, s: Snapshot,
                              entries: Seq[FileEntry], pc: String,
                              dt: DataType, values: Seq[Any])
       : Seq[FileEntry] = {
-    val withB = entries.filter(_.bloom.contains(pc))
-    if (withB.isEmpty) return entries
     val rendered = values.map(x => typedHash(x, dt))
-    if (rendered.contains(None)) return entries
-    val hashes = rendered.flatten.toArray
-    val cand = withB.map(e =>
-      (e.name, resolveOrFail(s.path, e.bloom(pc), s.version)))
-    val survivors = probeSidecars(spark, cand, hashes)
-    entries.filter(e => !e.bloom.contains(pc) || survivors(e.name))
+    if (rendered.contains(None)) entries
+    else probeColumn(spark, s, entries, pc, rendered.flatten.toArray)
   }
 
-  /** DATA-SKIPPING for the `graft` DataSource V2 connector: the
+  /** DATA-SKIPPING — the one literal-predicate pruner, shared by the
+    * `graft` DataSource V2 connector (pushed and runtime filters) and
+    * the Scala pruned reads ([[readWhereMulti]], [[readWhereStr]],
+    * [[readPartition]], [[readIn]]): the
     * manifest entries of version `v` that can possibly satisfy the
     * pushed-down `filters` conjunction — numeric [min, max] stats,
     * truncation-safe STRING stats, recorded partition values
@@ -1741,7 +1650,7 @@ object VersionedTable {
     * nothing — the scan re-applies every filter row-level, so pruning
     * can drop rows never. Pure metadata except the bloom probes. */
   def pruneEntriesForFilters(spark: SparkSession, s: Snapshot,
-                             filters: Seq[org.apache.spark.sql.sources.Filter])
+                             filters: Seq[sources.Filter])
       : Seq[FileEntry] = {
     import org.apache.spark.sql.sources._
     val (props, schema) = (s.props, s.schema)
@@ -1752,9 +1661,12 @@ object VersionedTable {
     val conj = filters.flatMap(flat)
     def dtOf(c: String): Option[DataType] =
       schema.fields.find(_.name == c).map(_.dataType)
-    // rendered through the column's typed cast — matches how the
-    // partitioned write recorded the value (see prunedBloomEntries);
-    // memoized: this runs per ENTRY and must stay a pure local lookup
+    // rendered through the column's typed cast — the SAME cast the
+    // partitioned write recorded the value with and the bloom hash
+    // uses; an untyped String.valueOf(x) == pv would wrongly prune a
+    // type-lax literal (Int 7 vs a double partition's "7.0"), and a
+    // literal the type cannot represent prunes nothing. Memoized:
+    // this runs per ENTRY and must stay a pure local lookup
     val renderCache =
       scala.collection.mutable.HashMap[(String, Any), Option[String]]()
     def partRender(c: String, x: Any): Option[String] =
@@ -1826,7 +1738,7 @@ object VersionedTable {
 
   /** [[pruneEntriesForFilters]] over version `v` of `path`. */
   def pruneEntriesForFilters(spark: SparkSession, path: String, v: Int,
-                             filters: Seq[org.apache.spark.sql.sources.Filter])
+                             filters: Seq[sources.Filter])
       : Seq[FileEntry] =
     pruneEntriesForFilters(spark, snapshot(path, Some(v)), filters)
 
@@ -1836,6 +1748,21 @@ object VersionedTable {
     * handful of files) shouldn't pay job-scheduling latency. Var so
     * specs can force either path. */
   private[operators] var bloomDriverProbeMaxFiles: Int = 32
+
+  /** `entries` whose `pc` bloom sidecar admits any of `hashes` —
+    * THE sidecar probe: literal lookups ([[bloomSurvivors]]) and
+    * key-frame probes ([[bloomTouchCandidates]]) both come here.
+    * Entries without a sidecar for the column conservatively
+    * survive. */
+  private def probeColumn(spark: SparkSession, s: Snapshot,
+                          entries: Seq[FileEntry], pc: String,
+                          hashes: Array[Long]): Seq[FileEntry] = {
+    val withB = entries.filter(_.bloom.contains(pc))
+    if (withB.isEmpty) return entries
+    val admitted = probeSidecars(spark, withB.map(e =>
+      (e.name, resolveOrFail(s.path, e.bloom(pc), s.version))), hashes)
+    entries.filter(e => !e.bloom.contains(pc) || admitted(e.name))
+  }
 
   /** Names of the (name, sidecarPath) candidates whose bloom admits
     * any of `hashes`. Small candidate sets probe on the driver; large
@@ -1870,8 +1797,7 @@ object VersionedTable {
   def readIn(spark: SparkSession, path: String, column: String,
              values: Seq[Any], asOf: Option[Int] = None): DataFrame = {
     require(values.nonEmpty, "readIn needs at least one value")
-    val s = readSnapshot(path, asOf)
-    readEntries(spark, s, bloomPruned(spark, s, column, values))
+    readPruned(spark, path, asOf, Seq(sources.In(column, values.toArray)))
       .filter(col(column).isin(values: _*))
   }
 
@@ -2029,9 +1955,9 @@ object VersionedTable {
   /** Files of `s` holding a key of `keyFrame` (named by the table's
     * `keys` columns): the bloom pre-prune, then the exact semi-join
     * touch scan. */
-  private def touchedByKeys(spark: SparkSession, s: Snapshot,
-                            keyFrame: DataFrame,
-                            keys: Seq[String]): Set[String] =
+  private[graft] def touchedByKeys(spark: SparkSession, s: Snapshot,
+                                   keyFrame: DataFrame,
+                                   keys: Seq[String]): Set[String] =
     touchedFiles(spark, s, _.join(keyFrame, keys, "left_semi"),
       bloomTouchCandidates(spark, s, keyFrame, keys))
 

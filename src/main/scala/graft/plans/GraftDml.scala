@@ -156,7 +156,7 @@ case class GraftUpdateCommand(snap: VersionedTable.Snapshot,
   *
   * Execution is file-granular: equality conjuncts of `cond` that pair
   * a target column with a source-only expression become the TOUCH
-  * KEYS — a bloom-pruned [[VersionedTable.touchedFiles]] scan
+  * KEYS — a bloom-pruned [[VersionedTable.touchedByKeys]] scan
   * shortlists the files holding matching keys, and only those join
   * the source (full-outer) for row assembly; every other file
   * re-links. `WHEN NOT MATCHED BY SOURCE` forces a full-table touch
@@ -299,9 +299,7 @@ case class GraftMergeCommand(snap: VersionedTable.Snapshot,
     val touchAll = nmbsActs.nonEmpty || keyPairs.isEmpty
     val touched: Set[String] =
       if (touchAll) snap.names
-      else VersionedTable.touchedFiles(spark, snap,
-        _.join(keyFrame, keys, "left_semi"),
-        VersionedTable.bloomTouchCandidates(spark, snap, keyFrame, keys))
+      else VersionedTable.touchedByKeys(spark, snap, keyFrame, keys)
     val base = VersionedTable.readFiles(spark, snap, touched)
 
     if (insertOnly) {

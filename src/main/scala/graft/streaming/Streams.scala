@@ -375,12 +375,10 @@ object Streams {
   def dedupIndexBatch(indexDir: String, pairsDir: String, shingleK: Int,
                       numPerm: Int, bands: Int, threshold: Double)
                      (batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Dedup
-    val signed = batch.select(col("doc_id"),
-      Dedup.minhashSignature(Dedup.shingles(col("text"), shingleK), numPerm)
-        .as("sig"))
-      .persist()
-    try {
+    import graft.operators.{Dedup, Materialize}
+    Materialize.withPersist(batch.select(col("doc_id"),
+        Dedup.minhashSignature(Dedup.shingles(col("text"), shingleK), numPerm)
+          .as("sig"))) { signed =>
       val intra = Dedup.estimatePairsSigned(signed, numPerm, bands, threshold)
       val cross =
         if (new java.io.File(s"$indexDir/bands").exists)
@@ -416,7 +414,7 @@ object Streams {
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$indexDir/bands/batch=$batchId")
-    } finally { signed.unpersist(blocking = true); () }
+    }
   }
 
   /** Streaming near-dup detection against a growing signature index:

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.In
 import java.nio.file.Files
 
 /** Bloom filter indexes inside the versioned format (Delta's bloom
@@ -45,8 +46,8 @@ class VersionedTableBloomSpec extends SparkSpec {
     assert(stats.forall { case (mn, mx) => mn < 100 && mx > 3995 })
     // …the bloom can: a single key admits its own file plus at most
     // a false positive or two (fpp=0.03, deterministic layout)
-    val pruned = VersionedTable.prunedBloomEntries(spark, path, v,
-      "k", Seq(1234L))
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("k", Array(1234L))))
     assert(pruned.size <= 3, s"expected <=3 of 8 files, got ${pruned.size}")
     val got = VersionedTable.readEqual(spark, path, "k", 1234L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -64,13 +65,13 @@ class VersionedTableBloomSpec extends SparkSpec {
       .orderBy("k").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(7L, 1234L, 4000L))
     val v = VersionedTable.latestVersion(path).get
-    val driverPruned = VersionedTable.prunedBloomEntries(spark, path, v,
-      "k", keys).map(_.name)
+    val driverPruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("k", keys.toArray))).map(_.name)
     val prev = VersionedTable.bloomDriverProbeMaxFiles
     try {
       VersionedTable.bloomDriverProbeMaxFiles = 0 // force the Spark job
-      assert(VersionedTable.prunedBloomEntries(spark, path, v,
-        "k", keys).map(_.name) == driverPruned)
+      assert(VersionedTable.pruneEntriesForFilters(spark, path, v,
+        Seq(In("k", keys.toArray))).map(_.name) == driverPruned)
     } finally VersionedTable.bloomDriverProbeMaxFiles = prev
   }
 
@@ -87,8 +88,8 @@ class VersionedTableBloomSpec extends SparkSpec {
     val probe = spark.range(1)
       .select(sha2(conv(lit("777"), 10, 16), 256)).head.getString(0)
     val v = VersionedTable.latestVersion(path).get
-    assert(VersionedTable.prunedBloomEntries(spark, path, v,
-      "h", Seq(probe)).size <= 3)
+    assert(VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("h", Array(probe)))).size <= 3)
     val got = VersionedTable.readEqual(spark, path, "h", probe)
       .select("k").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(777L))
@@ -142,8 +143,8 @@ class VersionedTableBloomSpec extends SparkSpec {
     indexed(path)
     VersionedTable.renameColumn(spark, path, "k", "doc_key")
     val v = VersionedTable.latestVersion(path).get
-    val pruned = VersionedTable.prunedBloomEntries(spark, path, v,
-      "doc_key", Seq(1234L))
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("doc_key", Array(1234L))))
     assert(pruned.size <= 3)
     assert(VersionedTable.readEqual(spark, path, "doc_key", 1234L)
       .count() == 1)
@@ -226,8 +227,8 @@ class VersionedTableBloomSpec extends SparkSpec {
       Map(VersionedTable.bloomColumnsProp -> "extra"))
     VersionedTable.buildBloomIndex(spark, path)
     val v = VersionedTable.latestVersion(path).get
-    val pruned = VersionedTable.prunedBloomEntries(spark, path, v,
-      "extra", Seq(41000L))
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("extra", Array(41000L))))
     // 8 original files hold only nulls for `extra` → all pruned
     assert(pruned.size <= 2, s"got ${pruned.size}")
     val got = VersionedTable.readEqual(spark, path, "extra", 41000L)
@@ -286,8 +287,9 @@ class VersionedTableBloomSpec extends SparkSpec {
     admitsOwnKeys(path, renamed, Seq("k", "s"))
     assert(VersionedTable.readEqual(spark, path, "doc", "doc-5432")
       .count() == 1)
-    assert(VersionedTable.prunedBloomEntries(spark, path, v3, "doc",
-      Seq("doc-5432")).size < VersionedTable.manifestEntries(path, v3).size)
+    assert(VersionedTable.pruneEntriesForFilters(spark, path, v3,
+      Seq(In("doc", Array("doc-5432")))).size <
+      VersionedTable.manifestEntries(path, v3).size)
   }
 
   test("a file alone in its size class gets the sidecar bytes the " +

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 import java.nio.file.Files
 
 /** The file-granular commit contract (judge r9 item 1): DML rewrites
@@ -467,7 +468,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     val types = entries.flatMap(_.part.get("event_type")).distinct
     assert(types.size >= 3)
     val want = Map("event_type" -> "purchase")
-    val pruned = VersionedTable.prunedPartitionEntries(path, v, want)
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(EqualTo("event_type", "purchase")))
     assert(pruned.nonEmpty && pruned.size < entries.size,
       s"pruning must shortlist (${pruned.size} of ${entries.size})")
     assert(pruned.forall(_.part("event_type") == "purchase"))
@@ -483,6 +485,50 @@ class VersionedTableManifestSpec extends SparkSpec {
     Files.createDirectories(stale)
     VersionedTable.vacuum(path, keepLast = 99)
     assert(!Files.exists(stale))
+  }
+
+  test("every Scala pruned read scans exactly the files " +
+    "pruneEntriesForFilters admits and equals the full-scan filter") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual => Ge,
+      In, LessThanOrEqual => Le}
+    val path = freshPath
+    val df = spark.range(4000).select(col("id").as("k"),
+      (col("id") * 1.5).as("x"), format_string("s%04d", col("id")).as("s"),
+      (col("id") % 2).as("p"))
+    VersionedTable.write(df.repartitionByRange(4, col("k")), path,
+      partitionBy = Seq("p"))
+    VersionedTable.setTableProperties(path,
+      Map(VersionedTable.bloomColumnsProp -> "k"))
+    VersionedTable.buildBloomIndex(spark, path)
+    val v = VersionedTable.latestVersion(path).get
+    val entries = VersionedTable.manifestEntries(path, v)
+    assert(entries.size == 8 && entries.forall(_.dv.isEmpty))
+    val full = VersionedTable.read(spark, path)
+    def rows(d: DataFrame) = d.orderBy("k").collect().toSeq
+    def check(read: DataFrame, filters: Seq[Filter], rowFilter: Column) = {
+      val admitted = VersionedTable.pruneEntriesForFilters(spark, path, v,
+        filters).map(_.name).toSet
+      assert(admitted.nonEmpty && admitted.size < entries.size,
+        s"pruning must drop files: ${admitted.size} of ${entries.size}")
+      assert(read.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1))
+        .toSet == admitted)
+      val want = rows(full.filter(rowFilter))
+      assert(want.nonEmpty && rows(read) == want)
+    }
+    check(VersionedTable.readWhere(spark, path, "x", 300.0, 900.0),
+      Seq(Ge("x", 300.0), Le("x", 900.0)), col("x").between(300.0, 900.0))
+    check(VersionedTable.readWhereMulti(spark, path,
+        Seq(("k", 100.0, 2500.0), ("x", 1500.0, 6000.0))),
+      Seq(Ge("k", 100.0), Le("k", 2500.0), Ge("x", 1500.0), Le("x", 6000.0)),
+      col("k").between(100, 2500) && col("x").between(1500.0, 6000.0))
+    check(VersionedTable.readWhereStr(spark, path, "s", "s1000", "s1499"),
+      Seq(Ge("s", "s1000"), Le("s", "s1499")),
+      col("s").between("s1000", "s1499"))
+    check(VersionedTable.readPartition(spark, path, Map("p" -> "1")),
+      Seq(EqualTo("p", "1")), col("p") === 1)
+    check(VersionedTable.readIn(spark, path, "k", Seq(17L, 3001L)),
+      Seq(In("k", Array(17L, 3001L))), col("k").isin(17L, 3001L))
   }
 
   test("append aligns column ORDER and ignores field metadata; " +
@@ -580,8 +626,8 @@ class VersionedTableManifestSpec extends SparkSpec {
     assert(regionParts >= 2, "middle generation must be region-keyed")
     // prune on the MIDDLE generation's key: its non-matching files
     // drop; v0/v2 files (no recorded n_regionkey) conservatively stay
-    val pruned = VersionedTable.prunedPartitionEntries(path, v,
-      Map("n_regionkey" -> "1"))
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(EqualTo("n_regionkey", "1")))
     val region1 = entries.count(_.part.get("n_regionkey").contains("1"))
     assert(region1 >= 1 && region1 < regionParts)
     assert(pruned.size == entries.size - regionParts + region1,
@@ -595,8 +641,8 @@ class VersionedTableManifestSpec extends SparkSpec {
       .map(_.get(0).asInstanceOf[Number].longValue).toSet
     assert(got == want)
     // the parity generation prunes by ITS key the same way
-    val prunedP = VersionedTable.prunedPartitionEntries(path, v,
-      Map("parity" -> "even"))
+    val prunedP = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(EqualTo("parity", "even")))
     assert(prunedP.size < entries.size)
   }
 

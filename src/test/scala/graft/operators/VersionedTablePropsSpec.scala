@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import java.nio.file.Files
 
 /** The table-properties layer (r11): Delta-style column mapping
@@ -373,9 +374,13 @@ class VersionedTablePropsSpec extends SparkSpec {
     // sf0.001 user_id spans 0..14 — the box covers ~1/3 of each axis
     val ranges = Seq(("user_id", 3.0, 8.0), ("value", 50.0, 120.0))
     val before = VersionedTable.footerReads.get()
-    val keep2d = VersionedTable.prunedStatsEntries(path, v, ranges)
-    val keepValueOnly = VersionedTable.prunedStatsEntries(path, v,
-      ranges.tail)
+    def shortlist(rs: Seq[(String, Double, Double)]) =
+      VersionedTable.pruneEntriesForFilters(spark, path, v,
+        rs.flatMap { case (c, lo, hi) =>
+          Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+        }).map(_.name)
+    val keep2d = shortlist(ranges)
+    val keepValueOnly = shortlist(ranges.tail)
     assert(VersionedTable.footerReads.get() == before)
     // the Z layout makes the conjunction prune harder than either
     // single range; both prune something

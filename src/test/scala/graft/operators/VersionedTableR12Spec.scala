@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In, LessThanOrEqual}
 import java.nio.file.{Files, Paths}
 
 /** Round-12 VersionedTable hardening: string zone maps (truncation-safe
@@ -43,8 +44,8 @@ class VersionedTableR12Spec extends SparkSpec {
     assert(entries.size == 8)
     assert(entries.forall(_.sstats.contains("s")),
       "every file should carry string min/max for s")
-    val pruned = VersionedTable.prunedStringEntries(path, v,
-      "s", "k1000", "k1499")
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(GreaterThanOrEqual("s", "k1000"), LessThanOrEqual("s", "k1499")))
     assert(pruned.size < entries.size,
       s"expected pruning, got ${pruned.size} of ${entries.size}")
     val got = VersionedTable.readWhereStr(spark, path, "s",
@@ -153,8 +154,8 @@ class VersionedTableR12Spec extends SparkSpec {
     val got = VersionedTable.readIn(spark, path, "bucket", Seq(3))
     assert(got.count() == 100)
     // matching partitions still prune: a single bucket admits 1 of 4
-    val pruned = VersionedTable.prunedBloomEntries(spark, path, v,
-      "bucket", Seq(3))
+    val pruned = VersionedTable.pruneEntriesForFilters(spark, path, v,
+      Seq(In("bucket", Array(3))))
     val all = VersionedTable.manifestEntries(path, v)
     assert(pruned.size < all.size)
   }
