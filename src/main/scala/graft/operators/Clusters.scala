@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.operators.Materialize.Pinnable
 
 /** Connected components over near-duplicate pairs — the step that
@@ -45,79 +44,83 @@ object Clusters {
       // neighbor) — one groupBy+join instead of a full loop iteration
       val nbr0 = edges.groupBy(col("src").as("id"))
         .agg(min(col("dst")).as("m"))
-      var labels = nodes.join(nbr0, Seq("id"), "left")
+      val round0 = nodes.join(nbr0, Seq("id"), "left")
         .select(col("id"),
           least(col("id"), coalesce(col("m"), col("id"))).as("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // labels only decrease → the exact decimal sum strictly decreases
-      // until the fixpoint; equal sums ⟺ converged
-      // sum over an EMPTY frame is NULL — coalesce to zero so a corpus
-      // with no near-dup pairs (empty delta, singleton stratum)
-      // converges on the first check instead of NPE-ing the compare
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO))).collect()(0)
-          .getDecimal(0)
-      var prevSum = labelSum(labels)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        val nbrMin = edges
-          .join(labels.select(col("id").as("dst"),
-            col("label").as("dst_label")), "dst")
-          .groupBy(col("src").as("id"))
-          .agg(min(col("dst_label")).as("nbr_label"))
-        val stepped = labels
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nbr_label"), col("label")))
-              .as("label"))
-        // pointer-jumping shortcut from round 3 on: additionally relabel
-        // through the PREVIOUS round's map — l(x) ← min(l(x),
-        // l_prev(l(x))) — so label reach grows geometrically instead of
-        // 1 hop/round. Measured on embedding_communities' mutual-kNN
-        // graph, plain propagation needed 17 rounds (O(diameter)); with
-        // the shortcut it converges in 7. The first two rounds skip the
-        // extra join: shallow near-dup graphs (the common case) converge
-        // before a jump could save a round, so they shouldn't pay for
-        // one. Correctness is unchanged either way: l(x) is always the
-        // id of a node in x's component (l_prev(y) is in y's component),
-        // labels only ever decrease, and the fixpoint — where neither
-        // the neighbor step nor the shortcut lowers any label — is
-        // exactly label = component minimum, as before.
-        val jumped =
-          if (iter < 2) stepped
-          else stepped
-            .join(labels.select(col("id").as("label"),
-              col("label").as("jump")), Seq("label"), "left")
+      // persisted until the first round's checkpoint replaces it; on a
+      // throw, withPersist releases it
+      Materialize.withPersist(round0) { labels0 =>
+        var labels = labels0
+        // labels only decrease → the exact decimal sum strictly decreases
+        // until the fixpoint; equal sums ⟺ converged
+        // sum over an EMPTY frame is NULL — coalesce to zero so a corpus
+        // with no near-dup pairs (empty delta, singleton stratum)
+        // converges on the first check instead of NPE-ing the compare
+        def labelSum(df: DataFrame): java.math.BigDecimal =
+          df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
+            lit(java.math.BigDecimal.ZERO))).collect()(0)
+            .getDecimal(0)
+        var prevSum = labelSum(labels)
+        var iter = 0
+        var converged = false
+        while (!converged && iter < maxIters) {
+          val nbrMin = edges
+            .join(labels.select(col("id").as("dst"),
+              col("label").as("dst_label")), "dst")
+            .groupBy(col("src").as("id"))
+            .agg(min(col("dst_label")).as("nbr_label"))
+          val stepped = labels
+            .join(nbrMin, Seq("id"), "left")
             .select(col("id"),
-              least(col("label"), coalesce(col("jump"), col("label")))
+              least(col("label"), coalesce(col("nbr_label"), col("label")))
                 .as("label"))
-        // LAZY local checkpoint every round: persist caches execution
-        // but leaves the full LOGICAL plan in place, and each
-        // un-truncated round multiplies plan size (labels appears up to
-        // 3× per round), so Catalyst analysis cost grew geometrically
-        // between the old every-4th-round truncations — a driver thread
-        // dump showed the bench pinned in analysis tree-walks, not in
-        // jobs. The lazy checkpoint is materialized by the labelSum
-        // action below (no extra job) and replaces the plan with a
-        // LogicalRDD for all later rounds.
-        val next = jumped.pin(eager = false)
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
+          // pointer-jumping shortcut from round 3 on: additionally relabel
+          // through the PREVIOUS round's map — l(x) ← min(l(x),
+          // l_prev(l(x))) — so label reach grows geometrically instead of
+          // 1 hop/round. Measured on embedding_communities' mutual-kNN
+          // graph, plain propagation needed 17 rounds (O(diameter)); with
+          // the shortcut it converges in 7. The first two rounds skip the
+          // extra join: shallow near-dup graphs (the common case) converge
+          // before a jump could save a round, so they shouldn't pay for
+          // one. Correctness is unchanged either way: l(x) is always the
+          // id of a node in x's component (l_prev(y) is in y's component),
+          // labels only ever decrease, and the fixpoint — where neither
+          // the neighbor step nor the shortcut lowers any label — is
+          // exactly label = component minimum, as before.
+          val jumped =
+            if (iter < 2) stepped
+            else stepped
+              .join(labels.select(col("id").as("label"),
+                col("label").as("jump")), Seq("label"), "left")
+              .select(col("id"),
+                least(col("label"), coalesce(col("jump"), col("label")))
+                  .as("label"))
+          // LAZY local checkpoint every round: persist caches execution
+          // but leaves the full LOGICAL plan in place, and each
+          // un-truncated round multiplies plan size (labels appears up to
+          // 3× per round), so Catalyst analysis cost grew geometrically
+          // between the old every-4th-round truncations — a driver thread
+          // dump showed the bench pinned in analysis tree-walks, not in
+          // jobs. The lazy checkpoint is materialized by the labelSum
+          // action below (no extra job) and replaces the plan with a
+          // LogicalRDD for all later rounds.
+          val next = jumped.pin(eager = false)
+          val nextSum = labelSum(next)
+          converged = nextSum.compareTo(prevSum) == 0
+          prevSum = nextSum
+          labels.unpersist()
+          labels = next
+          iter += 1
+        }
+        // hand back a self-contained frame: the converged labels are
+        // re-materialized as local-checkpoint blocks (freed by the
+        // ContextCleaner once unreferenced, unlike CacheManager entries),
+        // so every frame persisted inside the loop can be released here —
+        // a long-lived session accumulates nothing
+        val out = labels.pin(eager = true)
         labels.unpersist()
-        labels = next
-        iter += 1
+        out
       }
-      // hand back a self-contained frame: the converged labels are
-      // re-materialized as local-checkpoint blocks (freed by the
-      // ContextCleaner once unreferenced, unlike CacheManager entries),
-      // so every frame persisted inside the loop can be released here —
-      // a long-lived session accumulates nothing
-      val out = labels.pin(eager = true)
-      labels.unpersist()
-      out
     }
   }
 
@@ -141,9 +144,8 @@ object Clusters {
     * Returns (id, label) like [[connectedComponents]]. */
   def connectedComponentsStar(pairs: DataFrame, nodes: DataFrame,
                               maxIters: Int = 40): DataFrame = {
-    var edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+    val edges0 = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // order-independent SET signature (count, Σ xxhash64(u,v), Σ
     // murmur3(u,v) — both sums exact decimals): both sides of the
     // fixpoint test are DISTINCT sets, so equal signatures ⟺ equal
@@ -159,59 +161,64 @@ object Clusters {
           lit(java.math.BigDecimal.ZERO))).collect()(0)
       (r.getLong(0), r.getDecimal(1), r.getDecimal(2))
     }
-    var prevSig = edgeSig(edges)
-    var iter = 0
-    var converged = prevSig._1 == 0L
-    while (!converged && iter < maxIters) {
-      // large-star over both orientations: every neighbor v > u
-      // re-links to m(u) = min(Γ(u) ∪ {u}); afterwards every edge
-      // points large → small
-      val bidir = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v")))
-      val minsL = bidir.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val large = bidir.join(minsL, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-      // small-star on the oriented set: all (smaller) neighbors and u
-      // itself re-link to the minimum — flattens the remaining chains
-      val minsS = large.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val small = large.join(minsS, "u")
-        .select(col("v").as("u"), col("mn").as("v"))
-        .unionByName(minsS.select(col("u"), col("mn").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // lazy checkpoint every round, for the same analysis-cost
-      // reason as the min-label loop above (the edge set appears
-      // several times per round's plan; persist alone lets the
-      // logical tree — and with it per-action analysis time — grow
-      // geometrically between truncations). The count() below
-      // materializes it — no extra job.
-      val next = small.pin(eager = false)
-      // fixpoint ⟺ the edge SET is unchanged (both rewrites are
-      // idempotent exactly on a union of stars) — tested by signature
-      // equality, one aggregate job per round (the previous round's
-      // signature is remembered, so the old side costs nothing)
-      val nextSig = edgeSig(next)
-      converged = nextSig == prevSig
-      prevSig = nextSig
+    // persisted until the first round's checkpoint replaces it; on a
+    // throw, withPersist releases it
+    Materialize.withPersist(edges0) { persisted =>
+      var edges = persisted
+      var prevSig = edgeSig(edges)
+      var iter = 0
+      var converged = prevSig._1 == 0L
+      while (!converged && iter < maxIters) {
+        // large-star over both orientations: every neighbor v > u
+        // re-links to m(u) = min(Γ(u) ∪ {u}); afterwards every edge
+        // points large → small
+        val bidir = edges.unionByName(
+          edges.select(col("v").as("u"), col("u").as("v")))
+        val minsL = bidir.groupBy(col("u")).agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("mn"), col("u")).as("m"))
+        val large = bidir.join(minsL, "u")
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .distinct()
+        // small-star on the oriented set: all (smaller) neighbors and u
+        // itself re-link to the minimum — flattens the remaining chains
+        val minsS = large.groupBy(col("u")).agg(min(col("v")).as("mn"))
+        val small = large.join(minsS, "u")
+          .select(col("v").as("u"), col("mn").as("v"))
+          .unionByName(minsS.select(col("u"), col("mn").as("v")))
+          .filter(col("u") =!= col("v"))
+          .distinct()
+        // lazy checkpoint every round, for the same analysis-cost
+        // reason as the min-label loop above (the edge set appears
+        // several times per round's plan; persist alone lets the
+        // logical tree — and with it per-action analysis time — grow
+        // geometrically between truncations). The count() below
+        // materializes it — no extra job.
+        val next = small.pin(eager = false)
+        // fixpoint ⟺ the edge SET is unchanged (both rewrites are
+        // idempotent exactly on a union of stars) — tested by signature
+        // equality, one aggregate job per round (the previous round's
+        // signature is remembered, so the old side costs nothing)
+        val nextSig = edgeSig(next)
+        converged = nextSig == prevSig
+        prevSig = nextSig
+        edges.unpersist()
+        edges = next
+        iter += 1
+      }
+      // at the fixpoint each non-minimum node carries exactly one edge
+      // (node → component minimum); minima and singletons label
+      // themselves (min-agg keeps the extraction safe even if maxIters
+      // cut the loop short of the fixpoint)
+      val lbl = edges.groupBy(col("u").as("id"))
+        .agg(min(col("v")).as("label"))
+      val out = nodes.join(lbl, Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("label"), col("id")).as("label"))
+        .pin(eager = true)
       edges.unpersist()
-      edges = next
-      iter += 1
+      out
     }
-    // at the fixpoint each non-minimum node carries exactly one edge
-    // (node → component minimum); minima and singletons label
-    // themselves (min-agg keeps the extraction safe even if maxIters
-    // cut the loop short of the fixpoint)
-    val lbl = edges.groupBy(col("u").as("id"))
-      .agg(min(col("v")).as("label"))
-    val out = nodes.join(lbl, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("label"), col("id")).as("label"))
-      .pin(eager = true)
-    edges.unpersist()
-    out
   }
 
   /** Duplicate clusters over a corpus: components of the near-dup pair

@@ -1656,6 +1656,10 @@ object VersionedTable {
     val (props, schema) = (s.props, s.schema)
     def flat(f: Filter): Seq[Filter] = f match {
       case And(l, r) => flat(l) ++ flat(r)
+      // `c IN (…, NULL)` is true only where c equals a non-null
+      // member, so the NULLs admit nothing: drop them before both
+      // tiers (an all-NULL list becomes empty and prunes nothing)
+      case In(c, vs) => Seq(In(c, vs.filter(_ != null)))
       case x => Seq(x)
     }
     val conj = filters.flatMap(flat)
@@ -1726,7 +1730,7 @@ object VersionedTable {
     val eqCols: Seq[(String, Seq[Any])] = conj.collect {
       case EqualTo(c, x) if x != null => c -> Seq(x)
       case EqualNullSafe(c, x) if x != null => c -> Seq(x)
-      case In(c, vs) if vs.nonEmpty && vs.forall(_ != null) => c -> vs.toSeq
+      case In(c, vs) if vs.nonEmpty => c -> vs.toSeq
     }
     eqCols.foreach { case (c, vs) =>
       dtOf(c).foreach { dt =>

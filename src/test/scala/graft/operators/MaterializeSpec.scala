@@ -154,4 +154,44 @@ class MaterializeSpec extends SparkSpec {
     assert(e.getMessage == "body failed")
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
+
+  test("connectedComponents and connectedComponentsStar release their " +
+       "loop persists when the input throws") {
+    val sc = spark.sparkContext
+    val boom = udf { (x: Long) =>
+      if (x == 3L) throw new IllegalStateException("bad id")
+      x
+    }
+    // a chain 1-2-...-8 over range frames (a local relation would be
+    // folded at planning, before anything is persisted)
+    val pairs = spark.range(1, 8)
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val nodes = spark.range(1, 9).toDF("id")
+    def failsWithBadId(body: => Unit): Unit = {
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("bad id")), e)
+    }
+    // a persisted frame whose blocks were never written is a
+    // CacheManager entry without an RDD yet: count both (the entry
+    // count is Spark-internal, hence the reflection)
+    val cm = spark.sharedState.cacheManager
+    def entries = cm.getClass.getMethod("numCachedEntries").invoke(cm)
+    val (rddsBefore, entriesBefore) = (sc.getPersistentRDDs.keySet, entries)
+    def nothingLeftBehind(op: String): Unit = {
+      assert((sc.getPersistentRDDs.keySet -- rddsBefore).isEmpty,
+        s"$op left a persistent RDD behind")
+      assert(entries == entriesBefore,
+        s"$op left a persisted frame behind")
+    }
+    // the nodes throw in the loop's first job, after the round-0
+    // labels (and the edge frame) were persisted
+    failsWithBadId(Clusters.connectedComponents(pairs,
+      nodes.select(boom(col("id")).as("id"))))
+    nothingLeftBehind("connectedComponents")
+    // the edge set throws in the loop's first job, after it was persisted
+    failsWithBadId(Clusters.connectedComponentsStar(
+      pairs.select(boom(col("id_a")).as("id_a"), col("id_b")), nodes))
+    nothingLeftBehind("connectedComponentsStar")
+  }
 }

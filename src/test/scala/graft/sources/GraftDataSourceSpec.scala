@@ -65,6 +65,32 @@ class GraftDataSourceSpec extends SparkSpec {
     assert(plan.contains("BatchScan") || plan.contains("graft"))
   }
 
+  test("a NULL in an IN list prunes like the list without it, and the " +
+    "connector returns the plain parquet rows") {
+    import org.apache.spark.sql.sources.In
+    val dir = fresh
+    val (path, pq) = (s"$dir/t", s"$dir/plain")
+    val df = spark.range(4096).select(col("id").as("k"),
+      (col("id") % 97).as("v")).repartitionByRange(8, col("k"))
+    VersionedTable.write(df, path)
+    df.write.parquet(pq)
+    VersionedTable.setTableProperties(path,
+      Map(VersionedTable.bloomColumnsProp -> "k"))
+    VersionedTable.buildBloomIndex(spark, path)
+    val v = VersionedTable.latestVersion(path).get
+    assert(VersionedTable.manifestEntries(path, v).size == 8)
+    def admitted(vals: Any*) = VersionedTable.pruneEntriesForFilters(spark,
+      path, v, Seq(In("k", vals.toArray))).map(_.name).toSet
+    val plain = admitted(17L)
+    assert(plain.size == 1)
+    assert(admitted(17L, null) == plain)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      sorted(d.filter("k IN (17, NULL)"))
+    assert(rows(spark.read.format("graft").load(path)) ==
+      rows(spark.read.parquet(pq)))
+    assert(rows(spark.read.parquet(pq)).map(_.getLong(0)) == Seq(17L))
+  }
+
   test("range pushdown prunes through numeric stats on a clustered " +
     "layout; column pruning reaches the reader") {
     val path = s"$fresh/t"
